@@ -1,6 +1,7 @@
 package graft.llm
 
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.Fixpoint
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge}
 import org.apache.spark.sql.functions._
 
 /** Deduplication operators for large-scale text corpora (SURVEY §2.B D1/D2).
@@ -434,106 +435,43 @@ object Dedup {
     * per-node propagation + one jump was still moving at round 25 (the
     * wro_region_group sf0.1 stressor that motivated this form).
     *
-    * SCALE PITFALL, learned the hard way: Spark 4's `localCheckpoint`
-    * materializes the DATA but carries the child plan's ESTIMATED
-    * statistics into the LogicalRDD. An iterative loop whose round plan
-    * joins k times multiplies sizeInBytes estimates, so the estimate
-    * grows as size^(k^round) — a BigInteger whose DIGIT COUNT doubles
-    * per round. By round ~20 the driver spends minutes per round inside
-    * BigInteger math in SizeInBytesOnlyStatsPlanVisitor (observed:
-    * 10s → 30s → 86s → 245s → 646s per round). The fix is the RDD
-    * round-trip below, which rebuilds the frame from the materialized
-    * rows and RESETS the statistics each round. If a pathological input
-    * still fails to converge in maxIter rounds the call FAILS LOUDLY
-    * rather than returning silently-wrong intermediate labels. */
+    * The rounds run through [[graft.Fixpoint.iterate]] inside
+    * [[graft.Fixpoint.scoped]] at a partition count sized from the
+    * measured edge count: the pair graph is orders of magnitude smaller
+    * than the corpus (pairs ARE the near-dups). Each round's checkpoints
+    * drop the round plan's size estimates (a loop whose round joins its
+    * own state k times otherwise grows the estimate as size^(k^round),
+    * minutes per round in driver BigInteger math by round ~20). If a
+    * pathological input still fails to converge in maxIter rounds the
+    * call FAILS LOUDLY rather than returning intermediate labels. */
   def dedupClusters(pairs: DataFrame, aId: Column, bId: Column,
-                    maxIter: Int = 25): DataFrame = {
-    // materialize the (small) pair set once: nodes/edges reference it
-    // from several union branches, and without the barrier each branch
-    // would re-run the full upstream pair-generation plan
-    val und = pairs.select(aId.cast("long").as("src"),
-                           bId.cast("long").as("dst"))
-      .localCheckpoint()
-    val spark = und.sparkSession
-    // data-driven loop parallelism: the pair graph is orders of magnitude
-    // smaller than the corpus (pairs ARE the near-dups), so running the
-    // iteration at corpus parallelism pays ~full shuffle overhead per
-    // round for near-empty partitions. Size partitions from the measured
-    // edge count (~100k edges/partition), clamped to the session default.
-    val p = math.max(1L, math.min(
-      spark.sessionState.conf.numShufflePartitions.toLong,
-      und.count() / 100000L + 1L)).toInt
-    // LOOP-SCOPED CONFS (the raster relaxations' measured discipline,
-    // graft.ops.WroQueries relaxConfs): inside the loop every frame is
-    // pair-graph-sized — p partitions BY CONSTRUCTION (p derives from
-    // the measured edge count above, so this stays scale-adaptive, it
-    // is not a local[32] constant) — yet each round's exchanges would
-    // otherwise run at the session's data-scale partition count, and
-    // under AQE every one of the round's shuffle stages is submitted
-    // as its OWN job (~100-200 ms scheduling each) with nothing to
-    // adapt. AQE off + partitions=p turns each round's three
-    // materializations into three single-job lineages. Everything
-    // inside MATERIALIZES (localCheckpoint/count), so the save/restore
-    // contract of withConfs holds; the returned `labels` is
-    // checkpointed, so the caller's plan-on-top runs under restored
-    // session confs.
-    val labels = graft.withConfs(spark, Map(
-      "spark.sql.adaptive.enabled" -> "false",
-      "spark.sql.shuffle.partitions" -> p.toString)) {
-      val nodes = und.select(col("src").as("id"))
-        .union(und.select(col("dst").as("id"))).distinct()
-      val sym = und
-        .union(und.select(col("dst").as("src"), col("src").as("dst")))
-        .repartition(p, col("src"))
-        .localCheckpoint()
-      // stats reset (see scaladoc): rebuild from materialized rows so the
-      // LogicalRDD does not inherit the round plan's multiplied estimates.
-      // The RDD round-trip also DROPS the argument's outputPartitioning,
-      // so callers must hash-repartition AFTER fresh() (not inside the
-      // argument) for the layout to survive into the next round's joins.
-      def freshById(df: DataFrame): DataFrame =
-        spark.createDataFrame(df.rdd, df.schema)
-          .repartition(p, col("id")).localCheckpoint()
-      var labels = nodes.select(col("id"), col("id").as("lbl"))
-        .repartition(p, col("id"))
-        .localCheckpoint()
-      var iter = 0
-      var changed = 1L
-      while (changed > 0 && iter < maxIter) {
-        // (1) hook: edges in label space; every supernode adopts its
-        // minimum neighboring supernode — one keyed aggregate over the
-        // lifted edges, merging whole components per round
-        val le = sym
-          .join(labels.select(col("id").as("src"), col("lbl").as("ls")), "src")
-          .join(labels.select(col("id").as("dst"), col("lbl").as("ld")), "dst")
-          .filter(col("ls") =!= col("ld"))
-        val upd = le.groupBy(col("ls")).agg(min(col("ld")).as("cand"))
-        val hooked = freshById(labels
-          .join(upd, col("lbl") === col("ls"), "left")
-          .select(col("id"),
-            least(col("lbl"), coalesce(col("cand"), col("lbl"))).as("lbl"),
-            col("lbl").as("prev")))
-        // (2) compress twice: lbl <- lbl(lbl); hooked is checkpointed so
-        // the double self-reference re-reads rows, not the hook plan
-        def jump(df: DataFrame): DataFrame = df
-          .join(df.select(col("id").as("jid"), col("lbl").as("jl")),
-            col("lbl") === col("jid"), "left")
-          .select(col("id"),
-            least(col("lbl"), coalesce(col("jl"), col("lbl"))).as("lbl"),
-            col("prev"))
-        val next = freshById(jump(jump(hooked)))
-        changed = next.filter(col("lbl") =!= col("prev")).count()
-        labels = next.select(col("id"), col("lbl"))
-        iter += 1
-      }
-      require(changed == 0,
-        s"dedupClusters did not converge in $maxIter rounds of quotient " +
-        "hooking + compression, which indicates a pathological edge set; " +
-        "raise maxIter or pre-partition the graph")
-      labels
+                    maxIter: Int = 25): DataFrame =
+    closure("dedupClusters", pairs, aId, bId, maxIter) { (sym, labels, p) =>
+      // (1) hook: edges in label space; every supernode adopts its
+      // minimum neighboring supernode — one keyed aggregate over the
+      // lifted edges, merging whole components per round
+      val le = sym
+        .join(labels.select(col("id").as("src"), col("lbl").as("ls")), "src")
+        .join(labels.select(col("id").as("dst"), col("lbl").as("ld")), "dst")
+        .filter(col("ls") =!= col("ld"))
+      val upd = le.groupBy(col("ls")).agg(min(col("ld")).as("cand"))
+      // checkpointed so the compressions' self-joins re-read rows, not
+      // the hook plan
+      val hooked = GraftBridge.freshCheckpoint(labels
+        .join(upd, col("lbl") === col("ls"), "left")
+        .select(col("id"),
+          least(col("lbl"), coalesce(col("cand"), col("lbl"))).as("lbl"),
+          col("lbl").as("prev"))
+        .repartition(p, col("id")))
+      // (2) compress twice: lbl <- lbl(lbl)
+      def jump(df: DataFrame): DataFrame = df
+        .join(df.select(col("id").as("jid"), col("lbl").as("jl")),
+          col("lbl") === col("jid"), "left")
+        .select(col("id"),
+          least(col("lbl"), coalesce(col("jl"), col("lbl"))).as("lbl"),
+          col("prev"))
+      jump(jump(hooked))
     }
-    labels.select(col("id").as("doc_id"), col("lbl").as("cluster_id"))
-  }
 
   /** The SECOND, independent connected-components formulation —
     * id-ordered per-NODE min-label propagation: each round every node
@@ -548,62 +486,55 @@ object Dedup {
     * `graft.CcDiff`, CcPropertySpec). Production pipelines stay on
     * [[dedupClusters]]; this one's cost profile (diameter-bound rounds,
     * same per-round shuffle shape) is acceptable for an audit pass and
-    * documented as such. Fails loudly on non-convergence, like its
-    * sibling, and uses the same stats-reset RDD round-trip (the Spark 4
-    * localCheckpoint sizeInBytes blowup — see [[dedupClusters]]). */
+    * documented as such. Same loop, scope and loud non-convergence as
+    * its sibling. */
   def ccByLabelProp(pairs: DataFrame, aId: Column, bId: Column,
-                    maxIter: Int = 400): DataFrame = {
+                    maxIter: Int = 400): DataFrame =
+    closure("ccByLabelProp", pairs, aId, bId, maxIter) { (sym, labels, _) =>
+      // neighbor minimum per node: one join edge→label on the source
+      // side, one min-aggregate keyed by destination — no label-space
+      // lift, no jumps; the recurrence is the textbook propagation
+      val nbrMin = sym
+        .join(labels.select(col("id").as("src"), col("lbl").as("ls")),
+          "src")
+        .groupBy(col("dst").as("id")).agg(min(col("ls")).as("nm"))
+      labels
+        .join(nbrMin, Seq("id"), "left")
+        .select(col("id"),
+          least(col("lbl"), coalesce(col("nm"), col("lbl"))).as("lbl"),
+          col("lbl").as("prev"))
+    }
+
+  /** The min-label closure loop both formulations share: the edge set
+    * symmetrized and hash-partitioned on `src` once, labels (id, lbl)
+    * starting at lbl = id and kept hash-partitioned on `id`, so every
+    * round's joins are co-partitioned. `round(sym, labels, p)` returns
+    * the next (id, lbl, prev) frame; the loop stops when no lbl differs
+    * from its prev. Returns (doc_id, cluster_id). */
+  private def closure(op: String, pairs: DataFrame, aId: Column, bId: Column,
+                      maxIter: Int)
+                     (round: (DataFrame, DataFrame, Int) => DataFrame): DataFrame = {
+    // materialize the (small) pair set once: the edge count, the node
+    // set and the symmetric edges all read it
     val und = pairs.select(aId.cast("long").as("src"),
                            bId.cast("long").as("dst"))
       .localCheckpoint()
     val spark = und.sparkSession
-    val p = math.max(1L, math.min(
-      spark.sessionState.conf.numShufflePartitions.toLong,
-      und.count() / 100000L + 1L)).toInt
-    // same loop-scoped confs as [[dedupClusters]] (r12): the audit
-    // formulation runs O(diameter) rounds, so the per-round AQE job
-    // tax it shared with the production loop multiplied hundreds of
-    // times on a long-diameter graph — the differential sf3 audit gets
-    // the same single-job rounds.
-    val labels = graft.withConfs(spark, Map(
-      "spark.sql.adaptive.enabled" -> "false",
-      "spark.sql.shuffle.partitions" -> p.toString)) {
-      val nodes = und.select(col("src").as("id"))
-        .union(und.select(col("dst").as("id"))).distinct()
+    val edges = und.count()
+    val p = Fixpoint.partitions(spark, edges)
+    val labels = Fixpoint.scoped(spark, edges) {
       val sym = und
         .union(und.select(col("dst").as("src"), col("src").as("dst")))
         .repartition(p, col("src"))
         .localCheckpoint()
-      def freshById(df: DataFrame): DataFrame =
-        spark.createDataFrame(df.rdd, df.schema)
-          .repartition(p, col("id")).localCheckpoint()
-      var labels = nodes.select(col("id"), col("id").as("lbl"))
-        .repartition(p, col("id"))
-        .localCheckpoint()
-      var iter = 0
-      var changed = 1L
-      while (changed > 0 && iter < maxIter) {
-        // neighbor minimum per node: one join edge→label on the source
-        // side, one min-aggregate keyed by destination — no label-space
-        // lift, no jumps; the recurrence is the textbook propagation
-        val nbrMin = sym
-          .join(labels.select(col("id").as("src"), col("lbl").as("ls")),
-            "src")
-          .groupBy(col("dst").as("id")).agg(min(col("ls")).as("nm"))
-        val next = freshById(labels
-          .join(nbrMin, Seq("id"), "left")
-          .select(col("id"),
-            least(col("lbl"), coalesce(col("nm"), col("lbl"))).as("lbl"),
-            col("lbl").as("prev")))
-        changed = next.filter(col("lbl") =!= col("prev")).count()
-        labels = next.select(col("id"), col("lbl"))
-        iter += 1
-      }
-      require(changed == 0,
-        s"ccByLabelProp did not converge in $maxIter rounds — the graph's " +
-        "diameter exceeds the bound; raise maxIter (this is the audit " +
-        "formulation, not the production path)")
-      labels
+      val nodes = und.select(col("src").as("id"))
+        .union(und.select(col("dst").as("id"))).distinct()
+      try Fixpoint.iterate(op, nodes.select(col("id"), col("id").as("lbl"))
+          .repartition(p, col("id")), maxIter,
+          changes = Some((_, next) => next.filter(col("lbl") =!= col("prev")).count())) {
+        labels => round(sym, labels.select(col("id"), col("lbl")), p)
+          .repartition(p, col("id"))
+      } finally Fixpoint.release(sym) // a round may read it only via hooked
     }
     labels.select(col("id").as("doc_id"), col("lbl").as("cluster_id"))
   }

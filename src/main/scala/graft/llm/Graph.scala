@@ -1,5 +1,6 @@
 package graft.llm
 
+import graft.Fixpoint
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -104,7 +105,7 @@ object Graph {
     *
     * Plan: per round, dist ⋈ edges on the source endpoint + one min
     * aggregate — round cost is frontier×degree, rounds are the cap;
-    * each round localCheckpoints (the dedupClusters stats discipline).
+    * the rounds run through [[graft.Fixpoint.iterate]].
     * Weights must be ≥0 for min-relaxation semantics (checked against
     * the edge table once, aggregate-cheap). At 100 TB: dist is
     * node-sized state, edges shuffle on src once per round — the same
@@ -125,31 +126,18 @@ object Graph {
       "sssp: edge weights must be non-negative (empty edge set or " +
       "negative weight found)")
     val spark = e.sparkSession
-    // loop-scoped confs, partition count derived from the MEASURED edge
-    // count (the dedupClusters discipline): every loop frame is
-    // node/edge-graph-sized, so the per-round exchanges run at
-    // graph-appropriate parallelism as ONE job per round instead of
-    // AQE submitting each tiny stage separately at the session's
-    // data-scale partition count. Scale-adaptive by construction —
-    // p grows with the graph and clamps to the session default.
-    val p = math.max(1L, math.min(
-      spark.sessionState.conf.numShufflePartitions.toLong,
-      e.count() / 100000L + 1L)).toInt
-    graft.withConfs(spark, Map(
-      "spark.sql.adaptive.enabled" -> "false",
-      "spark.sql.shuffle.partitions" -> p.toString)) {
-      var dist = spark.range(1)
-        .select(lit(source).as("node"), lit(0L).as("dist"))
-        .localCheckpoint()
-      for (_ <- 1 to rounds) {
+    // every loop frame is node/edge-graph-sized: loop confs sized from
+    // the MEASURED edge count, so each round is one job
+    Fixpoint.scoped(spark, e.count()) {
+      Fixpoint.iterate("sssp",
+          spark.range(1).select(lit(source).as("node"), lit(0L).as("dist")),
+          rounds) { dist =>
         val relaxed = dist
           .join(e, dist("node") === e("src"))
           .select(col("dst").as("node"), (col("dist") + col("w")).as("dist"))
-        dist = dist.unionByName(relaxed)
+        dist.unionByName(relaxed)
           .groupBy("node").agg(min("dist").as("dist"))
-          .localCheckpoint()
       }
-      dist
     }
   }
 }

@@ -1,5 +1,6 @@
 package graft.llm
 
+import graft.Fixpoint
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -16,10 +17,9 @@ import org.apache.spark.sql.functions._
   * Scale posture: one keyed join + one keyed aggregate per iteration
   * (contributions flow along edges, hash-partitioned on the node id);
   * the driver loop only carries the node-count-sized rank table between
-  * rounds (lineage-truncated — the [[Dedup.dedupClusters]] /
-  * [[KMeans.train]] shape). Iteration count is fixed and small; at a
-  * billion hosts the per-round cost is one shuffle of the edge
-  * contributions, never all-pairs.
+  * rounds ([[graft.Fixpoint.iterate]]). Iteration count is fixed and
+  * small; at a billion hosts the per-round cost is one shuffle of the
+  * edge contributions, never all-pairs.
   */
 object HostRank {
 
@@ -43,8 +43,8 @@ object HostRank {
     val srcs = e.select(col("src")).distinct().localCheckpoint()
     val hosts = spark.range(nNodes).select(col("id").as("host"))
     val tp = Scale * 15L / 100L / nNodes
-    var r = hosts.select(col("host"), lit(Scale / nNodes).as("rank"))
-    for (_ <- 1 to iters) {
+    Fixpoint.iterate("HostRank",
+        hosts.select(col("host"), lit(Scale / nNodes).as("rank")), iters) { r =>
       val contrib = e.join(r, col("src") === col("host"))
         .select(col("dst"), expr("rank * w div outw").as("c"))
         .groupBy("dst").agg(sum(col("c")).as("sc"))
@@ -52,14 +52,12 @@ object HostRank {
       // uniformly — a 1-row aggregate broadcast into the update
       val dang = r.join(srcs, col("host") === col("src"), "left_anti")
         .agg(coalesce(sum(col("rank")), lit(0L)).as("dmass"))
-      r = hosts.join(contrib, col("host") === col("dst"), "left")
+      hosts.join(contrib, col("host") === col("dst"), "left")
         .crossJoin(broadcast(dang))
         .select(col("host"),
           (lit(tp) +
             expr(s"85 * (coalesce(sc, 0L) + dmass div $nNodes) div 100"))
             .as("rank"))
-        .localCheckpoint()
     }
-    r
   }
 }

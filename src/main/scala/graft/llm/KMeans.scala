@@ -1,5 +1,6 @@
 package graft.llm
 
+import graft.Fixpoint
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -21,8 +22,8 @@ import org.apache.spark.sql.functions._
   * constant, so the per-vector state is bounded); the centroid update is
   * one hash aggregation on (cid, pos) — |corpus|·dim rows shuffle-
   * compressed by map-side partial sums to K·dim output rows. Iterating
-  * calls [[lloydOnce]] in a driver loop over DataFrames (lineage-
-  * truncated like Dedup.dedupClusters); one iteration is declared at the
+  * calls [[lloydOnce]] in a driver loop over DataFrames
+  * ([[graft.Fixpoint.iterate]]); one iteration is declared at the
   * gate because the iterate is the same plan repeated.
   */
 object KMeans {
@@ -236,36 +237,31 @@ object KMeans {
       lloydOnceBy(q,
         reduceToCodebookBy(lloydOnceBy(q, seedLowestKBy(q, k, g), g), g), g), g)
 
-  /** Full codebook training: iterate [[lloydOnce]] to a fixed point (or
-    * `maxIter`), reducing each round's accumulators back to a quantized
-    * centroid table. The driver loop only carries the K×dim centroid
-    * DataFrame between rounds (lineage-truncated with localCheckpoint,
-    * the [[Dedup.dedupClusters]] shape); all per-vector work stays
-    * distributed. Returns (cid, cv) — feed straight into
-    * [[Similarity.ivfTopK]] as its codebook.
+  /** Full codebook training: iterate [[lloydOnce]] to a fixed point,
+    * reducing each round's accumulators back to a quantized centroid
+    * table. The driver loop ([[graft.Fixpoint.iterate]]) only carries
+    * the K×dim centroid DataFrame between rounds; all per-vector work
+    * stays distributed. Returns (cid, cv) — feed straight into
+    * [[Similarity.ivfTopK]] as its codebook. A codebook still moving
+    * after `maxIter` rounds is an error, not a result.
     *
     * Convergence check is EXACT (integer centroid equality via an anti-
     * join on the exploded table), so the loop cannot oscillate below a
     * float epsilon: mean-of-integers re-quantized to the grid is
     * deterministic, and an unchanged codebook reproduces itself. */
   def train(corpus: DataFrame, k: Int, maxIter: Int = 20): DataFrame = {
-    // byId: every round's lloydOnce is a ×k expansion over q (see byId)
+    // byId: every round's lloydOnce is a ×k expansion over q (see byId),
+    // so the rounds stay at the session's shuffle width (no loop scope)
     val q = byId(corpus).localCheckpoint()
-    var seeds = seedLowestK(q, k).localCheckpoint()
-    var iter = 0
-    var moved = 1L
-    while (moved > 0 && iter < maxIter) {
-      // accumulators → new centroid components on the same 2^20 grid
-      // (exact integer mean, truncated toward zero — see reduceToCodebook)
-      val next = reduceToCodebook(lloydOnce(q, seeds)).localCheckpoint()
-      moved = next
-        .select(col("cid"), posexplode(col("cv")).as(Seq("p", "c")))
-        .join(seeds.select(col("cid"),
-                posexplode(col("cv")).as(Seq("p", "c0"))), Seq("cid", "p"))
-        .filter(col("c") =!= col("c0")).count()
-      seeds = next
-      iter += 1
+    // accumulators → new centroid components on the same 2^20 grid
+    // (exact integer mean, truncated toward zero — see reduceToCodebook)
+    Fixpoint.iterate("KMeans.train", seedLowestK(q, k).localCheckpoint(),
+        maxIter, changes = Some((seeds, next) => next
+          .select(col("cid"), posexplode(col("cv")).as(Seq("p", "c")))
+          .join(seeds.select(col("cid"),
+                  posexplode(col("cv")).as(Seq("p", "c0"))), Seq("cid", "p"))
+          .filter(col("c") =!= col("c0")).count())) { seeds =>
+      reduceToCodebook(lloydOnce(q, seeds))
     }
-    seeds
   }
 }

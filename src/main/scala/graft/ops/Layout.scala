@@ -95,7 +95,7 @@ object Layout {
     // data the guarantee is quad-granular (strays are whole aligned
     // quads, never mid-quad diagonal tails), not region-exact.
     // (The write is eager, so save/restore around it is sound.)
-    WroQueries.withConfs(spark, Map(
+    graft.withConfs(spark, Map(
       "spark.sql.execution.rangeExchange.sampleSizePerPartition" -> "125000")) {
       spark.read.parquet(srcPath)
         .withColumn("__z", zorder16(x, y))

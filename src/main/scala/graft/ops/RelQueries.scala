@@ -2268,26 +2268,13 @@ object RelQueries {
     // SubquerySpec).
     s.conf.set("spark.sql.cteRecursionLevelLimit", 100)
     s.conf.set("spark.sql.cteRecursionRowLimit", 1000000)
-    // r13 (guide §2.2 / the dedupClusters loop-conf discipline): the
-    // recursion executes as one driver-scheduled UnionLoop step per
+    // The recursion executes as one driver-scheduled UnionLoop step per
     // level, and under AQE every level's stages are submitted as their
     // OWN jobs — measured 76 single-task jobs with 7+ s of scheduling
-    // gaps (job-sum 5.0 s of a 12.3 s wall) at sf0.1. AQE has nothing
-    // to adapt per level (the per-level join is frontier × bounded
-    // edges), so the materialization runs with it off, at a partition
-    // count derived from the MEASURED corpus size (~100k rows per
-    // partition, clamped to the session default — the dedupClusters
-    // rule: the frontier is ≤ one row per document per level, so this
-    // stays scale-adaptive, not a local[32] constant; without it the
-    // 20 levels would each launch session-width near-empty stages).
-    // localCheckpoint inside the scope so the executed plan, not a
-    // lazy one, sees the confs (the withConfs contract).
-    val p = math.max(1L, math.min(
-      s.sessionState.conf.numShufflePartitions.toLong,
-      table(s, dir, "documents").count() / 100000L + 1L)).toInt
-    graft.withConfs(s, Map(
-      "spark.sql.adaptive.enabled" -> "false",
-      "spark.sql.shuffle.partitions" -> p.toString)) {
+    // gaps (job-sum 5.0 s of a 12.3 s wall) at sf0.1. The frontier is
+    // ≤ one row per document per level, so the materialization runs in
+    // the loop scope sized from the measured corpus (Fixpoint.scoped).
+    Fixpoint.scoped(s, table(s, dir, "documents").count()) {
       s.sql(q23Sql).localCheckpoint()
     }
   }

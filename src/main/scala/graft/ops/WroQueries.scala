@@ -228,13 +228,6 @@ object WroQueries {
     obsManyMappers.join(cellMax.hint("merge"), Seq("cell_id", "layer"))
   }
 
-  /** Forwarder to [[graft.withConfs]] (moved to the package object so the
-    * llm closure loop can share it); see that scaladoc for the
-    * must-materialize-inside contract. */
-  private[ops] def withConfs[T](spark: SparkSession,
-                                confs: Map[String, String])(body: => T): T =
-    graft.withConfs(spark, confs)(body)
-
   /** J13 under ADAPTIVE skew handling — the same planted-skew overlay as
     * [[overlaySkewed]] with the manual salt DISABLED: the hot cell is
     * left in one shuffle partition and Spark's OptimizeSkewedJoin (what
@@ -291,6 +284,11 @@ object WroQueries {
     * service kernel does (pyt:597 NoData semantics): focal/zonal
     * statistics aggregate over present cells only. */
   private val GridW = 100L
+
+  /** Row bound of every raster-domain loop frame (one row per cell, at
+    * any scale factor): the [[graft.Fixpoint.scoped]] size of the
+    * relaxations and pointer loops below. */
+  private val GridRows = GridW * GridW
 
   /** GIS1 — FOCAL statistics (Esri Focal Statistics, 3×3 rectangle
     * neighborhood): per grid cell, the sum and count of the quantity
@@ -546,41 +544,65 @@ object WroQueries {
     * both sides hash on the cell key. */
   def flowAccumulation(spark: SparkSession, dir: String, k: Int = 10)
       : DataFrame = {
-    val code2dr = expr("""CASE d8 WHEN 1 THEN 0 WHEN 2 THEN 1 WHEN 4 THEN 1
-      WHEN 8 THEN 1 WHEN 16 THEN 0 WHEN 32 THEN -1 WHEN 64 THEN -1
-      ELSE -1 END""")
-    val code2dc = expr("""CASE d8 WHEN 1 THEN 1 WHEN 2 THEN 1 WHEN 4 THEN 0
-      WHEN 8 THEN -1 WHEN 16 THEN -1 WHEN 32 THEN -1 WHEN 64 THEN 0
-      ELSE 1 END""")
-    val edges = flowDirection(spark, dir)
-      .select((col("r") * 100 + col("c")).as("u"),
-        ((col("r") + code2dr) * 100 + (col("c") + code2dc)).as("v"))
-      .localCheckpoint()
+    // the edges checkpoint stays OUTSIDE the loop scope — its plan
+    // aggregates the fact table at data scale
+    val edges = d8Steps(spark, dir).select("u", "v").localCheckpoint()
     val step = edges.select(col("u").as("su"), col("v").as("sv"))
     var cur = edges
     var all = edges
-    // loop under relaxConfs: every per-round frame is raster-domain
-    // bounded (≤GridW² rows), so the k−1 extension checkpoints run as
-    // k−1 single jobs at domain-sized partitions instead of paying
-    // AQE's per-stage job submission at the session's data-scale
-    // partition count (the costDistanceFrom discipline applied to the
-    // one D8 loop that still paid it). The edges checkpoint above
-    // stays OUTSIDE — its plan aggregates the fact table at data
-    // scale. The final countDistinct below is lazy (materializes after
-    // the restore), so it correctly runs at session confs.
-    withConfs(spark, relaxConfs) {
+    // every extension frame is raster-domain bounded. No round can be
+    // released: the result unions them all. The final countDistinct
+    // below is lazy (materializes after the scope), so it runs at
+    // session confs.
+    Fixpoint.scoped(spark, GridRows) {
       for (_ <- 2 to k) {
         cur = cur.join(step, col("v") === col("su"))
           .select(col("u"), col("sv").as("v"))
           .localCheckpoint()
         all = all.unionByName(cur)
       }
-      cur
     }
     all.groupBy("v")
       .agg(countDistinct(col("u")).as("n_upstream"))
       .select(expr("v div 100").as("r"), (col("v") % 100).as("c"),
         col("n_upstream"))
+  }
+
+  /** The D8 pointers as edges (u, v, w): u = r·100 + c, v = the cell
+    * its [[flowDirection]] code points at, w = the chamfer step weight
+    * (3 cardinal, 4 diagonal — GIS11's metric). Boundary cells have no
+    * code and no edge. */
+  private def d8Steps(spark: SparkSession, dir: String): DataFrame = {
+    val code2dr = expr("""CASE d8 WHEN 1 THEN 0 WHEN 2 THEN 1 WHEN 4 THEN 1
+      WHEN 8 THEN 1 WHEN 16 THEN 0 WHEN 32 THEN -1 WHEN 64 THEN -1
+      ELSE -1 END""")
+    val code2dc = expr("""CASE d8 WHEN 1 THEN 1 WHEN 2 THEN 1 WHEN 4 THEN 0
+      WHEN 8 THEN -1 WHEN 16 THEN -1 WHEN 32 THEN -1 WHEN 64 THEN 0
+      ELSE 1 END""")
+    flowDirection(spark, dir)
+      .select((col("r") * 100 + col("c")).as("u"),
+        ((col("r") + code2dr) * 100 + (col("c") + code2dc)).as("v"),
+        expr("CASE WHEN d8 IN (1, 4, 16, 64) THEN 3 ELSE 4 END")
+          .cast("long").as("w"))
+  }
+
+  /** The SINK-CLOSED pointer table of the doubling loops, (u, v, d)
+    * over every present cell: cells with no D8 code (the grid/NoData
+    * boundary) become 0-weight self-loops, so they absorb. Returns it
+    * with the sink set (s), both checkpointed at session confs (the
+    * table joins the fact-scale scan). */
+  private def d8SinkClosed(spark: SparkSession, dir: String)
+      : (DataFrame, DataFrame) = {
+    val cells = perCell(spark, dir)
+      .select((expr("cell_id div 100") * 100 + col("cell_id") % 100)
+        .as("u"))
+    val p = cells.join(d8Steps(spark, dir), Seq("u"), "left")
+      .select(col("u"), coalesce(col("v"), col("u")).as("v"),
+        coalesce(col("w"), lit(0L)).as("d"))
+      .localCheckpoint()
+    val sinks = p.filter(col("u") === col("v")).select(col("u").as("s"))
+      .localCheckpoint()
+    (p, sinks)
   }
 
   /** The classified raster shared by GIS10/GIS11: each present cell's
@@ -669,51 +691,54 @@ object WroQueries {
     * class-`seedCls` sources, exposed for the barrier/metric spec. */
   private[ops] def costDistanceFrom(classed: DataFrame, k: Int,
                                     seedCls: Int = 4): DataFrame = {
-    // the SELF offset (0,0, weight 0) folds "keep the current
-    // estimate" into the same fan-out as the 8 neighbor extensions,
-    // so each round is min over ONE generator — no union referencing
-    // `best` twice, hence no doubling subtree, hence NO per-round
-    // checkpoint: the k rounds are one linear lineage Spark runs as a
-    // SINGLE job (one reused broadcast of the present-cell domain,
-    // k chained partial-agg shuffles AQE coalesces to the data),
-    // instead of k checkpoint jobs each paying scheduling + a fresh
-    // broadcast. Measured 4.1 s → ~1.5 s at sf0.1 for the same rows.
-    val offs = for { dr <- -1L to 1L; dc <- -1L to 1L }
-      yield (dr, dc, if (dr == 0L && dc == 0L) 0L
-                     else if (dr == 0L || dc == 0L) 3L else 4L)
     val cells = classed.localCheckpoint()
+    chamfer(cells, cells.filter(col("cls") === seedCls)
+        .select(col("r"), col("c"), lit(0L).as("d")), k)
+      .withColumnRenamed("d", "cost34")
+  }
+
+  /** The k-round chamfer 3-4 relaxation behind cost distance,
+    * allocation and corridor: from `seeds` (r, c, `group`…, d), each
+    * round extends every estimate by one edge over the 9-offset
+    * generator, keeps in-grid PRESENT targets of `cells` (NoData cells
+    * are barriers) and folds min(d) per (r, c, `group`…). Step weights
+    * are multiplied by `scale`, so a packed state d·scale + payload
+    * (allocation's d·10⁴ + src) folds "min distance, ties to the
+    * smallest payload" as a plain min. Returns (r, c, `group`…, d),
+    * checkpointed.
+    *
+    * The SELF offset (0,0, weight 0) folds "keep the current estimate"
+    * into the same fan-out as the 8 neighbor extensions, so each round
+    * is min over ONE generator — no union referencing the state twice,
+    * hence no doubling subtree, hence NO per-round checkpoint: the k
+    * rounds are one linear lineage materialized as a SINGLE job in the
+    * loop scope (one reused broadcast of the present-cell domain, k
+    * chained partial-agg shuffles), instead of k checkpoint jobs each
+    * paying scheduling + a fresh broadcast. Measured 4.1 s → ~1.5 s at
+    * sf0.1 for the same rows. */
+  private def chamfer(cells: DataFrame, seeds: DataFrame, k: Int,
+                      group: Seq[String] = Nil, scale: Long = 1L): DataFrame = {
+    val offs = for { dr <- -1L to 1L; dc <- -1L to 1L }
+      yield (dr, dc, scale * (if (dr == 0L && dc == 0L) 0L
+                              else if (dr == 0L || dc == 0L) 3L else 4L))
     val present = cells.select("r", "c")
-    var best = cells.filter(col("cls") === seedCls)
-      .select(col("r"), col("c"), lit(0L).as("d"))
+    val keys = Seq("r", "c") ++ group
+    var best = seeds
     for (_ <- 1 to k) {
       best = best
-        .select(col("r"), col("c"), col("d"), explode(typedLit(offs)).as("o"))
-        .select((col("r") + col("o._1")).as("r"),
-          (col("c") + col("o._2")).as("c"), (col("d") + col("o._3")).as("d"))
+        .select(keys.map(col) :+ col("d") :+ explode(typedLit(offs)).as("o"): _*)
+        .select(Seq((col("r") + col("o._1")).as("r"),
+          (col("c") + col("o._2")).as("c")) ++ group.map(col) :+
+          (col("d") + col("o._3")).as("d"): _*)
         .filter(col("r").between(0, GridW - 1) &&
           col("c").between(0, GridW - 1))
         .join(broadcast(present), Seq("r", "c"), "left_semi")
-        .groupBy("r", "c").agg(min("d").as("d"))
+        .groupBy(keys.map(col): _*).agg(min("d").as("d"))
     }
-    withConfs(classed.sparkSession, relaxConfs) {
+    Fixpoint.scoped(cells.sparkSession, GridRows) {
       best.localCheckpoint()
-    }.withColumnRenamed("d", "cost34")
+    }
   }
-
-  /** Confs the domain-bounded relaxations materialize under: AQE OFF
-    * — under AQE every one of the k chained shuffle stages is
-    * submitted as its OWN job (~150-200 ms scheduling each, measured)
-    * while the stages carry ≤10k rows, so there is nothing to adapt
-    * and the whole k-round lineage can run as ONE job — and shuffle
-    * partitions sized to the RASTER DOMAIN (≤GridW² rows by
-    * construction at ANY scale factor), not the session's data-scale
-    * default of 32: the k tiny stages otherwise pay k×32 empty-task
-    * launches. Data-sized like [[aqeSkewConfs]], scoped to the
-    * materialization via [[withConfs]]; everything else in the
-    * session (including the AQE skew demos) keeps AQE on. */
-  private val relaxConfs = Map(
-    "spark.sql.adaptive.enabled" -> "false",
-    "spark.sql.shuffle.partitions" -> "4")
 
   /** GIS23 — LEAST-COST PATH (Esri Cost Path, the backtrace companion
     * to GIS11's accumulated-cost field): from the hardest-to-reach
@@ -740,15 +765,15 @@ object WroQueries {
     * predecessor) holds only at CONVERGENCE of the k-round cost
     * field — under truncation a cell can hold a ≤k-edge cost whose
     * predecessor's own recorded cost is cheaper still, leaving no
-    * valid step; the walk then FAILS LOUDLY (the dedupClusters
-    * discipline) rather than emitting a truncated route as if
-    * complete. */
+    * valid step; the walk then FAILS LOUDLY (as a
+    * [[graft.Fixpoint.iterate]] convergence loop does) rather than
+    * emitting a truncated route as if complete. */
   def leastCostPath(spark: SparkSession, dir: String, k: Int = 10)
       : DataFrame = {
     val offs = for { dr <- -1L to 1L; dc <- -1L to 1L; if dr != 0 || dc != 0 }
       yield (dr, dc, if (dr == 0L || dc == 0L) 3L else 4L)
     val cost = costDistance(spark, dir, k)
-    val pred = withConfs(spark, relaxConfs) {
+    val pred = Fixpoint.scoped(spark, GridRows) {
       cost
         .select(col("r").as("yr"), col("c").as("yc"),
           col("cost34").as("yd"), explode(typedLit(offs)).as("o"))
@@ -814,35 +839,14 @@ object WroQueries {
     allocationFrom(classedGrid(spark, dir), k)
 
   private[ops] def allocationFrom(classed: DataFrame, k: Int): DataFrame = {
-    // same single-lineage relaxation as [[costDistanceFrom]]: the
-    // weight-0 self offset subsumes the union, so the k rounds run as
-    // one job with no per-round checkpoints.
-    val offs = for { dr <- -1L to 1L; dc <- -1L to 1L }
-      yield (dr, dc, if (dr == 0L && dc == 0L) 0L
-                     else if (dr == 0L || dc == 0L) 3L else 4L)
     val cells = classed.localCheckpoint()
-    val present = cells.select("r", "c")
-    var best = cells.filter(col("cls") === 4)
-      .select(col("r"), col("c"),
-        (col("r") * 100 + col("c")).as("key"))   // d = 0, packed = src
-    for (_ <- 1 to k) {
-      best = best
-        .select(col("r"), col("c"), col("key"),
-          explode(typedLit(offs)).as("o"))
-        .select((col("r") + col("o._1")).as("r"),
-          (col("c") + col("o._2")).as("c"),
-          (col("key") + col("o._3") * 10000L).as("key"))
-        .filter(col("r").between(0, GridW - 1) &&
-          col("c").between(0, GridW - 1))
-        .join(broadcast(present), Seq("r", "c"), "left_semi")
-        .groupBy("r", "c").agg(min("key").as("key"))
-    }
-    best = withConfs(classed.sparkSession, relaxConfs) {
-      best.localCheckpoint()
-    }
-    best.select(col("r"), col("c"), expr("key div 10000").as("cost34"),
-      expr("(key % 10000) div 100").as("src_r"),
-      (col("key") % 100).as("src_c"))
+    // d = 0, packed = src
+    chamfer(cells, cells.filter(col("cls") === 4)
+        .select(col("r"), col("c"), (col("r") * 100 + col("c")).as("d")),
+        k, scale = 10000L)
+      .select(col("r"), col("c"), expr("d div 10000").as("cost34"),
+        expr("(d % 10000) div 100").as("src_r"),
+        (col("d") % 100).as("src_c"))
   }
 
   /** GIS27 — CORRIDOR (Esri Corridor, Distance toolset: the SUM of two
@@ -858,43 +862,18 @@ object WroQueries {
     * + one co-partitioned join; at 100 TB each field is the GIS11
     * frontier relaxation and the join inherits their layout. */
   def corridor(spark: SparkSession, dir: String, k: Int = 10): DataFrame = {
-    val classed = classedGrid(spark, dir)
-    // ONE FUSED relaxation for BOTH source sets (r12): the two per-seed
-    // recurrences never interact, so carrying the seed class in the
-    // aggregation key computes both cost fields in a single k-round
-    // lineage — one materialization job instead of two, one broadcast
-    // of the present-cell domain instead of two, and the final
-    // co-partitioned join collapses into a pivot aggregate (2
-    // checkpointed inputs + join exchange → 1 groupBy). Per-round row
-    // count is |frontier_4| + |frontier_0| — the same total rows the
-    // two separate lineages carried. Result-identical by construction:
-    // min-fold per (cell, seed) is exactly costDistanceFrom's
-    // recurrence per seed, and the non-null filter reproduces the
-    // inner join's both-reachable semantics (oracle unchanged,
-    // re-verified exact).
-    val offs = for { dr <- -1L to 1L; dc <- -1L to 1L }
-      yield (dr, dc, if (dr == 0L && dc == 0L) 0L
-                     else if (dr == 0L || dc == 0L) 3L else 4L)
-    val cells = classed.localCheckpoint()
-    val present = cells.select("r", "c")
-    var best = cells.filter(col("cls") === 4 || col("cls") === 0)
-      .select(col("r"), col("c"), col("cls").as("seed"), lit(0L).as("d"))
-    for (_ <- 1 to k) {
-      best = best
-        .select(col("r"), col("c"), col("seed"), col("d"),
-          explode(typedLit(offs)).as("o"))
-        .select((col("r") + col("o._1")).as("r"),
-          (col("c") + col("o._2")).as("c"), col("seed"),
-          (col("d") + col("o._3")).as("d"))
-        .filter(col("r").between(0, GridW - 1) &&
-          col("c").between(0, GridW - 1))
-        .join(broadcast(present), Seq("r", "c"), "left_semi")
-        .groupBy("r", "c", "seed").agg(min("d").as("d"))
-    }
-    val both = withConfs(spark, relaxConfs) {
-      best.localCheckpoint()
-    }
-    both.groupBy("r", "c")
+    // ONE relaxation for BOTH source sets: the two per-seed recurrences
+    // never interact, so carrying the seed class in the aggregation key
+    // computes both cost fields in a single k-round lineage — one
+    // materialization job, one broadcast of the present-cell domain,
+    // and the join of two fields collapses into a pivot aggregate. The
+    // non-null filter reproduces the inner join's both-reachable
+    // semantics.
+    val cells = classedGrid(spark, dir).localCheckpoint()
+    chamfer(cells, cells.filter(col("cls") === 4 || col("cls") === 0)
+        .select(col("r"), col("c"), col("cls").as("seed"), lit(0L).as("d")),
+        k, group = Seq("seed"))
+      .groupBy("r", "c")
       .agg(min(when(col("seed") === 4, col("d"))).as("cost_a"),
            min(when(col("seed") === 0, col("d"))).as("cost_b"))
       .filter(col("cost_a").isNotNull && col("cost_b").isNotNull)
@@ -1008,35 +987,14 @@ object WroQueries {
     * ways must agree cell-for-cell. */
   def watershed(spark: SparkSession, dir: String, doublings: Int = 4)
       : DataFrame = {
-    val code2dr = expr("""CASE d8 WHEN 1 THEN 0 WHEN 2 THEN 1 WHEN 4 THEN 1
-      WHEN 8 THEN 1 WHEN 16 THEN 0 WHEN 32 THEN -1 WHEN 64 THEN -1
-      ELSE -1 END""")
-    val code2dc = expr("""CASE d8 WHEN 1 THEN 1 WHEN 2 THEN 1 WHEN 4 THEN 0
-      WHEN 8 THEN -1 WHEN 16 THEN -1 WHEN 32 THEN -1 WHEN 64 THEN 0
-      ELSE 1 END""")
-    val e = flowDirection(spark, dir)
-      .select((col("r") * 100 + col("c")).as("u"),
-        ((col("r") + code2dr) * 100 + (col("c") + code2dc)).as("v"))
-    val cells = perCell(spark, dir)
-      .select((expr("cell_id div 100") * 100 + col("cell_id") % 100)
-        .as("u"))
-    var p = cells.join(e, Seq("u"), "left")
-      .select(col("u"), coalesce(col("v"), col("u")).as("v"))
-      .localCheckpoint()
-    val sinks = p.filter(col("u") === col("v")).select(col("u").as("s"))
-      .localCheckpoint()
-    // doubling loop under relaxConfs (raster-domain bounded, the
-    // costDistanceFrom discipline): each squaring checkpoint becomes
-    // one job at domain-sized partitions. The initial pointer-table
-    // checkpoint above stays outside — it joins the fact-scale scan.
-    withConfs(spark, relaxConfs) {
-      for (_ <- 1 to doublings) {
-        p = p.join(p.select(col("u").as("m"), col("v").as("w")),
+    val (p0, sinks) = d8SinkClosed(spark, dir)
+    // doubling rounds: raster-domain bounded
+    val p = Fixpoint.scoped(spark, GridRows) {
+      Fixpoint.iterate("watershed", p0.select("u", "v"), doublings) { p =>
+        p.join(p.select(col("u").as("m"), col("v").as("w")),
             col("v") === col("m"))
           .select(col("u"), col("w").as("v"))
-          .localCheckpoint()
       }
-      p
     }
     // the sink set is boundary-sized (≤ the raster frontier) —
     // broadcast it so the final label filter never exchanges
@@ -1062,35 +1020,14 @@ object WroQueries {
     * two structurally different ways must agree cell-for-cell. */
   def flowLength(spark: SparkSession, dir: String, doublings: Int = 4)
       : DataFrame = {
-    val code2dr = expr("""CASE d8 WHEN 1 THEN 0 WHEN 2 THEN 1 WHEN 4 THEN 1
-      WHEN 8 THEN 1 WHEN 16 THEN 0 WHEN 32 THEN -1 WHEN 64 THEN -1
-      ELSE -1 END""")
-    val code2dc = expr("""CASE d8 WHEN 1 THEN 1 WHEN 2 THEN 1 WHEN 4 THEN 0
-      WHEN 8 THEN -1 WHEN 16 THEN -1 WHEN 32 THEN -1 WHEN 64 THEN 0
-      ELSE 1 END""")
-    val stepW = expr("""CASE WHEN d8 IN (1, 4, 16, 64) THEN 3 ELSE 4 END""")
-    val e = flowDirection(spark, dir)
-      .select((col("r") * 100 + col("c")).as("u"),
-        ((col("r") + code2dr) * 100 + (col("c") + code2dc)).as("v"),
-        stepW.cast("long").as("d"))
-    val cells = perCell(spark, dir)
-      .select((expr("cell_id div 100") * 100 + col("cell_id") % 100)
-        .as("u"))
-    var p = cells.join(e, Seq("u"), "left")
-      .select(col("u"), coalesce(col("v"), col("u")).as("v"),
-        coalesce(col("d"), lit(0L)).as("d"))
-      .localCheckpoint()
-    val sinks = p.filter(col("u") === col("v")).select(col("u").as("s"))
-      .localCheckpoint()
-    // doubling loop under relaxConfs — same rationale as [[watershed]].
-    withConfs(spark, relaxConfs) {
-      for (_ <- 1 to doublings) {
-        p = p.join(p.select(col("u").as("m"), col("v").as("w"),
+    val (p0, sinks) = d8SinkClosed(spark, dir)
+    // doubling rounds: raster-domain bounded, as in [[watershed]]
+    val p = Fixpoint.scoped(spark, GridRows) {
+      Fixpoint.iterate("flowLength", p0, doublings) { p =>
+        p.join(p.select(col("u").as("m"), col("v").as("w"),
             col("d").as("d2")), col("v") === col("m"))
           .select(col("u"), col("w").as("v"), (col("d") + col("d2")).as("d"))
-          .localCheckpoint()
       }
-      p
     }
     p.join(broadcast(sinks), col("v") === col("s"), "left_semi")
       .select(expr("u div 100").as("r"), (col("u") % 100).as("c"),

@@ -33,9 +33,9 @@ package object graft {
 
   /** Run `body` with `confs` applied, restoring the previous session
     * values afterwards — safe only when `body` EXECUTES the plan it
-    * builds (lazy plans would otherwise run after the restore). Shared
-    * by the raster relaxations (ops.WroQueries), the dedup closure loop
-    * (llm.Dedup) and layout maintenance (ops.Layout).
+    * builds (lazy plans would otherwise run after the restore). The
+    * iterative operators' loop scope ([[Fixpoint.scoped]]), the AQE skew
+    * demo (ops.WroQueries) and layout maintenance (ops.Layout) use it.
     *
     * Confs are SESSION-GLOBAL: a plan materialized CONCURRENTLY on the
     * same SparkSession while `body` runs (another driver thread, a

@@ -182,6 +182,18 @@ class ExtQueriesSpec extends SparkSpec {
     assert(math.abs(c1 - 10.0) < 0.3, s"c1=$c1")
   }
 
+  test("lloyd training fails when maxIter ends with the codebook still moving") {
+    import spark.implicits._
+    // seeds 0 and 1; round 1 hands vector 2 to centroid 1, which moves
+    val emb = Seq((0L, Array(0f, 0f)), (1L, Array(1f, 0f)), (2L, Array(10f, 0f)))
+      .toDF("vec_id", "embedding")
+      .select(col("vec_id"), KMeans.quantize(col("embedding")).as("qv"))
+    val e = intercept[IllegalArgumentException] {
+      KMeans.train(emb, k = 2, maxIter = 1)
+    }
+    assert(e.getMessage.contains("did not converge"))
+  }
+
   test("orc roundtrip preserves values and types") {
     val orc = RelQueries.src4Orc(spark, dir)
     val direct = graft.table(spark, dir, "lineitem")

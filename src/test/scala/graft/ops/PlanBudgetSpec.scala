@@ -15,9 +15,8 @@ import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
   * ADDS one conditional repartition per compute-heavy scan derivation
   * (guide §2.5 unsplittable-input fix). At this spec's sf0.01 the
   * condition fires (single-row-group fixtures), so the affected budgets
-  * rose by the spread count (+1 per derivation; +2 where two legs
-  * re-derive, e.g. d13/d39); at production split counts the exchange
-  * does not plan at all. The spread exchanges carry the pre-explosion
+  * rose by the spread count (+1 per derivation); at production split
+  * counts the exchange does not plan at all. The spread exchanges carry the pre-explosion
   * scan projection — strictly fewer bytes than the derived stream they
   * parallelize. */
 class PlanBudgetSpec extends SparkSpec with AdaptiveSparkPlanHelper {

@@ -63,7 +63,7 @@ class SkewSpec extends SparkSpec
     val prevParts = spark.conf.get(partsKey)
     try {
       spark.conf.set(partsKey, "8")
-      val (df, smjs) = WroQueries.withConfs(spark, WroQueries.aqeSkewConfs(WroQueries.hotSkewRows(spark, dir))) {
+      val (df, smjs) = graft.withConfs(spark, WroQueries.aqeSkewConfs(WroQueries.hotSkewRows(spark, dir))) {
         val d = WroQueries.skewedJoinedAqe(spark, dir)
         // finalize THIS df's adaptive plan (count() would plan a clone)
         d.queryExecution.toRdd.count()
@@ -79,7 +79,7 @@ class SkewSpec extends SparkSpec
       // result-invariance vs the manual salt on the same data
       def sig(salted: Boolean, aqe: Boolean): Seq[String] = {
         val d =
-          if (aqe) WroQueries.withConfs(spark, WroQueries.aqeSkewConfs(WroQueries.hotSkewRows(spark, dir))) {
+          if (aqe) graft.withConfs(spark, WroQueries.aqeSkewConfs(WroQueries.hotSkewRows(spark, dir))) {
             WroQueries.skewedJoinedAqe(spark, dir).localCheckpoint()
           }
           else WroQueries.skewedJoined(spark, dir, salted)
