@@ -3,9 +3,11 @@ package graft
 import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 
-/** The one way an iterative operator runs its driver loop: the raster
-  * relaxations and pointer-doubling loops, the dedup closures, SSSP,
-  * host rank, k-means and q23's recursion all share these three pieces.
+/** The one way an iterative operator runs its driver loop: the dedup
+  * closures, SSSP, host rank, k-means, q23's recursion and the
+  * least-cost path's predecessor table all share these three pieces.
+  * (The bounded-reach raster kernels need no loop: see
+  * [[graft.ops.Tiles]].)
   *
   *  - [[partitions]] sizes a loop's shuffles from its row bound.
   *  - [[scoped]] runs a materializing body at loop confs.

@@ -283,11 +283,11 @@ object WroQueries {
     * raster-algebra queries below treat absence as NoData the way the
     * service kernel does (pyt:597 NoData semantics): focal/zonal
     * statistics aggregate over present cells only. */
-  private val GridW = 100L
+  private[ops] val GridW = 100L
 
-  /** Row bound of every raster-domain loop frame (one row per cell, at
-    * any scale factor): the [[graft.Fixpoint.scoped]] size of the
-    * relaxations and pointer loops below. */
+  /** Row bound of every raster-domain frame (one row per cell, at any
+    * scale factor): the [[graft.Fixpoint.scoped]] size of the
+    * least-cost path's predecessor table. */
   private val GridRows = GridW * GridW
 
   /** GIS1 — FOCAL statistics (Esri Focal Statistics, 3×3 rectangle
@@ -485,13 +485,32 @@ object WroQueries {
     * (deterministic where Esri's tie rule is lookup-table-internal);
     * all-uphill cells (pits) still point at their least-bad neighbor —
     * pit handling is the fill algorithm's job, documented not hidden.
-    * Shape: the cached cell grid C fans out codes to its 8 neighbors
-    * (raster-domain bounded), joins back to C for the center
-    * elevation, and one min(struct(−key, code)) aggregate picks the
-    * receiver — argmax as a partially-aggregable min, no window. */
-  /** (dr, dc) = target − source; code/weight are the TARGET's view of
-    * the source (its neighbor at (−dr, −dc)). Shared with the oracle's
-    * generated VALUES. */
+    * Shape: the per-cell grid fans out to the [[Tiles]] windows with a
+    * 1-cell halo (every neighbor of a core cell is in its window), and
+    * the D8 rule runs per window in one Scala kernel. */
+  def flowDirection(spark: SparkSession, dir: String): DataFrame =
+    flowDirectionFrom(centsGrid(spark, dir))
+
+  /** Flow-direction core over a sparse grid (r, c, cents), exposed for
+    * the cross-tile spec. */
+  private[ops] def flowDirectionFrom(grid: DataFrame): DataFrame = {
+    import grid.sparkSession.implicits._
+    Tiles.run(grid, 1, col("cents"), "r", "c", "d8") { w =>
+      val dirs = d8(w)
+      (0 until w.size).iterator.filter(i => w.core(i) && dirs(i) >= 0)
+        .map(i => (w.r(i), w.c(i), 1L << dirs(i)))
+    }
+  }
+
+  /** (r, c, cents): the quantity layer as exact cents on the grid. */
+  private def centsGrid(spark: SparkSession, dir: String): DataFrame =
+    perCell(spark, dir)
+      .select(expr("cell_id div 100").as("r"), (col("cell_id") % GridW).as("c"),
+        (col("quantity").cast("decimal(18,2)") * 100).cast("long").as("cents"))
+
+  /** The oracle's generated D8 VALUES: (dr, dc) = target − source;
+    * code/weight are the TARGET's view of the source (its neighbor at
+    * (−dr, −dc)). */
   private val d8Offs: Seq[(Long, Long, Long, Long)] = for {
     dr <- -1L to 1L; dc <- -1L to 1L; if dr != 0 || dc != 0
   } yield {
@@ -505,104 +524,64 @@ object WroQueries {
     (dr, dc, code, if (nr == 0L || nc == 0L) 7L else 5L)
   }
 
-  def flowDirection(spark: SparkSession, dir: String): DataFrame = {
-    val cells = perCell(spark, dir)
-      .select(expr("cell_id div 100").as("r"), (col("cell_id") % GridW).as("c"),
-        (col("quantity").cast("decimal(18,2)") * 100).cast("long").as("cents"))
-      .cache()
-    val offs = d8Offs
-    val nbr = cells.select(col("r"), col("c"), col("cents"),
-        explode(typedLit(offs)).as("o"))
-      .select((col("r") + col("o._1")).as("r"), (col("c") + col("o._2")).as("c"),
-        col("cents").as("nb_cents"), col("o._3").as("code"),
-        col("o._4").as("w"))
-      .filter(col("r").between(0, GridW - 1) && col("c").between(0, GridW - 1))
-    nbr.join(cells.withColumnRenamed("cents", "own"), Seq("r", "c"))
-      .select(col("r"), col("c"), col("code"),
-        ((col("own") - col("nb_cents")) * col("w")).as("key"))
-      .groupBy("r", "c")
-      .agg(count(lit(1)).as("n"),
-           min(struct((-col("key")).as("nk"), col("code"))).as("b"))
-      .filter(col("n") === 8)
-      .select(col("r"), col("c"), col("b.code").as("d8"))
-  }
+  /** The D8 directions in compass-code order: direction n has code
+    * 1 << n (E, SE, S, SW, W, NW, N, NE). */
+  private val Compass: Array[(Int, Int)] =
+    Array((0, 1), (1, 1), (1, 0), (1, -1), (0, -1), (-1, -1), (-1, 0), (-1, 1))
+
+  private def cardinal(n: Int): Boolean = Compass(n)._1 == 0 || Compass(n)._2 == 0
+
+  /** Window index of the neighbor of cell i in direction n, or −1. */
+  private def toward(w: Tiles.Window, i: Int, n: Int): Int =
+    w.nb(i, Compass(n)._1, Compass(n)._2)
+
+  /** THE D8 rule, per window cell: the direction of its steepest
+    * descent — argmax of (own − nb)·w, w = 7 cardinal / 5 diagonal,
+    * ties to the smallest code — or −1 for NoData cells and for cells
+    * missing any of their 8 neighbors (grid edge, NoData hole, or the
+    * window's outer ring, which no kernel reads as exact). */
+  private def d8(w: Tiles.Window): Array[Int] =
+    Array.tabulate(w.size) { i =>
+      val nbs = Array.tabulate(8)(toward(w, i, _))
+      if (!w.present(i) || nbs.contains(-1)) -1
+      else (0 until 8).maxBy(n =>
+        ((w.value(i) - w.value(nbs(n))) * (if (cardinal(n)) 7L else 5L), -n))
+    }
 
   /** GIS9 — FLOW ACCUMULATION over the D8 pointers (the second half of
     * the Jenson-Domingue pair: how many upstream cells drain through
-    * each cell), bounded at `K` hops — the bounded-iteration posture
-    * (q23's recursion cap, d2_dedup_clusters' round discipline): each
-    * round extends every path by one hop via a keyed equi-join of the
-    * current frontier against the 1-hop edge table, so round cost is
-    * frontier-sized and rounds are K, not terrain-diameter. Upstream
-    * count = count(DISTINCT origin) per receiving cell — DISTINCT, not
-    * count(*), because the pit-pair 2-cycles [[flowDirection]]'s
+    * each cell), bounded at `k` hops — the bounded-iteration posture
+    * (q23's recursion cap): a cell's count is the number of DISTINCT
+    * origins whose ≤k-hop downstream walk passes through it — DISTINCT,
+    * not paths, because the pit-pair 2-cycles [[flowDirection]]'s
     * least-bad-neighbor rule admits would otherwise count an origin
-    * once per lap (cells encode as r·100+c, exact on the 100-wide
-    * grid). Boundary cells have no D8 code and simply terminate paths.
-    * At 100 TB the edge table is raster-domain bounded and
-    * checkpointed once; each round is one partition-local join when
-    * both sides hash on the cell key. */
+    * once per lap. Cells with no D8 code (grid/NoData boundary)
+    * terminate walks. Every cell of a ≤k-hop walk into a tile's core
+    * lies within k of the core and its D8 code within k + 1, so the
+    * kernel runs on [[Tiles]] windows with halo k + 1: each window walks
+    * every origin k hops and counts, once per origin, the core cells it
+    * passes. */
   def flowAccumulation(spark: SparkSession, dir: String, k: Int = 10)
-      : DataFrame = {
-    // the edges checkpoint stays OUTSIDE the loop scope — its plan
-    // aggregates the fact table at data scale
-    val edges = d8Steps(spark, dir).select("u", "v").localCheckpoint()
-    val step = edges.select(col("u").as("su"), col("v").as("sv"))
-    var cur = edges
-    var all = edges
-    // every extension frame is raster-domain bounded. No round can be
-    // released: the result unions them all. The final countDistinct
-    // below is lazy (materializes after the scope), so it runs at
-    // session confs.
-    Fixpoint.scoped(spark, GridRows) {
-      for (_ <- 2 to k) {
-        cur = cur.join(step, col("v") === col("su"))
-          .select(col("u"), col("sv").as("v"))
-          .localCheckpoint()
-        all = all.unionByName(cur)
+      : DataFrame =
+    flowAccumulationFrom(centsGrid(spark, dir), k)
+
+  private[ops] def flowAccumulationFrom(grid: DataFrame, k: Int): DataFrame = {
+    import grid.sparkSession.implicits._
+    Tiles.run(grid, k + 1, col("cents"), "r", "c", "n_upstream") { w =>
+      val dirs = d8(w)
+      val n = new Array[Long](w.size)
+      val lastOrigin = Array.fill(w.size)(-1)
+      for (u <- 0 until w.size) {
+        var (cur, hop) = (u, 0)
+        while (hop < k && dirs(cur) >= 0) {
+          cur = toward(w, cur, dirs(cur))
+          hop += 1
+          if (lastOrigin(cur) != u) { lastOrigin(cur) = u; n(cur) += 1 }
+        }
       }
+      (0 until w.size).iterator.filter(i => w.core(i) && n(i) > 0)
+        .map(i => (w.r(i), w.c(i), n(i)))
     }
-    all.groupBy("v")
-      .agg(countDistinct(col("u")).as("n_upstream"))
-      .select(expr("v div 100").as("r"), (col("v") % 100).as("c"),
-        col("n_upstream"))
-  }
-
-  /** The D8 pointers as edges (u, v, w): u = r·100 + c, v = the cell
-    * its [[flowDirection]] code points at, w = the chamfer step weight
-    * (3 cardinal, 4 diagonal — GIS11's metric). Boundary cells have no
-    * code and no edge. */
-  private def d8Steps(spark: SparkSession, dir: String): DataFrame = {
-    val code2dr = expr("""CASE d8 WHEN 1 THEN 0 WHEN 2 THEN 1 WHEN 4 THEN 1
-      WHEN 8 THEN 1 WHEN 16 THEN 0 WHEN 32 THEN -1 WHEN 64 THEN -1
-      ELSE -1 END""")
-    val code2dc = expr("""CASE d8 WHEN 1 THEN 1 WHEN 2 THEN 1 WHEN 4 THEN 0
-      WHEN 8 THEN -1 WHEN 16 THEN -1 WHEN 32 THEN -1 WHEN 64 THEN 0
-      ELSE 1 END""")
-    flowDirection(spark, dir)
-      .select((col("r") * 100 + col("c")).as("u"),
-        ((col("r") + code2dr) * 100 + (col("c") + code2dc)).as("v"),
-        expr("CASE WHEN d8 IN (1, 4, 16, 64) THEN 3 ELSE 4 END")
-          .cast("long").as("w"))
-  }
-
-  /** The SINK-CLOSED pointer table of the doubling loops, (u, v, d)
-    * over every present cell: cells with no D8 code (the grid/NoData
-    * boundary) become 0-weight self-loops, so they absorb. Returns it
-    * with the sink set (s), both checkpointed at session confs (the
-    * table joins the fact-scale scan). */
-  private def d8SinkClosed(spark: SparkSession, dir: String)
-      : (DataFrame, DataFrame) = {
-    val cells = perCell(spark, dir)
-      .select((expr("cell_id div 100") * 100 + col("cell_id") % 100)
-        .as("u"))
-    val p = cells.join(d8Steps(spark, dir), Seq("u"), "left")
-      .select(col("u"), coalesce(col("v"), col("u")).as("v"),
-        coalesce(col("w"), lit(0L)).as("d"))
-      .localCheckpoint()
-    val sinks = p.filter(col("u") === col("v")).select(col("u").as("s"))
-      .localCheckpoint()
-    (p, sinks)
   }
 
   /** The classified raster shared by GIS10/GIS11: each present cell's
@@ -674,15 +653,12 @@ object WroQueries {
     * cells are BARRIERS (Esri's cost-distance contract): travel only
     * crosses present cells, so the result is the geodesic distance on
     * the populated grid, not straight-line. Each round is one
-    * Bellman-Ford relaxation — extend every current estimate by one
-    * edge (9-offset generator whose weight-0 SELF step keeps the
-    * current estimate — no join, no union), keep in-grid PRESENT
-    * targets (broadcast semi of the ≤10k-cell domain), fold min per
-    * cell — so after k rounds each cell holds the min cost over
-    * ≤k-edge paths, frontier cost per round, k rounds not
-    * grid-diameter, and the whole relaxation is ONE linear lineage
-    * (a single job, one reused domain broadcast). Cells a source
-    * cannot reach in k hops stay NoData (absent). */
+    * synchronous Bellman-Ford relaxation, so after k rounds each cell
+    * holds the min cost over ≤k-edge paths — k rounds, not
+    * grid-diameter. Such a path stays within k cells of its end, so
+    * the [[chamfer]] kernel runs all k rounds inside each [[Tiles]]
+    * window with halo k: one fan-out exchange, no per-round job.
+    * Cells a source cannot reach in k hops stay NoData (absent). */
   def costDistance(spark: SparkSession, dir: String, k: Int = 10)
       : DataFrame =
     costDistanceFrom(classedGrid(spark, dir), k)
@@ -691,53 +667,51 @@ object WroQueries {
     * class-`seedCls` sources, exposed for the barrier/metric spec. */
   private[ops] def costDistanceFrom(classed: DataFrame, k: Int,
                                     seedCls: Int = 4): DataFrame = {
-    val cells = classed.localCheckpoint()
-    chamfer(cells, cells.filter(col("cls") === seedCls)
-        .select(col("r"), col("c"), lit(0L).as("d")), k)
-      .withColumnRenamed("d", "cost34")
+    import classed.sparkSession.implicits._
+    Tiles.run(classed, k, col("cls"), "r", "c", "cost34") { w =>
+      val d = chamfer(w, seeds(w, seedCls, _ => 0L), k, 1L)
+      reached(w, d).map(i => (w.r(i), w.c(i), d(i)))
+    }
   }
 
+  /** No state: the cell is not (yet) reached. */
+  private val Unreached = Long.MaxValue
+
+  /** Per window cell: `state(i)` for the present class-`cls` cells,
+    * [[Unreached]] elsewhere. */
+  private def seeds(w: Tiles.Window, cls: Int, state: Int => Long)
+      : Array[Long] =
+    Array.tabulate(w.size)(i =>
+      if (w.present(i) && w.value(i) == cls) state(i) else Unreached)
+
+  /** The core cells of `w` that hold a state in `d`. */
+  private def reached(w: Tiles.Window, d: Array[Long]): Iterator[Int] =
+    (0 until w.size).iterator.filter(i => w.core(i) && d(i) != Unreached)
+
   /** The k-round chamfer 3-4 relaxation behind cost distance,
-    * allocation and corridor: from `seeds` (r, c, `group`…, d), each
-    * round extends every estimate by one edge over the 9-offset
-    * generator, keeps in-grid PRESENT targets of `cells` (NoData cells
-    * are barriers) and folds min(d) per (r, c, `group`…). Step weights
-    * are multiplied by `scale`, so a packed state d·scale + payload
+    * allocation and corridor, over one window from the states `init`:
+    * each (Jacobi) round, every present cell keeps the min of its own
+    * state and each present neighbor's state plus the step weight
+    * (3 cardinal, 4 diagonal) times `scale`. NoData cells never hold a
+    * state, so they are barriers. A packed state d·scale + payload
     * (allocation's d·10⁴ + src) folds "min distance, ties to the
-    * smallest payload" as a plain min. Returns (r, c, `group`…, d),
-    * checkpointed.
-    *
-    * The SELF offset (0,0, weight 0) folds "keep the current estimate"
-    * into the same fan-out as the 8 neighbor extensions, so each round
-    * is min over ONE generator — no union referencing the state twice,
-    * hence no doubling subtree, hence NO per-round checkpoint: the k
-    * rounds are one linear lineage materialized as a SINGLE job in the
-    * loop scope (one reused broadcast of the present-cell domain, k
-    * chained partial-agg shuffles), instead of k checkpoint jobs each
-    * paying scheduling + a fresh broadcast. Measured 4.1 s → ~1.5 s at
-    * sf0.1 for the same rows. */
-  private def chamfer(cells: DataFrame, seeds: DataFrame, k: Int,
-                      group: Seq[String] = Nil, scale: Long = 1L): DataFrame = {
-    val offs = for { dr <- -1L to 1L; dc <- -1L to 1L }
-      yield (dr, dc, scale * (if (dr == 0L && dc == 0L) 0L
-                              else if (dr == 0L || dc == 0L) 3L else 4L))
-    val present = cells.select("r", "c")
-    val keys = Seq("r", "c") ++ group
-    var best = seeds
+    * smallest payload" as a plain min. Exact on every cell at least k
+    * cells inside the window's unclipped edges — the core, at halo k. */
+  private def chamfer(w: Tiles.Window, init: Array[Long], k: Int,
+                      scale: Long): Array[Long] = {
+    var cur = init
     for (_ <- 1 to k) {
-      best = best
-        .select(keys.map(col) :+ col("d") :+ explode(typedLit(offs)).as("o"): _*)
-        .select(Seq((col("r") + col("o._1")).as("r"),
-          (col("c") + col("o._2")).as("c")) ++ group.map(col) :+
-          (col("d") + col("o._3")).as("d"): _*)
-        .filter(col("r").between(0, GridW - 1) &&
-          col("c").between(0, GridW - 1))
-        .join(broadcast(present), Seq("r", "c"), "left_semi")
-        .groupBy(keys.map(col): _*).agg(min("d").as("d"))
+      val next = cur.clone()
+      for (i <- 0 until w.size if w.present(i); n <- 0 until 8) {
+        val j = toward(w, i, n)
+        if (j >= 0 && cur(j) != Unreached) {
+          val d = cur(j) + (if (cardinal(n)) 3L else 4L) * scale
+          if (d < next(i)) next(i) = d
+        }
+      }
+      cur = next
     }
-    Fixpoint.scoped(cells.sparkSession, GridRows) {
-      best.localCheckpoint()
-    }
+    cur
   }
 
   /** GIS23 — LEAST-COST PATH (Esri Cost Path, the backtrace companion
@@ -755,7 +729,9 @@ object WroQueries {
     * on the driver, over the pred table collected ONCE (bounded by
     * the ≤GridW² raster domain at ANY scale factor — the documented
     * bounded-collect boundary, like Bpe's ≤topM rows; the cost FIELD
-    * and the pred FUNCTION stay distributed). The former
+    * comes out of GIS11's tile kernel and the pred FUNCTION stays
+    * distributed, and both checkpoints are released once collected,
+    * since the returned path is a local relation). The former
     * formulation — one Spark join of a one-row frontier per step —
     * paid either a ~100 ms checkpoint job per step or ~2 s of
     * planning the unioned join chain, for a walk whose total state is
@@ -794,6 +770,8 @@ object WroQueries {
     val predOf: Map[(Long, Long), (Long, Long)] = pred.collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> (r.getLong(2), r.getLong(3)))
       .toMap
+    // the returned path is a local relation: nothing reads them again
+    Fixpoint.release(cost, pred)
     require(costOf.nonEmpty,
       "least-cost path found no destination — the cost field is empty")
     // destination: max cost34, ties to the SMALLEST packed key
@@ -832,53 +810,47 @@ object WroQueries {
     * bounded relaxation and NoData-barrier contract. The per-cell
     * state is ONE BIGINT — the packed key d·10⁴ + src (src =
     * r·100 + c < 10⁴, d ≤ 40 at the cap), so "min distance, ties to
-    * the smallest source id" is a plain min() — partially aggregable,
-    * engine-exact, and the same total order in the oracle's packed
-    * min. Emits the distance AND the allocated source, unpacked. */
+    * the smallest source id" is a plain min — the [[chamfer]] kernel
+    * with steps scaled by 10⁴, on the same halo-k windows, and the
+    * same total order as the oracle's packed min. Emits the distance
+    * AND the allocated source, unpacked. */
   def allocation(spark: SparkSession, dir: String, k: Int = 10): DataFrame =
     allocationFrom(classedGrid(spark, dir), k)
 
   private[ops] def allocationFrom(classed: DataFrame, k: Int): DataFrame = {
-    val cells = classed.localCheckpoint()
-    // d = 0, packed = src
-    chamfer(cells, cells.filter(col("cls") === 4)
-        .select(col("r"), col("c"), (col("r") * 100 + col("c")).as("d")),
-        k, scale = 10000L)
-      .select(col("r"), col("c"), expr("d div 10000").as("cost34"),
-        expr("(d % 10000) div 100").as("src_r"),
-        (col("d") % 100).as("src_c"))
+    import classed.sparkSession.implicits._
+    Tiles.run(classed, k, col("cls"), "r", "c", "cost34", "src_r", "src_c") {
+      w =>
+        // d = 0, packed = src
+        val d = chamfer(w, seeds(w, 4, i => w.r(i) * 100 + w.c(i)), k, 10000L)
+        reached(w, d).map(i =>
+          (w.r(i), w.c(i), d(i) / 10000, d(i) % 10000 / 100, d(i) % 100))
+    }
   }
 
   /** GIS27 — CORRIDOR (Esri Corridor, Distance toolset: the SUM of two
     * accumulated-cost surfaces — every cell's value is the total cost
     * of the best A→cell→B route through it; thresholding the sum picks
     * the movement corridor between the two source sets): the class-4
-    * and class-0 cost fields (GIS11's k-round chamfer relaxation,
-    * seed class parameterized) joined on the cell key and summed.
-    * Only cells reachable from BOTH source sets within k rounds emit
-    * (the inner join IS the reachability intersection — Esri's NoData
-    * propagation for corridor); the threshold cut is the caller's
-    * post-filter, so the full sum surface ships. Two proven subplans
-    * + one co-partitioned join; at 100 TB each field is the GIS11
-    * frontier relaxation and the join inherits their layout. */
-  def corridor(spark: SparkSession, dir: String, k: Int = 10): DataFrame = {
-    // ONE relaxation for BOTH source sets: the two per-seed recurrences
-    // never interact, so carrying the seed class in the aggregation key
-    // computes both cost fields in a single k-round lineage — one
-    // materialization job, one broadcast of the present-cell domain,
-    // and the join of two fields collapses into a pivot aggregate. The
-    // non-null filter reproduces the inner join's both-reachable
-    // semantics.
-    val cells = classedGrid(spark, dir).localCheckpoint()
-    chamfer(cells, cells.filter(col("cls") === 4 || col("cls") === 0)
-        .select(col("r"), col("c"), col("cls").as("seed"), lit(0L).as("d")),
-        k, group = Seq("seed"))
-      .groupBy("r", "c")
-      .agg(min(when(col("seed") === 4, col("d"))).as("cost_a"),
-           min(when(col("seed") === 0, col("d"))).as("cost_b"))
-      .filter(col("cost_a").isNotNull && col("cost_b").isNotNull)
-      .select(col("r"), col("c"), col("cost_a"), col("cost_b"),
-        (col("cost_a") + col("cost_b")).as("total34"))
+    * and class-0 cost fields (GIS11's k-round chamfer relaxation) and
+    * their sum. Only cells reachable from BOTH source sets within k
+    * rounds emit (Esri's NoData propagation for corridor); the
+    * threshold cut is the caller's post-filter, so the full sum
+    * surface ships. The two recurrences never interact, so both run
+    * in the same pass over each halo-k window — one exchange for both
+    * fields and no join between them. */
+  def corridor(spark: SparkSession, dir: String, k: Int = 10): DataFrame =
+    corridorFrom(classedGrid(spark, dir), k)
+
+  private[ops] def corridorFrom(classed: DataFrame, k: Int): DataFrame = {
+    import classed.sparkSession.implicits._
+    Tiles.run(classed, k, col("cls"), "r", "c", "cost_a", "cost_b",
+        "total34") { w =>
+      val a = chamfer(w, seeds(w, 4, _ => 0L), k, 1L)
+      val b = chamfer(w, seeds(w, 0, _ => 0L), k, 1L)
+      reached(w, a).filter(b(_) != Unreached)
+        .map(i => (w.r(i), w.c(i), a(i), b(i), a(i) + b(i)))
+    }
   }
 
   /** GIS15 — CURVATURE (Esri Curvature / Zevenbergen-Thorne 1987 —
@@ -971,67 +943,61 @@ object WroQueries {
   }
 
   /** GIS14 — WATERSHED labeling (Esri Watershed: which outlet does
-    * each cell drain to?) by POINTER DOUBLING over the D8 flow
-    * pointers — the log-rounds functional-graph primitive GIS9's
-    * linear frontier walk doesn't exercise: p₀ = next (with SINKS —
-    * cells with no D8 code, i.e. the grid/NoData boundary — made
-    * SELF-LOOPS), then k squarings give next^(2^k); after 4 rounds
-    * every cell ≤16 hops from its outlet holds that outlet, in FOUR
-    * raster-domain joins instead of sixteen (at 100 TB the doubling
-    * count is the log of the longest drainage path — 40 rounds cover
-    * 2^40 cells of relief). Cells whose 16-hop target is NOT a sink
-    * stay unlabeled (absent): mid-path cells on longer drains and the
-    * pit-pair 2-cycles [[flowDirection]]'s least-bad-neighbor rule
-    * admits (fill's job, GIS9's documented stance). The oracle walks
-    * the SAME 16 steps linearly — next^16 computed two different
-    * ways must agree cell-for-cell. */
+    * each cell drain to?) by a bounded walk along the D8 flow
+    * pointers: SINKS — cells with no D8 code, i.e. the grid/NoData
+    * boundary — absorb, and every cell that reaches a sink within
+    * 2^`doublings` hops (16 by default) is labeled with it. Cells whose
+    * 16-hop target is NOT a sink stay unlabeled (absent): mid-path cells
+    * on longer drains and the pit-pair 2-cycles [[flowDirection]]'s
+    * least-bad-neighbor rule admits (fill's job, GIS9's documented
+    * stance). A 16-hop walk stays within 16 cells of its start and its
+    * end's sink test needs one cell more, so the walk runs in one
+    * kernel per [[Tiles]] window with halo 2^`doublings` + 1 — one
+    * exchange and no per-hop join. The
+    * oracle walks the SAME 16 steps over its own SQL pointer table —
+    * next^16 computed two different ways must agree cell-for-cell. */
   def watershed(spark: SparkSession, dir: String, doublings: Int = 4)
-      : DataFrame = {
-    val (p0, sinks) = d8SinkClosed(spark, dir)
-    // doubling rounds: raster-domain bounded
-    val p = Fixpoint.scoped(spark, GridRows) {
-      Fixpoint.iterate("watershed", p0.select("u", "v"), doublings) { p =>
-        p.join(p.select(col("u").as("m"), col("v").as("w")),
-            col("v") === col("m"))
-          .select(col("u"), col("w").as("v"))
-      }
-    }
-    // the sink set is boundary-sized (≤ the raster frontier) —
-    // broadcast it so the final label filter never exchanges
-    p.join(broadcast(sinks), col("v") === col("s"), "left_semi")
-      .select(expr("u div 100").as("r"), (col("u") % 100).as("c"),
-        expr("v div 100").as("ws_r"), (col("v") % 100).as("ws_c"))
-  }
+      : DataFrame =
+    watershedFrom(centsGrid(spark, dir), doublings)
+
+  private[ops] def watershedFrom(grid: DataFrame, doublings: Int): DataFrame =
+    outlets(grid, doublings).select("r", "c", "ws_r", "ws_c")
 
   /** GIS28 — FLOW LENGTH (Esri Flow Length, downstream: the
     * chamfer-weighted distance each cell travels along its D8 path to
-    * its outlet) by POINTER DOUBLING WITH AN ADDITIVE PAYLOAD — the
-    * GIS14 machinery generalized from labels to aggregates: the
-    * pointer table carries (next, dist); squaring composes both,
-    *   p²(u) = (p(p(u).v).v, p(u).d + p(p(u).v).d),
-    * and sinks are 0-distance self-loops (absorbing, so the sum stops
-    * growing at the outlet). Four squarings give the ≤16-hop path
-    * distance in FOUR raster-domain joins — at 100 TB, log(longest
-    * drainage path) rounds, the same reason GIS14 scales, now proven
-    * for a non-idempotent (summing) composition. Step weights are the
-    * GIS11 chamfer 3/4; cells whose 16-hop target is NOT a sink stay
-    * honestly unlabeled (the GIS14 contract). The oracle walks the
-    * SAME 16 steps LINEARLY, accumulating — sum-over-path computed
-    * two structurally different ways must agree cell-for-cell. */
+    * its outlet) — GIS14's walk with an additive payload: each hop adds
+    * its GIS11 chamfer weight (3 cardinal, 4 diagonal), and sinks stop
+    * the sum at the outlet. Cells whose 16-hop target is NOT a sink
+    * stay honestly unlabeled (the GIS14 contract). The oracle walks
+    * the SAME 16 steps LINEARLY in SQL, accumulating. */
   def flowLength(spark: SparkSession, dir: String, doublings: Int = 4)
-      : DataFrame = {
-    val (p0, sinks) = d8SinkClosed(spark, dir)
-    // doubling rounds: raster-domain bounded, as in [[watershed]]
-    val p = Fixpoint.scoped(spark, GridRows) {
-      Fixpoint.iterate("flowLength", p0, doublings) { p =>
-        p.join(p.select(col("u").as("m"), col("v").as("w"),
-            col("d").as("d2")), col("v") === col("m"))
-          .select(col("u"), col("w").as("v"), (col("d") + col("d2")).as("d"))
-      }
+      : DataFrame =
+    flowLengthFrom(centsGrid(spark, dir), doublings)
+
+  private[ops] def flowLengthFrom(grid: DataFrame, doublings: Int): DataFrame =
+    outlets(grid, doublings).select("r", "c", "len34")
+
+  /** The shared GIS14/GIS28 kernel: per present cell of a sparse grid
+    * (r, c, cents) that reaches a sink within 2^`doublings` D8 hops,
+    * the sink (ws_r, ws_c) and the chamfer length of the walk. */
+  private def outlets(grid: DataFrame, doublings: Int): DataFrame = {
+    import grid.sparkSession.implicits._
+    val hops = 1 << doublings
+    Tiles.run(grid, hops + 1, col("cents"), "r", "c", "ws_r", "ws_c",
+        "len34") { w =>
+      val dirs = d8(w)
+      (0 until w.size).iterator.filter(i => w.core(i) && w.present(i))
+        .flatMap { i =>
+          var (cur, len, hop) = (i, 0L, 0)
+          while (hop < hops && dirs(cur) >= 0) {
+            len += (if (cardinal(dirs(cur))) 3L else 4L)
+            cur = toward(w, cur, dirs(cur))
+            hop += 1
+          }
+          if (dirs(cur) >= 0) None
+          else Some((w.r(i), w.c(i), w.r(cur), w.c(cur), len))
+        }
     }
-    p.join(broadcast(sinks), col("v") === col("s"), "left_semi")
-      .select(expr("u div 100").as("r"), (col("u") % 100).as("c"),
-        col("d").as("len34"))
   }
 
   /** GIS7 — POLYGON zonal statistics (Esri Zonal Statistics with

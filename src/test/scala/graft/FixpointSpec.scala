@@ -44,7 +44,9 @@ class FixpointSpec extends SparkSpec {
     assert(heldSince(m) == 0)
   }
 
-  Seq("wro_watershed", "wro_flow_length", "d43_sssp", "d19_host_rank",
+  Seq("wro_watershed", "wro_flow_length", "wro_cost_distance",
+      "wro_allocation", "wro_corridor", "wro_least_cost_path",
+      "wro_flow_accumulation", "wro_twi", "d43_sssp", "d19_host_rank",
       "d2_dedup_clusters").foreach { name =>
     test(s"$name holds no checkpoint its result does not read") {
       val m = mark()

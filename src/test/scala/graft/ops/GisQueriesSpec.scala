@@ -110,20 +110,7 @@ class GisQueriesSpec extends SparkSpec {
         .map(i => (i / 12L, i % 12L, if (rnd.nextInt(6) == 0) 4 else 0))
       if (cells.exists(_._3 == 4)) {
         val k = 10
-        // reference: k rounds of relaxation over a Scala map
-        val present = cells.map(c => (c._1, c._2)).toSet
-        var ref = cells.filter(_._3 == 4)
-          .map(c => (c._1, c._2) -> 0L).toMap
-        val offs = for { dr <- -1L to 1L; dc <- -1L to 1L
-                         if dr != 0 || dc != 0 }
-          yield (dr, dc, if (dr == 0 || dc == 0) 3L else 4L)
-        for (_ <- 1 to k) {
-          val ext = ref.toSeq.flatMap { case ((r, c), d) =>
-            offs.map { case (dr, dc, w) => ((r + dr, c + dc), d + w) } }
-            .filter { case (p, _) => present(p) }
-          ref = (ref.toSeq ++ ext).groupBy(_._1)
-            .map { case (p, ds) => p -> ds.map(_._2).min }
-        }
+        val ref = costFieldRef(cells, 4, k)
         val got = WroQueries
           .costDistanceFrom(cells.toDF("r", "c", "cls"), k)
           .collect().map(x => ((x.getLong(0), x.getLong(1)), x.getLong(2)))
@@ -159,49 +146,15 @@ class GisQueriesSpec extends SparkSpec {
     assert(got == ref)
   }
 
-  test("watershed doubling equals linear pointer-following on random " +
-       "functional graphs (property)") {
-    // the doubling identity next^(2^k) is independent of the D8
-    // derivation — check it on random self-loop-terminated pointer maps
-    val rnd = new scala.util.Random(13)
-    val n = 200
-    val next = Array.tabulate(n) { i =>
-      if (rnd.nextInt(5) == 0) i else rnd.nextInt(n) } // ~1/5 sinks
-    // linear: follow 16 steps
-    val linear = Array.tabulate(n) { i =>
-      var cur = i; for (_ <- 1 to 16) cur = next(cur); cur }
-    // doubling: 4 squarings
-    var p = next.clone()
-    for (_ <- 1 to 4) { val q = p.clone(); p = q.map(v => q(v)) }
-    assert(p.sameElements(linear))
-    // labels only where the 16-hop target is a sink (self-loop)
-    val labeled = (0 until n).filter(i => next(p(i)) == p(i) &&
-      p(i) == next(p(i)))
-    assert(labeled.forall(i => linear(i) == p(i)))
-  }
-
-  test("flow length: additive doubling equals brute-force linear walk") {
-    val code2off = Map(1 -> (0, 1), 2 -> (1, 1), 4 -> (1, 0), 8 -> (1, -1),
-      16 -> (0, -1), 32 -> (-1, -1), 64 -> (-1, 0), 128 -> (-1, 1))
-    val fd = WroQueries.flowDirection(spark, dir).collect()
-      .map(r => ((r.getLong(0), r.getLong(1)), r.getLong(2).toInt)).toMap
-    val present = WroQueries.perCell(spark, dir)
-      .select(expr("cell_id div 100").as("r"), (col("cell_id") % 100).as("c"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+  test("flow length equals a brute-force D8 walk from the cents") {
+    val cents = WroQueries.perCell(spark, dir)
+      .select(expr("cell_id div 100").as("r"), (col("cell_id") % 100).as("c"),
+        (col("quantity").cast("decimal(18,2)") * 100).cast("long").as("z"))
+      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     // brute force: follow the D8 pointer 16 steps, summing chamfer
     // weights; sinks (no pointer) absorb at distance 0
-    val exp = present.flatMap { start =>
-      var cur = start; var acc = 0L
-      for (_ <- 1 to 16) {
-        fd.get(cur).foreach { code =>
-          val (dr, dc) = code2off(code)
-          acc += (if (dr == 0 || dc == 0) 3 else 4)
-          cur = (cur._1 + dr, cur._2 + dc)
-        }
-      }
-      if (fd.contains(cur)) None // did not reach a sink in 16 hops
-      else Some(start -> acc)
-    }.toMap
+    val exp = outletsRef(d8Ref(cents), cents.keySet, 16)
+      .map { case (p, (_, len)) => p -> len }
     val got = WroQueries.flowLength(spark, dir).collect()
       .map(r => ((r.getLong(0), r.getLong(1)), r.getLong(2))).toMap
     assert(got == exp && got.nonEmpty)
@@ -223,5 +176,173 @@ class GisQueriesSpec extends SparkSpec {
     assert(got((0L, 3L)) == ((3L, 0L, 4L)))
     assert(got((0L, 2L)) == ((6L, 0L, 0L)), "tie goes to source (0,0)")
     assert(got.size == 5)
+  }
+
+  // ---- brute-force references, and cross-tile properties on random
+  // sparse grids over the full 100×100 domain (16 tiles of 32×32),
+  // every cell on both sides of a tile seam present so paths cross
+  // seams
+
+  private type Cell = (Long, Long)
+
+  private val seams = Set(31L, 32L, 63L, 64L, 95L, 96L)
+
+  private def fullGrid(rnd: scala.util.Random, density: Double): Seq[Cell] =
+    for { r <- 0L until 100L; c <- 0L until 100L
+          if seams(r) || seams(c) || rnd.nextDouble() < density } yield (r, c)
+
+  private val compass: Seq[Cell] = Seq((0L, 1L), (1L, 1L), (1L, 0L),
+    (1L, -1L), (0L, -1L), (-1L, -1L), (-1L, 0L), (-1L, 1L)) // codes 1..128
+
+  private def chamferW(dr: Long, dc: Long): Long =
+    if (dr == 0 || dc == 0) 3L else 4L
+
+  /** Brute-force D8 from the cents: each complete-neighborhood cell's
+    * steepest-descent neighbor (max (own − nb)·(7 | 5), ties to the
+    * smallest compass code) and the chamfer weight of that step. */
+  private def d8Ref(cents: Map[Cell, Long]): Map[Cell, (Cell, Long)] =
+    cents.flatMap { case ((r, c), z) =>
+      val nbs = compass.map { case (dr, dc) => (r + dr, c + dc) }
+      if (!nbs.forall(cents.contains)) None
+      else {
+        val n = compass.indices.maxBy { n =>
+          val (dr, dc) = compass(n)
+          ((z - cents(nbs(n))) * (if (dr == 0 || dc == 0) 7L else 5L), -n)
+        }
+        Some((r, c) -> (nbs(n), chamferW(compass(n)._1, compass(n)._2)))
+      }
+    }
+
+  /** The linear `hops`-step walk from every present cell: its end and
+    * summed length, for the walks that end on a sink. */
+  private def outletsRef(next: Map[Cell, (Cell, Long)], present: Set[Cell],
+                         hops: Int): Map[Cell, (Cell, Long)] =
+    present.flatMap { start =>
+      var (cur, len) = (start, 0L)
+      for (_ <- 1 to hops) next.get(cur).foreach { case (p, w) =>
+        cur = p; len += w }
+      if (next.contains(cur)) None else Some(start -> ((cur, len)))
+    }.toMap
+
+  /** Per receiving cell, the distinct origins whose ≤k-hop walk passes it. */
+  private def accumulationRef(next: Map[Cell, (Cell, Long)], k: Int)
+      : Map[Cell, Long] =
+    next.keys.toSeq.flatMap { u =>
+      Iterator.iterate(Option(u))(_.flatMap(next.get).map(_._1))
+        .slice(1, k + 1).takeWhile(_.nonEmpty).flatten.toSet
+    }.groupBy(identity).map { case (v, us) => v -> us.size.toLong }
+
+  private def classedFull(seed: Int): Seq[(Long, Long, Int)] = {
+    val rnd = new scala.util.Random(seed)
+    // sources (class 4 and class 0) are rare so k bounds the reach
+    fullGrid(rnd, 0.6).map { case (r, c) =>
+      val u = rnd.nextInt(150)
+      (r, c, if (u == 0) 4 else if (u == 1) 0 else 1 + u % 3)
+    }
+  }
+
+  /** k synchronous Bellman-Ford rounds of the chamfer relaxation
+    * (steps times `scale`) over the whole grid `cells`, from the
+    * class-`cls` cells at `state`. */
+  private def costFieldRef(cells: Seq[(Long, Long, Int)], cls: Int, k: Int,
+                           scale: Long = 1L, state: Cell => Long = _ => 0L)
+      : Map[Cell, Long] = {
+    val present = cells.map(x => (x._1, x._2)).toSet
+    var cur = cells.filter(_._3 == cls).map(x => (x._1, x._2))
+      .map(p => p -> state(p)).toMap
+    for (_ <- 1 to k) {
+      val next = scala.collection.mutable.Map(cur.toSeq: _*)
+      for (((r, c), d) <- cur; (dr, dc) <- compass) {
+        val p = (r + dr, c + dc)
+        val nd = d + chamferW(dr, dc) * scale
+        if (present(p) && next.get(p).forall(nd < _)) next(p) = nd
+      }
+      cur = next.toMap
+    }
+    cur
+  }
+
+  Seq(10, 40).foreach { k =>
+    test(s"cost distance across tile seams equals Bellman-Ford (k = $k)") {
+      import spark.implicits._
+      for (seed <- Seq(3, 5)) {
+        val cells = classedFull(seed)
+        val got = WroQueries.costDistanceFrom(cells.toDF("r", "c", "cls"), k)
+          .collect().map(x => ((x.getLong(0), x.getLong(1)), x.getLong(2)))
+          .toMap
+        val exp = costFieldRef(cells, 4, k)
+        assert(got == exp, s"seed $seed")
+        assert(exp.keys.map(_._1 / 32).size > 1 &&
+          exp.keys.map(_._2 / 32).size > 1, "the field spans no seam")
+      }
+    }
+  }
+
+  test("allocation across tile seams equals Bellman-Ford on packed keys") {
+    import spark.implicits._
+    val cells = classedFull(7)
+    val got = WroQueries.allocationFrom(cells.toDF("r", "c", "cls"), 10)
+      .collect().map(x => ((x.getLong(0), x.getLong(1)),
+        (x.getLong(2), x.getLong(3), x.getLong(4)))).toMap
+    val exp = costFieldRef(cells, 4, 10, 10000L, p => p._1 * 100 + p._2)
+      .map { case (p, key) =>
+        p -> ((key / 10000, key % 10000 / 100, key % 100)) }
+    assert(got == exp)
+    // a distance tie across a seam: (10,32) and (40,32) are 9 from the
+    // sources on both sides of the column-31|32 and row-31|32 seams
+    val line = (29L to 35L).map(c => (10L, c, if (c == 29 || c == 35) 4 else 1)) ++
+      (29L to 35L).map(r => (r, 40L, if (r == 29 || r == 35) 4 else 1))
+    val tie = WroQueries.allocationFrom(line.toDF("r", "c", "cls"), 10)
+      .collect().map(x => ((x.getLong(0), x.getLong(1)),
+        (x.getLong(2), x.getLong(3), x.getLong(4)))).toMap
+    assert(tie((10L, 32L)) == ((9L, 10L, 29L)))
+    assert(tie((32L, 40L)) == ((9L, 29L, 40L)))
+  }
+
+  test("corridor across tile seams equals two Bellman-Ford fields") {
+    import spark.implicits._
+    val cells = classedFull(9)
+    val got = WroQueries.corridorFrom(cells.toDF("r", "c", "cls"), 10)
+      .collect().map(x => ((x.getLong(0), x.getLong(1)),
+        (x.getLong(2), x.getLong(3), x.getLong(4)))).toMap
+    val (a, b) = (costFieldRef(cells, 4, 10), costFieldRef(cells, 0, 10))
+    val exp = a.keySet.intersect(b.keySet)
+      .map(p => p -> ((a(p), b(p), a(p) + b(p)))).toMap
+    assert(got == exp && exp.nonEmpty)
+  }
+
+  /** Random cents over the full grid: a tilted plane plus noise (long
+    * drains that cross seams), then pure noise (pits everywhere). */
+  private def centsFull(seed: Int, tilt: Boolean): Map[Cell, Long] = {
+    val rnd = new scala.util.Random(seed)
+    fullGrid(rnd, 0.9).map { case (r, c) =>
+      (r, c) -> ((if (tilt) 10000L - 40 * r - 25 * c else 0L) +
+        rnd.nextInt(if (tilt) 60 else 5000))
+    }.toMap
+  }
+
+  Seq(true, false).foreach { tilt =>
+    test(s"watershed, flow length and flow accumulation across tile seams " +
+         s"equal a brute-force D8 walk (tilted = $tilt)") {
+      import spark.implicits._
+      val cents = centsFull(if (tilt) 21 else 23, tilt)
+      val grid = cents.toSeq.map { case ((r, c), z) => (r, c, z) }
+        .toDF("r", "c", "cents")
+      val next = d8Ref(cents)
+      val outlets = outletsRef(next, cents.keySet, 16)
+      val ws = WroQueries.watershedFrom(grid, 4).collect()
+        .map(x => ((x.getLong(0), x.getLong(1)), (x.getLong(2), x.getLong(3))))
+        .toMap
+      assert(ws == outlets.map { case (p, (end, _)) => p -> end })
+      val fl = WroQueries.flowLengthFrom(grid, 4).collect()
+        .map(x => ((x.getLong(0), x.getLong(1)), x.getLong(2))).toMap
+      assert(fl == outlets.map { case (p, (_, len)) => p -> len })
+      val acc = WroQueries.flowAccumulationFrom(grid, 10).collect()
+        .map(x => ((x.getLong(0), x.getLong(1)), x.getLong(2))).toMap
+      assert(acc == accumulationRef(next, 10))
+      // the walks reach across seams: some outlet lies in another tile
+      assert(outlets.exists { case ((r, c), ((er, ec), _)) =>
+        (r / 32, c / 32) != ((er / 32, ec / 32)) })
+    }
   }
 }

@@ -305,21 +305,20 @@ class PlanBudgetSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     // per-cell agg + the per-polygon agg; the 6-feature dim broadcasts
     // and the ray cast folds in-row (no edge explode)
     "wro_polygon_zonal" -> 2,
-    // cached grid: the 8x fan-out joins back on (r,c) + the argmin
-    // aggregate; all raster-domain bounded
+    // the D8 kernel materializes behind its window checkpoint; the
+    // visible plan reads it
     "wro_flow_direction" -> 3,
     // the versioned dim broadcasts; the one exchange is the final
     // accounting aggregate — the fact never shuffles for the lookup
     "j20_temporal_lookup" -> 1,
-    // visible past the checkpointed per-round frontiers: the distinct
-    // origin count's two-phase aggregate; per-round joins hide behind
-    // their own checkpoints
+    // the ≤k-hop accumulation kernel materializes behind its window
+    // checkpoint; the visible plan reads it
     "wro_flow_accumulation" -> 2,
     // cached per-cell grid + 1-row stats agg + the two-level mode
     // aggregate ((r,c,cls) counts then (r,c) fold) — all raster-bounded
     "wro_majority_filter" -> 4,
-    // the single-lineage relaxation materializes behind ONE checkpoint
-    // (AQE off, domain-sized partitions); the visible plan reads it
+    // the windowed chamfer kernel materializes behind ONE checkpoint;
+    // the visible plan reads it
     "wro_cost_distance" -> 0,
     // the decorrelated ranked window's s_nationkey exchange + the
     // outer ORDER BY's range partitioning; nation broadcasts
@@ -328,7 +327,7 @@ class PlanBudgetSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     // TakeOrdered; the one exchange is the post-limit rank window
     // carrying ≤ k rows
     "d36_sq8_topk" -> 1,
-    // same checkpointed-rounds shape as cost distance
+    // the same chamfer kernel and checkpoint as cost distance
     "wro_allocation" -> 0,
     // visible past the cached sketch: the exact-audit window exchange
     // + its aggregate — the audit leg exists to GATE the sketch and
@@ -348,8 +347,8 @@ class PlanBudgetSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     // the rank window's user_id exchange; the collect aggregate and
     // the in-row pair fold reuse its layout
     "w18_mann_kendall" -> 1,
-    // doubling rounds hide behind checkpoints; the visible plan is the
-    // final sink semi-join
+    // the windowed D8 walk materializes behind its checkpoint; the
+    // visible plan is a projection of it
     "wro_watershed" -> 1,
     // four independent signal families (gopher tokens, classifier
     // buckets, langid lexicon+votes, line census) each pay their keyed
@@ -414,8 +413,8 @@ class PlanBudgetSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     // the (u, cents) pair aggregate + the per-u argmax + the value-
     // domain-bounded front window
     "o10_skyline" -> 3,
-    // slope's two exchanges + the accumulation aggregate + the (r,c)
-    // join; per-round walk joins hide behind their checkpoints
+    // slope's two exchanges + the (r,c) join against the checkpointed
+    // accumulation kernel
     "wro_twi" -> 4,
     // the declared result is the driver-walked path as a LocalRelation;
     // the cost field and pred table materialize behind checkpoints
@@ -431,8 +430,8 @@ class PlanBudgetSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     // the encode fold's doc aggregate + the per-language aggregate;
     // training rounds hide behind their own jobs
     "d40_fertility" -> 3,
-    // the co-partitioned field join past the two checkpointed cost
-    // relaxations
+    // both cost fields come out of one windowed chamfer kernel behind
+    // one checkpoint; the visible plan reads it
     "wro_corridor" -> 2,
     // the visible plan reads the checkpointed final weight table;
     // per-epoch joins/aggregates hide behind their checkpoints
@@ -440,8 +439,8 @@ class PlanBudgetSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     // the decile window's single-partition exchange + the decile agg;
     // training hides behind its checkpoints, the weight pack broadcasts
     "d42_calibration" -> 3,
-    // the doubling rounds hide behind their checkpoints; the visible
-    // plan is the broadcast sink semi-join over the final frame
+    // the windowed D8 walk materializes behind its checkpoint; the
+    // visible plan is a projection of it
     "wro_flow_length" -> 0,
     // round 10: snapshot reads are plain pruned scans over the version
     // dir — both commits execute eagerly inside the function, the
