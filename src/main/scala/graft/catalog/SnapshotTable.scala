@@ -1045,7 +1045,7 @@ object SnapshotTable {
     val dataDir = new Path(s"$root/$dirName")
     df.write.mode("overwrite").partitionBy(pcol).parquet(dataDir.toString)
     val entries = partitionEntries(fs, root, dirName, pcol)
-    val (stats, fstats) = entryStats(spark, root, dirName, pcol,
+    val (stats, fstats) = entryStats(spark, root, pcol,
       nullableSchema(df.schema), entries)
     val body = manifestBody(next, cur, entries, Some(pcol), df.schema, tag,
       stats, fstats, resolveTs(commitTs))
@@ -1073,7 +1073,7 @@ object SnapshotTable {
     * class: integrals → "l", fractional/decimal → "d", string → "s".
     * Everything else (timestamps, nested, binary, …) is simply
     * omitted — omission is always sound, pruning keeps the entry. */
-  private def statsCols(schema: StructType, pcol: String)
+  private[catalog] def statsCols(schema: StructType, pcol: String)
       : Seq[(String, String)] = {
     import org.apache.spark.sql.types._
     schema.fields.toSeq.filter(_.name != pcol).flatMap { f =>
@@ -1091,7 +1091,7 @@ object SnapshotTable {
     * bound recordable (NULL slice, NaN/Infinity). Fractionals render
     * through `new BigDecimal(double)` — the EXACT value — so a
     * pruning comparison can never be off by a rounding ulp. */
-  private def renderBound(tpe: String, v: Any): Option[String] =
+  private[catalog] def renderBound(tpe: String, v: Any): Option[String] =
     (tpe, v) match {
       case (_, null) => None
       case ("l", n: Number) => Some(n.longValue.toString)
@@ -1113,24 +1113,11 @@ object SnapshotTable {
     * and entry-level pruning still applies). Spec-tunable. */
   @volatile private[graft] var fileStatsCap: Int = 128
 
-  /** Skipping-stats grain knob, for PRICING the write-path stats pass
-    * (`graft.StatsBench`, SCALE.md): 2 = per-file + entry (default,
-    * the SNK22 grain), 1 = entry-level only (the pre-SNK22 agg, one
-    * row per partition, no file dimension), 0 = no stats pass at all.
-    * Production stays at 2; the bench flips this to attribute commit
-    * wall between the write itself and each stats grain. */
-  @volatile private[graft] var statsMode: Int = 2
-
-  /** Wall-clock nanos spent inside [[entryStats]] since process start
-    * — the commit-path stats tax, measured not guessed. */
-  private[graft] val statsNanos =
-    new java.util.concurrent.atomic.AtomicLong(0L)
-
   /** Rendered-bound comparison in the bound's own domain. Strings
     * compare by UTF-8 bytes UNSIGNED — exactly Spark's binary string
     * ordering — so a driver-side merge can never pick a different
     * extreme than Spark's own min/max would. */
-  private def boundLt(tpe: String, a: String, b: String): Boolean =
+  private[catalog] def boundLt(tpe: String, a: String, b: String): Boolean =
     tpe match {
       case "l" => a.toLong < b.toLong
       case "d" =>
@@ -1139,107 +1126,101 @@ object SnapshotTable {
         a.getBytes("UTF-8"), b.getBytes("UTF-8")) < 0
     }
 
-  /** Per-entry AND per-file min/max stats, computed by reading BACK
-    * the freshly written data dir — ONE agg job at (partition, file)
-    * grain, pruned to the eligible columns, never a recompute of the
-    * writer's upstream lineage. Entry-level bounds merge from the file
-    * bounds in the driver; a column ANY file omits (NaN extreme or
-    * all-NULL slice there) is omitted at entry level too — the file's
+  /** Per-entry AND per-file min/max stats, read from the PARQUET
+    * FOOTERS of each new entry's data files — the row-group statistics
+    * Spark itself trusts for row-group skipping — on the driver, with
+    * no Spark job and no read of the data. A file's bound for a column
+    * is the merge of its row-group bounds; the column is omitted for
+    * the file when any row group holding values lacks a min/max
+    * (parquet-mr drops NaN bounds on read and writes no oversized
+    * binary bound), when a bound renders as NaN/Infinity, or when the
+    * column is all-NULL there. Decimals render from the unscaled value
+    * (INT32/INT64/FIXED_LEN_BYTE_ARRAY) and the column's scale, strings
+    * as UTF-8 (whose unsigned byte order is Spark's binary ordering).
+    * Entry-level bounds merge from the file bounds in the driver; a
+    * column ANY file omits is omitted at entry level too — the file's
     * hidden extreme could make a merged bound unsound under Spark's
     * NaN-greatest ordering, and omission is always sound. Driver state
     * is O(files × columns), the same bound the manifest itself then
     * carries, and [[fileStatsCap]] bounds it per entry. Any failure
     * degrades to NO stats — a commit must never fail because an
     * optimization pass did. */
-  private def entryStats(spark: SparkSession, root: String,
-      dirName: String, pcol: String, schema: StructType,
-      entries: Seq[String])
+  private def entryStats(spark: SparkSession, root: String, pcol: String,
+      schema: StructType, entries: Seq[String])
       : (Seq[Map[String, ColStats]],
          Seq[Map[String, Map[String, ColStats]]]) = {
-    import org.apache.spark.sql.functions.{col, min, max, input_file_name}
+    import scala.jdk.CollectionConverters._
+    import org.apache.parquet.io.api.Binary
+    import org.apache.spark.sql.execution.datasources.parquet.GraftFooters
+    import org.apache.spark.sql.types.DecimalType
     val cols = statsCols(schema, pcol)
     val noStats = (entries.map(_ => Map.empty[String, ColStats]),
       entries.map(_ => Map.empty[String, Map[String, ColStats]]))
-    if (cols.isEmpty || statsMode <= 0) return noStats
-    val t0 = System.nanoTime()
-    try {
-      val back = spark.read.schema(schema)
-        .option("basePath", s"$root/$dirName")
-        .parquet(s"$root/$dirName")
-      val aggs = cols.flatMap { case (c, _) =>
-        Seq(min(col(c)).as(s"mn_$c"), max(col(c)).as(s"mx_$c")) }
-      if (statsMode == 1) {
-        // entry grain only (the pricing baseline): one agg row per
-        // partition, no file dimension — bounds come straight from the
-        // partition slice instead of a driver-side file merge
-        val byPart: Map[String, Map[String, ColStats]] =
-          back.groupBy(col(pcol)).agg(aggs.head, aggs.tail: _*)
-            .collect().map { row =>
-              val pv = Option(row.get(0)) match {
-                case None => "__HIVE_DEFAULT_PARTITION__"
-                case Some(v) => org.apache.spark.sql.catalyst.catalog
-                  .ExternalCatalogUtils.escapePathName(v.toString)
-              }
-              pv -> cols.flatMap { case (c, tpe) =>
-                for {
-                  mn <- renderBound(tpe, row.getAs[Any](s"mn_$c"))
-                  mx <- renderBound(tpe, row.getAs[Any](s"mx_$c"))
-                } yield c -> ColStats(tpe, mn, mx)
-              }.toMap
-            }.toMap
-        return (entries.map(e => byPart.getOrElse(entryPartValue(e, pcol),
-          Map.empty[String, ColStats])),
-          entries.map(_ => Map.empty[String, Map[String, ColStats]]))
+    if (cols.isEmpty) return noStats
+    val scale: Map[String, Int] = schema.fields.collect {
+      case f if f.dataType.isInstanceOf[DecimalType] =>
+        f.name -> f.dataType.asInstanceOf[DecimalType].scale
+    }.toMap
+    // one footer statistic value, in the domain renderBound expects
+    def value(c: String, v: Any): Any = (scale.get(c), v) match {
+      case (Some(sc), i: java.lang.Integer) =>
+        java.math.BigDecimal.valueOf(i.longValue, sc)
+      case (Some(sc), l: java.lang.Long) => java.math.BigDecimal.valueOf(l, sc)
+      case (Some(sc), b: Binary) =>
+        new java.math.BigDecimal(new java.math.BigInteger(b.getBytes), sc)
+      case (None, b: Binary) => b.toStringUsingUTF8
+      case _ => v
+    }
+    def merge(tpe: String, bs: Seq[ColStats]): ColStats = ColStats(tpe,
+      bs.map(_.min).reduce((a, b) => if (boundLt(tpe, a, b)) a else b),
+      bs.map(_.max).reduce((a, b) => if (boundLt(tpe, a, b)) b else a))
+    // a column's bound over one file's row groups; None = omitted
+    def fileBound(blocks: Seq[Map[String,
+        org.apache.parquet.hadoop.metadata.ColumnChunkMetaData]],
+        c: String, tpe: String): Option[ColStats] = {
+      val chunks = blocks.map(_.get(c))
+      val valued = chunks.flatten.filterNot { cc =>
+        val st = cc.getStatistics
+        st.isNumNullsSet && st.getNumNulls == cc.getValueCount
       }
-      val byPartFile: Map[String, Map[String, Map[String, ColStats]]] =
-        back.groupBy(col(pcol), input_file_name().as("_fn"))
-          .agg(aggs.head, aggs.tail: _*)
-          .collect().map { row =>
-            val pv = Option(row.get(0)) match {
-              case None => "__HIVE_DEFAULT_PARTITION__"
-              case Some(v) => org.apache.spark.sql.catalyst.catalog
-                .ExternalCatalogUtils.escapePathName(v.toString)
-            }
-            val path = row.getString(1)
-            val fname = path.substring(path.lastIndexOf('/') + 1)
-            val m = cols.flatMap { case (c, tpe) =>
-              for {
-                mn <- renderBound(tpe, row.getAs[Any](s"mn_$c"))
-                mx <- renderBound(tpe, row.getAs[Any](s"mx_$c"))
-              } yield c -> ColStats(tpe, mn, mx)
-            }.toMap
-            (pv, fname, m)
-          }.groupBy(_._1).map { case (pv, rows) =>
-            pv -> rows.map(r => r._2 -> r._3).toMap
-          }
-      val byPart: Map[String, Map[String, ColStats]] =
-        byPartFile.map { case (pv, files) =>
-          val perFile = files.values.toSeq
-          pv -> cols.flatMap { case (c, tpe) =>
-            val bounds = perFile.map(_.get(c))
-            if (bounds.isEmpty || bounds.exists(_.isEmpty)) None
-            else {
-              val all = bounds.flatten
-              Some(c -> ColStats(tpe,
-                all.map(_.min).reduce((a, b) =>
-                  if (boundLt(tpe, a, b)) a else b),
-                all.map(_.max).reduce((a, b) =>
-                  if (boundLt(tpe, a, b)) b else a)))
-            }
-          }.toMap
-        }
-      (entries.map(e => byPart.getOrElse(entryPartValue(e, pcol),
-         Map.empty[String, ColStats])),
-       entries.map { e =>
-         val files = byPartFile.getOrElse(entryPartValue(e, pcol),
-           Map.empty[String, Map[String, ColStats]])
+      val bounds = valued.map { cc =>
+        val st = cc.getStatistics
+        if (!st.hasNonNullValue) None
+        else for {
+          mn <- renderBound(tpe, value(c, st.genericGetMin))
+          mx <- renderBound(tpe, value(c, st.genericGetMax))
+        } yield ColStats(tpe, mn, mx)
+      }
+      if (chunks.exists(_.isEmpty) || valued.isEmpty ||
+          bounds.exists(_.isEmpty)) None
+      else Some(merge(tpe, bounds.flatten))
+    }
+    try {
+      val conf = spark.sessionState.newHadoopConf()
+      val perEntry = entries.map { e =>
+        GraftFooters.dataFiles(conf, new Path(s"$root/$e")).map { f =>
+          val blocks = GraftFooters.footer(conf, f, rowGroups = true)
+            .getBlocks.asScala.toSeq.map(_.getColumns.asScala
+              .map(cc => cc.getPath.toDotString -> cc).toMap)
+          f.getPath.getName -> cols.flatMap { case (c, tpe) =>
+            fileBound(blocks, c, tpe).map(c -> _) }.toMap
+        }.toMap
+      }
+      (perEntry.map { files =>
+        val perFile = files.values.toSeq
+        cols.flatMap { case (c, tpe) =>
+          val bounds = perFile.map(_.get(c))
+          if (bounds.isEmpty || bounds.exists(_.isEmpty)) None
+          else Some(c -> merge(tpe, bounds.flatten))
+        }.toMap
+      },
+       perEntry.map(files =>
          if (files.size > fileStatsCap)
            Map.empty[String, Map[String, ColStats]]
-         else files
-       })
+         else files))
     } catch {
       case scala.util.control.NonFatal(_) => noStats
-    } finally statsNanos.addAndGet(System.nanoTime() - t0)
+    }
   }
 
   /** COMMIT BY REFERENCE — the partition-scoped commit: `updates` is
@@ -1346,9 +1327,28 @@ object SnapshotTable {
         "requirement failed: snapshot commitReplace: the batch touches " +
         "no partitions")
     }
-    val (freshStats, freshFileStats) = entryStats(spark, root, dirName,
-      pcol, nullableSchema(schema), newEntries)
-    val ts = resolveTs(commitTs)
+    commitEntries(spark, root, pcol, parent, schema, dataDir, newEntries,
+      replaced, tag, rebaseRetries, resolveTs(commitTs))
+  }
+
+  /** The manifest assembly and CAS loop shared by [[commitReplace]] and
+    * [[appendInto]]: commit the parent's entries minus the `replaced`
+    * partition values plus `newEntries` (already written under
+    * `dataDir`), which pay the only stats pass. Kept entries inherit
+    * the parent's stats and delete chains verbatim; new entries carry
+    * no chain. A moved base rebases onto the winner when the commits
+    * are provably independent (see [[commitReplace]]) — with nothing
+    * `replaced` (a blind append) that proof reduces to the winner
+    * keeping `pcol` and the schema — at most `rebaseRetries` times;
+    * `rebaseRetries = 0` is a plain CAS on `parent`. */
+  private def commitEntries(spark: SparkSession, root: String, pcol: String,
+      parent: Manifest, schema: StructType, dataDir: Path,
+      newEntries: Seq[String], replaced: Set[String], tag: Option[String],
+      rebaseRetries: Int, ts: Long): Long = {
+    val fs = fsOf(spark, root)
+    val expectedBase = parent.version
+    val (freshStats, freshFileStats) = entryStats(spark, root, pcol,
+      nullableSchema(schema), newEntries)
 
     // a partition's conflict signature includes its DELETE CHAIN: a
     // concurrent commitDelete changes no entry paths, but replacing
@@ -1433,9 +1433,10 @@ object SnapshotTable {
       val fstats = entries.map(e => fstatsByEntry.getOrElse(e,
         Map.empty[String, Map[String, ColStats]]))
       // kept entries INHERIT the parent's delete chains (their files
-      // still contain the deleted rows); replaced partitions' fresh
-      // entries carry none — the rewrite read applied the chain, so
-      // this commit MATERIALIZES deletes for the partitions it touches
+      // still contain the deleted rows); new entries carry none — a
+      // replace's rewrite read applied the chain, so it MATERIALIZES
+      // deletes for the partitions it touches, and an append's rows
+      // were never under a chain
       val parentDels: Map[String, Seq[DelRef]] =
         if (parentM.dels.length == parentM.entries.length)
           parentM.entries.zip(parentM.dels).toMap
@@ -1602,64 +1603,81 @@ object SnapshotTable {
       }
   }
 
-  /** APPEND `batch` into the partitioned snapshot — the micro-batch
-    * ingest primitive behind [[graft.stream.SnapshotSink]]. Each
-    * touched partition's next content is its current rows UNION the
-    * batch's (pure append — no key semantics; upserts go through
-    * [[PartitionMerge]] + [[commitReplace]]), committed atomically via
-    * commitReplace, so cost is proportional to the touched partitions
-    * and untouched partitions keep their files verbatim. Bootstraps an
-    * empty table with [[commitPartitioned]]. The touched-partition
-    * list is collected (bounded by the partition-value domain, never
-    * batch rows) and pushed as an entry-list restriction on the
-    * current-state scan.
+  /** BLIND APPEND of `batch` into the partitioned snapshot — the
+    * micro-batch ingest primitive behind [[graft.stream.SnapshotSink]].
+    * Pure append, no key semantics (upserts go through
+    * [[PartitionMerge]] + [[commitReplace]]): the batch is written ONCE,
+    * partitioned, into its own data dir, and the next version is the
+    * parent's entries verbatim — stats and delete chains included —
+    * plus one new entry per partition the write produced. Nothing
+    * existing is read or rewritten, so cost is proportional to the
+    * BATCH, and the write's own partition listing names the touched
+    * partitions (no collect job); a touched partition gains one file
+    * set per batch, which [[compact]] retires. Bootstraps an empty
+    * table with [[commitPartitioned]]. An empty batch writes no
+    * partition and is a no-op returning the current version (no
+    * manifest, no tag). A NULL partition value is refused, leaving no
+    * entry behind.
     *
     * `expectedBase` < 0 (the default) appends onto whatever version is
-    * current — convenient for a single writer. An exactly-once caller
+    * current, and a moved base REBASES onto any winner that kept `pcol`
+    * and the schema (an append conflicts with no data change — Delta's
+    * blind-append rule), counted in [[rebasesPerformed]] and bounded by
+    * `rebaseRetries`. An exactly-once caller
     * ([[graft.stream.SnapshotSink]]) must PIN the base it decided
-    * idempotence against: with a floating base, a twin attempt of the
-    * same batch that loses the first commit race could re-read the
-    * winner's version as its parent and append the batch a second
-    * time; a pinned base makes the twin's commit CONFLICT instead,
-    * which the caller resolves via its tag. Returns the new version. */
+    * idempotence against: a pinned base is a plain CAS, so a twin
+    * attempt of the same batch that loses the commit race CONFLICTS
+    * (which the caller resolves via its tag) instead of landing the
+    * batch a second time. Returns the new version. */
   def appendInto(batch: DataFrame, root: String, pcol: String,
                  tag: Option[String] = None,
                  expectedBase: Long = -1L,
                  rebaseRetries: Int = 10): Long = {
+    import org.apache.spark.sql.functions.col
     val spark = batch.sparkSession
+    val fs = fsOf(spark, root)
+    checkTag(tag)
     val cur =
       if (expectedBase >= 0L) checkBase(spark, root, expectedBase)
       else currentVersion(spark, root)
     if (cur == 0L) commitPartitioned(batch, root, 0L, pcol, tag)
     else {
-      val m = manifestOf(fsOf(spark, root), root, cur)
+      val m = manifestOf(fs, root, cur)
       require(m.pcol.contains(pcol),
         s"snapshot appendInto: version $cur is partitioned on " +
         s"${m.pcol.getOrElse("<nothing>")}, not '$pcol'")
-      val touched = batch.select(org.apache.spark.sql.functions
-          .col(pcol).cast("string")).distinct()
-        .collect().map(r => r.getString(0)).toSet
-      require(!touched.contains(null),
-        s"snapshot appendInto: batch carries a NULL $pcol value")
-      val esc = touched.map(v =>
-        org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-          .escapePathName(v))
-      val sel = m.entries.filter(e => esc.contains(entryPartValue(e, pcol)))
-      val existing = readEntries(spark, root, m, sel)
+      val schema = StructType.fromDDL(m.schemaDdl)
       // mirror commitReplace's extras refusal: silently dropping a
       // batch column beyond the table schema would hide a writer bug
       // behind the streaming sink. Evolution goes through
       // commitReplace(evolveSchema = true) explicitly.
-      val extra = batch.columns.filterNot(existing.columns.contains)
+      val extra = batch.columns.filterNot(schema.fieldNames.contains)
       require(extra.isEmpty,
         s"snapshot appendInto: batch carries column(s) " +
         s"${extra.mkString(", ")} beyond the table schema " +
         s"${m.schemaDdl} — evolve through commitReplace(evolveSchema = " +
         "true) instead (silently dropping them would hide a writer bug)")
-      val aligned = batch.select(existing.columns
-        .map(org.apache.spark.sql.functions.col).toIndexedSeq: _*)
-      commitReplace(existing.unionByName(aligned), root, cur, pcol,
-        tag = tag, rebaseRetries = rebaseRetries)
+      val aligned = batch.select(schema.fieldNames.map(col).toIndexedSeq: _*)
+      require(nullableSchema(aligned.schema).toDDL == m.schemaDdl,
+        s"snapshot appendInto: batch schema ${aligned.schema.toDDL} " +
+        s"does not match the table schema ${m.schemaDdl}")
+      val dirName = s"data-${java.util.UUID.randomUUID()}"
+      val dataDir = new Path(s"$root/$dirName")
+      aligned.write.mode("overwrite").partitionBy(pcol).parquet(dataDir.toString)
+      val newEntries = partitionEntries(fs, root, dirName, pcol)
+      if (newEntries.isEmpty) { fs.delete(dataDir, true); cur }
+      else {
+        if (newEntries.exists(e =>
+            entryPartValue(e, pcol) == "__HIVE_DEFAULT_PARTITION__")) {
+          fs.delete(dataDir, true)
+          throw new IllegalArgumentException(
+            s"requirement failed: snapshot appendInto: batch carries a " +
+            s"NULL $pcol value")
+        }
+        commitEntries(spark, root, pcol, m, schema, dataDir, newEntries,
+          Set.empty, tag, if (expectedBase >= 0L) 0 else rebaseRetries,
+          resolveTs(-1L))
+      }
     }
   }
 

@@ -231,7 +231,8 @@ object CatalogQueries {
     val sf = dir.replaceAll("[^0-9.]", "")
     val path = s"/tmp/graft_io/mosaic-$sf"
     mosaic.write.mode("overwrite").partitionBy("Name").parquet(path)
-    s.read.parquet(path).select(
+    // read back under the written frame's own schema: no inference job
+    s.read.schema(mosaic.schema).parquet(path).select(
       "Name", "Title", "Description", "Url", "InputRanges", "NoDataRanges",
       "RangeLabels", "NoDataRangeLabels", "OutputValues", "Metadata",
       "dataset_id", "crs")

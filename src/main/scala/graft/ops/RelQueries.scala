@@ -1577,7 +1577,10 @@ object RelQueries {
     * makes the replay a provable no-op (version count asserted
     * in-query), and the oracle's plain full-table aggregate catches
     * any double-append arithmetically: one duplicated batch would
-    * shift every touched group's count and sum. */
+    * shift every touched group's count and sum. Each append is blind:
+    * one partitioned write of the batch, stats from its footers, and
+    * a manifest that re-references every earlier entry — no job
+    * beyond the write, no re-read of the touched buckets. */
   def snk19AppendIngest(s: SparkSession, dir: String): DataFrame = {
     import graft.catalog.SnapshotTable
     import graft.stream.SnapshotSink
@@ -2273,8 +2276,10 @@ object RelQueries {
     // OWN jobs — measured 76 single-task jobs with 7+ s of scheduling
     // gaps (job-sum 5.0 s of a 12.3 s wall) at sf0.1. The frontier is
     // ≤ one row per document per level, so the materialization runs in
-    // the loop scope sized from the measured corpus (Fixpoint.scoped).
-    Fixpoint.scoped(s, table(s, dir, "documents").count()) {
+    // the loop scope sized from the corpus row count, read from the
+    // parquet footers (Fixpoint.scoped).
+    Fixpoint.scoped(s, org.apache.spark.sql.execution.datasources.parquet
+        .GraftFooters.rowCount(s, s"$dir/documents.parquet")) {
       s.sql(q23Sql).localCheckpoint()
     }
   }

@@ -24,11 +24,18 @@ package object graft {
     * The session must be built with
     * `spark.sql.legacy.parquet.nanosAsLong=true` (all graft mains and the
     * test harness do) — setting it here per-read would mutate session-global
-    * state at plan-build time, racy under concurrent plan construction. */
+    * state at plan-build time, racy under concurrent plan construction.
+    *
+    * The schema comes from the table file's parquet footer, read on the
+    * driver and converted by Spark's own footer-to-schema path — what
+    * inference would find, without inference's Spark job. */
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    if (name == "events")
-      rebuildEventTs(spark.read.parquet(s"$sfDir/$name.parquet"))
-    else spark.read.parquet(s"$sfDir/$name.parquet")
+    val path = s"$sfDir/$name.parquet"
+    val df = spark.read
+      .schema(org.apache.spark.sql.execution.datasources.parquet
+        .GraftFooters.schema(spark, path))
+      .parquet(path)
+    if (name == "events") rebuildEventTs(df) else df
   }
 
   /** Run `body` with `confs` applied, restoring the previous session

@@ -24,12 +24,14 @@ import graft.catalog.SnapshotTable
   * any OTHER conflicting tag is a genuine concurrent writer and stays
   * loud.
   *
-  * Scale shape: each micro-batch pays [[SnapshotTable.appendInto]] —
-  * cost proportional to the partitions the batch touches, untouched
-  * partitions re-referenced verbatim — and the steady-state small-file
-  * tax is retired by periodic [[SnapshotTable.compact]] commits, which
+  * Scale shape: each micro-batch pays [[SnapshotTable.appendInto]]'s
+  * blind append — one write of the batch plus a manifest, cost
+  * proportional to the BATCH, every existing entry re-referenced
+  * verbatim and nothing existing re-read — and the steady-state
+  * small-file tax (one file set per batch per touched partition) is
+  * retired by periodic [[SnapshotTable.compact]] commits, which
   * interleave with ingest as ordinary versions (a reader never sees
-  * either in-flight). */
+  * either in-flight). An empty micro-batch commits nothing. */
 object SnapshotSink {
 
   private[stream] def batchTag(batchId: Long): String = s"ingest-$batchId"

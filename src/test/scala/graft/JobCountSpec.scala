@@ -1,0 +1,55 @@
+package graft
+
+import org.apache.spark.TestBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import graft.catalog.SnapshotTable
+
+/** Pins that the service path learns metadata without Spark jobs, the
+  * way PlanBudgetSpec pins exchanges: fixture tables take their schema
+  * from parquet footers, commit stats come from the new files' footers,
+  * and an append names its partitions from its own write's listing. */
+class JobCountSpec extends SparkSpec {
+
+  /** Spark jobs `body` starts on this thread (its own job group, so
+    * jobs of concurrently running suites are not counted). */
+  private def jobs(body: => Any): Int = {
+    val sc = spark.sparkContext
+    val group = s"jobcount-${java.util.UUID.randomUUID()}"
+    val n = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+            e.properties.getProperty("spark.jobGroup.id") == group)
+          n.incrementAndGet()
+    }
+    sc.addSparkListener(l)
+    sc.setJobGroup(group, "job count")
+    try { body; TestBus.drain(sc) }
+    finally { sc.clearJobGroup(); sc.removeSparkListener(l) }
+    n.get
+  }
+
+  test("building graft.table runs no Spark job") {
+    val dir = "/root/testdata/sf0.01"
+    Tables.names.foreach(n => assert(jobs(table(spark, dir, n)) == 0, n))
+  }
+
+  test("commitPartitioned and appendInto of a local batch run only the " +
+       "write job(s)") {
+    import spark.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory("jobcount").toString
+    def batch(k: Long) = Seq(("a", k, k * 10), ("b", k + 1, k * 10 + 1))
+      .toDF("p", "id", "v")
+    val write = jobs(batch(0L).write.partitionBy("p").parquet(s"$tmp/plain"))
+    assert(write >= 1)
+    val root = s"$tmp/t"
+    val commit = jobs(SnapshotTable.commitPartitioned(batch(0L), root, 0L, "p"))
+    val append = jobs(SnapshotTable.appendInto(batch(2L), root, "p"))
+    val pinned = jobs(SnapshotTable.appendInto(batch(4L), root, "p",
+      expectedBase = SnapshotTable.currentVersion(spark, root)))
+    info(s"jobs: plain write $write, commitPartitioned $commit, " +
+      s"appendInto $append, pinned appendInto $pinned")
+    assert(Seq(commit, append, pinned) == Seq(write, write, write))
+    assert(SnapshotTable.readLatest(spark, root).count() == 6L)
+  }
+}

@@ -100,7 +100,7 @@ class SnapshotDeleteSpec extends SparkSpec {
 
   test("rewrites MATERIALIZE the chain: compact clears refs with " +
        "content unchanged; appendInto of a previously-deleted key " +
-       "re-adds it (the rewrite applied the old chain first)") {
+       "re-adds it (the appended entry carries no chain)") {
     val root = freshRoot()
     val v1 = seed(root)
     import spark.implicits._
@@ -114,8 +114,8 @@ class SnapshotDeleteSpec extends SparkSpec {
       "compact did not materialize the delete chain")
     assert(ids(SnapshotTable.read(spark, root, v3)) ==
       (0L until 60L).toSet -- Set(40L, 41L))
-    // re-append id 40 into bkt=2: the append's rewrite reads the
-    // current state (40 deleted), unions the batch, writes fresh —
+    // re-append id 40 into bkt=2: the append adds a fresh entry
+    // beside the compacted one, and a new entry carries no chain —
     // the new row must NOT be swallowed by any stale chain
     val v4 = SnapshotTable.appendInto(
       Seq((40L, 2L, 9999L)).toDF("id", "bkt", "v"), root, "bkt")

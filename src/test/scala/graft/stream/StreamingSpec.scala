@@ -765,6 +765,27 @@ class StreamingSpec extends SparkSpec {
       "the twin race double-appended batch 2")
   }
 
+  test("S21 an empty micro-batch on a non-empty table is a no-op, and " +
+       "so is its replay") {
+    import spark.implicits._
+    import graft.catalog.SnapshotTable
+    val root = java.nio.file.Files
+      .createTempDirectory("graft_s21empty").toString + "/tbl"
+    val sink = SnapshotSink.exactlyOnce(root, "p") _
+    sink(Seq(("a", 1L), ("b", 2L)).toDF("p", "v"), 0L)
+    val empty = Seq.empty[(String, Long)].toDF("p", "v")
+    sink(empty, 1L)
+    assert(SnapshotTable.currentVersion(spark, root) == 1L)
+    assert(SnapshotTable.committedTags(spark, root).keySet == Set("ingest-0"))
+    sink(empty, 1L) // replay after a restart
+    assert(SnapshotTable.currentVersion(spark, root) == 1L)
+    sink(Seq(("a", 3L)).toDF("p", "v"), 2L)
+    assert(SnapshotTable.currentVersion(spark, root) == 2L)
+    assert(SnapshotTable.readLatest(spark, root).collect()
+      .map(r => (r.getString(0), r.getLong(1))).sorted.toSeq ==
+      Seq(("a", 1L), ("a", 3L), ("b", 2L)))
+  }
+
   test("S21 per-batch cost is O(1) manifest body reads regardless of " +
        "stream length (latestTag fast path, spec-counted), and a " +
        "foreign tag on top still resolves replays correctly") {
