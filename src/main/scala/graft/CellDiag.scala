@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Diagnostic: the ANN cell-size distribution knnGraph/semDedup
@@ -9,13 +8,7 @@ import org.apache.spark.sql.functions._
 object CellDiag {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = localSession(32)
     import graft.llm.KMeans
     val e = table(spark, dir, "embeddings")
     val q = e.select(col("vec_id"),

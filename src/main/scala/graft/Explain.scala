@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Plan-audit main: prints the formatted physical plan of each headline
   * query (or the names passed as extra args) so shuffle/broadcast/pushdown
@@ -8,14 +7,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.head
     val names = if (args.length > 1) args.drop(1).toSeq else SparkEntry.headline
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = localSession(4)
     names.foreach { n =>
       println(s"\n===== $n =====")
       SparkEntry.queries(n)(spark, sfDir).explain("formatted")

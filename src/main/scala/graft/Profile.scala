@@ -1,6 +1,5 @@
 package graft
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerJobEnd, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 import java.util.concurrent.ConcurrentHashMap
 
 /** Measurement tool (guide §1): runs declared queries once (after a
@@ -18,15 +17,7 @@ object Profile {
     require(args.length >= 2, "usage: Profile <sfDir> <query> [query...]")
     val sfDir = args.head
     val names = args.tail.toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = localSession(32)
 
     case class Job(id: Int, start: Long, var end: Long = -1L,
                    var stages: Int = 0, var tasks: Int = 0,

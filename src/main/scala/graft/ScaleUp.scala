@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** sf1 soak-data generator: replicate an existing SF dir `copies`×
@@ -33,14 +33,7 @@ object ScaleUp {
   def main(args: Array[String]): Unit = {
     val Array(src, dst, copiesStr) = args.take(3)
     val copies = copiesStr.toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = localSession(16)
     spark.sparkContext.setLogLevel("WARN")
 
     /** Write df as a SINGLE parquet file at dst/<name>.parquet (the

@@ -1835,12 +1835,6 @@ object SnapshotTable {
                           entries: Seq[String]): DataFrame =
     readSelection(spark, root, m, entries.map(_ -> None))
 
-  /** The scan of a manifest restricted to a selection of entries,
-    * each optionally narrowed to a FILE list within its directory
-    * (`None` = the whole entry dir) — the read unit [[pruneFiles]]
-    * produces. File paths keep the entry's data dir as `basePath`, so
-    * the hive partition column still materializes under the recorded
-    * schema. */
   /** Apply an entry's delete chain to its scan: one LEFT-ANTI join per
     * distinct key-column set against the UNION of that set's delete
     * key files (null-safe equality, so a deleted NULL key matches).
@@ -1849,17 +1843,20 @@ object SnapshotTable {
     * anti-joins, so at 100 TB the data side streams through unshuffled
     * — and rewrites ([[compact]]/[[commitReplace]]) materialize the
     * chain away, so it never grows past the commits since the last
-    * rewrite of that partition. */
+    * rewrite of that partition. The key files are read under the
+    * table's recorded types (commitDelete requires the keys to match
+    * them exactly, and schema evolution only adds columns), so
+    * building the scan infers nothing and runs no Spark job. */
   private def applyDels(spark: SparkSession, root: String,
-      df: DataFrame, dels: Seq[DelRef]): DataFrame =
+      schema: StructType, df: DataFrame, dels: Seq[DelRef]): DataFrame =
     if (dels.isEmpty) df
     else {
       import org.apache.spark.sql.functions.col
       dels.groupBy(_.keyCols).toSeq
         .sortBy(_._1.mkString(","))
         .foldLeft(df) { case (acc, (kcols, refs)) =>
-          val keys = refs.map(r => spark.read.parquet(s"$root/${r.path}"))
-            .reduce(_ unionByName _)
+          val keys = spark.read.schema(StructType(kcols.map(schema(_))))
+            .parquet(refs.map(r => s"$root/${r.path}"): _*)
             .select(kcols.map(c => col(c).as(s"_del_$c")): _*)
             .distinct()
           val cond = kcols.map(c => acc(c) <=> keys(s"_del_$c"))
@@ -1868,6 +1865,12 @@ object SnapshotTable {
         }
     }
 
+  /** The scan of a manifest restricted to a selection of entries,
+    * each optionally narrowed to a FILE list within its directory
+    * (`None` = the whole entry dir) — the read unit [[pruneFiles]]
+    * produces. File paths keep the entry's data dir as `basePath`, so
+    * the hive partition column still materializes under the recorded
+    * schema. */
   private def readSelection(spark: SparkSession, root: String, m: Manifest,
       sel: Seq[(String, Option[Seq[String]])]): DataFrame = {
     val schema = StructType.fromDDL(m.schemaDdl)
@@ -1887,7 +1890,7 @@ object SnapshotTable {
         sel.groupBy(e => delsByEntry.getOrElse(e._1, Nil)).toSeq
           .sortBy(_._2.map(_._1).min)
           .map { case (dels, es) =>
-            applyDels(spark, root,
+            applyDels(spark, root, schema,
               spark.read.schema(schema)
                 .parquet(es.map(e => s"$root/${e._1}"): _*)
                 .select(ordered: _*), dels)
@@ -1903,7 +1906,7 @@ object SnapshotTable {
               case (e, None) => Seq(s"$root/$e")
               case (e, Some(fns)) => fns.map(f => s"$root/$e/$f")
             }
-            applyDels(spark, root,
+            applyDels(spark, root, schema,
               spark.read.schema(schema)
                 .option("basePath", s"$root/$dir")
                 .parquet(paths: _*)

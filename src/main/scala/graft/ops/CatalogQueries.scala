@@ -238,20 +238,6 @@ object CatalogQueries {
       "dataset_id", "crs")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "wro_create_mosaic" -> createMosaicGolden,
-    "wro_catalog_encoded" -> catalogEncoded,
-    "wro_catalog_roundtrip" -> catalogRoundtrip,
-    "wro_update_classification" -> updateClassification,
-    "wro_merge_catalog" -> mergeCatalog,
-    "wro_catalog_scd2" -> catalogScd2,
-    "wro_update_layerinfo" -> updateLayerInfo,
-    "wro_catalog_diff" -> catalogDiff,
-    "wro_name_normalize" -> nameNormalize,
-    "wro_path_lookup" -> pathLookup,
-    "wro_validations" -> validations
-  )
-
   // ---------- oracle SQL ----------
 
   /** Decorated + encoded catalog, built from WroQueries.rangesSql. All
@@ -286,8 +272,10 @@ object CatalogQueries {
        |      THEN CAST(2.0 <> s.mn AS INT) ELSE 0 END AS snapped
        |  FROM encoded e, qstats s)""".stripMargin
 
-  val oracle: Map[String, String] = Map(
-    "wro_create_mosaic" ->
+  lazy val (queries, oracle) = registry(declared)
+
+  private[ops] val declared: Seq[Query] = Seq(
+    Query("wro_create_mosaic", createMosaicGolden,
       s"""${WroQueries.rangesSql},
          |eqenc AS (
          |  SELECT layer,
@@ -325,20 +313,20 @@ object CatalogQueries {
          |  rl AS RangeLabels, CAST(NULL AS VARCHAR) AS NoDataRangeLabels,
          |  ov AS OutputValues, CAST(NULL AS VARCHAR) AS Metadata,
          |  CAST(NULL AS VARCHAR) AS dataset_id, 'EPSG:3857' AS crs
-         |FROM rws""".stripMargin,
-    "wro_catalog_encoded" ->
+         |FROM rws""".stripMargin),
+    Query("wro_catalog_encoded", catalogEncoded,
       s"""$encodedSql
-         |SELECT name, input_ranges, range_labels, output_values FROM encoded""".stripMargin,
-    "wro_catalog_roundtrip" ->
+         |SELECT name, input_ranges, range_labels, output_values FROM encoded""".stripMargin),
+    Query("wro_catalog_roundtrip", catalogRoundtrip,
       s"""${WroQueries.rangesSql}
          |SELECT layer, class_idx, label || ', b' || class_idx AS label,
          |       lo, hi, out
-         |FROM ranges""".stripMargin,
-    "wro_update_classification" ->
+         |FROM ranges""".stripMargin),
+    Query("wro_update_classification", updateClassification,
       s"""$updatedSql
          |SELECT name, input_ranges, range_labels, output_values, snapped
-         |FROM updated""".stripMargin,
-    "wro_merge_catalog" ->
+         |FROM updated""".stripMargin),
+    Query("wro_merge_catalog", mergeCatalog,
       s"""$encodedSql,
          |upd(name, input_ranges, range_labels, output_values) AS (VALUES
          |  ('quantity', '1.0,25.0,25.0,51.0', '"q1, a","q2, b"', '3,7'),
@@ -350,8 +338,8 @@ object CatalogQueries {
          |  CASE WHEN u.name IS NOT NULL AND e.name IS NOT NULL THEN 'update'
          |       WHEN u.name IS NOT NULL THEN 'insert'
          |       ELSE 'keep' END AS action
-         |FROM encoded e FULL OUTER JOIN upd u ON e.name = u.name""".stripMargin,
-    "wro_catalog_scd2" ->
+         |FROM encoded e FULL OUTER JOIN upd u ON e.name = u.name""".stripMargin),
+    Query("wro_catalog_scd2", catalogScd2,
       s"""$encodedSql,
          |upd(name, input_ranges, range_labels, output_values) AS (VALUES
          |  ('quantity', '1.0,25.0,25.0,51.0', '"q1, a","q2, b"', '3,7'),
@@ -375,8 +363,8 @@ object CatalogQueries {
          |    CAST(2000000 AS BIGINT) AS valid_from_us,
          |    CAST(NULL AS BIGINT) AS valid_to_us, 1 AS is_current
          |  FROM upd u LEFT JOIN hist h ON u.name = h.name)
-         |SELECT * FROM curout UNION ALL SELECT * FROM opened""".stripMargin,
-    "wro_update_layerinfo" ->
+         |SELECT * FROM curout UNION ALL SELECT * FROM opened""".stripMargin),
+    Query("wro_update_layerinfo", updateLayerInfo,
       """WITH names AS (
         |  SELECT unnest(['quantity', 'extendedprice', 'discount']) AS name)
         |SELECT name,
@@ -388,8 +376,8 @@ object CatalogQueries {
         |       ELSE 'https://example.org/' || name END AS url,
         |  CASE WHEN name = 'quantity' THEN NULL
         |       ELSE 'https://meta.example.org/' || name END AS metadata
-        |FROM names""".stripMargin,
-    "wro_catalog_diff" ->
+        |FROM names""".stripMargin),
+    Query("wro_catalog_diff", catalogDiff,
       s"""$updatedSql
          |SELECT e.name, d.field, d.old_value, d.new_value
          |FROM encoded e
@@ -399,13 +387,13 @@ object CatalogQueries {
          |  ('range_labels', e.range_labels, u.range_labels),
          |  ('output_values', e.output_values, u.output_values))
          |  AS t(field, old_value, new_value)) d
-         |WHERE d.old_value IS DISTINCT FROM d.new_value""".stripMargin,
-    "wro_name_normalize" ->
+         |WHERE d.old_value IS DISTINCT FROM d.new_value""".stripMargin),
+    Query("wro_name_normalize", nameNormalize,
       """SELECT * FROM (VALUES
         |  ('a', 'dem'), ('b', 'elev'), ('c', 'b'), ('d', 'relative'),
         |  ('e', 'noext'), ('f', 'https://a/ImageServer/x'), ('g', 'keep.tif'))
-        |  AS t(id, name)""".stripMargin,
-    "wro_path_lookup" ->
+        |  AS t(id, name)""".stripMargin),
+    Query("wro_path_lookup", pathLookup,
       s"""WITH cells AS (${WroQueries.cellsSql}),
          |stats AS (SELECT layer, min(value) AS mn, max(value) AS mx
          |          FROM cells GROUP BY layer),
@@ -418,12 +406,12 @@ object CatalogQueries {
          |       s.mn, s.mx
          |FROM mosaic m
          |JOIN paths p ON m.source_oid = p.p_oid
-         |JOIN stats s ON m.name = s.layer""".stripMargin,
-    "wro_validations" ->
+         |JOIN stats s ON m.name = s.layer""".stripMargin),
+    Query("wro_validations", validations,
       """SELECT * FROM (VALUES
         |  ('contig', 'a', 1), ('contig', 'b', 0),
         |  ('url', 'c', 1), ('url', 'd', 0), ('url', 'e', 1),
         |  ('ident', 'f', 1), ('ident', 'g', 0), ('ident', 'h', 0))
-        |  AS t(kind, name, ok)""".stripMargin
+        |  AS t(kind, name, ok)""".stripMargin)
   )
 }

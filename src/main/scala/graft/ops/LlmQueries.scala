@@ -1442,90 +1442,6 @@ object LlmQueries {
       col("source"), ctx = 2048, carry = Seq("fp", "n_redactions"))
   }
 
-  // ---------- registry ----------
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "d1_dedup_exact" -> d1DedupExact,
-    "d2_minhash_lsh" -> d2MinhashLsh,
-    "d2_incremental_lsh" -> d2IncrementalLsh,
-    "d2_lsh_ingest" -> d2LshIngest,
-    "d17_url_canon" -> d17UrlCanon,
-    "d18_host_quota" -> d18HostQuota,
-    "d19_host_rank" -> d19HostRank,
-    "d24_triangles" -> d24Triangles,
-    "d43_sssp" -> d43Sssp,
-    "d20_cdc_chunks" -> d20CdcChunks,
-    "d21_embed_outliers" -> d21EmbedOutliers,
-    "d22_quality_percentile" -> d22QualityPercentile,
-    "d2_ngram_jaccard" -> d2NgramJaccard,
-    "d2_dedup_clusters" -> d2DedupClusters,
-    "d25_dedup_keepbest" -> d25DedupKeepbest,
-    "d2_simhash" -> d2Simhash,
-    "d9_decontaminate" -> d9Decontaminate,
-    "d7_stratified_sample" -> d7StratifiedSample,
-    "d8_sequence_pack" -> d8SequencePack,
-    "d2_cosine_neardup" -> d2CosineNearDup,
-    "d23_semdedup" -> d23SemDedup,
-    "d34_knn_graph" -> d34KnnGraph,
-    "d3_cosine_topk" -> d3CosineTopK,
-    "d3_ann_lsh" -> d3AnnLsh,
-    "d3_ivf_topk" -> d3IvfTopK,
-    "d3_ivf_trained" -> d3IvfTrained,
-    "d3_ivfpq_topk" -> d3IvfpqTopK,
-    "d16_pq_topk" -> d16PqTopK,
-    "d36_sq8_topk" -> d36Sq8TopK,
-    "d37_rerank_topk" -> d37RerankTopK,
-    "d38_batch_topk" -> d38BatchTopK,
-    "a15_heavy_hitters" -> a15HeavyHitters,
-    "d4_top_tokens" -> d4TopTokens,
-    "d4_tfidf" -> d4TfIdf,
-    "d32_bm25" -> d32Bm25,
-    "d33_gopher_rules" -> d33GopherRules,
-    "d35_source_overlap" -> d35SourceOverlap,
-    "d4_langid" -> d4LangId,
-    "d4_fingerprint" -> d4Fingerprint,
-    "d5_multimodal" -> d5Multimodal,
-    "d5_frames" -> d5Frames,
-    "d5_decode_bmp" -> d5DecodeBmp,
-    "d5_decode_wav" -> d5DecodeWav,
-    "d5_frames_avi" -> d5FramesAvi,
-    "d5_decode_png" -> d5DecodePng,
-    "d6_quality" -> d6Quality,
-    "d6_repetition" -> d6Repetition,
-    "d11_vocab_oov" -> d11VocabOov,
-    "d12_kmeans" -> d12Kmeans,
-    "d12_kmeans2" -> d12Kmeans2,
-    "d13_lm_surprise" -> d13LmSurprise,
-    "d39_dsir" -> d39Dsir,
-    "d41_perceptron" -> d41Perceptron,
-    "d42_calibration" -> d42Calibration,
-    "d14_chunk_overlap" -> d14ChunkOverlap,
-    "d15_bpe_pairs" -> d15BpePairs,
-    "d15_bpe_encode" -> d15BpeEncode,
-    "d40_fertility" -> d40Fertility,
-    "d15_bpe_tokens" -> d15BpeTokens,
-    "d10_redact_pii" -> d10RedactPii,
-    "pipe_training_mix" -> pipeTrainingMix,
-    "pipe_rag_index" -> pipeRagIndex,
-    "pipe_pretrain_corpus" -> pipePretrainCorpus,
-    "pipe_tokenized_pack" -> pipeTokenizedPack,
-    "pipe_crawl_frontier" -> pipeCrawlFrontier,
-    "pipe_semdedup_corpus" -> pipeSemdedupCorpus,
-    "d26_temperature_mix" -> d26TemperatureMix,
-    "d27_substring_dedup" -> d27SubstringDedup,
-    "d28_quality_classifier" -> d28QualityClassifier,
-    "d29_span_removal" -> d29SpanRemoval,
-    "d30_containment" -> d30Containment,
-    "d31_line_dedup" -> d31LineDedup,
-    "pipe_ccnet_corpus" -> pipeCcnetCorpus,
-    "pipe_c4_corpus" -> pipeC4Corpus,
-    "pipe_dolma_corpus" -> pipeDolmaCorpus,
-    "pipe_fineweb_corpus" -> pipeFinewebCorpus,
-    "pipe_dclm_corpus" -> pipeDclmCorpus,
-    "pipe_rpv2_signals" -> pipeRpv2Signals,
-    "pipe_split_assign" -> pipeSplitAssign
-  )
-
   // ---------- oracle SQL (DuckDB dialect) ----------
 
   /** DuckDB replay of [[Bpe.train]] + [[Bpe.encode]] at `k` merges,
@@ -1983,25 +1899,27 @@ object LlmQueries {
         |       FROM w2 LEFT JOIN g3 USING (b)),
         """.stripMargin
 
-  val oracle: Map[String, String] = Map(
-    "d1_dedup_exact" ->
+  lazy val (queries, oracle) = registry(declared)
+
+  private[ops] val declared: Seq[Query] = Seq(
+    Query("d1_dedup_exact", d1DedupExact,
       """WITH corpus AS (
         |  SELECT doc_id, text FROM documents
         |  UNION ALL
         |  SELECT doc_id + 2000000, text FROM documents WHERE doc_id % 7 = 0)
         |SELECT max(md5(text)) AS fp, min(doc_id) AS keep_id, count(*) AS n_copies
-        |FROM corpus GROUP BY text""".stripMargin,
-    "d2_minhash_lsh" -> exactJaccardSql,
-    "d2_ngram_jaccard" -> exactJaccardSql,
+        |FROM corpus GROUP BY text""".stripMargin),
+    Query("d2_minhash_lsh", d2MinhashLsh, exactJaccardSql),
+    Query("d2_ngram_jaccard", d2NgramJaccard, exactJaccardSql),
     // the incremental probe reports only index-vs-batch pairs (old id
     // < 1e6, batch id >= 1e6); batch-internal pairs are the NEXT
     // ingest's job (see Dedup.incrementalLsh)
-    "d2_incremental_lsh" ->
-      (exactJaccardSql + "\n  AND a_id < 1000000 AND b_id >= 1000000"),
+    Query("d2_incremental_lsh", d2IncrementalLsh,
+      (exactJaccardSql + "\n  AND a_id < 1000000 AND b_id >= 1000000")),
     // the maintained-index replay: three-part corpus; ingest-1 pairs are
     // base↔b1, ingest-2 pairs are (base ∪ b1)↔b2 — each ingest reports
     // index-vs-batch only (batch-internal pairs land on the next ingest)
-    "d2_lsh_ingest" ->
+    Query("d2_lsh_ingest", d2LshIngest,
       s"""WITH corpus AS (
          |  SELECT doc_id, text FROM documents
          |  UNION ALL
@@ -2023,8 +1941,8 @@ object LlmQueries {
          |JOIN sizes sb ON sb.doc_id = b_id
          |WHERE CAST(inter AS DOUBLE) / (sa.n + sb.n - inter) >= 0.8
          |  AND ((a_id < 1000000 AND b_id >= 1000000 AND b_id < 2000000)
-         |       OR (a_id < 2000000 AND b_id >= 2000000))""".stripMargin,
-    "d22_quality_percentile" ->
+         |       OR (a_id < 2000000 AND b_id >= 2000000))""".stripMargin),
+    Query("d22_quality_percentile", d22QualityPercentile,
       """WITH t AS (
         |  SELECT doc_id, source,
         |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok
@@ -2036,10 +1954,10 @@ object LlmQueries {
         |  CAST(sum(CASE WHEN pr >= 0.5 THEN 1 ELSE 0 END) AS BIGINT)
         |    AS n_kept,
         |  min(CASE WHEN pr >= 0.5 THEN n_tok END) AS min_kept_tok
-        |FROM p GROUP BY 1""".stripMargin,
+        |FROM p GROUP BY 1""".stripMargin),
     // outlier replay: per-source integer centroid (sum // n per
     // position), exact integer L2, top-3 per source with tie-break
-    "d21_embed_outliers" ->
+    Query("d21_embed_outliers", d21EmbedOutliers,
       """WITH e AS (
         |  SELECT vec_id, list_transform(embedding,
         |    x -> CAST(round(CAST(x AS DOUBLE) * 1048576) AS BIGINT)) AS qv
@@ -2064,10 +1982,10 @@ object LlmQueries {
         |    row_number() OVER (PARTITION BY source
         |                       ORDER BY dist DESC, doc_id ASC) AS rank
         |  FROM scored)
-        |WHERE rank <= 3""".stripMargin,
+        |WHERE rank <= 3""".stripMargin),
     // crawl-frontier replay: canon regex + min-keeper + quota window +
     // the SHARED generated PageRank rounds (hostRankPrefixSql/Rounds)
-    "pipe_crawl_frontier" -> {
+    Query("pipe_crawl_frontier", pipeCrawlFrontier, {
       s"""WITH u AS (
          |  SELECT doc_id,
          |    (CASE WHEN doc_id % 2 = 0 THEN 'https://' ELSE 'http://' END) ||
@@ -2102,10 +2020,10 @@ object LlmQueries {
          |SELECT a.hostn AS host, a.n_kept, a.first_id,
          |  CAST(r.rank AS BIGINT) AS host_rank
          |FROM agg a JOIN r3 r ON a.hostn = r.host""".stripMargin
-    },
+    }),
     // CDC replay: list_filter boundary positions (same md5-prefix
     // predicate), implicit 0/n bounds, adjacent-diff chunk lengths
-    "d20_cdc_chunks" ->
+    Query("d20_cdc_chunks", d20CdcChunks,
       """WITH d AS (SELECT doc_id, text, length(text) AS n FROM documents),
         |d2 AS (
         |  SELECT doc_id, n,
@@ -2118,10 +2036,10 @@ object LlmQueries {
         |  CAST(list_max(list_transform(range(2, len(bounds) + 1),
         |    i -> bounds[i] - bounds[i - 1])) AS BIGINT) AS max_chunk_len,
         |  CAST(n AS BIGINT) AS n_chars
-        |FROM b""".stripMargin,
+        |FROM b""".stripMargin),
     // depth-counted recursive walk with UNION-deduped states: min(d)
     // per node over all <=8-edge paths == 8 relaxation rounds
-    "d43_sssp" ->
+    Query("d43_sssp", d43Sssp,
       """WITH RECURSIVE edges AS (
         |  SELECT DISTINCT l_orderkey % 1000 AS src,
         |    (l_orderkey * 7 + l_linenumber) % 1000 AS dst,
@@ -2134,10 +2052,10 @@ object LlmQueries {
         |  FROM walk JOIN edges e ON e.src = walk.node
         |  WHERE walk.depth < 8)
         |SELECT node, CAST(min(d) AS BIGINT) AS dist
-        |FROM walk GROUP BY 1""".stripMargin,
+        |FROM walk GROUP BY 1""".stripMargin),
     // id-ordered triangle enumeration — deliberately NOT the Spark
     // side's degree orientation; the count must agree anyway
-    "d24_triangles" ->
+    Query("d24_triangles", d24Triangles,
       """WITH raw AS (
         |  SELECT least(o_custkey % 499, o_orderkey % 499) AS a,
         |         greatest(o_custkey % 499, o_orderkey % 499) AS b
@@ -2152,16 +2070,16 @@ object LlmQueries {
         |  JOIN und e3 ON e3.a = e1.a AND e3.b = e2.b)
         |SELECT (SELECT count(*) FROM nodes) AS n_nodes,
         |       (SELECT count(*) FROM und) AS n_edges,
-        |       (SELECT n FROM tri) AS n_triangles""".stripMargin,
+        |       (SELECT n FROM tri) AS n_triangles""".stripMargin),
     // PageRank replay: generated power-iteration rounds (the lloyd-CTE
     // pattern) — all integer fixed-point, same truncation both engines
-    "d19_host_rank" ->
+    Query("d19_host_rank", d19HostRank,
       s"""WITH $hostRankPrefixSql,
          |${hostRankRounds(3)}
-         |SELECT host, CAST(rank AS BIGINT) AS rank FROM r3""".stripMargin,
+         |SELECT host, CAST(rank AS BIGINT) AS rank FROM r3""".stripMargin),
     // host-quota replay: same deterministic host synthesis; host via
     // regex between :// and /, lowered; quota = row_number per host
-    "d18_host_quota" ->
+    Query("d18_host_quota", d18HostQuota,
       """WITH u AS (
         |  SELECT doc_id,
         |    (CASE WHEN doc_id % 2 = 0 THEN 'https://' ELSE 'http://' END) ||
@@ -2181,11 +2099,11 @@ object LlmQueries {
         |SELECT host, count(*) AS n_docs,
         |  CAST(sum(CASE WHEN rn <= 20 THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
         |  min(doc_id) AS first_id
-        |FROM r GROUP BY 1""".stripMargin,
+        |FROM r GROUP BY 1""".stripMargin),
     // same deterministic URL synthesis; canonicalization via regex
     // (host between :// and /, lowered; path up to ?/#, trailing slash
     // stripped) — the Spark side uses parse_url for the same pieces
-    "d17_url_canon" ->
+    Query("d17_url_canon", d17UrlCanon,
       """WITH u AS (
         |  SELECT doc_id,
         |    (CASE WHEN doc_id % 2 = 0 THEN 'https://' ELSE 'http://' END) ||
@@ -2206,8 +2124,8 @@ object LlmQueries {
         |  FROM u)
         |SELECT canon_url, count(*) AS n_variants,
         |       min(doc_id) AS keep_id
-        |FROM c GROUP BY 1""".stripMargin,
-    "d10_redact_pii" ->
+        |FROM c GROUP BY 1""".stripMargin),
+    Query("d10_redact_pii", d10RedactPii,
       """WITH corpus AS (
         |  SELECT doc_id,
         |    CASE WHEN doc_id % 17 = 0
@@ -2231,8 +2149,8 @@ object LlmQueries {
         |    '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b', '<IP>', 'g') AS text,
         |  CAST(c + len(regexp_extract_all(t,
         |    '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b')) AS BIGINT) AS n_redactions
-        |FROM r2""".stripMargin,
-    "d6_repetition" ->
+        |FROM r2""".stripMargin),
+    Query("d6_repetition", d6Repetition,
       """WITH corpus AS (
         |  SELECT doc_id, text FROM documents
         |  UNION ALL
@@ -2253,8 +2171,8 @@ object LlmQueries {
         |       FROM b2 GROUP BY doc_id)
         |SELECT tw.doc_id, tw.top_word_frac,
         |  coalesce(bi.dup_bigram_frac, 0.0) AS dup_bigram_frac
-        |FROM tw LEFT JOIN bi ON tw.doc_id = bi.doc_id""".stripMargin,
-    "d9_decontaminate" ->
+        |FROM tw LEFT JOIN bi ON tw.doc_id = bi.doc_id""".stripMargin),
+    Query("d9_decontaminate", d9Decontaminate,
       """WITH bwords AS (
         |  SELECT string_split(text, ' ') AS w FROM documents
         |  WHERE doc_id % 13 = 0),
@@ -2272,15 +2190,15 @@ object LlmQueries {
         |contaminated AS (
         |  SELECT DISTINCT doc_id FROM csh JOIN bsh ON csh.s = bsh.s)
         |SELECT d.doc_id, d.source FROM documents d
-        |WHERE d.doc_id NOT IN (SELECT doc_id FROM contaminated)""".stripMargin,
-    "d2_dedup_clusters" ->
+        |WHERE d.doc_id NOT IN (SELECT doc_id FROM contaminated)""".stripMargin),
+    Query("d2_dedup_clusters", d2DedupClusters,
       s"""$closureCtes
          |SELECT src AS doc_id, min(dst) AS cluster_id
-         |FROM reach GROUP BY src""".stripMargin,
+         |FROM reach GROUP BY src""".stripMargin),
     // the same closure; family = component min (singleton: self), split
     // = 16-bit md5 prefix of the FAMILY mod 10 — per-family by
     // construction, so the straddle audit is structurally zero
-    "pipe_split_assign" ->
+    Query("pipe_split_assign", pipeSplitAssign,
       s"""$closureCtes,
          |fam AS (
          |  SELECT c.doc_id,
@@ -2310,10 +2228,10 @@ object LlmQueries {
          |SELECT split, count(*) AS n_docs,
          |  count(DISTINCT family) AS n_families, a.families_straddling
          |FROM asg CROSS JOIN aud a
-         |GROUP BY 1, 4""".stripMargin,
+         |GROUP BY 1, 4""".stripMargin),
     // same recursive closure; family = least(self, min-reachable) = the
     // component minimum, then the longest-text (ties: lowest id) pick
-    "d25_dedup_keepbest" ->
+    Query("d25_dedup_keepbest", d25DedupKeepbest,
       s"""$closureCtes,
          |fam AS (
          |  SELECT src AS doc_id, least(src, min(dst)) AS family
@@ -2326,8 +2244,8 @@ object LlmQueries {
          |  FROM fam f JOIN corpus c ON c.doc_id = f.doc_id)
          |SELECT family, CAST(nm AS BIGINT) AS n_members, doc_id AS kept_id,
          |  CAST(l AS BIGINT) AS kept_len
-         |FROM sel WHERE rn = 1""".stripMargin,
-    "d8_sequence_pack" ->
+         |FROM sel WHERE rn = 1""".stripMargin),
+    Query("d8_sequence_pack", d8SequencePack,
       """WITH t AS (
         |  SELECT source, doc_id, len(string_split(text, ' ')) AS n_tokens
         |  FROM documents),
@@ -2339,20 +2257,20 @@ object LlmQueries {
         |SELECT source, doc_id, CAST(n_tokens AS INT) AS n_tokens,
         |  CAST(floor((cum - n_tokens) / 2048.0) AS INT) AS pack_id,
         |  CAST((cum - n_tokens) % 2048 AS INT) AS pos
-        |FROM c""".stripMargin,
-    "d7_stratified_sample" ->
+        |FROM c""".stripMargin),
+    Query("d7_stratified_sample", d7StratifiedSample,
       """SELECT doc_id, source FROM documents
         |WHERE md5(CAST(doc_id AS VARCHAR)) <
         |  CASE source WHEN 'src0' THEN '8000' WHEN 'src1' THEN '4000'
-        |              WHEN 'src2' THEN '2000' ELSE '1000' END""".stripMargin,
-    "d2_simhash" ->
+        |              WHEN 'src2' THEN '2000' ELSE '1000' END""".stripMargin),
+    Query("d2_simhash", d2Simhash,
       s"""WITH toks AS (
          |  SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents),
          |votes AS (SELECT doc_id,
          |  $simhashVotes
          |  FROM toks GROUP BY 1)
-         |SELECT doc_id, CAST($simhashBits AS BIGINT) AS sh16 FROM votes""".stripMargin,
-    "d2_cosine_neardup" -> (
+         |SELECT doc_id, CAST($simhashBits AS BIGINT) AS sh16 FROM votes""".stripMargin),
+    Query("d2_cosine_neardup", d2CosineNearDup, (
       cosPairSql(
         """WITH corpus AS (
           |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
@@ -2377,9 +2295,9 @@ object LlmQueries {
           |    ON a.bucket = b.bucket AND a.vec_id < b.vec_id)""".stripMargin) +
       """
         |SELECT a_id, b_id, round(dot / (na * nb), 6) AS cos_sim
-        |FROM dots WHERE round(dot / (na * nb), 6) >= 0.95""".stripMargin),
+        |FROM dots WHERE round(dot / (na * nb), 6) >= 0.95""".stripMargin)),
     // data-derived per-lang thresholds; hex prefix decoded by nibble
-    "d26_temperature_mix" ->
+    Query("d26_temperature_mix", d26TemperatureMix,
       """WITH counts AS (
         |  SELECT lang, count(*) AS n_l FROM documents GROUP BY 1),
         |th AS (
@@ -2398,11 +2316,11 @@ object LlmQueries {
         |    (strpos('0123456789abcdef', substr(hx, 4, 1)) - 1) AS hv
         |  FROM h)
         |SELECT doc_id, lang, CAST(t16 AS BIGINT) AS t16
-        |FROM v WHERE hv < t16""".stripMargin,
+        |FROM v WHERE hv < t16""".stripMargin),
     // gram-string inverted index + the same pos - row_number() run
     // grouping (Spark groups by the (xxhash64, md5) pair of the gram —
     // the D1 hash-vs-string count-equality policy)
-    "d27_substring_dedup" ->
+    Query("d27_substring_dedup", d27SubstringDedup,
       """WITH base AS (
         |  SELECT doc_id, text FROM documents
         |  UNION ALL
@@ -2431,12 +2349,12 @@ object LlmQueries {
         |  CAST(count(*) AS BIGINT) AS n_pos,
         |  CAST(count(dg) AS BIGINT) AS dup_pos,
         |  CAST(count(DISTINCT grp) AS BIGINT) AS n_spans
-        |FROM r GROUP BY doc_id HAVING count(dg) > 0""".stripMargin,
+        |FROM r GROUP BY doc_id HAVING count(dg) > 0""".stripMargin),
     // the four stage replays chained: d29's rebuild (no plants, CASE
     // keeps unaffected docs' text verbatim — split+rejoin must not be
     // trusted to round-trip), d28's classifier inlined on the rewritten
     // text, d26's thresholds over the SURVIVORS, d8's pack windows
-    "pipe_ccnet_corpus" ->
+    Query("pipe_ccnet_corpus", pipeCcnetCorpus,
       """WITH w AS (
         |  SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
         |g AS (
@@ -2498,10 +2416,10 @@ object LlmQueries {
         |SELECT source, doc_id, CAST(n_tok AS BIGINT) AS n_tokens,
         |  CAST(floor((cum - n_tok) / 1024.0) AS INT) AS pack_id,
         |  CAST((cum - n_tok) % 1024 AS INT) AS pos
-        |FROM cums""".stripMargin,
+        |FROM cums""".stripMargin),
     // same gram index; keeper = min doc_id per duplicated gram; the
     // rebuild walks the same 1-based position list as a comprehension
-    "d29_span_removal" ->
+    Query("d29_span_removal", d29SpanRemoval,
       """WITH base AS (
         |  SELECT doc_id, text FROM documents
         |  UNION ALL
@@ -2529,10 +2447,10 @@ object LlmQueries {
         |  coalesce(array_to_string(
         |    [w.ws[i] FOR i IN range(1, len(w.ws) + 1)
         |     IF NOT list_contains(cl.cov, i)], ' '), '') AS new_text
-        |FROM w JOIN cl USING (doc_id)""".stripMargin,
+        |FROM w JOIN cl USING (doc_id)""".stripMargin),
     // exact all-pairs containment (no prefix filter) — independently
     // verifies the Scala side's candidate-generation completeness
-    "d30_containment" ->
+    Query("d30_containment", d30Containment,
       s"""WITH corpus AS (
          |  SELECT doc_id, text FROM documents
          |  UNION ALL
@@ -2549,13 +2467,13 @@ object LlmQueries {
          |  GROUP BY 1, 2)
          |SELECT a_id, b_id, sa.n AS n_a, n_inter
          |FROM inter JOIN sizes sa ON sa.doc_id = a_id
-         |WHERE n_inter * 100 >= sa.n * 90""".stripMargin,
+         |WHERE n_inter * 100 >= sa.n * 90""".stripMargin),
     // the C4 chain replayed end to end: line rank dedup -> >=3 kept
     // lines -> lexicon-vote language agreement -> (lang, source) sums.
     // Docs losing EVERY line vanish from doc2 and fail the floor the
     // same way the Spark side's empty rewrite does.
     // same 8-gram window, DISTINCT at (source, md5) grain both sides
-    "d35_source_overlap" ->
+    Query("d35_source_overlap", d35SourceOverlap,
       """WITH w AS (
         |  SELECT doc_id, source, string_split(text, ' ') AS ws
         |  FROM documents),
@@ -2565,7 +2483,7 @@ object LlmQueries {
         |  FROM w, LATERAL (SELECT unnest(range(1, len(ws) - 6)) AS x) i)
         |SELECT a.source AS src_a, b.source AS src_b, count(*) AS n_shared
         |FROM sh a JOIN sh b ON a.h = b.h AND a.source < b.source
-        |GROUP BY 1, 2""".stripMargin,
+        |GROUP BY 1, 2""".stripMargin),
     // independent formulation: the blocklist and canonical key resolve
     // to doc_id arithmetic (host class and path are functions of
     // doc_id % 250), so the oracle never parses a URL; langid and
@@ -2573,7 +2491,7 @@ object LlmQueries {
     // the four signal families' gate-proven CTEs joined wide: gopher
     // measures + flags, d28 classifier, lexicon-vote langid (LEFT,
     // 'und' default), corpus-wide duplicate-line census
-    "pipe_rpv2_signals" ->
+    Query("pipe_rpv2_signals", pipeRpv2Signals,
       """WITH gw AS (
         |  SELECT doc_id, text, string_split(text, ' ') AS w
         |  FROM documents),
@@ -2647,11 +2565,11 @@ object LlmQueries {
         |JOIN gop g USING (doc_id)
         |JOIN cls c USING (doc_id)
         |LEFT JOIN pred p USING (doc_id)
-        |JOIN ls USING (doc_id)""".stripMargin,
+        |JOIN ls USING (doc_id)""".stripMargin),
     // gopher gate (d33's CTEs) → min-id exact dedup → d28's classifier
     // → histogram-derived 75th-percentile threshold (cum·4 ≥ total·3,
     // the same BIGINT cross-multiply) → per-(lang, source) accounting
-    "pipe_dclm_corpus" ->
+    Query("pipe_dclm_corpus", pipeDclmCorpus,
       """WITH gw AS (
         |  SELECT doc_id, text, string_split(text, ' ') AS w
         |  FROM documents),
@@ -2705,8 +2623,8 @@ object LlmQueries {
         |JOIN dd d ON d.doc_id = s.doc_id
         |CROSS JOIN thr
         |WHERE s.score >= thr.thr
-        |GROUP BY 1, 2""".stripMargin,
-    "pipe_fineweb_corpus" ->
+        |GROUP BY 1, 2""".stripMargin),
+    Query("pipe_fineweb_corpus", pipeFinewebCorpus,
       """WITH k0 AS (
         |  SELECT doc_id, lang, source, text FROM documents
         |  WHERE (doc_id % 250) % 7 NOT IN (3, 5)),
@@ -2755,8 +2673,8 @@ object LlmQueries {
         |FROM kept k
         |JOIN pred p ON p.doc_id = k.doc_id AND k.lang = p.pred_lang
         |JOIN gk ON gk.doc_id = k.doc_id
-        |GROUP BY 1, 2""".stripMargin,
-    "pipe_c4_corpus" ->
+        |GROUP BY 1, 2""".stripMargin),
+    Query("pipe_c4_corpus", pipeC4Corpus,
       """WITH w AS (
         |  SELECT doc_id, lang, source, string_split(text, ' ') AS ws
         |  FROM documents),
@@ -2803,11 +2721,11 @@ object LlmQueries {
         |  CAST(sum(f.n_removed) AS BIGINT) AS lines_removed
         |FROM floored f JOIN pred p
         |  ON f.doc_id = p.doc_id AND f.lang = p.pred_lang
-        |GROUP BY 1, 2""".stripMargin,
+        |GROUP BY 1, 2""".stripMargin),
     // the Dolma chain replayed stage for stage: plant → lexicon-vote
     // langid → the d10 redaction chain → 8-word paragraph rank-dedup →
     // ≥3-paragraph floor → mirror union → md5-keyed exact dedup
-    "pipe_dolma_corpus" ->
+    Query("pipe_dolma_corpus", pipeDolmaCorpus,
       """WITH corpus AS (
         |  SELECT doc_id, lang, source,
         |    CASE WHEN doc_id % 17 = 0
@@ -2888,12 +2806,12 @@ object LlmQueries {
         |  CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS sum_words,
         |  CAST(sum(n_removed) AS BIGINT) AS paras_removed,
         |  CAST(sum(n_red) AS BIGINT) AS sum_redactions
-        |FROM dd GROUP BY 1, 2""".stripMargin,
+        |FROM dd GROUP BY 1, 2""".stripMargin),
     // C4 line dedup replayed by window rank over the same 4-word
     // chunking; new_text rebuilt positionally (empty-list
     // array_to_string is NULL in DuckDB where Spark's array_join is
     // '' — coalesced, the d29 convention)
-    "d31_line_dedup" ->
+    Query("d31_line_dedup", d31LineDedup,
       """WITH w AS (
         |  SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
         |lines AS (
@@ -2917,10 +2835,10 @@ object LlmQueries {
         |  coalesce(array_to_string(
         |    [ll.lls[i] FOR i IN range(1, len(ll.lls) + 1)
         |     IF NOT list_contains(rm.rmp, i)], chr(10)), '') AS new_text
-        |FROM ll JOIN rm USING (doc_id)""".stripMargin,
+        |FROM ll JOIN rm USING (doc_id)""".stripMargin),
     // explode-join replay of the packed-array fold: same md5-prefix
     // bucket (nibble-decoded), same arithmetic weight table
-    "d28_quality_classifier" ->
+    Query("d28_quality_classifier", d28QualityClassifier,
       """WITH w AS (
         |  SELECT b, (b * 37) % 101 - 50 AS wt
         |  FROM (SELECT unnest(range(0, 256)) AS b)),
@@ -2936,10 +2854,10 @@ object LlmQueries {
         |  CAST(sum(w.wt) AS BIGINT) AS score,
         |  (sum(w.wt) >= 0) AS keep
         |FROM tb JOIN w USING (b)
-        |GROUP BY doc_id""".stripMargin,
+        |GROUP BY doc_id""".stripMargin),
     // the capstone: sims with twins planted BELOW (real docs drop),
     // anti-join into documents, token floor, d8's pack-window replay
-    "pipe_semdedup_corpus" -> (
+    Query("pipe_semdedup_corpus", pipeSemdedupCorpus, (
       semDedupCtes("- 1000000") +
       """,
         |dropped AS (SELECT DISTINCT b_id AS doc_id FROM sims WHERE b_id >= 0),
@@ -2957,21 +2875,21 @@ object LlmQueries {
         |SELECT source, doc_id, CAST(n_tok AS INT) AS n_tokens,
         |  CAST(floor((cum - n_tok) / 1024.0) AS INT) AS pack_id,
         |  CAST((cum - n_tok) % 1024 AS INT) AS pos
-        |FROM cums""".stripMargin),
+        |FROM cums""".stripMargin)),
     // SemDeDup replay: the planted corpus quantized to the grid, the
     // d3_ivf_trained two-Lloyd CTEs (seeds = 8 lowest ids, no holdout),
     // a THIRD assignment against the final INTEGER codebook (no double
     // conversion — the compare stays pure BIGINT), then within-cluster
     // cosine pairs and the greedy-by-id drop rule
-    "d23_semdedup" -> (
+    Query("d23_semdedup", d23SemDedup, (
       semDedupCtes("+ 1000000") +
       """
         |SELECT s.b_id AS vec_id, max(a.cid) AS cid, min(s.a_id) AS kept_id,
         |  min_by(s.cs, s.a_id) AS cos_sim
         |FROM sims s JOIN a3 a ON a.vec_id = s.b_id
-        |GROUP BY s.b_id""".stripMargin),
-    "d34_knn_graph" -> knnGraphSql,
-    "d3_cosine_topk" -> (
+        |GROUP BY s.b_id""".stripMargin)),
+    Query("d34_knn_graph", d34KnnGraph, knnGraphSql),
+    Query("d3_cosine_topk", d3CosineTopK, (
       cosPairSql(
         """WITH pairs AS (
           |  SELECT e.vec_id AS a_id, list_transform(e.embedding, x -> CAST(x AS DOUBLE)) AS va,
@@ -2983,8 +2901,8 @@ object LlmQueries {
         |  SELECT a_id AS vec_id, round(dot / (na * nb), 6) AS cos_sim,
         |    row_number() OVER (ORDER BY round(dot / (na * nb), 6) DESC, a_id ASC) AS rank
         |  FROM dots)
-        |WHERE rank <= 10""".stripMargin),
-    "d3_ann_lsh" -> (
+        |WHERE rank <= 10""".stripMargin)),
+    Query("d3_ann_lsh", d3AnnLsh, (
       cosPairSql(
         """WITH bucketed AS (
           |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v,
@@ -3002,8 +2920,8 @@ object LlmQueries {
         |  SELECT a_id AS vec_id, round(dot / (na * nb), 6) AS cos_sim,
         |    row_number() OVER (ORDER BY round(dot / (na * nb), 6) DESC, a_id ASC) AS rank
         |  FROM dots)
-        |WHERE rank <= 5""".stripMargin),
-    "d3_ivf_topk" ->
+        |WHERE rank <= 5""".stripMargin)),
+    Query("d3_ivf_topk", d3IvfTopK,
       """WITH corp AS (
         |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
         |  FROM embeddings WHERE vec_id != 0),
@@ -3065,13 +2983,13 @@ object LlmQueries {
         |  SELECT vec_id, cos_sim,
         |    row_number() OVER (ORDER BY cos_sim DESC, vec_id ASC) AS rank
         |  FROM scored)
-        |WHERE rank <= 5""".stripMargin,
+        |WHERE rank <= 5""".stripMargin),
     // the trained-IVF replay: two Lloyd iterations (the d12_kmeans2
     // CTEs, over the corpus with the query vector held out, seeds = the
     // 8 lowest vec_ids) reduced to an integer-grid codebook, divided by
     // 2^20 (exact) into the SAME probe pipeline as d3_ivf_topk. Written
     // dim-agnostically: every position range derives from len(arr).
-    "d3_ivf_trained" ->
+    Query("d3_ivf_trained", d3IvfTrained,
       """WITH corp AS (
         |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v,
         |    list_transform(embedding,
@@ -3172,14 +3090,14 @@ object LlmQueries {
         |  SELECT vec_id, cos_sim,
         |    row_number() OVER (ORDER BY cos_sim DESC, vec_id ASC) AS rank
         |  FROM scored)
-        |WHERE rank <= 5""".stripMargin,
+        |WHERE rank <= 5""".stripMargin),
     // PQ/ADC replay: 8 subspaces via list slices, stride-31 subspace
     // codebook, per-(vector, subspace) argmin code, query distance
     // table, approximate distance = sum of table lookups — all exact
     // integers on the 2^20 grid, dim-agnostic (subdim = len // 8)
     // stage 1 replays the SQ8 integer pool cut, stage 2 the exact
     // cosine rerank — both stages' tie-breaks by id
-    "d37_rerank_topk" ->
+    Query("d37_rerank_topk", d37RerankTopK,
       """WITH g0 AS (
         |  SELECT vec_id, list_transform(embedding,
         |    x -> CAST(round(CAST(x AS DOUBLE) * 1048576) AS BIGINT)) AS g
@@ -3223,10 +3141,10 @@ object LlmQueries {
         |    row_number() OVER (ORDER BY round(dot / (na * nb), 6) DESC,
         |      a_id ASC) AS rank
         |  FROM dots)
-        |WHERE rank <= 5""".stripMargin,
+        |WHERE rank <= 5""".stripMargin),
     // one corpus pass scores the whole broadcast query batch; the
     // per-query rank window partitions by q_id
-    "d38_batch_topk" ->
+    Query("d38_batch_topk", d38BatchTopK,
       """WITH corp AS (
         |  SELECT vec_id, list_transform(embedding,
         |    x -> CAST(x AS DOUBLE)) AS v
@@ -3248,11 +3166,11 @@ object LlmQueries {
         |    row_number() OVER (PARTITION BY q_id
         |      ORDER BY round(dot / (na * nb), 6) DESC, vec_id ASC) AS rank
         |  FROM dots)
-        |WHERE rank <= 3""".stripMargin,
+        |WHERE rank <= 3""".stripMargin),
     // the same grid-snap → per-vector max-abs scale → BIGINT
     // round-half-up codes → int dot × candidate scale; every integer
     // op written once, identically, in both engines
-    "d36_sq8_topk" ->
+    Query("d36_sq8_topk", d36Sq8TopK,
       """WITH g0 AS (
         |  SELECT vec_id, list_transform(embedding,
         |    x -> CAST(round(CAST(x AS DOUBLE) * 1048576) AS BIGINT)) AS g
@@ -3277,8 +3195,8 @@ object LlmQueries {
         |  SELECT vec_id, qdot, qdot * m AS score_key,
         |    row_number() OVER (ORDER BY qdot * m DESC, vec_id) AS rank
         |  FROM d)
-        |WHERE rank <= 10""".stripMargin,
-    "d16_pq_topk" ->
+        |WHERE rank <= 10""".stripMargin),
+    Query("d16_pq_topk", d16PqTopK,
       """WITH corp AS (
         |  SELECT vec_id, list_transform(embedding,
         |    x -> CAST(round(CAST(x AS DOUBLE) * 1048576) AS BIGINT)) AS qv
@@ -3320,7 +3238,7 @@ object LlmQueries {
         |  SELECT vec_id, approx,
         |    row_number() OVER (ORDER BY approx ASC, vec_id ASC) AS rank
         |  FROM sc)
-        |WHERE rank <= 5""".stripMargin,
+        |WHERE rank <= 5""".stripMargin),
     // IVF-PQ replay: coarse two-Lloyd (d3_ivf_trained's CTEs, kept on
     // the integer grid — routing is integer L2 here, not cosine), route
     // = per-vector argmin over the trained coarse centroids, subspace
@@ -3328,7 +3246,7 @@ object LlmQueries {
     // codes = per-(vector, subspace) argmin, ADC table from the query's
     // subvectors, approx = sum of lookups over vectors routed to the 2
     // probed lists. Dim-agnostic: subdim = len // 8, positions from len.
-    "d3_ivfpq_topk" ->
+    Query("d3_ivfpq_topk", d3IvfpqTopK,
       """WITH corp AS (
         |  SELECT vec_id, list_transform(embedding,
         |    x -> CAST(round(CAST(x AS DOUBLE) * 1048576) AS BIGINT)) AS qv
@@ -3470,19 +3388,19 @@ object LlmQueries {
         |  SELECT vec_id, approx,
         |    row_number() OVER (ORDER BY approx ASC, vec_id ASC) AS rank
         |  FROM sc)
-        |WHERE rank <= 5""".stripMargin,
+        |WHERE rank <= 5""".stripMargin),
     // heavy hitters: the two-pass output is exactly "tokens with count
     // strictly above n/(k+1)" — the sketch only bounds WHICH candidates
     // get recounted, so the oracle is the plain exact formulation
-    "a15_heavy_hitters" ->
+    Query("a15_heavy_hitters", a15HeavyHitters,
       """WITH toks AS (
         |  SELECT unnest(string_split(text, ' ')) AS tok FROM documents),
         |t AS (SELECT tok FROM toks WHERE length(tok) >= 1),
         |tot AS (SELECT count(*) AS n FROM t)
         |SELECT tok, count(*) AS cnt
         |FROM t, tot GROUP BY tok, tot.n
-        |HAVING count(*) * 33 > tot.n""".stripMargin,
-    "d11_vocab_oov" ->
+        |HAVING count(*) * 33 > tot.n""".stripMargin),
+    Query("d11_vocab_oov", d11VocabOov,
       """WITH toks AS (
         |  SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents),
         |freq AS (SELECT tok, count(*) AS n FROM toks GROUP BY 1),
@@ -3493,14 +3411,14 @@ object LlmQueries {
         |SELECT doc_id, count(*) AS n_tok,
         |  CAST(sum(oov) AS BIGINT) AS n_oov,
         |  round(CAST(sum(oov) AS DOUBLE) / count(*), 6) AS oov_rate
-        |FROM j GROUP BY 1""".stripMargin,
-    "d4_top_tokens" ->
+        |FROM j GROUP BY 1""".stripMargin),
+    Query("d4_top_tokens", d4TopTokens,
       """SELECT tok, n FROM (
         |  SELECT tok, count(*) AS n FROM (
         |    SELECT unnest(string_split(text, ' ')) AS tok FROM documents)
         |  GROUP BY 1)
-        |ORDER BY n DESC, tok ASC LIMIT 20""".stripMargin,
-    "d4_tfidf" ->
+        |ORDER BY n DESC, tok ASC LIMIT 20""".stripMargin),
+    Query("d4_tfidf", d4TfIdf,
       """WITH docs AS (SELECT doc_id, text FROM documents WHERE doc_id < 50),
         |toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM docs),
         |tf AS (SELECT doc_id, tok, count(*) AS tf FROM toks GROUP BY 1, 2),
@@ -3514,11 +3432,11 @@ object LlmQueries {
         |  SELECT *, row_number() OVER (PARTITION BY doc_id
         |             ORDER BY tfidf DESC, tok ASC) AS rank
         |  FROM scored)
-        |WHERE rank <= 3""".stripMargin,
+        |WHERE rank <= 3""".stripMargin),
     // identical float-op order as the Scala side (idf*num/den*1e6,
     // left-assoc); micro-integer snap BEFORE the per-doc sum, so the
     // sum and ranking are exact BIGINT (the d4_tfidf rounding contract)
-    "d32_bm25" ->
+    Query("d32_bm25", d32Bm25,
       """WITH toks AS (
         |  SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents),
         |lens AS (SELECT doc_id, count(*) AS len FROM toks GROUP BY 1),
@@ -3537,10 +3455,10 @@ object LlmQueries {
         |SELECT doc_id, CAST(sum(micro) AS BIGINT) AS score_micro,
         |  count(*) AS n_terms
         |FROM c GROUP BY 1
-        |ORDER BY score_micro DESC, doc_id LIMIT 10""".stripMargin,
+        |ORDER BY score_micro DESC, doc_id LIMIT 10""".stripMargin),
     // same integer cross-multiplied rules; Σ|w| via the single-space
     // identity strlen − n + 1 on both sides (no second tokenization)
-    "d33_gopher_rules" ->
+    Query("d33_gopher_rules", d33GopherRules,
       """WITH d AS (
         |  SELECT doc_id, text, string_split(text, ' ') AS w FROM documents),
         |p AS (SELECT doc_id,
@@ -3564,8 +3482,8 @@ object LlmQueries {
         |  CAST(n_words BETWEEN 50 AND 100000
         |    AND 3 * n_words <= sum_wlen AND sum_wlen <= 10 * n_words
         |    AND n_stop >= 2 AND 5 * top_chars <= sum_wlen AS INT) AS keep
-        |FROM p JOIN t USING (doc_id)""".stripMargin,
-    "d4_langid" ->
+        |FROM p JOIN t USING (doc_id)""".stripMargin),
+    Query("d4_langid", d4LangId,
       """WITH toks AS (
         |  SELECT doc_id, lang, unnest(string_split(text, ' ')) AS tok FROM documents),
         |freq AS (SELECT lang, tok, count(*) AS n FROM toks GROUP BY 1, 2),
@@ -3585,15 +3503,15 @@ object LlmQueries {
         |  WHERE rk = 1)
         |SELECT d.lang AS true_lang, p.pred_lang, count(*) AS n
         |FROM documents d JOIN pred p ON d.doc_id = p.doc_id
-        |GROUP BY 1, 2""".stripMargin,
-    "d4_fingerprint" ->
+        |GROUP BY 1, 2""".stripMargin),
+    Query("d4_fingerprint", d4Fingerprint,
       s"""WITH corpus AS (SELECT doc_id, text FROM documents),
          |$shingleCtes
-         |SELECT doc_id, min(md5(s)) AS fp FROM sh GROUP BY 1""".stripMargin,
+         |SELECT doc_id, min(md5(s)) AS fp FROM sh GROUP BY 1""".stripMargin),
     // arithmetic replay THROUGH the resize: output pixel (ox,oy) of the
     // 4x2 result samples source pixel s = oy*16 + ox*2 of the 8x4 rule,
     // weighted by 1 + output position
-    "d5_multimodal" ->
+    Query("d5_multimodal", d5Multimodal,
       """WITH f AS (
         |  SELECT d.doc_id, d.lang, e.label,
         |    CAST(sum((1 + p.oy * 4 + p.ox) *
@@ -3608,10 +3526,10 @@ object LlmQueries {
         |  GROUP BY 1, 2, 3)
         |SELECT lang, label, count(*) AS n,
         |  CAST(sum(feat) AS BIGINT) AS sum_feat
-        |FROM f GROUP BY 1, 2""".stripMargin,
+        |FROM f GROUP BY 1, 2""".stripMargin),
     // stride-2 sampling of the 5-frame AVI: original frames 0, 2, 4;
     // 6x2 frames have 12 pixels under the frame-shifted pixel rule
-    "d5_frames" ->
+    Query("d5_frames", d5Frames,
       """SELECT d.doc_id, CAST(f.x AS INT) AS frame_idx,
         |  CAST(sum(((d.doc_id*31 + f.x*19 + i.x*7)  % 256) +
         |           ((d.doc_id*17 + f.x*23 + i.x*11) % 256) +
@@ -3624,10 +3542,10 @@ object LlmQueries {
         |FROM documents d JOIN embeddings e ON d.doc_id = e.vec_id,
         |     (SELECT unnest([0, 2, 4]) AS x) f,
         |     (SELECT unnest(range(0, 12)) AS x) i
-        |GROUP BY 1, 2""".stripMargin,
+        |GROUP BY 1, 2""".stripMargin),
     // arithmetic replay of the pixel rule — independent of the JVM
     // encode/decode path; position weight i catches layout misreads
-    "d5_decode_bmp" ->
+    Query("d5_decode_bmp", d5DecodeBmp,
       """SELECT d.doc_id, CAST(32 AS INT) AS n_px,
         |  CAST(sum(((d.doc_id*31 + i.x*7) % 256) +
         |           ((d.doc_id*17 + i.x*11) % 256) +
@@ -3637,16 +3555,16 @@ object LlmQueries {
         |                  ((d.doc_id*13 + i.x*3) % 256))) AS BIGINT)
         |    AS wsum_ch
         |FROM documents d, (SELECT unnest(range(0, 32)) AS x) i
-        |GROUP BY 1""".stripMargin,
-    "d5_decode_wav" ->
+        |GROUP BY 1""".stripMargin),
+    Query("d5_decode_wav", d5DecodeWav,
       """SELECT d.doc_id, CAST(100 AS INT) AS n_samples,
         |  CAST(sum(((d.doc_id*13 + i.x*5) % 65536) - 32768) AS BIGINT)
         |    AS sum_amp,
         |  CAST(sum(i.x * (((d.doc_id*13 + i.x*5) % 65536) - 32768))
         |    AS BIGINT) AS wsum_amp
         |FROM documents d, (SELECT unnest(range(0, 100)) AS x) i
-        |GROUP BY 1""".stripMargin,
-    "d5_decode_png" ->
+        |GROUP BY 1""".stripMargin),
+    Query("d5_decode_png", d5DecodePng,
       """SELECT d.doc_id, CAST(27 AS INT) AS n_px,
         |  CAST(sum(((d.doc_id*37 + i.x*5)  % 256) +
         |           ((d.doc_id*23 + i.x*13) % 256) +
@@ -3656,8 +3574,8 @@ object LlmQueries {
         |                  ((d.doc_id*11 + i.x*17) % 256))) AS BIGINT)
         |    AS wsum_ch
         |FROM documents d, (SELECT unnest(range(0, 27)) AS x) i
-        |GROUP BY 1""".stripMargin,
-    "d5_frames_avi" ->
+        |GROUP BY 1""".stripMargin),
+    Query("d5_frames_avi", d5FramesAvi,
       """SELECT d.doc_id, CAST(f.x AS INT) AS frame_idx,
         |  CAST(sum(((d.doc_id*31 + f.x*19 + i.x*7) % 256) +
         |           ((d.doc_id*17 + f.x*23 + i.x*11) % 256) +
@@ -3669,8 +3587,8 @@ object LlmQueries {
         |    AS BIGINT) AS wsum_ch
         |FROM documents d, (SELECT unnest(range(0, 4)) AS x) f,
         |     (SELECT unnest(range(0, 8)) AS x) i
-        |GROUP BY 1, 2""".stripMargin,
-    "pipe_training_mix" ->
+        |GROUP BY 1, 2""".stripMargin),
+    Query("pipe_training_mix", pipeTrainingMix,
       """WITH corpus AS (
         |  SELECT doc_id, text, lang, source, n_chars FROM documents
         |  UNION ALL
@@ -3703,8 +3621,8 @@ object LlmQueries {
         |JOIN keep USING (doc_id)
         |JOIN pred USING (doc_id)
         |WHERE pred_lang = 'en' AND n_chars >= 100
-        |GROUP BY source""".stripMargin,
-    "pipe_pretrain_corpus" ->
+        |GROUP BY source""".stripMargin),
+    Query("pipe_pretrain_corpus", pipePretrainCorpus,
       """WITH corpus AS (
         |  SELECT doc_id,
         |    CASE WHEN doc_id % 17 = 0 AND doc_id % 13 <> 0
@@ -3790,8 +3708,8 @@ object LlmQueries {
         |  CAST(floor((cum - n_tokens) / 2048.0) AS INT) AS pack_id,
         |  CAST((cum - n_tokens) % 2048 AS INT) AS pos,
         |  fp, CAST(n_redactions AS BIGINT) AS n_redactions
-        |FROM c2""".stripMargin,
-    "d6_quality" ->
+        |FROM c2""".stripMargin),
+    Query("d6_quality", d6Quality,
       """WITH per_doc AS (
         |  SELECT source, n_chars,
         |    len(string_split(text, ' ')) AS n_tok,
@@ -3810,13 +3728,13 @@ object LlmQueries {
         |  round(avg(stop_ratio), 6) AS avg_stop_ratio,
         |  round(avg(punct_ratio), 6) AS avg_punct_ratio,
         |  CAST(sum(CASE WHEN n_chars < 150 THEN 1 ELSE 0 END) AS BIGINT) AS n_short
-        |FROM per_doc GROUP BY 1""".stripMargin,
+        |FROM per_doc GROUP BY 1""".stripMargin),
     // chunk-level dedup: keeper = min (doc_id, chunk_id), encoded as
     // doc_id*2^20 + chunk_id — valid while chunk_id < 2^20 (~50M tokens
     // per doc at window 64 / stride 48; the Spark side's struct min has
     // no bound, so a doc beyond that would diverge the gate — the bound
     // is noted at Packing.chunkOverlap too)
-    "pipe_rag_index" ->
+    Query("pipe_rag_index", pipeRagIndex,
       """WITH corpus AS (
         |  SELECT doc_id, text FROM documents WHERE length(text) >= 1
         |  UNION ALL
@@ -3841,10 +3759,10 @@ object LlmQueries {
         |  CAST(sum(CASE WHEN doc_id * 1048576 + chunk_id = kk THEN 1 ELSE 0 END)
         |    AS BIGINT) AS n_kept
         |FROM chunks JOIN keep USING (chunk_md5)
-        |GROUP BY 1""".stripMargin,
+        |GROUP BY 1""".stripMargin),
     // sliding 64-token windows, stride 48, exact integer chunk count;
     // chunk identity = md5 of the space-rejoined token slice
-    "d14_chunk_overlap" ->
+    Query("d14_chunk_overlap", d14ChunkOverlap,
       """WITH tk AS (
         |  SELECT doc_id, string_split(text, ' ') AS toks FROM documents
         |  WHERE length(text) >= 1),
@@ -3860,9 +3778,9 @@ object LlmQueries {
         |  md5(array_to_string(
         |    list_slice(toks, i.c * 48 + 1, i.c * 48 + least(64, n - i.c * 48)),
         |    ' ')) AS chunk_md5
-        |FROM counted, LATERAL (SELECT unnest(range(0, nc)) AS c) i""".stripMargin,
+        |FROM counted, LATERAL (SELECT unnest(range(0, nc)) AS c) i""".stripMargin),
     // BPE merge statistic over the word histogram (corpus reduced once)
-    "d15_bpe_pairs" ->
+    Query("d15_bpe_pairs", d15BpePairs,
       """WITH toks AS (
         |  SELECT unnest(string_split(text, ' ')) AS tok FROM documents),
         |hist AS (
@@ -3874,15 +3792,15 @@ object LlmQueries {
         |SELECT a, b, CAST(sum(c) AS BIGINT) AS weight
         |FROM pairs GROUP BY 1, 2
         |ORDER BY weight DESC, a ASC, b ASC
-        |LIMIT 10""".stripMargin,
-    "d15_bpe_encode" -> bpeEncodeOracle(bpeEncodeMerges),
-    "d40_fertility" -> bpeFertilityOracle(bpeEncodeMerges),
-    "d15_bpe_tokens" -> bpeTokensOracle(bpeEncodeMerges),
-    "pipe_tokenized_pack" -> pipeTokenizedPackOracle(bpeEncodeMerges),
+        |LIMIT 10""".stripMargin),
+    Query("d15_bpe_encode", d15BpeEncode, bpeEncodeOracle(bpeEncodeMerges)),
+    Query("d40_fertility", d40Fertility, bpeFertilityOracle(bpeEncodeMerges)),
+    Query("d15_bpe_tokens", d15BpeTokens, bpeTokensOracle(bpeEncodeMerges)),
+    Query("pipe_tokenized_pack", pipeTokenizedPack, pipeTokenizedPackOracle(bpeEncodeMerges)),
     // the three batch epochs unrolled: each is score-fold ->
     // misclassified filter -> gradient aggregate -> weight update,
     // pure integer arithmetic from the all-zero start
-    "d41_perceptron" ->
+    Query("d41_perceptron", d41Perceptron,
       (perceptronCtes +
        """e AS (SELECT (SELECT count(*) FROM m1) AS e1,
          |             (SELECT count(*) FROM m2) AS e2,
@@ -3890,10 +3808,10 @@ object LlmQueries {
          |SELECT w3.b, CAST(w3.w AS BIGINT) AS w,
          |  CAST(e1 AS VARCHAR) || ',' || CAST(e2 AS VARCHAR) || ',' ||
          |  CAST(e3 AS VARCHAR) AS epoch_errs
-         |FROM w3, e""".stripMargin),
+         |FROM w3, e""".stripMargin)),
     // the epoch replay CTEs + d28-style scoring under the final
     // weights + the same (score, doc_id)-ordered ntile cut
-    "d42_calibration" ->
+    Query("d42_calibration", d42Calibration,
       (perceptronCtes +
        """sc AS (
          |  SELECT t.doc_id, max(t.y) AS y,
@@ -3906,12 +3824,12 @@ object LlmQueries {
          |  CAST(sum(CASE WHEN y = 1 THEN 1 ELSE 0 END) AS BIGINT)
          |    AS n_target,
          |  min(score) AS lo_score, max(score) AS hi_score
-         |FROM dk GROUP BY 1""".stripMargin),
+         |FROM dk GROUP BY 1""".stripMargin)),
     // DSIR: both distributions from ONE token stream (count + filtered
     // count per bucket); the integer-log LLR replayed via binary-string
     // lengths of the same BIGINT products — the d13 no-floating-logs
     // policy, the d28 md5-prefix bucket
-    "d39_dsir" ->
+    Query("d39_dsir", d39Dsir,
       """WITH t AS (
         |  SELECT doc_id, lang = 'en' AS tgt,
         |         unnest(string_split(text, ' ')) AS tok
@@ -3939,10 +3857,10 @@ object LlmQueries {
         |SELECT d.doc_id,
         |  CAST(coalesce(s.n_tok, 0) AS BIGINT) AS n_tok,
         |  CAST(coalesce(s.llr, 0) AS BIGINT) AS llr
-        |FROM documents d LEFT JOIN s USING (doc_id)""".stripMargin,
+        |FROM documents d LEFT JOIN s USING (doc_id)""".stripMargin),
     // integer LM surprise: floor(log2(N/c)) per bigram via binary-string
     // length — exact integers end to end, no floating logs to drift.
-    "d13_lm_surprise" ->
+    Query("d13_lm_surprise", d13LmSurprise,
       """WITH bg AS (
         |  SELECT doc_id, substr(text, i.x, 2) AS b
         |  FROM documents,
@@ -3956,11 +3874,11 @@ object LlmQueries {
         |  SELECT bg.doc_id, count(*) AS n_bg,
         |    sum(length(printf('%b', tot.n // model.c)) - 1) AS surprise
         |  FROM bg JOIN model USING (b), tot
-        |  GROUP BY 1) s USING (doc_id)""".stripMargin,
+        |  GROUP BY 1) s USING (doc_id)""".stripMargin),
     // two chained Lloyd iterations; intermediate centroid = exact integer
     // mean truncated toward zero (DuckDB // and Spark div share that
     // convention on negatives — NOT python-style floor)
-    "d12_kmeans2" ->
+    Query("d12_kmeans2", d12Kmeans2,
       """WITH q AS (
         |  SELECT vec_id,
         |    list_transform(embedding,
@@ -3997,11 +3915,11 @@ object LlmQueries {
         |       CAST(sum(q.qv[i.x]) AS BIGINT) AS sum_q
         |FROM a2 JOIN q USING (vec_id),
         |     LATERAL (SELECT unnest(range(1, len(q.qv) + 1)) AS x) i
-        |GROUP BY 1, 2""".stripMargin,
+        |GROUP BY 1, 2""".stripMargin),
     // fixed-point k-means: quantize to a 2^20 integer grid (exact in
     // double; both engines round ties away from zero), so distances and
     // centroid sums are exact integer arithmetic in both engines.
-    "d12_kmeans" ->
+    Query("d12_kmeans", d12Kmeans,
       """WITH q AS (
         |  SELECT vec_id,
         |    list_transform(embedding,
@@ -4022,6 +3940,6 @@ object LlmQueries {
         |       CAST(sum(q.qv[i.x]) AS BIGINT) AS sum_q
         |FROM assign a JOIN q USING (vec_id),
         |     LATERAL (SELECT unnest(range(1, len(q.qv) + 1)) AS x) i
-        |GROUP BY 1, 2""".stripMargin
+        |GROUP BY 1, 2""".stripMargin)
   )
 }

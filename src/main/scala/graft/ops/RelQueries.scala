@@ -1769,16 +1769,13 @@ object RelQueries {
     // the layout a real ingest would WANT for range skipping.
     val rowsPerFile = base.groupBy("event_type").count()
       .agg(max("count")).head.getLong(0) / 12 + 1
-    val confKey = "spark.sql.files.maxRecordsPerFile"
-    val prevConf = s.conf.get(confKey)
-    val v1 =
-      try {
-        s.conf.set(confKey, rowsPerFile)
-        SnapshotTable.commitPartitioned(
-          base.repartition(col("event_type"))
-            .sortWithinPartitions("event_type", "event_id"),
-          root, 0L, "event_type")
-      } finally s.conf.set(confKey, prevConf)
+    val v1 = withConfs(s,
+        Map("spark.sql.files.maxRecordsPerFile" -> rowsPerFile.toString)) {
+      SnapshotTable.commitPartitioned(
+        base.repartition(col("event_type"))
+          .sortWithinPartitions("event_type", "event_id"),
+        root, 0L, "event_type")
+    }
     val m = SnapshotTable.manifestAt(s, root, v1)
     val (lo, hiP) = (4L * fwidth, 5L * fwidth - 1L)
     val preds = Seq(Pred("event_id", ">=", lo), Pred("event_id", "<=", hiP))
@@ -1932,16 +1929,13 @@ object RelQueries {
     // multi-file partitions: roll a new file every quarter-partition
     val rowsPerFile = base.groupBy("bkt").count()
       .agg(max("count")).head.getLong(0) / 4 + 1
-    val confKey = "spark.sql.files.maxRecordsPerFile"
-    val prevConf = s.conf.get(confKey)
-    val v1 =
-      try {
-        s.conf.set(confKey, rowsPerFile)
-        SnapshotTable.commitPartitioned(
-          base.repartition(col("bkt"))
-            .sortWithinPartitions("bkt", "event_id"),
-          root, 0L, "bkt")
-      } finally s.conf.set(confKey, prevConf)
+    val v1 = withConfs(s,
+        Map("spark.sql.files.maxRecordsPerFile" -> rowsPerFile.toString)) {
+      SnapshotTable.commitPartitioned(
+        base.repartition(col("bkt"))
+          .sortWithinPartitions("bkt", "event_id"),
+        root, 0L, "bkt")
+    }
     def dataFiles(): Set[String] = {
       def walk(p: org.apache.hadoop.fs.Path): Seq[String] =
         fs.listStatus(p).toSeq.flatMap { st =>
@@ -3511,181 +3505,45 @@ object RelQueries {
            min("x").as("min_x"), max("x").as("max_x"),
            min("y").as("min_y"), max("y").as("max_y"))
 
-  // ---------- registry ----------
+  lazy val (queries, oracle) = registry(declared)
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "p2_filter" -> p2Filter,
-    "p3_point_lookup" -> p3PointLookup,
-    "p4_regex" -> p4Regex,
-    "p5_case" -> p5Case,
-    "j2_shuffle_join" -> j2ShuffleJoin,
-    "j3_left_outer" -> j3LeftOuter,
-    "j4_semi" -> j4Semi,
-    "j5_anti" -> j5Anti,
-    "j7_asof" -> j7AsOf,
-    "j8_cross" -> j8Cross,
-    "j10_salted_join" -> j10SaltedJoin,
-    "w10_time_weighted" -> w10TimeWeighted,
-    "j14_nearest_event" -> j14NearestEvent,
-    "j11_bucketed_join" -> j11BucketedJoin,
-    "j9_interval_overlap" -> j9IntervalOverlap,
-    "j6_range_autorewrite" -> j6RangeAutoRewrite,
-    "a1_stats" -> a1Stats,
-    "a2_groupby" -> a2GroupBy,
-    "a3_distinct" -> a3Distinct,
-    "a4_approx_distinct" -> a4ApproxDistinct,
-    "a11_approx_percentile" -> a11ApproxPercentile,
-    "a14_exact_percentile" -> a14ExactPercentile,
-    "a27_percentile_cont" -> a27PercentileCont,
-    "a20_weighted_percentile" -> a20WeightedPercentile,
-    "a5_rollup" -> a5Rollup,
-    "a6_collect" -> a6Collect,
-    "a8_argmax" -> a8ArgMax,
-    "a22_mode" -> a22Mode,
-    "a24_sample_quantiles" -> a24SampleQuantiles,
-    "a10_range_merge" -> a10RangeMerge,
-    "w1_rank" -> w1Rank,
-    "w2_lag" -> w2Lag,
-    "w12_ewma" -> w12Ewma,
-    "w3_running" -> w3Running,
-    "w4_moving" -> w4Moving,
-    "w5_ntile" -> w5Ntile,
-    "w5_quantile_buckets" -> w5QuantileBuckets,
-    "o1_sort" -> o1Sort,
-    "o2_topk" -> o2TopK,
-    "o6_pagination" -> o6Pagination,
-    "o10_skyline" -> o10Skyline,
-    "a16_conditional_agg" -> a16ConditionalAgg,
-    "a18_sketch_rollup" -> a18SketchRollup,
-    "a19_incremental_mv" -> a19IncrementalMv,
-    "a21_bitmap_distinct" -> a21BitmapDistinct,
-    "a23_theta_overlap" -> a23ThetaOverlap,
-    "v6_dq_profile" -> v6DqProfile,
-    "j20_temporal_lookup" -> j20TemporalLookup,
-    "a17_grouping_sets" -> a17GroupingSets,
-    "o3_union" -> o3Union,
-    "o4_setops" -> o4SetOps,
-    "f1_string" -> f1String,
-    "f3_datetime" -> f3DateTime,
-    "f6_json" -> f6Json,
-    "f12_try_family" -> f12TryFamily,
-    "f14_explode_outer" -> f14ExplodeOuter,
-    "f16_map_ops" -> f16MapOps,
-    "src2_csv_roundtrip" -> src2Csv,
-    "src3_json_source" -> src3Json,
-    "src4_orc_roundtrip" -> src4Orc,
-    "snk2_partitioned" -> snk2Partitioned,
-    "snk4_compaction" -> snk4Compaction,
-    "snk5_partition_merge" -> snk5PartitionMerge,
-    "snk6_gdpr_delete" -> snk6GdprDelete,
-    "snk7_time_travel" -> snk7TimeTravel,
-    "snk8_compact_zorder" -> snk8CompactZorder,
-    "snk9_change_feed" -> snk9ChangeFeed,
-    "snk10_commit_ref" -> snk10CommitRef,
-    "snk11_cdf_mv" -> snk11CdfMv,
-    "snk12_group_commit" -> snk12GroupCommit,
-    "snk13_stats_prune" -> snk13StatsPrune,
-    "snk16_schema_evolution" -> snk16SchemaEvolution,
-    "snk17_compact" -> snk17Compact,
-    "snk18_zorder" -> snk18Zorder,
-    "snk19_append_ingest" -> snk19AppendIngest,
-    "snk20_layered_pair" -> snk20LayeredPair,
-    "snk21_rebase_commit" -> snk21RebaseCommit,
-    "snk22_file_prune" -> snk22FilePrune,
-    "snk23_as_of" -> snk23AsOf,
-    "snk25_source_read" -> snk25SourceRead,
-    "snk26_row_delete" -> snk26RowDelete,
-    "snk27_ckpt_as_of" -> snk27CkptAsOf,
-    "snk14_group_feed" -> snk14GroupFeed,
-    "src5_json_corrupt" -> src5JsonCorrupt,
-    "q3_shipping_priority" -> q3Shipping,
-    "q5_local_supplier" -> q5LocalSupplier,
-    "q6_sql_text" -> q6SqlText,
-    "o5_pivot" -> o5Pivot,
-    "a12_cube" -> a12Cube,
-    "w9_rank_family" -> w9RankFamily,
-    "a13_corr" -> a13Corr,
-    "f10_higher_order" -> f10HigherOrder,
-    "f11_zorder" -> f11Zorder,
-    "j12_fuzzy_join" -> j12FuzzyJoin,
-    "q1_pricing_summary" -> q1PricingSummary,
-    "q10_returned_items" -> q10ReturnedItems,
-    "q17_small_qty" -> q17SmallQty,
-    "q21_waiting" -> q21Waiting,
-    "q22_in_subquery" -> q22InSubquery,
-    "q23_ancestor_chains" -> q23AncestorChains,
-    "q18_large_orders" -> q18LargeOrders,
-    "q2_min_cost_supplier" -> q2MinCostSupplier,
-    "q20_dominant_share" -> q20DominantShare,
-    "j19_lateral_topk" -> j19LateralTopK,
-    "f23_xml" -> f23Xml,
-    "j22_nullsafe_join" -> j22NullsafeJoin,
-    "a25_regression" -> a25Regression,
-    "o8_setops_all" -> o8SetopsAll,
-    "v7_referential_audit" -> v7ReferentialAudit,
-    "f24_timestamp_parse" -> f24TimestampParse,
-    "a26_listagg" -> a26Listagg,
-    "o9_null_ordering" -> o9NullOrdering,
-    "q4_order_priority" -> q4OrderPriority,
-    "q15_top_supplier" -> q15TopSupplier,
-    "q7_nation_volume" -> q7NationVolume,
-    "q14_promo_share" -> q14PromoShare,
-    "q13_custdist" -> q13CustDist,
-    "f17_variant" -> f17Variant,
-    "o7_unpivot" -> o7Unpivot,
-    "q19_disjunctive" -> q19Disjunctive,
-    "q8_market_share" -> q8MarketShare,
-    "q9_profit_nation" -> q9ProfitNation,
-    "q11_important_parts" -> q11ImportantParts,
-    "q12_priority_shipping" -> q12PriorityShipping,
-    "q16_supplier_cnt" -> q16SupplierCnt,
-    "w11_running_distinct" -> w11RunningDistinct,
-    "src6_schema_evolution" -> src6SchemaEvolution,
-    "src7_text_source" -> src7TextSource,
-    "j15_epsilon_join" -> j15EpsilonJoin,
-    "j16_dpp_join" -> j16DppJoin,
-    "j17_bloom_join" -> j17BloomJoin,
-    "j18_grid_join" -> j18GridJoin,
-    "f21_collation_join" -> f21CollationJoin
-  )
-
-  val oracle: Map[String, String] = Map(
-    "p2_filter" ->
+  private[ops] val declared: Seq[Query] = Seq(
+    Query("p2_filter", p2Filter,
       """SELECT l_orderkey, l_linenumber, l_quantity, l_extendedprice
         |FROM lineitem
         |WHERE l_returnflag = 'A' AND l_discount > 0.05
-        |  AND l_shipdate IS NOT NULL AND l_linestatus = 'F'""".stripMargin,
-    "p3_point_lookup" ->
+        |  AND l_shipdate IS NOT NULL AND l_linestatus = 'F'""".stripMargin),
+    Query("p3_point_lookup", p3PointLookup,
       """SELECT o_orderkey, o_custkey, o_orderstatus, o_orderpriority
-        |FROM orders WHERE o_orderkey = 7""".stripMargin,
-    "p4_regex" ->
+        |FROM orders WHERE o_orderkey = 7""".stripMargin),
+    Query("p4_regex", p4Regex,
       """SELECT p_partkey, p_name, p_type FROM part
-        |WHERE regexp_matches(p_name, '^[ab]') AND p_type LIKE 'S%'""".stripMargin,
-    "p5_case" ->
+        |WHERE regexp_matches(p_name, '^[ab]') AND p_type LIKE 'S%'""".stripMargin),
+    Query("p5_case", p5Case,
       """SELECT CASE WHEN o_orderpriority LIKE '1%' OR o_orderpriority LIKE '2%' THEN 'high'
         |            WHEN o_orderpriority LIKE '3%' THEN 'medium'
         |            ELSE 'low' END AS urgency, count(*) AS n
-        |FROM orders GROUP BY 1""".stripMargin,
-    "j2_shuffle_join" ->
+        |FROM orders GROUP BY 1""".stripMargin),
+    Query("j2_shuffle_join", j2ShuffleJoin,
       """SELECT o_orderpriority, count(*) AS n_items,
         |  CAST(sum(l_quantity) AS BIGINT) AS sum_qty,
         |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) * 100 AS BIGINT) AS sum_price_cents
         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |GROUP BY 1""".stripMargin,
-    "j3_left_outer" ->
+        |GROUP BY 1""".stripMargin),
+    Query("j3_left_outer", j3LeftOuter,
       """SELECT o_orderkey, count(l_orderkey) AS n_items,
         |  coalesce(CAST(sum(l_quantity) AS BIGINT), 0) AS sum_qty
         |FROM orders LEFT JOIN lineitem ON o_orderkey = l_orderkey
-        |GROUP BY 1""".stripMargin,
-    "j4_semi" ->
+        |GROUP BY 1""".stripMargin),
+    Query("j4_semi", j4Semi,
       """SELECT c_custkey, c_name FROM customer
-        |WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)""".stripMargin,
-    "j5_anti" ->
+        |WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)""".stripMargin),
+    Query("j5_anti", j5Anti,
       """SELECT c_custkey, c_name, c_acctbal FROM customer
         |WHERE NOT EXISTS (SELECT 1 FROM orders
         |                  WHERE o_custkey = c_custkey
-        |                    AND o_orderpriority = '1-URGENT')""".stripMargin,
-    "j7_asof" ->
+        |                    AND o_orderpriority = '1-URGENT')""".stripMargin),
+    Query("j7_asof", j7AsOf,
       """SELECT event_id, user_id, click_ts_us, click_id FROM (
         |  SELECT p.event_id AS event_id, p.user_id AS user_id,
         |    epoch_us(c.ts) AS click_ts_us, c.event_id AS click_id,
@@ -3695,21 +3553,21 @@ object RelQueries {
         |  LEFT JOIN events c
         |    ON c.user_id = p.user_id AND c.event_type = 'click' AND c.ts <= p.ts
         |  WHERE p.event_type = 'purchase')
-        |WHERE rn = 1""".stripMargin,
-    "j8_cross" ->
-      "SELECT n_name, r_name FROM nation CROSS JOIN region",
-    "j10_salted_join" ->
+        |WHERE rn = 1""".stripMargin),
+    Query("j8_cross", j8Cross,
+      "SELECT n_name, r_name FROM nation CROSS JOIN region"),
+    Query("j10_salted_join", j10SaltedJoin,
       """SELECT o_orderpriority, count(*) AS n_items,
         |  CAST(sum(l_quantity) AS BIGINT) AS sum_qty
         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |GROUP BY 1""".stripMargin,
-    "j11_bucketed_join" ->
+        |GROUP BY 1""".stripMargin),
+    Query("j11_bucketed_join", j11BucketedJoin,
       """SELECT c_custkey, c_name, count(*) AS n_orders
         |FROM orders JOIN customer ON o_custkey = c_custkey
         |GROUP BY 1, 2
         |ORDER BY n_orders DESC, c_custkey ASC
-        |LIMIT 10""".stripMargin,
-    "q6_sql_text" ->
+        |LIMIT 10""".stripMargin),
+    Query("q6_sql_text", q6SqlText,
       """SELECT CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) *
         |                CAST(l_discount AS DECIMAL(18,2))) * 10000 AS BIGINT)
         |         AS revenue_e4,
@@ -3718,23 +3576,23 @@ object RelQueries {
         |WHERE l_shipdate >= TIMESTAMP '1996-01-01'
         |  AND l_shipdate < TIMESTAMP '1997-01-01'
         |  AND l_discount BETWEEN 0.05 AND 0.07
-        |  AND l_quantity < 24""".stripMargin,
-    "j9_interval_overlap" ->
+        |  AND l_quantity < 24""".stripMargin),
+    Query("j9_interval_overlap", j9IntervalOverlap,
       """SELECT a.user_id, a.event_id AS a_id, b.event_id AS b_id
         |FROM events a JOIN events b
         |  ON a.user_id = b.user_id AND a.event_id < b.event_id
         | AND epoch_us(b.ts) < epoch_us(a.ts) + 600000000
         | AND epoch_us(a.ts) < epoch_us(b.ts) + 600000000
-        |WHERE a.event_type = 'error' AND b.event_type = 'error'""".stripMargin,
-    "j6_range_autorewrite" ->
+        |WHERE a.event_type = 'error' AND b.event_type = 'error'""".stripMargin),
+    Query("j6_range_autorewrite", j6RangeAutoRewrite,
       """WITH ranges(lo, hi, out) AS (
         |  VALUES (0.0, 10.0, 1), (10.0, 25.0, 2), (25.0, 40.0, 3),
         |         (40.0, 55.0, 4))
         |SELECT l.l_orderkey, l.l_linenumber, r.out
         |FROM lineitem l JOIN ranges r
         |  ON CAST(l.l_quantity AS DOUBLE) >= r.lo
-        | AND CAST(l.l_quantity AS DOUBLE) < r.hi""".stripMargin,
-    "a1_stats" ->
+        | AND CAST(l.l_quantity AS DOUBLE) < r.hi""".stripMargin),
+    Query("a1_stats", a1Stats,
       """SELECT count(*) AS n,
         |  min(l_quantity) AS min_qty, max(l_quantity) AS max_qty,
         |  CAST(sum(l_quantity) AS BIGINT) AS sum_qty,
@@ -3742,36 +3600,36 @@ object RelQueries {
         |  round(stddev_samp(l_quantity), 6) AS sd_qty,
         |  CAST(min(CAST(l_extendedprice AS DECIMAL(18,2))) * 100 AS BIGINT) AS min_price_cents,
         |  CAST(max(CAST(l_extendedprice AS DECIMAL(18,2))) * 100 AS BIGINT) AS max_price_cents
-        |FROM lineitem""".stripMargin,
-    "a2_groupby" ->
+        |FROM lineitem""".stripMargin),
+    Query("a2_groupby", a2GroupBy,
       """SELECT l_returnflag, l_linestatus, count(*) AS n,
         |  CAST(sum(l_quantity) AS BIGINT) AS sum_qty,
         |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) * 100 AS BIGINT) AS sum_price_cents
-        |FROM lineitem GROUP BY 1, 2""".stripMargin,
-    "a3_distinct" ->
+        |FROM lineitem GROUP BY 1, 2""".stripMargin),
+    Query("a3_distinct", a3Distinct,
       """SELECT l_returnflag, l_linestatus,
         |  count(DISTINCT l_partkey) AS n_parts,
         |  count(DISTINCT l_suppkey) AS n_supps
-        |FROM lineitem GROUP BY 1, 2""".stripMargin,
-    "a4_approx_distinct" ->
-      "SELECT count(DISTINCT l_partkey) AS exact_nd, 1 AS within_5pct FROM lineitem",
-    "a11_approx_percentile" ->
+        |FROM lineitem GROUP BY 1, 2""".stripMargin),
+    Query("a4_approx_distinct", a4ApproxDistinct,
+      "SELECT count(DISTINCT l_partkey) AS exact_nd, 1 AS within_5pct FROM lineitem"),
+    Query("a11_approx_percentile", a11ApproxPercentile,
       """SELECT quantile_cont(l_quantity, 0.25) AS p25,
         |  quantile_cont(l_quantity, 0.5) AS p50,
         |  quantile_cont(l_quantity, 0.75) AS p75,
         |  quantile_cont(l_quantity, 0.95) AS p95,
         |  1 AS within_tol
-        |FROM lineitem""".stripMargin,
+        |FROM lineitem""".stripMargin),
     // the map path must equal the flat relational computation
-    "f16_map_ops" ->
+    Query("f16_map_ops", f16MapOps,
       """SELECT l_orderkey, l_linenumber AS linenumber,
         |       sum(l_quantity) * 2 AS qty2
         |FROM lineitem WHERE l_orderkey <= 200
         |GROUP BY 1, 2
-        |HAVING sum(l_quantity) * 2 >= 50""".stripMargin,
+        |HAVING sum(l_quantity) * 2 >= 50""".stripMargin),
     // outer-unnest emulation: empty/null arrays become [NULL] so the
     // parent row survives with a NULL element — explode_outer's contract
-    "f14_explode_outer" ->
+    Query("f14_explode_outer", f14ExplodeOuter,
       """WITH nums AS (
         |  SELECT l_orderkey AS okey, list_sort(list(l_linenumber)) AS nums
         |  FROM lineitem GROUP BY 1),
@@ -3784,41 +3642,41 @@ object RelQueries {
         |SELECT o_orderkey,
         |  unnest(CASE WHEN nums IS NULL OR len(nums) = 0
         |              THEN CAST([NULL] AS INT[]) ELSE nums END) AS linenumber
-        |FROM base""".stripMargin,
-    "o6_pagination" ->
+        |FROM base""".stripMargin),
+    Query("o6_pagination", o6Pagination,
       """SELECT o_orderkey,
         |  CAST(round(o_totalprice * 100) AS BIGINT) AS total_cents
         |FROM orders
         |ORDER BY total_cents DESC, o_orderkey ASC
-        |LIMIT 10 OFFSET 10""".stripMargin,
-    "a16_conditional_agg" ->
+        |LIMIT 10 OFFSET 10""".stripMargin),
+    Query("a16_conditional_agg", a16ConditionalAgg,
       """SELECT l_returnflag,
         |  count(*) FILTER (l_quantity >= 25) AS n_big,
         |  CAST(coalesce(sum(CAST(round(l_extendedprice * 100) AS BIGINT))
         |    FILTER (l_discount > 0.05), 0) AS BIGINT) AS disc_cents,
         |  bool_and(l_quantity >= 1) AS all_positive,
         |  bool_or(l_quantity >= 50) AS any_max
-        |FROM lineitem GROUP BY 1""".stripMargin,
-    "a17_grouping_sets" -> a17Sql,
+        |FROM lineitem GROUP BY 1""".stripMargin),
+    Query("a17_grouping_sets", a17GroupingSets, a17Sql),
     // exact counts + contract flags; the sketch estimates live only in
     // the within_tol checks (sketch bytes are engine-specific)
-    "a18_sketch_rollup" ->
+    Query("a18_sketch_rollup", a18SketchRollup,
       """SELECT o_orderpriority AS prio,
         |  count(DISTINCT o_custkey) AS n_exact, 1 AS within_tol
         |FROM orders GROUP BY 1
         |UNION ALL
-        |SELECT '<all>', count(DISTINCT o_custkey), 1 FROM orders""".stripMargin,
+        |SELECT '<all>', count(DISTINCT o_custkey), 1 FROM orders""".stripMargin),
     // independent formulation: plain COUNT(DISTINCT) cross-validates
     // the whole bitmap bucket/construct/or/count algebra
-    "a21_bitmap_distinct" ->
+    Query("a21_bitmap_distinct", a21BitmapDistinct,
       """SELECT o_orderpriority AS prio,
         |  count(DISTINCT o_custkey) AS n_distinct
         |FROM orders GROUP BY 1
         |UNION ALL
-        |SELECT '<all>', count(DISTINCT o_custkey) FROM orders""".stripMargin,
+        |SELECT '<all>', count(DISTINCT o_custkey) FROM orders""".stripMargin),
     // same generated version table as VALUES; half-open windows tile
     // each key's timeline, so the join is exactly-once by construction
-    "j20_temporal_lookup" ->
+    Query("j20_temporal_lookup", j20TemporalLookup,
       s"""WITH dim(dk, ver, vstart, vend, tier) AS (VALUES
         |  ${scd2Dim.map { case (k, v, s0, e0, tr) =>
              val end = if (e0 == null) "CAST(NULL AS BIGINT)" else e0.toString
@@ -3831,10 +3689,10 @@ object RelQueries {
         |  CAST(sum(cents) AS BIGINT) AS sum_cents
         |FROM e JOIN dim ON e.k = dim.dk AND t >= vstart
         |  AND (vend IS NULL OR t < vend)
-        |GROUP BY 1, 2""".stripMargin,
+        |GROUP BY 1, 2""".stripMargin),
     // per-column metrics replayed as independent scalar subqueries; the
     // within_tol flag is Spark-side-attested (a18 contract), literal 1
-    "v6_dq_profile" ->
+    Query("v6_dq_profile", v6DqProfile,
       Seq("l_orderkey", "l_partkey", "l_quantity", "l_returnflag",
           "l_shipdate").map { c =>
         s"""SELECT '$c' AS col_name,
@@ -3842,10 +3700,10 @@ object RelQueries {
            |  (SELECT count(*) FROM lineitem WHERE $c IS NULL) AS n_null,
            |  (SELECT count(DISTINCT $c) FROM lineitem) AS n_distinct,
            |  CAST(1 AS INT) AS within_tol""".stripMargin
-      }.mkString("\nUNION ALL\n"),
+      }.mkString("\nUNION ALL\n")),
     // bit-for-bit sketch replay: same md5-prefix hash, same k-min cut,
     // same theta intersection rule; hex string order IS numeric order
-    "a23_theta_overlap" ->
+    Query("a23_theta_overlap", a23ThetaOverlap,
       """WITH c AS (
         |  SELECT event_type AS t, user_id, count(*) AS n
         |  FROM events GROUP BY 1, 2),
@@ -3874,13 +3732,13 @@ object RelQueries {
         |  CAST(round(m_inter * 1152921504606846976.0 /
         |       CAST(concat('0x', th_s) AS BIGINT)) AS BIGINT) AS est_users,
         |  n_inter_exact
-        |FROM m JOIN ex USING (ta, tb)""".stripMargin,
+        |FROM m JOIN ex USING (ta, tb)""".stripMargin),
     // window-rank formulation — independent of the Spark side's
     // double-aggregate argmax shape
     // same bottom-64-by-md5 sample, positional percentile_disc on the
     // sorted sample array, cume_dist exact audit — all deterministic,
     // so the sketch estimate itself gates exact
-    "a24_sample_quantiles" ->
+    Query("a24_sample_quantiles", a24SampleQuantiles,
       """WITH o AS (
         |  SELECT o_orderpriority AS grp,
         |    CAST(round(o_totalprice * 100) AS BIGINT) AS cents,
@@ -3915,8 +3773,8 @@ object RelQueries {
         |SELECT e.grp, CAST(x.n_rows AS BIGINT) AS n_rows, e.n_sample,
         |  e.est_median_cents, x.exact_median_cents,
         |  abs(e.est_median_cents - x.exact_median_cents) AS err_cents
-        |FROM est2 e JOIN ex x ON e.grp = x.grp""".stripMargin,
-    "a22_mode" ->
+        |FROM est2 e JOIN ex x ON e.grp = x.grp""".stripMargin),
+    Query("a22_mode", a22Mode,
       """WITH t AS (
         |  SELECT c_mktsegment AS segment, o_orderpriority AS pri,
         |    count(*) AS cnt
@@ -3928,9 +3786,9 @@ object RelQueries {
         |                       ORDER BY cnt DESC, pri) AS rn
         |  FROM t)
         |SELECT segment, pri AS mode_priority, cnt AS n_orders
-        |FROM r WHERE rn = 1""".stripMargin,
+        |FROM r WHERE rn = 1""".stripMargin),
     // the oracle full-scans — the gate proves incremental == recompute
-    "a19_incremental_mv" ->
+    Query("a19_incremental_mv", a19IncrementalMv,
       """SELECT l_returnflag, l_linestatus,
         |  CAST(count(*) AS BIGINT) AS n_rows,
         |  CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT))
@@ -3938,8 +3796,8 @@ object RelQueries {
         |  CAST(max(CAST(round(l_extendedprice * 100) AS BIGINT))
         |       AS BIGINT) AS max_cents
         |FROM lineitem
-        |GROUP BY 1, 2""".stripMargin,
-    "f12_try_family" ->
+        |GROUP BY 1, 2""".stripMargin),
+    Query("f12_try_family", f12TryFamily,
       """SELECT o_orderkey,
         |  TRY_CAST(substr(o_orderpriority, 1, 1) AS INT) AS prio_num,
         |  TRY_CAST(o_orderstatus AS INT) AS status_num,
@@ -3948,26 +3806,26 @@ object RelQueries {
         |       ELSE NULL END AS third_part,
         |  CASE WHEN o_custkey % 2 = 0 THEN NULL
         |       ELSE o_totalprice / (o_custkey % 2) END AS odd_ratio
-        |FROM orders""".stripMargin,
-    "o1_sort" ->
+        |FROM orders""".stripMargin),
+    Query("o1_sort", o1Sort,
       """SELECT epoch_us(l_shipdate) AS ship_us, l_orderkey, l_linenumber,
         |       l_quantity
-        |FROM lineitem ORDER BY 1, 2, 3""".stripMargin,
+        |FROM lineitem ORDER BY 1, 2, 3""".stripMargin),
     // quantile_disc == min value with cume_dist >= p (verified: both
     // pick the ceil(p*n)-th order statistic); within_tol asserts the
     // A11 sketch agrees with the exact values to 1% on the Spark side
-    "a14_exact_percentile" ->
+    Query("a14_exact_percentile", a14ExactPercentile,
       """SELECT l_returnflag,
         |  quantile_disc(l_quantity, 0.25) AS p25,
         |  quantile_disc(l_quantity, 0.5) AS p50,
         |  quantile_disc(l_quantity, 0.95) AS p95,
         |  count(*) AS n, 1 AS within_tol
-        |FROM lineitem GROUP BY 1""".stripMargin,
+        |FROM lineitem GROUP BY 1""".stripMargin),
     // INDEPENDENT formulation: DuckDB's native quantile_cont ×4 — the
     // interpolation fractions are quarters, so the double result is
     // exact and ×4 is integral; the window-free builtin must agree with
     // the rank-window fixed-point decomposition
-    "a27_percentile_cont" ->
+    Query("a27_percentile_cont", a27PercentileCont,
       """SELECT l_returnflag, count(*) AS n,
         |  CAST(round(quantile_cont(l_quantity, 0.25) * 4) AS BIGINT)
         |    AS p25_x4,
@@ -3975,10 +3833,10 @@ object RelQueries {
         |    AS p50_x4,
         |  CAST(round(quantile_cont(l_quantity, 0.75) * 4) AS BIGINT)
         |    AS p75_x4
-        |FROM lineitem GROUP BY 1""".stripMargin,
+        |FROM lineitem GROUP BY 1""".stripMargin),
     // DuckDB has no weighted quantile either — same running-weight
     // decomposition, same BIGINT cross-multiplied thresholds
-    "a20_weighted_percentile" ->
+    Query("a20_weighted_percentile", a20WeightedPercentile,
       """WITH li AS (
         |  SELECT l_returnflag,
         |    CAST(round(l_extendedprice * 100) AS BIGINT) AS cents,
@@ -3995,11 +3853,11 @@ object RelQueries {
         |  min(CASE WHEN cumw * 2 >= totw THEN cents END) AS wp50,
         |  min(CASE WHEN cumw * 4 >= totw * 3 THEN cents END) AS wp75,
         |  CAST(sum(wq) AS BIGINT) AS total_weight
-        |FROM r GROUP BY 1""".stripMargin,
+        |FROM r GROUP BY 1""".stripMargin),
     // the definitional NOT-EXISTS dominance over the per-u maxima (the
     // dominance-preserving reduction is shared; the FRONT test is the
     // independent formulation), multiplicities joined back from p
-    "o10_skyline" ->
+    Query("o10_skyline", o10Skyline,
       """WITH p AS (
         |  SELECT CAST(l_quantity AS BIGINT) AS u,
         |    CAST(round(l_extendedprice * 100) AS BIGINT) AS cents,
@@ -4013,17 +3871,17 @@ object RelQueries {
         |    WHERE b.u >= a.u AND b.cents >= a.cents
         |      AND (b.u > a.u OR b.cents > a.cents)))
         |SELECT f.u, f.cents, CAST(p.n AS BIGINT) AS n_rows
-        |FROM f JOIN p ON p.u = f.u AND p.cents = f.cents""".stripMargin,
-    "a5_rollup" ->
+        |FROM f JOIN p ON p.u = f.u AND p.cents = f.cents""".stripMargin),
+    Query("a5_rollup", a5Rollup,
       """SELECT l_returnflag, l_linestatus,
         |  CAST(GROUPING(l_returnflag, l_linestatus) AS BIGINT) AS gid,
         |  count(*) AS n, CAST(sum(l_quantity) AS BIGINT) AS sum_qty
-        |FROM lineitem GROUP BY ROLLUP(l_returnflag, l_linestatus)""".stripMargin,
-    "a6_collect" ->
+        |FROM lineitem GROUP BY ROLLUP(l_returnflag, l_linestatus)""".stripMargin),
+    Query("a6_collect", a6Collect,
       """SELECT l_returnflag,
         |  string_agg(DISTINCT l_linestatus, ',' ORDER BY l_linestatus) AS statuses
-        |FROM lineitem GROUP BY 1""".stripMargin,
-    "a8_argmax" ->
+        |FROM lineitem GROUP BY 1""".stripMargin),
+    Query("a8_argmax", a8ArgMax,
       """SELECT c_nationkey, c_name AS top_customer,
         |  CAST(top_bal * 100 AS BIGINT) AS top_acctbal_cents
         |FROM (SELECT c_nationkey, c_name,
@@ -4031,8 +3889,8 @@ object RelQueries {
         |        row_number() OVER (PARTITION BY c_nationkey
         |                           ORDER BY c_acctbal DESC, c_custkey DESC) AS rn
         |      FROM customer)
-        |WHERE rn = 1""".stripMargin,
-    "a10_range_merge" ->
+        |WHERE rn = 1""".stripMargin),
+    Query("a10_range_merge", a10RangeMerge,
       """SELECT l_returnflag,
         |  array_to_string(list_concat(l[2:], [l[-1] + 1]), ',') AS remap
         |FROM (
@@ -4043,41 +3901,41 @@ object RelQueries {
         |    UNION ALL
         |    SELECT l_returnflag, CAST(l_linenumber AS DOUBLE)
         |    FROM lineitem GROUP BY 1, 2)
-        |  GROUP BY 1)""".stripMargin,
-    "w1_rank" ->
+        |  GROUP BY 1)""".stripMargin),
+    Query("w1_rank", w1Rank,
       """SELECT o_custkey, o_orderkey,
         |  CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS top_price_cents
         |FROM (SELECT *, row_number() OVER (PARTITION BY o_custkey
         |        ORDER BY o_totalprice DESC, o_orderkey ASC) AS rn FROM orders)
-        |WHERE rn = 1""".stripMargin,
-    "w2_lag" ->
+        |WHERE rn = 1""".stripMargin),
+    Query("w2_lag", w2Lag,
       """SELECT event_id, user_id,
         |  lag(event_id) OVER w AS prev_id,
         |  epoch_us(ts) - lag(epoch_us(ts)) OVER w AS gap_us
         |FROM events
-        |WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)""".stripMargin,
-    "w12_ewma" -> w12EwmaSql,
-    "w3_running" ->
+        |WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)""".stripMargin),
+    Query("w12_ewma", w12Ewma, w12EwmaSql),
+    Query("w3_running", w3Running,
       """SELECT event_id, user_id,
         |  count(*) OVER w AS run_n,
         |  CAST(sum(CAST(value AS DECIMAL(18,2))) OVER w * 100 AS BIGINT) AS run_sum_cents
         |FROM events
         |WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
-        |             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)""".stripMargin,
-    "w4_moving" ->
+        |             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)""".stripMargin),
+    Query("w4_moving", w4Moving,
       """SELECT event_id, user_id,
         |  count(*) OVER w AS win_n,
         |  CAST(sum(CAST(value AS DECIMAL(18,2))) OVER w * 100 AS BIGINT) AS win_sum_cents
         |FROM events
         |WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts)
-        |             RANGE BETWEEN 600000000 PRECEDING AND CURRENT ROW)""".stripMargin,
-    "w5_ntile" ->
+        |             RANGE BETWEEN 600000000 PRECEDING AND CURRENT ROW)""".stripMargin),
+    Query("w5_ntile", w5Ntile,
       """SELECT o_orderkey,
         |  CAST(ntile(4) OVER w AS INT) AS quartile,
         |  percent_rank() OVER w AS pr
         |FROM orders
-        |WINDOW w AS (ORDER BY o_totalprice DESC, o_orderkey ASC)""".stripMargin,
-    "w5_quantile_buckets" ->
+        |WINDOW w AS (ORDER BY o_totalprice DESC, o_orderkey ASC)""".stripMargin),
+    Query("w5_quantile_buckets", w5QuantileBuckets,
       """WITH c AS (
         |  SELECT quantile_cont(CAST(o_totalprice AS DOUBLE), 0.25) AS c25,
         |         quantile_cont(CAST(o_totalprice AS DOUBLE), 0.50) AS c50,
@@ -4088,25 +3946,25 @@ object RelQueries {
         |         + (CASE WHEN o_totalprice >= c50 THEN 1 ELSE 0 END)
         |         + (CASE WHEN o_totalprice >= c75 THEN 1 ELSE 0 END) AS INT)
         |    AS quartile
-        |FROM orders, c""".stripMargin,
-    "o2_topk" ->
+        |FROM orders, c""".stripMargin),
+    Query("o2_topk", o2TopK,
       """SELECT o_orderkey, o_custkey, CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS price_cents
-        |FROM orders ORDER BY o_totalprice DESC, o_orderkey ASC LIMIT 10""".stripMargin,
-    "o3_union" ->
+        |FROM orders ORDER BY o_totalprice DESC, o_orderkey ASC LIMIT 10""".stripMargin),
+    Query("o3_union", o3Union,
       """SELECT nationkey, count(*) AS n_rows FROM (
         |  SELECT c_nationkey AS nationkey FROM customer
         |  UNION ALL
         |  SELECT s_nationkey AS nationkey FROM supplier)
-        |GROUP BY 1""".stripMargin,
-    "o4_setops" ->
+        |GROUP BY 1""".stripMargin),
+    Query("o4_setops", o4SetOps,
       """SELECT nationkey, 'except' AS op FROM
         |  (SELECT c_nationkey AS nationkey FROM customer
         |   EXCEPT SELECT s_nationkey FROM supplier)
         |UNION ALL
         |SELECT nationkey, 'intersect' AS op FROM
         |  (SELECT c_nationkey AS nationkey FROM customer
-        |   INTERSECT SELECT s_nationkey FROM supplier)""".stripMargin,
-    "f1_string" ->
+        |   INTERSECT SELECT s_nationkey FROM supplier)""".stripMargin),
+    Query("f1_string", f1String,
       """SELECT p_partkey,
         |  lower(p_name) AS lo_name,
         |  upper(p_brand) AS up_brand,
@@ -4117,8 +3975,8 @@ object RelQueries {
         |  substr(p_type, 1, 5) AS type5,
         |  trim('  ' || p_brand || '  ') AS trimmed,
         |  CAST(p_type LIKE 'STANDARD%' AS INT) AS is_std
-        |FROM part""".stripMargin,
-    "f3_datetime" ->
+        |FROM part""".stripMargin),
+    Query("f3_datetime", f3DateTime,
       """SELECT strftime(m, '%Y-%m-%d') AS month_start,
         |  CAST(year(m) AS INT) AS yr,
         |  CAST(quarter(m) AS INT) AS qtr, n_orders,
@@ -4126,50 +3984,50 @@ object RelQueries {
         |FROM (SELECT CAST(date_trunc('month', o_orderdate) AS DATE) AS m,
         |        count(*) AS n_orders,
         |        sum(CAST(o_totalprice AS DECIMAL(18,2))) AS sum_price
-        |      FROM orders GROUP BY 1)""".stripMargin,
-    "f6_json" ->
+        |      FROM orders GROUP BY 1)""".stripMargin),
+    Query("f6_json", f6Json,
       """SELECT CAST(json_extract_string(props, '$.k') AS INT) AS k,
         |  count(*) AS n,
         |  CAST(sum(CAST(value AS DECIMAL(18,2))) * 100 AS BIGINT) AS sum_value_cents
-        |FROM events GROUP BY 1""".stripMargin,
-    "src2_csv_roundtrip" ->
-      """SELECT n_nationkey, 'x,"' || n_name || '"y' AS tricky FROM nation""".stripMargin,
-    "src3_json_source" ->
+        |FROM events GROUP BY 1""".stripMargin),
+    Query("src2_csv_roundtrip", src2Csv,
+      """SELECT n_nationkey, 'x,"' || n_name || '"y' AS tricky FROM nation""".stripMargin),
+    Query("src3_json_source", src3Json,
       """SELECT CAST(json_extract_string(props, '$.k') AS INT) AS k, count(*) AS n
-        |FROM events GROUP BY 1""".stripMargin,
-    "snk2_partitioned" ->
+        |FROM events GROUP BY 1""".stripMargin),
+    Query("snk2_partitioned", snk2Partitioned,
       """SELECT event_type, count(*) AS n,
         |  CAST(sum(CAST(value AS DECIMAL(18,2))) * 100 AS BIGINT) AS sum_value_cents
         |FROM events WHERE event_type IN ('purchase', 'error')
-        |GROUP BY 1""".stripMargin,
+        |GROUP BY 1""".stripMargin),
     // the plants are deterministic: every 10th event's line is
     // truncated and unparseable, the rest carry an int k
-    "src5_json_corrupt" ->
+    Query("src5_json_corrupt", src5JsonCorrupt,
       """SELECT count(*) AS n,
         |  count(CASE WHEN event_id % 10 = 0 THEN NULL ELSE 1 END) AS n_valid,
         |  count(CASE WHEN event_id % 10 = 0 THEN 1 ELSE NULL END) AS n_corrupt,
         |  CAST(sum(CASE WHEN event_id % 10 = 0 THEN NULL
         |       ELSE CAST(json_extract(props, '$.k') AS INT) END) AS BIGINT)
         |    AS sum_k
-        |FROM events""".stripMargin,
-    "snk6_gdpr_delete" ->
+        |FROM events""".stripMargin),
+    Query("snk6_gdpr_delete", snk6GdprDelete,
       """SELECT event_type, count(*) AS n,
         |  CAST(sum(CAST(value AS DECIMAL(18,2))) * 100 AS BIGINT)
         |    AS sum_value_cents
         |FROM events
         |WHERE NOT (event_type = 'purchase' AND event_id % 13 = 0)
         |  AND NOT (event_type = 'error' AND event_id % 17 = 0)
-        |GROUP BY 1""".stripMargin,
+        |GROUP BY 1""".stripMargin),
     // time travel to version 1 AFTER the v2 merge = the PRE-merge replay
-    "snk7_time_travel" ->
+    Query("snk7_time_travel", snk7TimeTravel,
       """SELECT event_type, count(*) AS n,
         |  CAST(sum(CAST(value AS DECIMAL(18,2))) * 100 AS BIGINT)
         |    AS sum_value_cents
-        |FROM events GROUP BY 1""".stripMargin,
+        |FROM events GROUP BY 1""".stripMargin),
     // the three change classes derived arithmetically: real types are
     // updates (counts change), 'legacy' only in v1 (delete, pre-image),
     // 'refund' only in v2 (insert, post-image)
-    "snk9_change_feed" ->
+    Query("snk9_change_feed", snk9ChangeFeed,
       """WITH v2 AS (
         |  SELECT event_type, count(*) AS n,
         |    CAST(sum(CAST(value AS DECIMAL(18,2))) * 100 AS BIGINT)
@@ -4180,10 +4038,10 @@ object RelQueries {
         |UNION ALL
         |SELECT 'legacy', 'delete', 1, -1
         |UNION ALL
-        |SELECT 'refund', 'insert', 2, -200""".stripMargin,
+        |SELECT 'refund', 'insert', 2, -200""".stripMargin),
     // both versions replayed arithmetically: v1 = the raw cents rows,
     // v2 = purchase doubled with every 5th key deleted, error dropped
-    "snk10_commit_ref" ->
+    Query("snk10_commit_ref", snk10CommitRef,
       """WITH base AS (
         |  SELECT event_id, event_type,
         |    CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
@@ -4201,11 +4059,11 @@ object RelQueries {
         |  FROM base
         |  WHERE event_type <> 'error'
         |    AND NOT (event_type = 'purchase' AND event_id % 5 = 0))
-        |GROUP BY 1, 2""".stripMargin,
+        |GROUP BY 1, 2""".stripMargin),
     // incremental-equals-recompute: the oracle recomputes the grouped
     // aggregate over v2's definition; the declared side MAINTAINS it
     // from the preimage change feed
-    "snk11_cdf_mv" ->
+    Query("snk11_cdf_mv", snk11CdfMv,
       """SELECT event_type, count(*) AS n_rows,
         |  CAST(sum(cents) AS BIGINT) AS sum_cents,
         |  CAST(max(cents) AS BIGINT) AS max_cents
@@ -4217,10 +4075,10 @@ object RelQueries {
         |      CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
         |    FROM events)
         |  WHERE event_id % 11 <> 0)
-        |GROUP BY 1""".stripMargin,
+        |GROUP BY 1""".stripMargin),
     // both tables' change classes derived arithmetically per doc; docs
     // unchanged in BOTH tables are absent from both feeds and excluded
-    "snk14_group_feed" ->
+    Query("snk14_group_feed", snk14GroupFeed,
       """WITH cls AS (
         |  SELECT doc_id,
         |    CASE WHEN doc_id % 2 = 0 AND doc_id % 7 = 0 THEN 'delete'
@@ -4237,12 +4095,12 @@ object RelQueries {
         |SELECT corpus_change, index_change, count(*) AS n
         |FROM cls
         |WHERE corpus_change IS NOT NULL OR index_change IS NOT NULL
-        |GROUP BY 1, 2""".stripMargin,
+        |GROUP BY 1, 2""".stripMargin),
     // the skip itself is gated: the oracle recomputes the prune
     // decision from each bucket's true min/max (an entry survives iff
     // its bounds intersect [1000, 2999]) and the declared side reports
     // what it actually scanned
-    "snk13_stats_prune" ->
+    Query("snk13_stats_prune", snk13StatsPrune,
       """WITH base AS (
         |  SELECT event_id, event_type,
         |    CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents,
@@ -4258,10 +4116,10 @@ object RelQueries {
         |UNION ALL
         |SELECT '_prune_entries',
         |  (SELECT count(*) FROM b WHERE mx >= 1000 AND mn <= 2999),
-        |  (SELECT count(*) FROM b)""".stripMargin,
+        |  (SELECT count(*) FROM b)""".stripMargin),
     // the evolved column exists only where the bkt=1 rewrite wrote it;
     // every other partition's file predates the column and reads NULL
-    "snk16_schema_evolution" ->
+    Query("snk16_schema_evolution", snk16SchemaEvolution,
       """WITH base AS (
         |  SELECT event_id,
         |    CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents,
@@ -4272,18 +4130,18 @@ object RelQueries {
         |         ELSE '<pre-evolution>' END AS vclass,
         |  count(*) AS n,
         |  CAST(sum(cents) AS BIGINT) AS sum_cents
-        |FROM base GROUP BY 1""".stripMargin,
+        |FROM base GROUP BY 1""".stripMargin),
     // compaction must be invisible to the data: the post-compact
     // aggregate is the plain events aggregate
-    "snk17_compact" ->
+    Query("snk17_compact", snk17Compact,
       """SELECT CAST(floor(event_id / ((SELECT max(event_id) FROM events) // 8 + 1)) AS BIGINT) AS bkt,
         |  count(*) AS n,
         |  CAST(sum(CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT))
         |       AS BIGINT) AS sum_cents
-        |FROM events GROUP BY 1""".stripMargin,
+        |FROM events GROUP BY 1""".stripMargin),
     // the prune decisions replay arithmetically: per-block r/c bounds
     // from the SAME interleave term sum, then bounds-vs-box intersection
-    "snk18_zorder" -> {
+    Query("snk18_zorder", snk18Zorder, {
       val zb = graft.functions.ZOrder.zBlockSql("r", "c", 7, 10)
       s"""WITH cells AS (
          |  SELECT l_orderkey % 10000 AS cell_id,
@@ -4313,10 +4171,10 @@ object RelQueries {
          |  (SELECT count(*) FROM zs),
          |  (SELECT CAST(sum(cents) AS BIGINT) FROM z
          |   WHERE c BETWEEN 10 AND 29)""".stripMargin
-    },
+    }),
     // the pinned pair is corpus v1 = the even-event half; a torn
     // publication or broken pointer shifts n_idx against n_live
-    "snk20_layered_pair" ->
+    Query("snk20_layered_pair", snk20LayeredPair,
       """WITH c AS (
         |  SELECT event_id,
         |    CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents,
@@ -4325,11 +4183,11 @@ object RelQueries {
         |SELECT bkt, count(*) AS n_idx,
         |  CAST(sum(cents) AS BIGINT) AS sum_idx,
         |  count(*) AS n_live
-        |FROM c GROUP BY bkt""".stripMargin,
+        |FROM c GROUP BY bkt""".stripMargin),
     // snk13's prune arithmetic replayed for the SQL-surface read: the
     // DataFrameReader path must plan exactly the buckets whose bounds
     // intersect [1000, 2999]
-    "snk25_source_read" ->
+    Query("snk25_source_read", snk25SourceRead,
       """WITH base AS (
         |  SELECT event_id, event_type,
         |    CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents,
@@ -4345,12 +4203,12 @@ object RelQueries {
         |UNION ALL
         |SELECT '_planned_entries',
         |  (SELECT count(*) FROM b WHERE mx >= 1000 AND mn <= 2999),
-        |  (SELECT count(*) FROM b)""".stripMargin,
+        |  (SELECT count(*) FROM b)""".stripMargin),
     // both disjoint writers landed: buckets 1 and 5 carry the FULL
     // event set, every other bucket only the even half — a lost
     // writer, a doubled batch, or resurrected stale entries all shift
     // the per-bucket sums
-    "snk21_rebase_commit" ->
+    Query("snk21_rebase_commit", snk21RebaseCommit,
       """WITH base AS (
         |  SELECT event_id,
         |    CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents,
@@ -4359,13 +4217,13 @@ object RelQueries {
         |SELECT bkt, count(*) AS n, CAST(sum(cents) AS BIGINT) AS sum_cents
         |FROM base
         |WHERE bkt IN (1, 5) OR event_id % 2 = 0
-        |GROUP BY 1""".stripMargin,
+        |GROUP BY 1""".stripMargin),
     // every file's true min/max is recomputed and each prune decision
     // re-derived: file k of type t holds that type's id-order rank
     // range [k·N, (k+1)·N) (the maxRecordsPerFile roll), scanned iff
     // its id range intersects the probe; an entry iff its type's
     // whole range does
-    "snk22_file_prune" ->
+    Query("snk22_file_prune", snk22FilePrune,
       """WITH base AS (
         |  SELECT event_id, event_type,
         |    CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
@@ -4403,12 +4261,12 @@ object RelQueries {
         |SELECT '_prune_entries',
         |  (SELECT count(*) FROM e
         |   WHERE mx >= (SELECT lo FROM b) AND mn <= (SELECT hi FROM b)),
-        |  (SELECT count(*) FROM e)""".stripMargin,
+        |  (SELECT count(*) FROM e)""".stripMargin),
     // each pinned instant's snapshot replays arithmetically: as-of
     // 1500 the skew-adjusted v3 (effective 2001) and v2 (2000) are
     // both in the future, so only v1's even half is visible; 2000 adds
     // bucket 1's odd rows; 2001 adds bucket 2's
-    "snk23_as_of" ->
+    Query("snk23_as_of", snk23AsOf,
       """WITH base AS (
         |  SELECT event_id,
         |    CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents,
@@ -4425,14 +4283,14 @@ object RelQueries {
         |SELECT CAST(2001 AS BIGINT), bkt, count(*),
         |  CAST(sum(cents) AS BIGINT)
         |FROM base WHERE bkt IN (1, 2) OR event_id % 2 = 0 GROUP BY 2"""
-        .stripMargin,
+        .stripMargin),
     // both deletes replayed relationally: the scoped GDPR keys
     // (bkt 2, id % 97) and the unscoped 'error' class vanish from the
     // live aggregate, while the time-travel row carries the FULL
     // pre-delete count — a rewrite-based "delete" that dropped old
     // versions, or a chain that leaked into other buckets, shifts one
     // side or the other
-    "snk26_row_delete" ->
+    Query("snk26_row_delete", snk26RowDelete,
       """WITH base AS (
         |  SELECT event_id, event_type,
         |    CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents,
@@ -4446,11 +4304,11 @@ object RelQueries {
         |FROM live GROUP BY 1
         |UNION ALL
         |SELECT CAST(-1 AS BIGINT), (SELECT count(*) FROM base),
-        |  CAST(0 AS BIGINT)""".stripMargin,
+        |  CAST(0 AS BIGINT)""".stripMargin),
     // each pinned instant's snapshot is version ts//1000 = slots < i;
     // a checkpoint fold that drifted the effective clock, or a vacuum
     // that broke resolution, lands on the wrong version's content
-    "snk27_ckpt_as_of" ->
+    Query("snk27_ckpt_as_of", snk27CkptAsOf,
       """WITH base AS (
         |  SELECT event_id,
         |    CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents,
@@ -4464,24 +4322,24 @@ object RelQueries {
         |FROM base WHERE slot < 9
         |UNION ALL
         |SELECT CAST(12000 AS BIGINT), count(*), CAST(sum(cents) AS BIGINT)
-        |FROM base WHERE slot < 12""".stripMargin,
+        |FROM base WHERE slot < 12""".stripMargin),
     // one duplicated batch would shift every touched group's n and sum
-    "snk19_append_ingest" ->
+    Query("snk19_append_ingest", snk19AppendIngest,
       """SELECT CAST(floor(event_id / ((SELECT max(event_id) FROM events) // 8 + 1)) AS BIGINT) AS bkt,
         |  count(*) AS n,
         |  CAST(sum(CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT))
         |       AS BIGINT) AS sum_cents
-        |FROM events GROUP BY 1""".stripMargin,
+        |FROM events GROUP BY 1""".stripMargin),
     // the pinned group version v1 = the even-doc_id half of both tables
-    "snk12_group_commit" ->
+    Query("snk12_group_commit", snk12GroupCommit,
       """SELECT source, count(*) AS n,
         |  CAST(sum(n_chars) AS BIGINT) AS sum_chars
         |FROM documents WHERE doc_id % 2 = 0
-        |GROUP BY 1""".stripMargin,
+        |GROUP BY 1""".stripMargin),
     // the merge replay: matched rows take the batch payload (CASE on the
     // match, not coalesce — NULL payloads propagate), unmatched batch
     // rows insert, untouched partitions ride through unmodified
-    "snk5_partition_merge" ->
+    Query("snk5_partition_merge", snk5PartitionMerge,
       """WITH fact AS (
         |  SELECT event_id, event_type, CAST(value AS DECIMAL(18,2)) AS v
         |  FROM events),
@@ -4506,21 +4364,21 @@ object RelQueries {
         |    WHERE f.event_type = b.event_type AND f.event_id = b.event_id))
         |SELECT event_type, count(*) AS n,
         |  CAST(sum(v) * 100 AS BIGINT) AS sum_value_cents
-        |FROM merged GROUP BY 1""".stripMargin,
+        |FROM merged GROUP BY 1""".stripMargin),
     // content identity through fragment -> compact: the aggregate over
     // the compacted copy must equal the direct-source aggregate
-    "snk4_compaction" ->
+    Query("snk4_compaction", snk4Compaction,
       """SELECT event_type, count(*) AS n,
         |  CAST(sum(event_id) AS BIGINT) AS sum_id,
         |  CAST(sum(user_id) AS BIGINT) AS sum_uid
-        |FROM events GROUP BY 1""".stripMargin,
+        |FROM events GROUP BY 1""".stripMargin),
     // compaction must not change content, whatever the row layout
-    "snk8_compact_zorder" ->
+    Query("snk8_compact_zorder", snk8CompactZorder,
       """SELECT event_type, count(*) AS n,
         |  CAST(sum(event_id) AS BIGINT) AS sum_id,
         |  CAST(sum(user_id) AS BIGINT) AS sum_uid
-        |FROM events GROUP BY 1""".stripMargin,
-    "q3_shipping_priority" ->
+        |FROM events GROUP BY 1""".stripMargin),
+    Query("q3_shipping_priority", q3Shipping,
       """SELECT l_orderkey, strftime(odate, '%Y-%m-%d') AS odate, o_orderpriority,
         |  revenue_cents
         |FROM (
@@ -4534,8 +4392,8 @@ object RelQueries {
         |    AND l_shipdate > TIMESTAMP '1998-01-01'
         |  GROUP BY 1, 2, 3
         |  ORDER BY revenue_cents DESC, l_orderkey ASC
-        |  LIMIT 10)""".stripMargin,
-    "q5_local_supplier" ->
+        |  LIMIT 10)""".stripMargin),
+    Query("q5_local_supplier", q5LocalSupplier,
       """SELECT n_name,
         |  CAST(sum(CAST(round(l_extendedprice * (1 - l_discount) * 100) AS BIGINT)) AS BIGINT) AS revenue_cents
         |FROM customer
@@ -4547,16 +4405,16 @@ object RelQueries {
         |WHERE r_name = 'ASIA'
         |  AND o_orderdate >= TIMESTAMP '1996-01-01'
         |  AND o_orderdate < TIMESTAMP '1998-01-01'
-        |GROUP BY 1""".stripMargin,
-    "src4_orc_roundtrip" ->
+        |GROUP BY 1""".stripMargin),
+    Query("src4_orc_roundtrip", src4Orc,
       """SELECT l_returnflag, count(*) AS n,
         |  CAST(sum(l_quantity) AS BIGINT) AS sum_qty,
         |  CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)) AS BIGINT)
         |    AS sum_base_cents
         |FROM lineitem
         |WHERE l_shipdate >= TIMESTAMP '1997-01-01'
-        |GROUP BY 1""".stripMargin,
-    "w9_rank_family" ->
+        |GROUP BY 1""".stripMargin),
+    Query("w9_rank_family", w9RankFamily,
       """SELECT o_custkey, o_orderkey,
         |  CAST(dense_rank() OVER w AS INT) AS drank,
         |  round(cume_dist() OVER w, 6) AS cdist,
@@ -4566,31 +4424,31 @@ object RelQueries {
         |    AS BIGINT) AS second_key
         |FROM orders WHERE o_custkey < 100
         |WINDOW w AS (PARTITION BY o_custkey
-        |             ORDER BY o_totalprice DESC, o_orderkey)""".stripMargin,
-    "a13_corr" ->
+        |             ORDER BY o_totalprice DESC, o_orderkey)""".stripMargin),
+    Query("a13_corr", a13Corr,
       """SELECT l_returnflag,
         |  round(corr(l_quantity, l_extendedprice), 6) AS corr_qp,
         |  round(covar_samp(l_quantity, l_extendedprice), 2) AS covar_qp,
         |  round(regr_slope(l_extendedprice, l_quantity), 4) AS slope
-        |FROM lineitem GROUP BY 1""".stripMargin,
-    "o5_pivot" ->
+        |FROM lineitem GROUP BY 1""".stripMargin),
+    Query("o5_pivot", o5Pivot,
       """SELECT o_orderstatus,
         |  count(*) FILTER (o_orderpriority = '1-URGENT') AS p_urgent,
         |  count(*) FILTER (o_orderpriority = '2-HIGH') AS p_high,
         |  count(*) FILTER (o_orderpriority = '3-MEDIUM') AS p_medium,
         |  count(*) FILTER (o_orderpriority = '4-NOT SPECIFIED') AS p_notspec,
         |  count(*) FILTER (o_orderpriority = '5-LOW') AS p_low
-        |FROM orders GROUP BY 1""".stripMargin,
-    "a12_cube" ->
+        |FROM orders GROUP BY 1""".stripMargin),
+    Query("a12_cube", a12Cube,
       """SELECT coalesce(l_returnflag, '<all>') AS rf,
         |       coalesce(l_linestatus, '<all>') AS ls,
         |       CAST(GROUPING(l_returnflag, l_linestatus) AS INT) AS gid,
         |       count(*) AS n, CAST(sum(l_quantity) AS BIGINT) AS sum_qty
-        |FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)""".stripMargin,
+        |FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)""".stripMargin),
     // sumsq folds the squares left-to-right in BOTH engines (Spark
     // `aggregate`, DuckDB position-sum over an ordered group) — rounded
     // to 4dp to absorb sub-ulp accumulation drift.
-    "f10_higher_order" ->
+    Query("f10_higher_order", f10HigherOrder,
       """SELECT a_id AS vec_id, n_pos,
         |       round(sumsq, 4) AS sumsq, round(max_abs, 4) AS max_abs
         |FROM (
@@ -4599,19 +4457,19 @@ object RelQueries {
         |    sum(CAST(e.embedding[i.x] AS DOUBLE) * CAST(e.embedding[i.x] AS DOUBLE)) AS sumsq,
         |    max(abs(CAST(e.embedding[i.x] AS DOUBLE))) AS max_abs
         |  FROM embeddings e, LATERAL (SELECT unnest(range(1, len(e.embedding) + 1)) AS x) i
-        |  GROUP BY 1, 2)""".stripMargin,
+        |  GROUP BY 1, 2)""".stripMargin),
     // oracle verifies with the EXACT predicate over the (tiny) dims —
     // the Spark plan must produce the same pair set from its
     // deletion-neighborhood candidates
-    "j12_fuzzy_join" ->
+    Query("j12_fuzzy_join", j12FuzzyJoin,
       """WITH typos AS (
         |  SELECT n_nationkey + 100 AS t_id,
         |         substr(n_name, 1, 2) || substr(n_name, 4) AS t_name
         |  FROM nation WHERE length(n_name) >= 4)
         |SELECT t.t_id, t.t_name, n.n_nationkey, n.n_name
         |FROM typos t JOIN nation n
-        |  ON levenshtein(t.t_name, n.n_name) <= 1""".stripMargin,
-    "f11_zorder" ->
+        |  ON levenshtein(t.t_name, n.n_name) <= 1""".stripMargin),
+    Query("f11_zorder", f11Zorder,
       """WITH k AS (
         |  SELECT l_partkey % 65536 AS x, l_suppkey % 65536 AS y,
         |         count(*) AS m
@@ -4626,8 +4484,8 @@ object RelQueries {
         |  CAST(sum(m) AS BIGINT) AS n,
         |  CAST(min(x) AS BIGINT) AS min_x, CAST(max(x) AS BIGINT) AS max_x,
         |  CAST(min(y) AS BIGINT) AS min_y, CAST(max(y) AS BIGINT) AS max_y
-        |FROM z GROUP BY 1""".stripMargin,
-    "q1_pricing_summary" ->
+        |FROM z GROUP BY 1""".stripMargin),
+    Query("q1_pricing_summary", q1PricingSummary,
       """SELECT l_returnflag, l_linestatus,
         |  CAST(sum(l_quantity) AS BIGINT) AS sum_qty,
         |  CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)) AS BIGINT)
@@ -4639,8 +4497,8 @@ object RelQueries {
         |  count(*) AS n
         |FROM lineitem
         |WHERE l_shipdate <= TIMESTAMP '2000-09-02'
-        |GROUP BY 1, 2""".stripMargin,
-    "q10_returned_items" ->
+        |GROUP BY 1, 2""".stripMargin),
+    Query("q10_returned_items", q10ReturnedItems,
       """SELECT c_custkey, c_name, n_name, revenue_cents FROM (
         |  SELECT c_custkey, c_name, n_name,
         |    CAST(sum(CAST(round(l_extendedprice * (1 - l_discount) * 100) AS BIGINT)) AS BIGINT)
@@ -4654,20 +4512,20 @@ object RelQueries {
         |    AND l_returnflag = 'R'
         |  GROUP BY 1, 2, 3
         |  ORDER BY revenue_cents DESC, c_custkey ASC
-        |  LIMIT 20)""".stripMargin,
+        |  LIMIT 20)""".stripMargin),
     // the subquery gates replay the IDENTICAL statement Spark ran —
     // one text, two engines (see the q17Sql/q21Sql/q22Sql scaladoc)
-    "q17_small_qty" -> q17Sql,
-    "q21_waiting" -> q21Sql,
-    "q22_in_subquery" -> q22Sql,
-    "q23_ancestor_chains" -> q23Sql,
-    "q18_large_orders" -> q18Sql,
-    "q2_min_cost_supplier" -> q2Sql,
-    "q20_dominant_share" -> q20Sql,
-    "j19_lateral_topk" -> j19Sql,
+    Query("q17_small_qty", q17SmallQty, q17Sql),
+    Query("q21_waiting", q21Waiting, q21Sql),
+    Query("q22_in_subquery", q22InSubquery, q22Sql),
+    Query("q23_ancestor_chains", q23AncestorChains, q23Sql),
+    Query("q18_large_orders", q18LargeOrders, q18Sql),
+    Query("q2_min_cost_supplier", q2MinCostSupplier, q2Sql),
+    Query("q20_dominant_share", q20DominantShare, q20Sql),
+    Query("j19_lateral_topk", j19LateralTopK, j19Sql),
     // strftime/strptime are DuckDB's explicit-pattern pair; the same
     // render→corrupt→parse→roundtrip pipeline, micros as BIGINT
-    "f24_timestamp_parse" ->
+    Query("f24_timestamp_parse", f24TimestampParse,
       """WITH r AS (
         |  SELECT event_type, ts, event_id,
         |    strftime(ts, '%Y-%m-%d %H:%M:%S.%f') AS rendered
@@ -4684,13 +4542,13 @@ object RelQueries {
         |           THEN 1 ELSE 0 END) AS BIGINT) AS n_roundtrip,
         |  min(epoch_us(back)) AS min_us,
         |  max(epoch_us(back)) AS max_us
-        |FROM c GROUP BY 1""".stripMargin,
-    "a26_listagg" ->
+        |FROM c GROUP BY 1""".stripMargin),
+    Query("a26_listagg", a26Listagg,
       """SELECT n_name, count(*) AS n,
         |  string_agg(s_name, ',' ORDER BY s_name) AS names
         |FROM supplier JOIN nation ON s_nationkey = n_nationkey
-        |GROUP BY 1""".stripMargin,
-    "v7_referential_audit" ->
+        |GROUP BY 1""".stripMargin),
+    Query("v7_referential_audit", v7ReferentialAudit,
       """WITH o2 AS (
         |  SELECT o_orderkey,
         |    CASE WHEN o_orderkey % 500 = 0
@@ -4709,8 +4567,8 @@ object RelQueries {
         |SELECT 'lineitem->part',
         |  (SELECT count(*) FROM lineitem),
         |  (SELECT count(*) FROM lineitem LEFT JOIN part
-        |     ON l_partkey = p_partkey WHERE p_partkey IS NULL)""".stripMargin,
-    "o8_setops_all" ->
+        |     ON l_partkey = p_partkey WHERE p_partkey IS NULL)""".stripMargin),
+    Query("o8_setops_all", o8SetopsAll,
       """SELECT nationkey, count(*) AS n, 'except_all' AS op FROM (
         |  SELECT c_nationkey AS nationkey FROM customer
         |  EXCEPT ALL
@@ -4721,11 +4579,11 @@ object RelQueries {
         |  SELECT c_nationkey AS nationkey FROM customer
         |  INTERSECT ALL
         |  SELECT s_nationkey FROM supplier)
-        |GROUP BY 1""".stripMargin,
+        |GROUP BY 1""".stripMargin),
     // both engines spell the null placement out — the ranks are the
     // semantic payload (defaults DISAGREE: Spark nulls-first asc,
     // DuckDB nulls-last)
-    "o9_null_ordering" ->
+    Query("o9_null_ordering", o9NullOrdering,
       """WITH s AS (
         |  SELECT s_suppkey,
         |    CASE WHEN CAST(round(s_acctbal * 100) AS BIGINT)
@@ -4737,8 +4595,8 @@ object RelQueries {
         |    s_suppkey) AS INT) AS rk_nulls_first,
         |  CAST(row_number() OVER (ORDER BY cents ASC NULLS LAST,
         |    s_suppkey) AS INT) AS rk_nulls_last
-        |FROM s""".stripMargin,
-    "j22_nullsafe_join" ->
+        |FROM s""".stripMargin),
+    Query("j22_nullsafe_join", j22NullsafeJoin,
       """SELECT coalesce(ck, -1) AS nk, count(*) AS n_pairs,
         |  CAST(sum(cents) AS BIGINT) AS sum_cents
         |FROM (SELECT nullif(c_nationkey, 3) AS ck,
@@ -4746,8 +4604,8 @@ object RelQueries {
         |      FROM customer) c
         |JOIN (SELECT nullif(s_nationkey, 3) AS sk FROM supplier) s
         |  ON c.ck IS NOT DISTINCT FROM s.sk
-        |GROUP BY 1""".stripMargin,
-    "a25_regression" ->
+        |GROUP BY 1""".stripMargin),
+    Query("a25_regression", a25Regression,
       """SELECT l_returnflag, CAST(year(l_shipdate) AS INT) AS yr,
         |  count(*) AS n,
         |  CAST(count(*) * sum(x * y) - sum(x) * sum(y) AS BIGINT)
@@ -4760,11 +4618,11 @@ object RelQueries {
         |        CAST(l_quantity AS BIGINT) AS x,
         |        CAST(round(l_extendedprice * 100) AS BIGINT) AS y
         |      FROM lineitem)
-        |GROUP BY 1, 2""".stripMargin,
+        |GROUP BY 1, 2""".stripMargin),
     // the oracle never parses XML: the documents are generated in-plan
     // from base columns, so parse(generate(row)) == row is the
     // contract, and the corrupt rows are exactly the planted ones
-    "f23_xml" ->
+    Query("f23_xml", f23Xml,
       """SELECT
         |  CASE WHEN o_orderkey % 97 = 0 THEN 'CORRUPT'
         |       ELSE o_orderpriority END AS priority,
@@ -4774,20 +4632,20 @@ object RelQueries {
         |       AS BIGINT) AS sum_cents,
         |  CAST(sum(CASE WHEN o_orderkey % 97 = 0 THEN 0
         |           ELSE o_orderkey END) AS BIGINT) AS sum_id
-        |FROM orders GROUP BY 1""".stripMargin,
-    "q4_order_priority" -> q4Sql,
-    "q15_top_supplier" -> q15Sql,
-    "q7_nation_volume" -> q7Sql,
-    "q14_promo_share" -> q14Sql,
-    "q13_custdist" -> q13Sql,
-    "q8_market_share" -> q8Sql,
-    "q9_profit_nation" -> q9Sql,
-    "q11_important_parts" -> q11Sql,
-    "q12_priority_shipping" -> q12Sql,
-    "q16_supplier_cnt" -> q16Sql,
+        |FROM orders GROUP BY 1""".stripMargin),
+    Query("q4_order_priority", q4OrderPriority, q4Sql),
+    Query("q15_top_supplier", q15TopSupplier, q15Sql),
+    Query("q7_nation_volume", q7NationVolume, q7Sql),
+    Query("q14_promo_share", q14PromoShare, q14Sql),
+    Query("q13_custdist", q13CustDist, q13Sql),
+    Query("q8_market_share", q8MarketShare, q8Sql),
+    Query("q9_profit_nation", q9ProfitNation, q9Sql),
+    Query("q11_important_parts", q11ImportantParts, q11Sql),
+    Query("q12_priority_shipping", q12PriorityShipping, q12Sql),
+    Query("q16_supplier_cnt", q16SupplierCnt, q16Sql),
     // the same first-seen + running-sum decomposition, DuckDB syntax;
     // epoch_us on TIMESTAMP_NS floors — matching the reader's rebuild
-    "w11_running_distinct" ->
+    Query("w11_running_distinct", w11RunningDistinct,
       """WITH ev AS (
         |  SELECT event_id, user_id, epoch_us(ts) AS ts_us, event_type
         |  FROM events),
@@ -4801,9 +4659,9 @@ object RelQueries {
         |  CAST(sum(fs) OVER (PARTITION BY user_id ORDER BY ts_us, event_id
         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
         |    AS BIGINT) AS n_distinct_types
-        |FROM flagged""".stripMargin,
+        |FROM flagged""".stripMargin),
     // lower()-equality replay of the collated join
-    "f21_collation_join" ->
+    Query("f21_collation_join", f21CollationJoin,
       """WITH m AS (
         |  SELECT c_custkey,
         |    CASE WHEN c_custkey % 3 = 0 THEN upper(c_name)
@@ -4814,10 +4672,10 @@ object RelQueries {
         |SELECT canon, CAST(count(*) AS BIGINT) AS n,
         |  CAST(sum(c_custkey) AS BIGINT) AS sum_key
         |FROM m JOIN dim ON lower(m.m) = dim.canon
-        |GROUP BY 1""".stripMargin,
+        |GROUP BY 1""".stripMargin),
     // exact all-pairs BETWEEN join, no tile grid: candidate
     // completeness and exactly-once pair matching are both gate-checked
-    "j18_grid_join" ->
+    Query("j18_grid_join", j18GridJoin,
       """WITH pts AS (
         |  SELECT cell_id % 100 AS x, cell_id // 100 AS y, cents FROM (
         |    SELECT l_orderkey % 10000 AS cell_id,
@@ -4835,27 +4693,27 @@ object RelQueries {
         |  CAST(sum(cents) AS BIGINT) AS sum_cents
         |FROM pts JOIN r2
         |  ON x BETWEEN x0 AND x1 AND y BETWEEN y0 AND y1
-        |GROUP BY 1""".stripMargin,
+        |GROUP BY 1""".stripMargin),
     // plain join replay — the runtime bloom filter must be invisible
     // in the answer
-    "j17_bloom_join" ->
+    Query("j17_bloom_join", j17BloomJoin,
       """SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS n,
         |  CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT))
         |       AS BIGINT) AS sum_cents
         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
         |WHERE o_totalprice > 400000.0
-        |GROUP BY 1""".stripMargin,
+        |GROUP BY 1""".stripMargin),
     // the dim rows replayed as a CASE over the two surviving types
-    "j16_dpp_join" ->
+    Query("j16_dpp_join", j16DppJoin,
       """SELECT event_type, CAST(count(*) AS BIGINT) AS n,
         |  CAST(sum(CAST(round(value * 100) AS BIGINT) *
         |           CASE event_type WHEN 'purchase' THEN 5 ELSE 2 END)
         |       AS BIGINT) AS weighted_cents
         |FROM events
         |WHERE event_type IN ('purchase', 'error')
-        |GROUP BY 1""".stripMargin,
+        |GROUP BY 1""".stripMargin),
     // bucket-free inequality-join formulation of the band join
-    "j15_epsilon_join" ->
+    Query("j15_epsilon_join", j15EpsilonJoin,
       """WITH p AS (
         |  SELECT event_id AS id,
         |    CAST(round(value * 100) AS BIGINT) AS cents
@@ -4864,27 +4722,27 @@ object RelQueries {
         |  a.cents AS a_cents, b.cents AS b_cents
         |FROM p a JOIN p b
         |  ON a.id < b.id
-        | AND b.cents >= a.cents - 5 AND b.cents <= a.cents + 5""".stripMargin,
+        | AND b.cents >= a.cents - 5 AND b.cents <= a.cents + 5""".stripMargin),
     // rebuilds the batch split arithmetically: even orderkeys are the
     // pre-evolution files whose priority column reads NULL
-    "src6_schema_evolution" ->
+    Query("src6_schema_evolution", src6SchemaEvolution,
       """SELECT CASE WHEN o_orderkey % 2 = 1 THEN o_orderpriority
         |       END AS o_orderpriority,
         |  CAST(count(*) AS BIGINT) AS n,
         |  CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
         |    AS sum_cents
         |FROM orders
-        |GROUP BY 1""".stripMargin,
+        |GROUP BY 1""".stripMargin),
     // the round-trip must be lossless: replay reads the source table
-    "src7_text_source" ->
+    Query("src7_text_source", src7TextSource,
       """SELECT lang, CAST(count(*) AS BIGINT) AS n,
         |  CAST(sum(doc_id) AS BIGINT) AS sum_id,
         |  CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS sum_words
-        |FROM documents GROUP BY 1""".stripMargin,
+        |FROM documents GROUP BY 1""".stripMargin),
     // nearest-event replay: the same fully-ordered frames in both
     // directions; paired (ts, id) picks stay consistent because the
     // CASE columns are null together
-    "j14_nearest_event" ->
+    Query("j14_nearest_event", j14NearestEvent,
       """WITH ev AS (
         |  SELECT event_id, user_id, event_type, epoch_us(ts) AS ts_us
         |  FROM events WHERE event_type IN ('click', 'purchase')),
@@ -4920,8 +4778,8 @@ object RelQueries {
         |       THEN prev_ts
         |       WHEN next_ts IS NOT NULL AND next_ts - ts_us <= 1800000000
         |       THEN next_ts END AS click_ts_us
-        |FROM p""".stripMargin,
-    "w10_time_weighted" ->
+        |FROM p""".stripMargin),
+    Query("w10_time_weighted", w10TimeWeighted,
       """WITH e AS (
         |  SELECT user_id, event_id, epoch_us(ts) AS ts_us,
         |    CAST(round(value * 100) AS BIGINT) AS v_cents
@@ -4935,18 +4793,18 @@ object RelQueries {
         |  CAST(sum((nxt - ts_us) // 1000000) AS BIGINT) AS total_s,
         |  CAST(sum(v_cents * ((nxt - ts_us) // 1000000)) AS BIGINT)
         |    AS weighted_cents_s
-        |FROM l WHERE nxt IS NOT NULL GROUP BY 1""".stripMargin,
+        |FROM l WHERE nxt IS NOT NULL GROUP BY 1""".stripMargin),
     // variant parse/extract replay: the planted malformed rows (every
     // 10th event) are NULL on both sides — try_parse_json there,
     // a CASE here; valid rows extract $.k as a typed int
-    "f17_variant" ->
+    Query("f17_variant", f17Variant,
       """SELECT event_type, count(*) AS n,
         |  count(CASE WHEN event_id % 10 = 0 THEN NULL ELSE 1 END) AS n_valid,
         |  CAST(sum(CASE WHEN event_id % 10 = 0 THEN NULL
         |           ELSE CAST(json_extract(props, '$.k') AS INT) END) AS BIGINT)
         |    AS sum_k
-        |FROM events GROUP BY 1""".stripMargin,
-    "o7_unpivot" ->
+        |FROM events GROUP BY 1""".stripMargin),
+    Query("o7_unpivot", o7Unpivot,
       """SELECT metric, count(*) AS n,
         |  CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS sum_cents
         |FROM (
@@ -4955,7 +4813,7 @@ object RelQueries {
         |  SELECT 'l_extendedprice', l_extendedprice FROM lineitem
         |  UNION ALL
         |  SELECT 'l_discount', l_discount FROM lineitem)
-        |GROUP BY 1""".stripMargin,
-    "q19_disjunctive" -> q19Sql
+        |GROUP BY 1""".stripMargin),
+    Query("q19_disjunctive", q19Disjunctive, q19Sql)
   )
 }

@@ -32,28 +32,23 @@ object StreamQueries {
       ev.filter(org.apache.spark.sql.functions.col("event_type") === "purchase"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "s1_tumbling" -> s1,
-    "s2_sliding" -> s2,
-    "s3_session" -> s3,
-    "s7_stream_join" -> s7
-  )
+  lazy val (queries, oracle) = registry(declared)
 
-  val oracle: Map[String, String] = Map(
-    "s1_tumbling" ->
+  private[ops] val declared: Seq[Query] = Seq(
+    Query("s1_tumbling", s1,
       """SELECT ws_us, count(*) AS n,
         |  CAST(sum(CAST(value AS DECIMAL(18,2))) * 100 AS BIGINT) AS sum_value_cents
         |FROM (SELECT epoch_us(ts) - epoch_us(ts) % 600000000 AS ws_us, value
         |      FROM events)
-        |GROUP BY 1""".stripMargin,
-    "s2_sliding" ->
+        |GROUP BY 1""".stripMargin),
+    Query("s2_sliding", s2,
       """SELECT ws_us, count(*) AS n,
         |  CAST(sum(CAST(value AS DECIMAL(18,2))) * 100 AS BIGINT) AS sum_value_cents
         |FROM (SELECT (epoch_us(ts) // 300000000 - k.k) * 300000000 AS ws_us,
         |             value
         |      FROM events, (SELECT unnest([0, 1]) AS k) k)
-        |GROUP BY 1""".stripMargin,
-    "s3_session" ->
+        |GROUP BY 1""".stripMargin),
+    Query("s3_session", s3,
       """WITH o AS (
         |  SELECT user_id, epoch_us(ts) AS t, value,
         |    lag(epoch_us(ts)) OVER (PARTITION BY user_id
@@ -66,14 +61,14 @@ object StreamQueries {
         |      FROM m)
         |SELECT user_id, min(t) AS session_start_us, count(*) AS n,
         |  CAST(sum(CAST(value AS DECIMAL(18,2))) * 100 AS BIGINT) AS sum_value_cents
-        |FROM s GROUP BY user_id, sid""".stripMargin,
-    "s7_stream_join" ->
+        |FROM s GROUP BY user_id, sid""".stripMargin),
+    Query("s7_stream_join", s7,
       """SELECT p.event_id AS purchase_id, c.user_id, c.event_id AS click_id,
         |  epoch_us(c.ts) AS click_ts_us, epoch_us(p.ts) AS purchase_ts_us
         |FROM events c JOIN events p
         |  ON c.user_id = p.user_id
         | AND epoch_us(p.ts) >= epoch_us(c.ts)
         | AND epoch_us(p.ts) <= epoch_us(c.ts) + 1800000000
-        |WHERE c.event_type = 'click' AND p.event_type = 'purchase'""".stripMargin
+        |WHERE c.event_type = 'click' AND p.event_type = 'purchase'""".stripMargin)
   )
 }

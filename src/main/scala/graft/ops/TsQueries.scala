@@ -392,23 +392,12 @@ object TsQueries {
           .as("s_stat"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "w18_mann_kendall" -> w18MannKendall,
-    "w6_sessionize" -> w6Sessionize,
-    "w7_gapfill" -> w7Gapfill,
-    "w7_interpolate" -> w7Interpolate,
-    "w8_funnel" -> w8Funnel,
-    "w13_anomaly" -> w13Anomaly,
-    "w14_retention" -> w14Retention,
-    "w15_streak" -> w15Streak,
-    "w16_ohlc" -> w16Ohlc,
-    "w17_rolling_median" -> w17RollingMedian
-  )
+  lazy val (queries, oracle) = registry(declared)
 
-  val oracle: Map[String, String] = Map(
+  private[ops] val declared: Seq[Query] = Seq(
     // the in-row pair fold replayed as an explicit position self-join
     // (a < b on the time rank) — an independent second formulation
-    "w18_mann_kendall" ->
+    Query("w18_mann_kendall", w18MannKendall,
       """WITH e AS (
         |  SELECT user_id, event_id, epoch_us(ts) AS t,
         |    CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
@@ -427,11 +416,11 @@ object TsQueries {
         |      GROUP BY 1)
         |SELECT nn.user_id, CAST(nn.n AS BIGINT) AS n,
         |  coalesce(sp.s_stat, 0) AS s_stat
-        |FROM nn LEFT JOIN sp USING (user_id) WHERE nn.n >= 10""".stripMargin,
+        |FROM nn LEFT JOIN sp USING (user_id) WHERE nn.n >= 10""".stripMargin),
     // quantile_cont over the same 9-row frame: with an odd count the
     // 0.5 quantile is the middle element — integer cents, interpolation
     // never fires, the BIGINT cast is exact in both engines
-    "w17_rolling_median" ->
+    Query("w17_rolling_median", w17RollingMedian,
       """WITH e AS (
         |  SELECT user_id, event_id, epoch_us(ts) AS t,
         |    CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
@@ -442,10 +431,10 @@ object TsQueries {
         |  FROM e WINDOW win AS (PARTITION BY user_id ORDER BY t, event_id
         |    ROWS BETWEEN 8 PRECEDING AND CURRENT ROW))
         |SELECT user_id, event_id, t AS t_us, cents, med_c
-        |FROM w WHERE n = 9""".stripMargin,
+        |FROM w WHERE n = 9""".stripMargin),
     // independent formulation: window-rank argmax (ORDER BY len DESC,
     // start ASC) instead of the min(struct(-len, start)) aggregate
-    "w15_streak" ->
+    Query("w15_streak", w15Streak,
       s"""WITH e AS (SELECT DISTINCT user_id,
          |  epoch_us(ts) // $DayUs AS day FROM events),
          |i AS (SELECT user_id, day,
@@ -461,10 +450,10 @@ object TsQueries {
          |        FROM g)
          |SELECT user_id, CAST(len AS BIGINT) AS streak_len, start_day,
          |  CAST(n_streaks AS BIGINT) AS n_streaks
-         |FROM sel WHERE rn = 1""".stripMargin,
+         |FROM sel WHERE rn = 1""".stripMargin),
     // independent formulation: open/close via double window-rank (the
     // per-bucket sort the min_by/max_by plan avoids)
-    "w16_ohlc" ->
+    Query("w16_ohlc", w16Ohlc,
       s"""WITH e AS (
          |  SELECT event_type AS key, event_id, epoch_us(ts) AS t,
          |    CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
@@ -481,18 +470,18 @@ object TsQueries {
          |  max(cents) AS high_c, min(cents) AS low_c,
          |  CAST(min(CASE WHEN rd = 1 THEN cents END) AS BIGINT) AS close_c,
          |  count(*) AS n_events, CAST(sum(cents) AS BIGINT) AS sum_c
-         |FROM w GROUP BY 1, 2""".stripMargin,
-    "w14_retention" ->
+         |FROM w GROUP BY 1, 2""".stripMargin),
+    Query("w14_retention", w14Retention,
       """WITH e AS (
         |  SELECT user_id, epoch_us(ts) // 604800000000 AS wk FROM events),
         |f AS (SELECT user_id, min(wk) AS cohort_wk FROM e GROUP BY 1)
         |SELECT cohort_wk, wk - cohort_wk AS offset_wk,
         |  count(DISTINCT user_id) AS n_users
         |FROM e JOIN f USING (user_id)
-        |GROUP BY 1, 2""".stripMargin,
+        |GROUP BY 1, 2""".stripMargin),
     // same BIGINT cross-multiply test; DuckDB's windowed sum(BIGINT) is
     // HUGEINT, cast back down before the products
-    "w13_anomaly" ->
+    Query("w13_anomaly", w13Anomaly,
       """WITH e AS (
         |  SELECT event_id, user_id, epoch_us(ts) AS t,
         |    CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
@@ -507,8 +496,8 @@ object TsQueries {
         |  n AS n_win, s AS sum_win
         |FROM w
         |WHERE n >= 6
-        |  AND (n*cents - s) * (n*cents - s) > 9 * (n*s2 - s*s)""".stripMargin,
-    "w6_sessionize" ->
+        |  AND (n*cents - s) * (n*cents - s) > 9 * (n*s2 - s*s)""".stripMargin),
+    Query("w6_sessionize", w6Sessionize,
       s"""WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS t FROM events),
          |g AS (SELECT user_id, event_id, t,
          |        CASE WHEN lag(t) OVER w IS NULL OR t - lag(t) OVER w > $GapUs
@@ -519,12 +508,12 @@ object TsQueries {
          |          ROWS UNBOUNDED PRECEDING) AS sess_n FROM g)
          |SELECT user_id, CAST(sess_n AS BIGINT) AS sess_n,
          |       min(t) AS start_us, max(t) AS end_us, count(*) AS n_events
-         |FROM s GROUP BY 1, 2""".stripMargin,
+         |FROM s GROUP BY 1, 2""".stripMargin),
     // ASOF LEFT JOIN is DuckDB's native forward-fill: latest observed
     // bucket at-or-before each grid hour — exactly last(ignoreNulls).
     // two ASOF joins (backward >= for prev, forward <= for next) + the
     // same integer lerp (DuckDB // truncates toward zero, like Spark div)
-    "w7_interpolate" ->
+    Query("w7_interpolate", w7Interpolate,
       s"""WITH b AS (
          |  SELECT user_id, epoch_us(ts) - epoch_us(ts) % $HourUs AS bus,
          |         CAST(sum(CAST(value AS DECIMAL(18,2))) * 100 AS BIGINT) AS cents
@@ -546,10 +535,10 @@ object TsQueries {
          |                 // ((nbus - pbus) // $HourUs)
          |  END AS lerp_cents,
          |  CASE WHEN pbus = bus THEN 0 ELSE 1 END AS is_gap
-         |FROM ff""".stripMargin,
+         |FROM ff""".stripMargin),
     // per-stage mins recomputed as the correlated-min cascade; the fold
     // and the cascade agree because stage conditions are strict
-    "w8_funnel" ->
+    Query("w8_funnel", w8Funnel,
       """WITH e AS (SELECT user_id, event_type, epoch_us(ts) AS t FROM events),
         |s1 AS (SELECT user_id, min(t) AS t1 FROM e
         |       WHERE event_type = 'click' GROUP BY 1),
@@ -561,8 +550,8 @@ object TsQueries {
         |       (SELECT count(*) FROM s2) AS n_stage2,
         |       (SELECT count(*) FROM s3) AS n_stage3,
         |       (SELECT CAST(coalesce(sum(t3 - t1), 0) AS BIGINT)
-        |        FROM s3 JOIN s1 USING (user_id)) AS sum_conv_us""".stripMargin,
-    "w7_gapfill" ->
+        |        FROM s3 JOIN s1 USING (user_id)) AS sum_conv_us""".stripMargin),
+    Query("w7_gapfill", w7Gapfill,
       s"""WITH b AS (
          |  SELECT user_id, epoch_us(ts) - epoch_us(ts) % $HourUs AS bus,
          |         CAST(sum(CAST(value AS DECIMAL(18,2))) * 100 AS BIGINT) AS cents
@@ -571,6 +560,6 @@ object TsQueries {
          |grid AS (SELECT user_id, unnest(range(mn, mx + 1, $HourUs)) AS bus FROM span)
          |SELECT g.user_id, g.bus, b.cents AS filled_cents,
          |       CASE WHEN b.bus = g.bus THEN 0 ELSE 1 END AS is_gap
-         |FROM grid g ASOF LEFT JOIN b ON g.user_id = b.user_id AND g.bus >= b.bus""".stripMargin
+         |FROM grid g ASOF LEFT JOIN b ON g.user_id = b.user_id AND g.bus >= b.bus""".stripMargin)
   )
 }

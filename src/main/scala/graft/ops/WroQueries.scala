@@ -1598,53 +1598,6 @@ object WroQueries {
        |    CASE i WHEN 0 THEN 1 WHEN 1 THEN 3 WHEN 2 THEN 5 WHEN 3 THEN 7 ELSE 9 END AS out
        |  FROM stats, (SELECT unnest(generate_series(0, 4)) AS i))""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "wro_overlay_flagship" -> flagship,
-    "wro_overlay_nodata" -> overlayNoData,
-    "wro_overlay_skewed" -> overlaySkewed,
-    "wro_overlay_skewed_aqe" -> overlaySkewedAqe,
-    "a9_histogram" -> a9Histogram,
-    "wro_focal_stats" -> focalStats,
-    "wro_zonal_stats" -> zonalStats,
-    "wro_resample_nearest" -> resampleNearest,
-    "wro_slope" -> slope,
-    "wro_class_boundaries" -> classBoundaries,
-    "wro_aspect" -> aspect,
-    "wro_polygon_zonal" -> polygonZonal,
-    "wro_flow_direction" -> flowDirection,
-    "wro_flow_accumulation" -> ((s: SparkSession, d: String) =>
-      flowAccumulation(s, d)),
-    "wro_majority_filter" -> majorityFilter,
-    "wro_cost_distance" -> ((s: SparkSession, d: String) =>
-      costDistance(s, d)),
-    "wro_allocation" -> ((s: SparkSession, d: String) =>
-      allocation(s, d)),
-    "wro_hillshade" -> hillshade,
-    "wro_watershed" -> ((s: SparkSession, d: String) => watershed(s, d)),
-    "wro_flow_length" -> ((s: SparkSession, d: String) => flowLength(s, d)),
-    "wro_curvature" -> curvature,
-    "wro_viewshed" -> viewshed,
-    "wro_moran" -> moran,
-    "wro_gi_star" -> giStar,
-    "wro_idw" -> idw,
-    "wro_resample_bilinear" -> resampleBilinear,
-    "wro_region_group" -> regionGroup,
-    "wro_twi" -> twi,
-    "wro_least_cost_path" -> ((s: SparkSession, d: String) =>
-      leastCostPath(s, d)),
-    "wro_combine" -> combine,
-    "wro_expand" -> expand,
-    "wro_zonal_geometry" -> zonalGeometry,
-    "wro_corridor" -> ((s: SparkSession, d: String) => corridor(s, d)),
-    "wro_layer_filter" -> layerFilterGolden,
-    "f9_remap_expr" -> remapExpr,
-    "wro_classify_equal_interval" -> classifyEqualInterval,
-    "wro_classify_unique" -> classifyUnique,
-    "wro_classify_breaks" -> classifyBreaks,
-    "wro_classify_labeljoin" -> classifyLabelJoin,
-    "wro_classify_locale" -> classifyLocale
-  )
-
   /** The D8 steepest-descent CTE blocks (pc→rk), shared by the
     * flow-direction oracle and the accumulation oracle's edge base. */
   private val d8OracleCtes: String =
@@ -1706,10 +1659,12 @@ object WroQueries {
        |FROM remapped m JOIN weights w ON m.layer = w.layer
        |GROUP BY m.cell_id""".stripMargin
 
-  val oracle: Map[String, String] = Map(
+  lazy val (queries, oracle) = registry(declared)
+
+  private[ops] val declared: Seq[Query] = Seq(
     // the same N-scaled deviations (dev = N·u − Σu) over the same rook
     // fan-out; sums CAST from DuckDB's HUGEINT back to BIGINT
-    "wro_moran" ->
+    Query("wro_moran", moran,
       s"""WITH $unitsGridSql,
         |t AS (SELECT count(*) AS n, CAST(sum(u) AS BIGINT) AS s FROM g),
         |d AS (SELECT r, c, t.n * g.u - t.s AS dev FROM g, t),
@@ -1722,10 +1677,10 @@ object WroQueries {
         |  (SELECT count(*) AS w_pairs,
         |     CAST(sum(da * db) AS BIGINT) AS num FROM pr) p,
         |  (SELECT CAST(sum(dev * dev) AS BIGINT) AS den FROM d) q"""
-        .stripMargin,
+        .stripMargin),
     // identical cross-multiplied sigma-band CASE over the same 3×3
     // focal sum (self included) and 1-row moment table
-    "wro_gi_star" ->
+    Query("wro_gi_star", giStar,
       s"""WITH $unitsGridSql,
         |t AS (SELECT count(*) AS n, CAST(sum(u) AS BIGINT) AS s,
         |        CAST(sum(u * u) AS BIGINT) AS ss FROM g),
@@ -1748,10 +1703,10 @@ object WroQueries {
         |        WHEN num * num * (n - 1) >= den * vk * 4 THEN 2
         |        WHEN num * num * (n - 1) >= den * vk THEN 1
         |        ELSE 0 END) AS INT) AS gi_class
-        |FROM z""".stripMargin,
+        |FROM z""".stripMargin),
     // the same 24-offset lcm-40 integer weights; interpolation domain
     // restricted to absent in-grid cells by the same anti-join
-    "wro_idw" ->
+    Query("wro_idw", idw,
       """WITH pc AS (
         |  SELECT l_orderkey % 10000 AS cell_id,
         |    CAST(CAST(max(CAST(l_quantity AS DOUBLE)) AS DECIMAL(18,2)) * 100
@@ -1771,10 +1726,10 @@ object WroQueries {
         |SELECT n.r, n.c, CAST(sum(wc) AS BIGINT) AS num40,
         |       CAST(sum(w) AS BIGINT) AS den40
         |FROM n ANTI JOIN g ON g.r = n.r AND g.c = n.c
-        |GROUP BY 1, 2""".stripMargin,
+        |GROUP BY 1, 2""".stripMargin),
     // the same 4-corner role fan-out: divisibility picks each cell's
     // output target per role, 16th-weights {9,3,3,1}, complete corners
-    "wro_resample_bilinear" ->
+    Query("wro_resample_bilinear", resampleBilinear,
       """WITH pc AS (
         |  SELECT l_orderkey % 10000 AS cell_id,
         |    CAST(CAST(max(CAST(l_quantity AS DOUBLE)) AS DECIMAL(18,2)) * 100
@@ -1789,12 +1744,12 @@ object WroQueries {
         |        AND (r - 1 - i) // 4 BETWEEN 0 AND 24
         |        AND (c - 1 - j) // 4 BETWEEN 0 AND 24)
         |SELECT out_r, out_c, CAST(sum(wc) AS BIGINT) AS v16
-        |FROM f GROUP BY 1, 2 HAVING count(*) = 4""".stripMargin,
+        |FROM f GROUP BY 1, 2 HAVING count(*) = 4""".stripMargin),
     // independent formulation: instead of replaying the min-label
     // rounds, the FULL reachability closure (recursive UNION dedups to
     // the fixpoint) — min reachable key per cell must equal the
     // converged pointer-jumping label exactly
-    "wro_region_group" ->
+    Query("wro_region_group", regionGroup,
       s"""WITH RECURSIVE $unitsGridSql,
         |cl AS (SELECT r, c, u % 7 AS cls, r * 100 + c AS k FROM g),
         |e AS (SELECT a.k AS u, b.k AS v
@@ -1809,10 +1764,10 @@ object WroQueries {
         |lbl AS (SELECT o, min(v) AS reg FROM reach GROUP BY o)
         |SELECT cl.r, cl.c, CAST(cl.cls AS BIGINT) AS cls,
         |  reg // 100 AS reg_r, reg % 100 AS reg_c
-        |FROM cl JOIN lbl ON lbl.o = cl.k""".stripMargin,
+        |FROM cl JOIN lbl ON lbl.o = cl.k""".stripMargin),
     // contribute-to-neighbors replayed as a 3×3 offset cross join over
     // the same per-cell cents; sum(BIGINT) is HUGEINT in DuckDB → CAST
-    "wro_focal_stats" ->
+    Query("wro_focal_stats", focalStats,
       """WITH pc AS (
         |  SELECT l_orderkey % 10000 AS cell_id,
         |    CAST(CAST(max(CAST(l_quantity AS DOUBLE)) AS DECIMAL(18,2)) * 100
@@ -1825,17 +1780,17 @@ object WroQueries {
         |SELECT r, c, CAST(sum(cents) AS BIGINT) AS focal_sum,
         |       count(*) AS n_nbr
         |FROM n WHERE r BETWEEN 0 AND 99 AND c BETWEEN 0 AND 99
-        |GROUP BY 1, 2""".stripMargin,
+        |GROUP BY 1, 2""".stripMargin),
     // independent formulation: window-rank argmax (ORDER BY key DESC,
     // code ASC) instead of the min(struct) aggregate; same generated
     // offset/code/weight VALUES
-    "wro_flow_direction" ->
+    Query("wro_flow_direction", flowDirection,
       s"""WITH $d8OracleCtes
         |SELECT r, c, CAST(code AS BIGINT) AS d8
-        |FROM rk WHERE rn = 1 AND nn = 8""".stripMargin,
+        |FROM rk WHERE rn = 1 AND nn = 8""".stripMargin),
     // the D8 CTEs + a depth-capped recursive path walk; DISTINCT
     // origins per receiver (pit-pair 2-cycles would re-count per lap)
-    "wro_flow_accumulation" ->
+    Query("wro_flow_accumulation", flowAccumulation(_, _),
       s"""WITH RECURSIVE $d8OracleCtes,
         |fd AS (SELECT r, c, code AS d8 FROM rk WHERE rn = 1 AND nn = 8),
         |off(code, dr, dc) AS (VALUES (1,0,1),(2,1,1),(4,1,0),(8,1,-1),
@@ -1849,12 +1804,12 @@ object WroQueries {
         |  SELECT p.u, e.v, d + 1 FROM p JOIN e ON e.u = p.v WHERE d < 10)
         |SELECT v // 100 AS r, v % 100 AS c,
         |  count(DISTINCT u) AS n_upstream
-        |FROM p GROUP BY 1, 2""".stripMargin,
+        |FROM p GROUP BY 1, 2""".stripMargin),
     // contribute-to-neighbors with a self tag; the struct-min mode is
     // replayed as a packed-integer min ((8−cnt)·16+cls — cnt ≤ 8,
     // cls ≤ 4, both non-negative, so min picks max count then min
     // class, the identical total order)
-    "wro_majority_filter" ->
+    Query("wro_majority_filter", majorityFilter,
       s"""WITH $classedGridSql,
         |o AS (SELECT unnest([-1, 0, 1]) AS d),
         |n AS (SELECT g.r + o1.d AS r, g.c + o2.d AS c, g.cls,
@@ -1875,10 +1830,10 @@ object WroQueries {
         |SELECT r, c, own_cls, n_nbr,
         |  CAST(CASE WHEN (8 - mkey // 16) * 2 > n_nbr THEN mkey % 16
         |       ELSE own_cls END AS INT) AS out_cls
-        |FROM agg WHERE present = 1""".stripMargin,
+        |FROM agg WHERE present = 1""".stripMargin),
     // per-layer equal-interval classes from one stats row; combo ids by
     // the same dense_rank-over-sorted-triples rule
-    "wro_combine" ->
+    Query("wro_combine", combine,
       """WITH pc AS (
         |  SELECT l_orderkey % 10000 AS cell_id,
         |    max(CAST(l_quantity AS DOUBLE)) AS q,
@@ -1903,9 +1858,9 @@ object WroQueries {
         |  FROM cl GROUP BY 1, 2, 3)
         |SELECT cl.r, cl.c, cl.cq, cl.cp, cl.cd,
         |  combos.combo_id, combos.combo_n
-        |FROM cl JOIN combos USING (cq, cp, cd)""".stripMargin,
+        |FROM cl JOIN combos USING (cq, cp, cd)""".stripMargin),
     // the GIS10 fan-out shape; max-of-indicator is the any-4 predicate
-    "wro_expand" ->
+    Query("wro_expand", expand,
       s"""WITH $classedGridSql,
         |o AS (SELECT unnest([-1, 0, 1]) AS d),
         |n AS (SELECT g.r + o1.d AS r, g.c + o2.d AS c, g.cls,
@@ -1918,9 +1873,9 @@ object WroQueries {
         |  CAST(CASE WHEN max(CASE WHEN cls = 4 THEN 1 ELSE 0 END) = 1
         |       THEN 4 ELSE max(CASE WHEN self = 1 THEN cls END) END AS INT)
         |    AS out_cls
-        |FROM n GROUP BY 1, 2 HAVING max(self) = 1""".stripMargin,
+        |FROM n GROUP BY 1, 2 HAVING max(self) = 1""".stripMargin),
     // the region-group closure + one aggregate per converged label
-    "wro_zonal_geometry" ->
+    Query("wro_zonal_geometry", zonalGeometry,
       s"""WITH RECURSIVE $unitsGridSql,
         |cl AS (SELECT r, c, u % 7 AS cls, r * 100 + c AS k FROM g),
         |e AS (SELECT a.k AS u, b.k AS v
@@ -1941,10 +1896,10 @@ object WroQueries {
         |  min(cl.r) AS min_r, max(cl.r) AS max_r,
         |  min(cl.c) AS min_c, max(cl.c) AS max_c
         |FROM cl JOIN lbl ON lbl.o = cl.k
-        |GROUP BY 1, 2, 3""".stripMargin,
+        |GROUP BY 1, 2, 3""".stripMargin),
     // the flow-accumulation recursive walk + the slope stencil composed
     // from the SAME shared cents grid, identical cross-multiplied class
-    "wro_twi" ->
+    Query("wro_twi", twi,
       s"""WITH RECURSIVE $d8OracleCtes,
         |fd AS (SELECT r, c, code AS d8 FROM rk WHERE rn = 1 AND nn = 8),
         |off(code, dr, dc) AS (VALUES (1,0,1),(2,1,1),(4,1,0),(8,1,-1),
@@ -1976,10 +1931,10 @@ object WroQueries {
         |       (CASE WHEN a * a * 1000000 >= g2 * 100000 THEN 1 ELSE 0 END) +
         |       (CASE WHEN a * a * 1000000 >= g2 * 1000000 THEN 1 ELSE 0 END)
         |       AS INT) AS wet_class
-        |FROM t""".stripMargin,
+        |FROM t""".stripMargin),
     // both depth-counted walks in one WITH RECURSIVE; the inner join
     // is the both-reachable intersection
-    "wro_corridor" ->
+    Query("wro_corridor", corridor(_, _),
       s"""WITH RECURSIVE $classedGridSql,
         |o(dr, dc, w) AS (VALUES (-1,-1,4),(-1,0,3),(-1,1,4),(0,-1,3),
         |  (0,1,3),(1,-1,4),(1,0,3),(1,1,4)),
@@ -2000,13 +1955,13 @@ object WroQueries {
         |cb AS (SELECT r, c, CAST(min(d) AS BIGINT) AS cost_b
         |       FROM wb GROUP BY 1, 2)
         |SELECT ca.r, ca.c, cost_a, cost_b, cost_a + cost_b AS total34
-        |FROM ca JOIN cb ON cb.r = ca.r AND cb.c = ca.c""".stripMargin,
+        |FROM ca JOIN cb ON cb.r = ca.r AND cb.c = ca.c""".stripMargin),
     // the k-round Bellman-Ford replayed as a depth-counted recursive
     // walk: the recursive set holds every (≤10-edge path cost, cell)
     // state, so min(d) per cell = min over ≤10-edge paths — exactly
     // what k relaxation rounds compute; the g join enforces both
     // in-grid and PRESENT (NoData barrier)
-    "wro_cost_distance" ->
+    Query("wro_cost_distance", costDistance(_, _),
       s"""WITH RECURSIVE $classedGridSql,
         |o(dr, dc, w) AS (VALUES (-1,-1,4),(-1,0,3),(-1,1,4),(0,-1,3),
         |  (0,1,3),(1,-1,4),(1,0,3),(1,1,4)),
@@ -2017,12 +1972,12 @@ object WroQueries {
         |  FROM walk w, o, g
         |  WHERE w.i < 10 AND g.r = w.r + o.dr AND g.c = w.c + o.dc)
         |SELECT r, c, CAST(min(d) AS BIGINT) AS cost34
-        |FROM walk GROUP BY 1, 2""".stripMargin,
+        |FROM walk GROUP BY 1, 2""".stripMargin),
     // the cost field from the same depth-counted walk; the predecessor
     // function as a rank-1 window over valid (y, x) steps (independent
     // of Spark's min-packed aggregate — same total order), then a
     // linear recursive backtrace from the same argmax destination
-    "wro_least_cost_path" ->
+    Query("wro_least_cost_path", leastCostPath(_, _),
       s"""WITH RECURSIVE $classedGridSql,
         |o(dr, dc, w) AS (VALUES (-1,-1,4),(-1,0,3),(-1,1,4),(0,-1,3),
         |  (0,1,3),(1,-1,4),(1,0,3),(1,1,4)),
@@ -2051,11 +2006,11 @@ object WroQueries {
         |  WHERE pth.seq < 14)
         |SELECT pth.seq, pth.r, pth.c, cost.d AS cost34
         |FROM pth JOIN cost ON cost.r = pth.r AND cost.c = pth.c"""
-        .stripMargin,
+        .stripMargin),
     // the same depth-counted walk carrying the packed d·10^4+src key;
     // min(key) = min distance, ties to the smallest source id — the
     // identical total order the Spark side folds
-    "wro_allocation" ->
+    Query("wro_allocation", allocation(_, _),
       s"""WITH RECURSIVE $classedGridSql,
         |o(dr, dc, w) AS (VALUES (-1,-1,4),(-1,0,3),(-1,1,4),(0,-1,3),
         |  (0,1,3),(1,-1,4),(1,0,3),(1,1,4)),
@@ -2068,14 +2023,14 @@ object WroQueries {
         |m AS (SELECT r, c, min(key) AS key FROM walk GROUP BY 1, 2)
         |SELECT r, c, key // 10000 AS cost34,
         |  (key % 10000) // 100 AS src_r, key % 100 AS src_c
-        |FROM m""".stripMargin,
+        |FROM m""".stripMargin),
     // same integer even-odd ray cast; the edge list is pre-expanded
     // from the SAME shared polygon literal into plain integer VALUES
     // (DuckDB 1.0's LATERAL-over-struct-list path hits an internal
     // assertion). The oracle omits the bbox prefilter (pure pruning —
     // outside-bbox cells have even parity by construction), an
     // independent check that the prefilter drops nothing it shouldn't
-    "wro_polygon_zonal" ->
+    Query("wro_polygon_zonal", polygonZonal,
       s"""WITH pc AS (
         |  SELECT l_orderkey % 10000 AS cell_id,
         |    CAST(CAST(max(CAST(l_quantity AS DOUBLE)) AS DECIMAL(18,2)) * 100
@@ -2103,9 +2058,9 @@ object WroQueries {
         |  GROUP BY 1, 2, 3, 4)
         |SELECT poly_id, count(*) AS n_cells,
         |  CAST(sum(cents) AS BIGINT) AS sum_cents
-        |FROM cr WHERE k % 2 = 1 GROUP BY 1""".stripMargin,
+        |FROM cr WHERE k % 2 = 1 GROUP BY 1""".stripMargin),
     // the slope CTE + the same 29/70 cross-multiplied sector CASE
-    "wro_aspect" ->
+    Query("wro_aspect", aspect,
       """WITH pc AS (
         |  SELECT l_orderkey % 10000 AS cell_id,
         |    CAST(CAST(max(CAST(l_quantity AS DOUBLE)) AS DECIMAL(18,2)) * 100
@@ -2132,11 +2087,11 @@ object WroQueries {
         |    WHEN gx > 0 THEN CASE WHEN gy > 0 THEN 7 ELSE 1 END
         |    ELSE CASE WHEN gy > 0 THEN 5 ELSE 3 END
         |  END AS octant
-        |FROM sl""".stripMargin,
+        |FROM sl""".stripMargin),
     // the same ray decomposition: gcd by bounded divisor filter,
     // primitive-vector ray key, p/g angle (identical int64 inputs →
     // identical binary64 quotient), per-ray running-max window
-    "wro_viewshed" ->
+    Query("wro_viewshed", viewshed,
       """WITH pc AS (
         |  SELECT l_orderkey % 10000 AS cell_id,
         |    CAST(CAST(max(CAST(l_quantity AS DOUBLE)) AS DECIMAL(18,2)) * 100
@@ -2158,9 +2113,9 @@ object WroQueries {
         |    PARTITION BY udr, udc ORDER BY gd
         |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), -1e308)
         |    THEN 1 ELSE 0 END AS INT) AS vis
-        |FROM a""".stripMargin,
+        |FROM a""".stripMargin),
     // the same per-offset weight triples over the 3x3 stencil
-    "wro_curvature" ->
+    Query("wro_curvature", curvature,
       """WITH pc AS (
         |  SELECT l_orderkey % 10000 AS cell_id,
         |    CAST(CAST(max(CAST(l_quantity AS DOUBLE)) AS DECIMAL(18,2)) * 100
@@ -2187,10 +2142,10 @@ object WroQueries {
         |SELECT r, c, d2x, d2y, dxy4,
         |  CAST(CASE WHEN d2x + d2y > 0 THEN 1
         |       WHEN d2x + d2y < 0 THEN -1 ELSE 0 END AS INT) AS concavity
-        |FROM cv""".stripMargin,
+        |FROM cv""".stripMargin),
     // the additive doubling replayed as a LINEAR 16-step accumulating
     // walk over the same weighted self-looped pointer table
-    "wro_flow_length" ->
+    Query("wro_flow_length", flowLength(_, _),
       s"""WITH RECURSIVE $d8OracleCtes,
         |fd AS (SELECT r, c, code AS d8 FROM rk WHERE rn = 1 AND nn = 8),
         |off(code, dr, dc, w) AS (VALUES (1,0,1,3),(2,1,1,4),(4,1,0,3),
@@ -2211,10 +2166,10 @@ object WroQueries {
         |  FROM walk w JOIN p0 ON p0.u = w.cur WHERE w.i < 16),
         |f AS (SELECT u, cur, acc FROM walk WHERE i = 16)
         |SELECT u // 100 AS r, u % 100 AS c, CAST(acc AS BIGINT) AS len34
-        |FROM f JOIN sinks ON sinks.s = f.cur""".stripMargin,
+        |FROM f JOIN sinks ON sinks.s = f.cur""".stripMargin),
     // the 4-round doubling replayed as a LINEAR 16-step walk over the
     // same self-looped pointer table — next^16 two different ways
-    "wro_watershed" ->
+    Query("wro_watershed", watershed(_, _),
       s"""WITH RECURSIVE $d8OracleCtes,
         |fd AS (SELECT r, c, code AS d8 FROM rk WHERE rn = 1 AND nn = 8),
         |off(code, dr, dc) AS (VALUES (1,0,1),(2,1,1),(4,1,0),(8,1,-1),
@@ -2234,9 +2189,9 @@ object WroQueries {
         |f AS (SELECT u, cur FROM walk WHERE i = 16)
         |SELECT u // 100 AS r, u % 100 AS c,
         |  cur // 100 AS ws_r, cur % 100 AS ws_c
-        |FROM f JOIN sinks ON sinks.s = f.cur""".stripMargin,
+        |FROM f JOIN sinks ON sinks.s = f.cur""".stripMargin),
     // the slope CTE + the same squared cross-multiplied class CASE
-    "wro_hillshade" ->
+    Query("wro_hillshade", hillshade,
       """WITH pc AS (
         |  SELECT l_orderkey % 10000 AS cell_id,
         |    CAST(CAST(max(CAST(l_quantity AS DOUBLE)) AS DECIMAL(18,2)) * 100
@@ -2262,10 +2217,10 @@ object WroQueries {
         |       WHEN 16 * dot * dot >= 198 * 4 * n2 THEN 2
         |       WHEN 16 * dot * dot >= 198 * n2 THEN 1
         |       ELSE 0 END AS shade_class
-        |FROM d""".stripMargin,
+        |FROM d""".stripMargin),
     // 5-point stencil replayed with a VALUES offset join; min/max over
     // contributed classes is the any-different predicate on both sides
-    "wro_class_boundaries" ->
+    Query("wro_class_boundaries", classBoundaries,
       """WITH pc AS (
         |  SELECT l_orderkey % 10000 AS cell_id,
         |    max(CAST(l_quantity AS DOUBLE)) AS q
@@ -2283,10 +2238,10 @@ object WroQueries {
         |  min(CASE WHEN is_self = 1 THEN cls END) AS cls,
         |  CAST(min(cls) <> max(cls) AS INT) AS is_boundary
         |FROM n WHERE r BETWEEN 0 AND 99 AND c BETWEEN 0 AND 99
-        |GROUP BY 1, 2 HAVING max(is_self) = 1""".stripMargin,
+        |GROUP BY 1, 2 HAVING max(is_self) = 1""".stripMargin),
     // Horn kernel replayed as the same 3×3 weighted offset cross join;
     // HAVING count(*)=9 is the complete-neighborhood contract
-    "wro_slope" ->
+    Query("wro_slope", slope,
       """WITH pc AS (
         |  SELECT l_orderkey % 10000 AS cell_id,
         |    CAST(CAST(max(CAST(l_quantity AS DOUBLE)) AS DECIMAL(18,2)) * 100
@@ -2301,10 +2256,10 @@ object WroQueries {
         |SELECT r, c, CAST(sum(xc) AS BIGINT) AS gx,
         |       CAST(sum(yc) AS BIGINT) AS gy
         |FROM n WHERE r BETWEEN 0 AND 99 AND c BETWEEN 0 AND 99
-        |GROUP BY 1, 2 HAVING count(*) = 9""".stripMargin,
+        |GROUP BY 1, 2 HAVING count(*) = 9""".stripMargin),
     // same break formula as a9 (gate-proven floor-division binning);
     // cents snapped per-row BEFORE aggregation on both sides
-    "wro_zonal_stats" ->
+    Query("wro_zonal_stats", zonalStats,
       """WITH pc AS (
         |  SELECT l_orderkey % 10000 AS cell_id,
         |    max(CAST(l_quantity AS DOUBLE)) AS q,
@@ -2316,10 +2271,10 @@ object WroQueries {
         |  CAST(least(floor((q - mn) / ((mx - mn) / 5.0)), 4) AS INT) AS zone,
         |  count(*) AS n_cells, CAST(sum(cents) AS BIGINT) AS sum_cents,
         |  min(cents) AS min_cents, max(cents) AS max_cents
-        |FROM pc, s GROUP BY 1""".stripMargin,
+        |FROM pc, s GROUP BY 1""".stripMargin),
     // the same pushed-down selection: only input cells at (4R+2, 4C+2)
     // survive into the aggregate
-    "wro_resample_nearest" ->
+    Query("wro_resample_nearest", resampleNearest,
       s"""WITH pc AS (
          |  SELECT l_orderkey % 10000 AS cell_id,
          |    ${layers.map { case (n, src, _) =>
@@ -2334,8 +2289,8 @@ object WroQueries {
          |SELECT layer, (cell_id // 100) // 4 AS out_r,
          |  (cell_id % 100) // 4 AS out_c,
          |  CAST(CAST(value AS DECIMAL(18,4)) * 10000 AS BIGINT) AS v4
-         |FROM cells""".stripMargin,
-    "a9_histogram" ->
+         |FROM cells""".stripMargin),
+    Query("a9_histogram", a9Histogram,
       s"""WITH cells AS ($cellsSql),
          |stats AS (SELECT layer, min(value) AS mn, max(value) AS mx
          |          FROM cells GROUP BY layer)
@@ -2343,8 +2298,8 @@ object WroQueries {
          |  CAST(least(floor((c.value - s.mn) / ((s.mx - s.mn) / 5.0)), 4) AS INT) AS bin,
          |  count(*) AS n
          |FROM cells c JOIN stats s ON c.layer = s.layer
-         |GROUP BY 1, 2""".stripMargin,
-    "wro_overlay_nodata" ->
+         |GROUP BY 1, 2""".stripMargin),
+    Query("wro_overlay_nodata", overlayNoData,
       s"""$rangesSql,
          |weights AS (${layers.map { case (n, _, w) => s"SELECT '$n' AS layer, $w AS w10" }.mkString(" UNION ALL ")}),
          |masked AS (
@@ -2356,13 +2311,13 @@ object WroQueries {
          |  FROM masked c JOIN ranges r ON c.layer = r.layer AND c.value >= r.lo AND c.value < r.hi)
          |SELECT m.cell_id, CAST(sum(m.out * w.w10) AS BIGINT) AS score10, count(*) AS n_layers
          |FROM remapped m JOIN weights w ON m.layer = w.layer
-         |GROUP BY m.cell_id""".stripMargin,
+         |GROUP BY m.cell_id""".stripMargin),
     // plain-join replay of the salted plan — proves salt invariance
     // (and, under the _aqe key, that the adaptive skew split is
     // result-invariant too: both executions gate on the same replay)
-    "wro_overlay_skewed" -> skewedOracleSql,
-    "wro_overlay_skewed_aqe" -> skewedOracleSql,
-    "wro_overlay_flagship" ->
+    Query("wro_overlay_skewed", overlaySkewed, skewedOracleSql),
+    Query("wro_overlay_skewed_aqe", overlaySkewedAqe, skewedOracleSql),
+    Query("wro_overlay_flagship", flagship,
       s"""$rangesSql,
          |weights AS (${layers.map { case (n, _, w) => s"SELECT '$n' AS layer, $w AS w10" }.mkString(" UNION ALL ")}),
          |remapped AS (
@@ -2370,8 +2325,8 @@ object WroQueries {
          |  FROM cells c JOIN ranges r ON c.layer = r.layer AND c.value >= r.lo AND c.value < r.hi)
          |SELECT m.cell_id, CAST(sum(m.out * w.w10) AS BIGINT) AS score10, count(*) AS n_layers
          |FROM remapped m JOIN weights w ON m.layer = w.layer
-         |GROUP BY m.cell_id ORDER BY m.cell_id""".stripMargin,
-    "wro_layer_filter" ->
+         |GROUP BY m.cell_id ORDER BY m.cell_id""".stripMargin),
+    Query("wro_layer_filter", layerFilterGolden,
       """WITH layers(layer_id, name, long_name, is_raster, visible, is_web,
         |            dataset_type, datasource) AS (VALUES
         |  (1, 'elev', 'grp\elev', true, true, false, 'RasterDataset', 'd1'),
@@ -2393,17 +2348,17 @@ object WroQueries {
         |  AND instr(long_name, '\Boundary') <= 1
         |  AND instr(long_name, '\Footprint') <= 1
         |  AND instr(long_name, '\Image') <= 1
-        |QUALIFY row_number() OVER (PARTITION BY name ORDER BY layer_id) = 1""".stripMargin,
-    "f9_remap_expr" ->
+        |QUALIFY row_number() OVER (PARTITION BY name ORDER BY layer_id) = 1""".stripMargin),
+    Query("f9_remap_expr", remapExpr,
       s"""$rangesSql
          |SELECT c.cell_id, c.layer, r.out
          |FROM cells c JOIN ranges r
-         |  ON c.layer = r.layer AND c.value >= r.lo AND c.value < r.hi""".stripMargin,
-    "wro_classify_equal_interval" ->
+         |  ON c.layer = r.layer AND c.value >= r.lo AND c.value < r.hi""".stripMargin),
+    Query("wro_classify_equal_interval", classifyEqualInterval,
       s"""$rangesSql
          |SELECT layer, class_idx, label, lo, hi, out FROM ranges
-         |ORDER BY layer, class_idx""".stripMargin,
-    "wro_classify_unique" ->
+         |ORDER BY layer, class_idx""".stripMargin),
+    Query("wro_classify_unique", classifyUnique,
       """WITH v AS (SELECT DISTINCT CAST(l_linenumber AS DOUBLE) AS v FROM lineitem),
         |ordered AS (
         |  SELECT v, row_number() OVER (ORDER BY v) - 1 AS idx,
@@ -2411,8 +2366,8 @@ object WroQueries {
         |  FROM v)
         |SELECT CAST(idx AS INT) AS class_idx, CAST(v AS VARCHAR) AS label,
         |       v AS lo, coalesce(nxt, v + 1) AS hi, 5 AS out
-        |FROM ordered""".stripMargin,
-    "wro_classify_breaks" ->
+        |FROM ordered""".stripMargin),
+    Query("wro_classify_breaks", classifyBreaks,
       """WITH stats AS (
         |  SELECT min(CAST(l_quantity AS DOUBLE)) AS mn,
         |         max(CAST(l_quantity AS DOUBLE)) AS mx FROM lineitem),
@@ -2430,8 +2385,8 @@ object WroQueries {
         |SELECT CAST(class_idx AS INT) AS class_idx,
         |  CAST(lo AS VARCHAR) || ' to ' || CAST(hi AS VARCHAR) AS label,
         |  lo, hi, 5 AS out
-        |FROM ranges""".stripMargin,
-    "wro_classify_locale" ->
+        |FROM ranges""".stripMargin),
+    Query("wro_classify_locale", classifyLocale,
       """WITH items AS (
         |  SELECT DISTINCT
         |    '1,00' || CAST(l_linenumber AS VARCHAR) || '.5' AS value_str,
@@ -2447,8 +2402,8 @@ object WroQueries {
         |  FROM parsed)
         |SELECT CAST(idx AS INT) AS class_idx, l AS label, v AS lo,
         |       coalesce(nxt, v + 1) AS hi, 5 AS out
-        |FROM ordered""".stripMargin,
-    "wro_classify_labeljoin" ->
+        |FROM ordered""".stripMargin),
+    Query("wro_classify_labeljoin", classifyLabelJoin,
       """WITH rat AS (
         |  SELECT DISTINCT CAST(l_linenumber AS DOUBLE) AS v,
         |         'cls' || CAST(l_linenumber AS VARCHAR) AS field
@@ -2466,6 +2421,6 @@ object WroQueries {
         |  FROM joined)
         |SELECT CAST(idx AS INT) AS class_idx, clabel AS label,
         |       v AS lo, coalesce(nxt, v + 1) AS hi, 5 AS out
-        |FROM ordered""".stripMargin
+        |FROM ordered""".stripMargin)
   )
 }

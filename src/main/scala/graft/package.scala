@@ -38,11 +38,30 @@ package object graft {
     if (name == "events") rebuildEventTs(df) else df
   }
 
+  /** The session of the measurement and diagnostic mains: `local[n]`
+    * with n = SPARK_GRAFT_CPUS (else `defaultCpus`) cores and as many
+    * shuffle partitions, UTC, `nanosAsLong` (see [[table]]), no UI,
+    * ERROR logging — the confs the driver-contract mains (Bench,
+    * BenchFew, Verify) set on their own sessions. */
+  private[graft] def localSession(defaultCpus: Int): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus.toString)
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    spark
+  }
+
   /** Run `body` with `confs` applied, restoring the previous session
     * values afterwards — safe only when `body` EXECUTES the plan it
     * builds (lazy plans would otherwise run after the restore). The
     * iterative operators' loop scope ([[Fixpoint.scoped]]), the AQE skew
-    * demo (ops.WroQueries) and layout maintenance (ops.Layout) use it.
+    * demo (ops.WroQueries), layout maintenance (ops.Layout) and the
+    * file-rolling snapshot writes of snk22/snk26 (ops.RelQueries) use it.
     *
     * Confs are SESSION-GLOBAL: a plan materialized CONCURRENTLY on the
     * same SparkSession while `body` runs (another driver thread, a

@@ -7,7 +7,8 @@ import graft.catalog.SnapshotTable
 /** Pins that the service path learns metadata without Spark jobs, the
   * way PlanBudgetSpec pins exchanges: fixture tables take their schema
   * from parquet footers, commit stats come from the new files' footers,
-  * and an append names its partitions from its own write's listing. */
+  * an append names its partitions from its own write's listing, and a
+  * delete chain's key files are read under the table's recorded types. */
 class JobCountSpec extends SparkSpec {
 
   /** Spark jobs `body` starts on this thread (its own job group, so
@@ -51,5 +52,22 @@ class JobCountSpec extends SparkSpec {
       s"appendInto $append, pinned appendInto $pinned")
     assert(Seq(commit, append, pinned) == Seq(write, write, write))
     assert(SnapshotTable.readLatest(spark, root).count() == 6L)
+  }
+
+  test("building a read of a table with a delete chain runs no Spark job") {
+    import spark.implicits._
+    val root =
+      java.nio.file.Files.createTempDirectory("jobcount").toString + "/t"
+    val v0 = SnapshotTable.commitPartitioned(
+      (0L until 8L).map(i => (if (i % 2 == 0) "a" else "b", i, i * 10))
+        .toDF("p", "id", "v"), root, 0L, "p")
+    // two delete dirs on `id`, one on (v, p): two key-column groups
+    val v1 = SnapshotTable.commitDelete(Seq(1L).toDF("id"), root, v0, Seq("id"))
+    val v2 = SnapshotTable.commitDelete(Seq(2L).toDF("id"), root, v1, Seq("id"))
+    SnapshotTable.commitDelete(Seq(("a", 40L)).toDF("p", "v"), root, v2,
+      Seq("v"))
+    assert(jobs(SnapshotTable.readLatest(spark, root)) == 0)
+    assert(SnapshotTable.readLatest(spark, root).select("id").as[Long]
+      .collect().sorted.toSeq == Seq(0L, 3L, 5L, 6L, 7L))
   }
 }

@@ -3,12 +3,18 @@
 (writes <out>/<query>/ parquet + oracle_sql.json), then this script runs each
 oracle SQL in DuckDB over the same sf tables and compares.
 
-Usage: python3 tools/check.py <sfDir> <verifyOutDir>
+Every name in oracle_sql.json must have an output dir: a query that threw
+inside Verify writes none and FAILs here. A dumped query without oracle SQL
+FAILs too. Naming queries restricts the check to them (for a Verify dump
+restricted to the same names).
+
+Usage: python3 tools/check.py <sfDir> <verifyOutDir> [query ...]
 """
 import json, sys, glob, os
 import duckdb
 
 sfdir, outdir = sys.argv[1], sys.argv[2]
+only = set(sys.argv[3:])
 con = duckdb.connect()
 for t in ("region nation customer supplier part orders lineitem events "
           "documents embeddings").split():
@@ -17,18 +23,20 @@ for t in ("region nation customer supplier part orders lineitem events "
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
 
 oracle = json.load(open(f"{outdir}/oracle_sql.json"))
+dumped = {n for n in os.listdir(outdir)
+          if os.path.isdir(os.path.join(outdir, n))}
 fail = 0
-for name in sorted(os.listdir(outdir)):
+for name in sorted(only or (dumped | set(oracle))):
     d = os.path.join(outdir, name)
-    if not os.path.isdir(d):
-        continue
+    if name not in dumped:
+        print(f"FAIL {name}: no output dir (the query threw or was not run)")
+        fail += 1; continue
     files = glob.glob(f"{d}/*.parquet")
     if not files:
         print(f"FAIL {name}: no spark output"); fail += 1; continue
-    got = con.execute(f"SELECT * FROM '{files[0]}'").fetchdf()
     if name not in oracle:
-        print(f"ROWS-ONLY {name}: {len(got)} rows")
-        continue
+        print(f"FAIL {name}: no oracle SQL"); fail += 1; continue
+    got = con.execute(f"SELECT * FROM '{files[0]}'").fetchdf()
     try:
         exp = con.execute(oracle[name]).fetchdf()
     except Exception as e:

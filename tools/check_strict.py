@@ -34,10 +34,9 @@ for name in sorted(os.listdir(outdir)):
     files = glob.glob(f"{d}/*.parquet")
     if not files:
         print(f"FAIL {name}: no spark output"); fail += 1; continue
-    got = pq.read_table(files[0]).to_pandas()
     if name not in oracle:
-        print(f"ROWS-ONLY {name}: {len(got)} rows")
-        continue
+        print(f"FAIL {name}: no oracle SQL"); fail += 1; continue
+    got = pq.read_table(files[0]).to_pandas()
     try:
         exp = con.execute(oracle[name]).fetchdf()
     except Exception as e:
