@@ -20,27 +20,39 @@ object Classify {
   val defaultLabels: Seq[String] =
     Seq("Very Low", "Low", "Medium", "High", "Very High")
 
-  private val defaultLabelArr = array(defaultLabels.map(lit): _*)
-  private val defaultOutArr = array(defaultOutputValues.map(lit): _*)
-
   /** Equal-interval classification (makeInputRanges, pyt:895-938):
     * np.linspace(min, max, 6) -> 5 half-open pairs; the final upper bound
     * is max+1 so the true max lands inside a half-open range (pyt:934-935);
     * degenerate min==max collapses to a single range [min, min+1)
-    * (pyt:913-926). linspace point i = min + i*((max-min)/5). */
+    * (pyt:913-926). Built as a codegen'd `array(...)` of structs over the
+    * same bound points as [[equalIntervalBounds]]. */
   def equalInterval(mn: Column, mx: Column): Column = {
-    val step = (mx - mn) / lit(5.0)
-    val five = transform(sequence(lit(0), lit(4)), i => struct(
-      element_at(defaultLabelArr, i + 1).as("label"),
-      (mn + i.cast(DoubleType) * step).as("lo"),
-      when(i === 4, mx + lit(1.0))
-        .otherwise(mn + (i + 1).cast(DoubleType) * step).as("hi"),
-      element_at(defaultOutArr, i + 1).as("out")))
+    val b = points(mn, mx)
+    val five = array(defaultLabels.indices.map(i => struct(
+      lit(defaultLabels(i)).as("label"), b(i).as("lo"), b(i + 1).as("hi"),
+      lit(defaultOutputValues(i)).as("out"))): _*)
     val degenerate = array(struct(
       lit(defaultLabels.head).as("label"),
       mn.as("lo"), (mx + lit(1.0)).as("hi"),
       lit(defaultOutputValues.head).as("out")))
     when(mn === mx, degenerate).otherwise(five)
+  }
+
+  /** The n+1 sorted bounds of [[equalInterval]]'s ranges, the
+    * [[graft.functions.RangeRemap]] `bounds` argument: [min, max+1) when
+    * degenerate, else the six points. */
+  def equalIntervalBounds(mn: Column, mx: Column): Column =
+    when(mn === mx, array(mn, mx + lit(1.0))).otherwise(array(points(mn, mx): _*))
+
+  /** The outputs matching [[equalIntervalBounds]], RangeRemap's `outs`. */
+  def equalIntervalOuts(mn: Column, mx: Column): Column =
+    when(mn === mx, array(lit(defaultOutputValues.head)))
+      .otherwise(array(defaultOutputValues.map(lit): _*))
+
+  /** linspace point i = min + i*((max-min)/5) for i < 5, then max+1. */
+  private def points(mn: Column, mx: Column): Seq[Column] = {
+    val step = (mx - mn) / lit(5.0)
+    (0 until 5).map(i => mn + lit(i.toDouble) * step) :+ (mx + lit(1.0))
   }
 
   /** Classify-colorizer classification (makeDataFromClassifyColorizer,

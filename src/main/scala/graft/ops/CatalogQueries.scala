@@ -11,18 +11,12 @@ import org.apache.spark.sql.functions._
   * predicates as a golden table. */
 object CatalogQueries {
 
-  /** Cached per-cell aggregate (bounded ≤10k rows — the flagship's
-    * pattern): the catalog queries below derive the encoded catalog up to
-    * three times in one plan (old side, updated side, stats), and Spark's
-    * cache manager matches by canonicalized plan, so one cache() here
-    * collapses all of them onto a single fact-table scan. */
-  private def perCellCached(s: SparkSession, dir: String): DataFrame =
-    WroQueries.perCell(s, dir).cache()
-
   /** The derived catalog with comma-bearing labels ("<label>, b<idx>") so
-    * the RFC-4180 encoder's quote-wrapping is actually exercised. */
+    * the RFC-4180 encoder's quote-wrapping is actually exercised. Uncached:
+    * the per-cell exchange, then one wide 1-row stats aggregate
+    * ([[WroQueries.layerStats]]). */
   def catalogDecorated(s: SparkSession, dir: String): DataFrame =
-    WroQueries.catalogFrom(WroQueries.cellsFrom(perCellCached(s, dir)))
+    WroQueries.catalog(s, dir)
       .select(col("layer"),
         transform(col("ranges"), (r, i) => struct(
           concat(r("label"), lit(", b"), i.cast("string")).as("label"),
@@ -31,6 +25,16 @@ object CatalogQueries {
   /** R13/R14/R16: the encoded catalog table (stored string form). */
   def catalogEncoded(s: SparkSession, dir: String): DataFrame =
     Catalog.encode(catalogDecorated(s, dir))
+
+  /** The encoded catalog for a query whose plan reads the per-cell frame
+    * in two legs that keep different columns of it (MERGE and SCD-2: the
+    * union branches; the edit: its quantity stats), so the planner cannot
+    * reuse one leg's exchanges for the other: the frame is cached, and
+    * the cache manager substitutes it into every matching subtree. */
+  private def catalogEncodedCached(s: SparkSession, dir: String): DataFrame = {
+    WroQueries.perCell(s, dir).cache()
+    catalogEncoded(s, dir)
+  }
 
   /** R15/R16: decode(encode(catalog)) — the full storage round-trip,
     * exploded back to per-class rows for comparison against the direct
@@ -55,12 +59,12 @@ object CatalogQueries {
            lit(51.0).as("hi"), lit(8).as("out")))
 
   private def quantityStats(s: SparkSession, dir: String): DataFrame =
-    perCellCached(s, dir)
+    WroQueries.perCell(s, dir)
       .agg(min("quantity").as("mn"), max("quantity").as("mx"))
 
   /** R18 + V2/V3 (pyt:222-330): apply the edit to one catalog row. */
   def updateClassification(s: SparkSession, dir: String): DataFrame =
-    Catalog.updateClassification(catalogEncoded(s, dir), "quantity",
+    Catalog.updateClassification(catalogEncodedCached(s, dir), "quantity",
       editedRanges, quantityStats(s, dir))
 
   /** The multi-row MERGE updates: a reclassification for the existing
@@ -89,14 +93,14 @@ object CatalogQueries {
     * untouched keep — with a broadcast-updates plan on both union
     * branches ([[Catalog.mergeCatalog]]). */
   def mergeCatalog(s: SparkSession, dir: String): DataFrame =
-    Catalog.mergeCatalog(catalogEncoded(s, dir), mergeUpdates(s))
+    Catalog.mergeCatalog(catalogEncodedCached(s, dir), mergeUpdates(s))
 
   /** R18++ : SCD-2 versioned history — the same updates as the MERGE,
     * applied at t=2,000,000 us to a version-1 history seeded at
     * t=1,000,000: quantity's v1 closes and v2 opens, density opens at
     * v1, untouched layers stay current ([[Catalog.scd2Apply]]). */
   def catalogScd2(s: SparkSession, dir: String): DataFrame = {
-    val hist = catalogEncoded(s, dir)
+    val hist = catalogEncodedCached(s, dir)
       .withColumn("version", lit(1))
       .withColumn("valid_from_us", lit(1000000L))
       .withColumn("valid_to_us", lit(null).cast("long"))
@@ -151,8 +155,9 @@ object CatalogQueries {
     * in_memory table, one orphan row the lookup must not match); the
     * min/max come from the layer's cells, computed in-plan (pyt:303-304's
     * GetRasterProperties without the driver round-trip). Plan shape: two
-    * broadcast dimension joins over a single keyed aggregate of the fact
-    * table — the id lookup never touches fact rows. */
+    * broadcast dimension joins over the per-cell aggregate's wide stats
+    * row ([[WroQueries.layerStats]]) — the id lookup never touches fact
+    * rows. */
   def pathLookup(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val mosaic = Seq(("quantity", 101L), ("extendedprice", 102L),
@@ -162,8 +167,7 @@ object CatalogQueries {
       (102L, "c:\\data\\extendedprice.tif"),
       (103L, "c:\\data\\discount.tif"),
       (104L, "c:\\data\\orphan.tif")).toDF("p_oid", "path")
-    val stats = WroQueries.cells(s, dir).groupBy("layer")
-      .agg(min("value").as("mn"), max("value").as("mx"))
+    val stats = WroQueries.layerStats(WroQueries.perCell(s, dir))
     mosaic.join(broadcast(paths), col("source_oid") === col("p_oid"))
       .join(stats, col("name") === col("layer"))
       .select(col("name"), col("source_oid"), col("path"),

@@ -26,8 +26,8 @@ object WroQueries {
     * three layer columns in the same pass (map-side partial agg), BEFORE
     * unpivoting — the unpivot then runs over ≤10k rows instead of
     * inflating the pre-shuffle data 3×. Output is bounded by the cell_id
-    * domain (10k rows) at any scale factor, so it is safe to cache when a
-    * query needs the subtree twice (stats + remap). */
+    * domain (10k rows) at any scale factor: one row per cell, one column
+    * per layer (the wide per-cell frame every raster read starts from). */
   def perCell(spark: SparkSession, dir: String): DataFrame = {
     val aggs = layers.map { case (name, src, _) =>
       max(col(src).cast("double")).as(name) }
@@ -47,34 +47,79 @@ object WroQueries {
   def cells(spark: SparkSession, dir: String): DataFrame =
     cellsFrom(perCell(spark, dir))
 
+  /** Each layer's whole-raster (layer, mn, mx) from ONE wide global
+    * aggregate of the per-cell frame: a 1-row exchange, no unpivot. Like
+    * a group-by over the unpivoted cells, an empty raster has no rows. */
+  def layerStats(pc: DataFrame): DataFrame = {
+    val aggs = layers.flatMap { case (n, _, _) =>
+      Seq(min(n).as(s"mn_$n"), max(n).as(s"mx_$n")) }
+    pc.agg(count(lit(1)).as("cells"), aggs: _*).filter(col("cells") > 0)
+      .select(explode(array(layers.map { case (n, _, _) => struct(
+        lit(n).as("layer"), col(s"mn_$n").as("mn"), col(s"mx_$n").as("mx"))
+      }: _*)).as("s"))
+      .select("s.*")
+  }
+
   /** Decoded catalog derived from per-layer stats (R7/R9). */
-  def catalogFrom(cells: DataFrame): DataFrame =
-    cells
-      .groupBy("layer")
-      .agg(min("value").as("mn"), max("value").as("mx"))
-      .select(col("layer"),
-              Classify.equalInterval(col("mn"), col("mx")).as("ranges"))
+  def catalogFrom(pc: DataFrame): DataFrame =
+    layerStats(pc).select(col("layer"),
+      Classify.equalInterval(col("mn"), col("mx")).as("ranges"))
 
   def catalog(spark: SparkSession, dir: String): DataFrame =
-    catalogFrom(cells(spark, dir))
+    catalogFrom(perCell(spark, dir))
+
+  /** The per-cell frame with each named layer's whole-raster min and max
+    * beside it as `mn_<layer>` / `mx_<layer>`: windows over all cells,
+    * one single-partition exchange of ≤10k rows at any scale factor. Every
+    * per-cell raster read takes its stats here, in one pass over the
+    * frame — no cache, stats aggregate or broadcast join back. */
+  private[ops] def withStats(pc: DataFrame,
+                             names: Seq[String] = layers.map(_._1)): DataFrame = {
+    val all = org.apache.spark.sql.expressions.Window.partitionBy()
+    pc.select(col("*") +: names.flatMap(n => Seq(
+      min(n).over(all).as(s"mn_$n"), max(n).over(all).as(s"mx_$n"))): _*)
+  }
+
+  /** The a9/GIS2 equal-interval bin (0-4) of a layer over its
+    * [[withStats]] columns; the true max is clamped into the top bin. */
+  private def bin(n: String): org.apache.spark.sql.Column =
+    least(floor((col(n) - col(s"mn_$n")) /
+                ((col(s"mx_$n") - col(s"mn_$n")) / lit(5.0))), lit(4)).cast("int")
+
+  /** A layer's equal-interval remap out over its [[withStats]] columns:
+    * the codegen'd RangeRemap over [[Classify.equalIntervalBounds]]. */
+  private def remapped(n: String): org.apache.spark.sql.Column = {
+    val (mn, mx) = (col(s"mn_$n"), col(s"mx_$n"))
+    graft.functions.RangeRemap(col(n), Classify.equalIntervalBounds(mn, mx),
+      Classify.equalIntervalOuts(mn, mx))
+  }
+
+  /** The flagship overlay of a per-cell frame in one pass: per layer, the
+    * equal-interval remap over whole-raster stats, masked where the value
+    * falls in one of the layer's half-open NoData ranges; then the
+    * weighted sum as row arithmetic. */
+  private[ops] def overlayFrom(pc: DataFrame,
+      noData: Map[String, Seq[(Double, Double)]] = Map.empty): DataFrame =
+    WeightedOverlay.scoreWide(withStats(pc), layers.map { case (n, _, w) =>
+      val out = remapped(n)
+      val masked = noData.getOrElse(n, Nil)
+        .map { case (lo, hi) => col(n) >= lo && col(n) < hi }
+      (masked.reduceOption(_ || _).fold(out)(m => when(!m, out)), w)
+    })
 
   private def weights(spark: SparkSession): DataFrame = {
     import spark.implicits._
     layers.map { case (n, _, w) => (n, w) }.toDF("layer", "w10")
   }
 
-  /** Flagship (R31/J6/A7): equal-interval classify each layer, range-join
-    * cells to ranges (broadcast), weighted-sum to a per-cell score.
-    * The fact table is scanned/aggregated ONCE: the per-cell aggregate is
-    * cached (bounded ≤10k rows), and both the stats/classification branch
-    * and the remap branch reuse it. No global sort — the driver's compare
-    * is order-insensitive and the bench action is count(). */
-  def flagship(spark: SparkSession, dir: String): DataFrame = {
-    val cs = cellsFrom(perCell(spark, dir).cache())
-    WeightedOverlay(cs, catalogFrom(cs), weights(spark))
-      .select(col("cell_id"), col("score10").cast("long").as("score10"),
-              col("n_layers"))
-  }
+  /** Flagship (R31/J6/A7): equal-interval classify each layer, remap
+    * each cell's layer values, weighted-sum to a per-cell score — one
+    * pass over the wide per-cell frame ([[overlayFrom]]): the fact
+    * table's per-cell exchange, then the stats window's single-partition
+    * exchange of ≤10k rows. No global sort — the driver's compare is
+    * order-insensitive and the bench action is count(). */
+  def flagship(spark: SparkSession, dir: String): DataFrame =
+    overlayFrom(perCell(spark, dir))
 
   /** R31 NoData variant: the flagship overlay with per-layer NoData
     * masking (NoDataRanges, pyt:597 — declared by the reference with the
@@ -84,18 +129,12 @@ object WroQueries {
     * ranges match the flagship's and only the per-cell contributions
     * change: a masked (cell, layer) drops out of both score10 and
     * n_layers. */
-  def overlayNoData(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val cs = cellsFrom(perCell(spark, dir).cache())
-    val nd = Seq(("quantity", 10.0, 20.0), ("discount", 0.0, 0.02))
-      .toDF("layer", "lo", "hi")
-      .groupBy("layer")
-      .agg(collect_list(struct(col("lo"), col("hi"))).as("nd"))
-    WeightedOverlay(WeightedOverlay.maskNoData(cs, nd), catalogFrom(cs),
-        weights(spark))
-      .select(col("cell_id"), col("score10").cast("long").as("score10"),
-              col("n_layers"))
-  }
+  def overlayNoData(spark: SparkSession, dir: String): DataFrame =
+    overlayFrom(perCell(spark, dir), noData)
+
+  /** The NoData variant's per-layer half-open ranges. */
+  private val noData: Map[String, Seq[(Double, Double)]] =
+    Map("quantity" -> Seq((10.0, 20.0)), "discount" -> Seq((0.0, 0.02)))
 
   /** The skewed-overlay's planted OBSERVATION table: raw fact rows
     * unpivoted (no per-cell pre-aggregation) with a hot cell — rows
@@ -260,22 +299,17 @@ object WroQueries {
 
   /** A9 as explicit bin COUNTS (pyt:903 grounding — the raster histogram
     * behind classification): per-layer equi-width 5-bin histogram via a
-    * width_bucket-style expression. Stats ride a broadcast; the bin
-    * assignment is a map-side projection, so the only shuffle is the
-    * final keyed (layer, bin) count — ≤15 rows out at any scale. The
-    * true max is clamped into the top bin (half-open bins elsewhere). */
-  def a9Histogram(spark: SparkSession, dir: String): DataFrame = {
-    val cs = cellsFrom(perCell(spark, dir).cache())
-    val stats = cs.groupBy(col("layer").as("s_layer"))
-      .agg(min("value").as("mn"), max("value").as("mx"))
-    cs.join(broadcast(stats), col("layer") === col("s_layer"))
-      .select(col("layer"),
-        least(floor((col("value") - col("mn")) /
-                    ((col("mx") - col("mn")) / lit(5.0))), lit(4))
-          .cast("int").as("bin"))
+    * width_bucket-style expression. Stats come from the [[withStats]]
+    * window; each cell's three bins unpivot AFTER binning, so the last
+    * shuffle is the keyed (layer, bin) count — ≤15 rows out at any
+    * scale. The true max is clamped into the top bin (half-open bins
+    * elsewhere). */
+  def a9Histogram(spark: SparkSession, dir: String): DataFrame =
+    withStats(perCell(spark, dir))
+      .select(explode(map(layers.flatMap { case (n, _, _) =>
+        Seq(lit(n), bin(n)) }: _*)).as(Seq("layer", "bin")))
       .groupBy("layer", "bin")
       .agg(count(lit(1)).as("n"))
-  }
 
   /** The pseudo-raster as a 2-D grid: cell_id 0..9999 unfolds to a
     * 100×100 raster (row = cell_id div 100, col = cell_id % 100). The
@@ -328,23 +362,17 @@ object WroQueries {
     * zone↔value alignment is a projection — the cell-aligned raster
     * join that a band-per-table layout would need never materializes
     * (the multiband-storage dividend; at 100 TB this is the difference
-    * between zero and one fact-grain shuffle). The per-cell aggregate
-    * is cached: stats leg + zoning leg reuse it (multi-leg policy), and
-    * every post-cache exchange carries ≤10k bounded rows. */
-  def zonalStats(spark: SparkSession, dir: String): DataFrame = {
-    val pc = perCell(spark, dir).cache()
-    val stats = pc.agg(min("quantity").as("mn"), max("quantity").as("mx"))
-    pc.crossJoin(broadcast(stats))
-      .select(
-        least(floor((col("quantity") - col("mn")) /
-                    ((col("mx") - col("mn")) / lit(5.0))), lit(4))
-          .cast("int").as("zone"),
+    * between zero and one fact-grain shuffle). Stats and zoning are one
+    * pass: the [[withStats]] window, and every exchange after the
+    * per-cell one carries ≤10k bounded rows. */
+  def zonalStats(spark: SparkSession, dir: String): DataFrame =
+    withStats(perCell(spark, dir), Seq("quantity"))
+      .select(bin("quantity").as("zone"),
         (col("extendedprice").cast("decimal(18,2)") * 100).cast("long")
           .as("cents"))
       .groupBy("zone")
       .agg(count(lit(1)).as("n_cells"), sum("cents").as("sum_cents"),
            min("cents").as("min_cents"), max("cents").as("max_cents"))
-  }
 
   /** GIS3 — NEAREST-neighbor resampling, the one resampling mode the
     * reference permits (pyt:25, pyt:606, pyt:823 — suitability classes
@@ -587,18 +615,12 @@ object WroQueries {
   /** The classified raster shared by GIS10/GIS11: each present cell's
     * equal-interval class of the quantity layer (the a9/GIS2 break
     * formula — identical float arithmetic in both engines, gate-proven
-    * by wro_zonal_stats). One broadcast of the 1-row stats. */
-  private def classedGrid(spark: SparkSession, dir: String): DataFrame = {
-    // cached: the stats leg and the classing leg both read it (the
-    // flagship's multi-leg policy; bounded by the ≤10k cell domain)
-    val pc = perCell(spark, dir).cache()
-    val stats = pc.agg(min("quantity").as("mn"), max("quantity").as("mx"))
-    pc.crossJoin(broadcast(stats))
+    * by wro_zonal_stats), stats from the [[withStats]] window in the
+    * same pass. */
+  private def classedGrid(spark: SparkSession, dir: String): DataFrame =
+    withStats(perCell(spark, dir), Seq("quantity"))
       .select(expr("cell_id div 100").as("r"), (col("cell_id") % GridW).as("c"),
-        least(floor((col("quantity") - col("mn")) /
-                    ((col("mx") - col("mn")) / lit(5.0))), lit(4))
-          .cast("int").as("cls"))
-  }
+        bin("quantity").as("cls"))
 
   /** GIS10 — MAJORITY filter (Esri Majority Filter, the classed-raster
     * smoothing tool; GIS5 detected class boundaries, this cleans them):
@@ -1073,7 +1095,7 @@ object WroQueries {
     * classed-surface operation the reference's no-interpolation rule
     * pyt:25/606/823 exists to protect): a present cell is a boundary
     * cell iff any 4-neighbor carries a DIFFERENT class, classes = the
-    * a9/zonal gate-proven equal-interval binning of the quantity
+    * [[classedGrid]] (a9/zonal equal-interval) binning of the quantity
     * layer. Same contribute-to-neighbors shape as GIS1/GIS4 with a
     * 5-point (von Neumann) stencil: each classed cell fans out to the
     * ≤5 targets it informs, tagged is_self on its own cell; targets
@@ -1084,18 +1106,7 @@ object WroQueries {
     * any-different predicate — no pairwise neighbor comparison
     * materializes. Exchange bounded by the raster domain. */
   def classBoundaries(spark: SparkSession, dir: String): DataFrame = {
-    // cached: the bounded ≤10k-cell aggregate feeds both the stats leg
-    // and the classing leg (the zonal multi-leg policy)
-    val cs = perCell(spark, dir)
-      .select(expr("cell_id div 100").as("r"), (col("cell_id") % GridW).as("c"),
-        col("quantity").cast("double").as("q"))
-      .cache()
-    val stats = cs.agg(min("q").as("mn"), max("q").as("mx"))
-    val classed = cs.crossJoin(broadcast(stats))
-      .select(col("r"), col("c"),
-        least(floor((col("q") - col("mn")) /
-                    ((col("mx") - col("mn")) / lit(5.0))), lit(4))
-          .cast("int").as("cls"))
+    val classed = classedGrid(spark, dir)
     val offs = Seq((0L, 0L, 1), (-1L, 0L, 0), (1L, 0L, 0),
       (0L, -1L, 0), (0L, 1L, 0))
     classed.select(col("r"), col("c"), col("cls"),
@@ -1144,35 +1155,25 @@ object WroQueries {
     * tool: assign a unique id to every distinct COMBINATION of input
     * class values and emit the combination raster + its attribute
     * table): all three layers classed equal-interval (the a9/GIS2
-    * gate-proven break formula, per-layer stats from the same cached
-    * per-cell aggregate), then each distinct (cq, cp, cd) triple gets
-    * a dense id — Esri ids by first-scan order, which is
-    * nondeterministic under parallel scan, so the deterministic twin
-    * ids by the triple's sort order (dense_rank over the DISTINCT
-    * combination set: ≤125 rows, window cost bounded by the class
-    * domain, never the raster). The id table broadcasts back onto the
-    * cells. Emits (r, c, cq, cp, cd, combo_id, combo_n) — raster and
-    * attribute-table join in one frame. */
+    * gate-proven break formula, per-layer stats from the [[withStats]]
+    * window), then each distinct (cq, cp, cd) triple gets a dense id —
+    * Esri ids by first-scan order, which is nondeterministic under
+    * parallel scan, so the deterministic twin ids by the triple's sort
+    * order (dense_rank over the triples) and counts its cells. Both are
+    * windows over the stats window's single partition of ≤10k cells, so
+    * no further exchange plans. Emits (r, c, cq, cp, cd, combo_id,
+    * combo_n) — raster and attribute table in one frame. */
   def combine(spark: SparkSession, dir: String): DataFrame = {
-    val pc = perCell(spark, dir).cache()
-    val aggs = layers.flatMap { case (name, _, _) =>
-      Seq(min(col(name)).as(s"mn_$name"), max(col(name)).as(s"mx_$name")) }
-    val stats = pc.agg(aggs.head, aggs.tail: _*)
-    def cls(name: String) =
-      least(floor((col(name) - col(s"mn_$name")) /
-        ((col(s"mx_$name") - col(s"mn_$name")) / lit(5.0))), lit(4))
-        .cast("int")
-    val classed = pc.crossJoin(broadcast(stats))
+    val triple = Seq("cq", "cp", "cd")
+    val w = org.apache.spark.sql.expressions.Window
+    withStats(perCell(spark, dir))
       .select(expr("cell_id div 100").as("r"), (col("cell_id") % GridW).as("c"),
-        cls("quantity").as("cq"), cls("extendedprice").as("cp"),
-        cls("discount").as("cd"))
-    val combos = classed.groupBy("cq", "cp", "cd")
-      .agg(count(lit(1)).as("combo_n"))
-      .withColumn("combo_id", dense_rank().over(
-        org.apache.spark.sql.expressions.Window
-          .orderBy("cq", "cp", "cd")).cast("long"))
-    classed.join(broadcast(combos), Seq("cq", "cp", "cd"))
-      .select("r", "c", "cq", "cp", "cd", "combo_id", "combo_n")
+        bin("quantity").as("cq"), bin("extendedprice").as("cp"),
+        bin("discount").as("cd"))
+      .select(col("*"),
+        dense_rank().over(w.orderBy(triple.map(col): _*)).cast("long")
+          .as("combo_id"),
+        count(lit(1)).over(w.partitionBy(triple.map(col): _*)).as("combo_n"))
   }
 
   /** GIS25 — EXPAND (Esri Expand, the Generalization toolset's
@@ -1471,22 +1472,18 @@ object WroQueries {
   }
 
   /** F9/J6-phase-2 (SURVEY §7.4) as a declared query: the remap kernel
-    * WITHOUT a range join — per-layer sorted bounds + outs arrays ride a
-    * tiny broadcast, and the codegen'd [[graft.functions.RangeRemap]]
-    * binary-searches them inside whole-stage codegen. Result is identical
-    * to the join-based remap (the flagship path) by construction. */
-  def remapExpr(spark: SparkSession, dir: String): DataFrame = {
-    val cs = cellsFrom(perCell(spark, dir).cache())
-    val dim = catalogFrom(cs).select(
-      col("layer"),
-      concat(transform(col("ranges"), r => r("lo")),
-             array(element_at(col("ranges"), -1)("hi"))).as("bounds"),
-      transform(col("ranges"), r => r("out")).as("outs"))
-    cs.join(broadcast(dim), "layer")
-      .select(col("cell_id"), col("layer"),
-              graft.functions.RangeRemap(
-                col("value"), col("bounds"), col("outs")).as("out"))
-  }
+    * WITHOUT a range join — each layer's sorted bounds + outs arrays are
+    * built per row from the [[withStats]] window columns, and the
+    * codegen'd [[graft.functions.RangeRemap]] binary-searches them inside
+    * whole-stage codegen; (cell, layer, out) unpivots after the remap.
+    * Result is identical to the join-based remap by construction. */
+  def remapExpr(spark: SparkSession, dir: String): DataFrame =
+    remapFrom(perCell(spark, dir))
+
+  private[ops] def remapFrom(pc: DataFrame): DataFrame =
+    withStats(pc)
+      .select(col("cell_id"), explode(map(layers.flatMap { case (n, _, _) =>
+        Seq(lit(n), remapped(n)) }: _*)).as(Seq("layer", "out")))
 
   /** R9 as a declared query: the derived classification table itself. */
   def classifyEqualInterval(spark: SparkSession, dir: String): DataFrame =
@@ -1527,10 +1524,9 @@ object WroQueries {
     * paired through collection (struct list), so ordering is irrelevant. */
   def classifyLabelJoin(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val rat = table(spark, dir, "lineitem")
+    val rat = table(spark, dir, "lineitem").select("l_linenumber").distinct()
       .select(col("l_linenumber").cast("double").as("v"),
               concat(lit("cls"), col("l_linenumber")).as("field"))
-      .distinct()
     val colorizer = Seq(
       ("CLS1", "One"), ("CLS2", "Two"), ("CLS3", "Three"), ("CLS4", "Four"),
       ("CLS5", "Five"), ("CLS6", "Six"), ("CLS7", "Seven"))
@@ -1554,7 +1550,8 @@ object WroQueries {
     * inputs. */
   def classifyLocale(spark: SparkSession, dir: String): DataFrame = {
     val items = table(spark, dir, "lineitem")
-      .select(col("l_linenumber").cast("string").as("ln")).distinct()
+      .select("l_linenumber").distinct()
+      .select(col("l_linenumber").cast("string").as("ln"))
       .select(concat(lit("1,00"), col("ln"), lit(".5")).as("value_str"),
               concat(lit("elev 1,00"), col("ln"), lit(".5 m")).as("label_str"))
     val pairs = items.agg(collect_list(struct(

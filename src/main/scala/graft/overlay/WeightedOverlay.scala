@@ -7,12 +7,16 @@ import org.apache.spark.sql.functions._
   * whole reference toolbox prepares (README.md:2,9-11; fields pyt:596-600):
   * per cell, remap each layer's value through its half-open classification
   * ranges to a 0-9 suitability score, then combine layers as a weighted sum.
+  * Weights are integers scaled by 10 (w10) so the combined score is exact
+  * integer arithmetic at any scale.
   *
-  * Spark-first shape: the catalog/range side is dimension-sized (a handful
-  * of ranges per layer), so remap is a **broadcast** hash join on the layer
-  * key with the half-open range predicate as the join filter — one scan of
-  * the fact (cells) side, no shuffle. Weights are integers scaled by 10
-  * (w10) so the combined score is exact integer arithmetic at any scale.
+  * Two shapes. The long form (one row per cell and layer or per
+  * observation, [[remap]] + [[score]]): the catalog/range side is
+  * dimension-sized, so remap is a **broadcast** hash join on the layer key
+  * with the half-open range predicate as the join filter, and the score is
+  * a per-cell aggregate. The wide form (one row per cell, one remapped
+  * column per layer, [[scoreWide]]): the score is row arithmetic, with no
+  * join and no aggregate — the per-cell service reads use it.
   */
 object WeightedOverlay {
 
@@ -75,6 +79,20 @@ object WeightedOverlay {
       .groupBy(col(cellCol))
       .agg(sum(col("out") * col("w10")).as("score10"),
            count(lit(1)).cast("long").as("n_layers"))
+
+  /** The weighted sum as row arithmetic over a wide frame: `outs` pairs
+    * each layer's remapped out column (NULL where the cell has no value,
+    * no class or is masked) with its w10. score10 = Σ w10·out over the
+    * non-null outs, n_layers = their count; a cell with no out drops,
+    * as it has no remapped row in the long form. */
+  def scoreWide(wide: DataFrame, outs: Seq[(Column, Int)],
+                cellCol: String = "cell_id"): DataFrame =
+    wide.select(col(cellCol),
+        outs.map { case (o, w) => coalesce(o * w, lit(0)).cast("long") }
+          .reduce(_ + _).as("score10"),
+        outs.map { case (o, _) => o.isNotNull.cast("long") }
+          .reduce(_ + _).as("n_layers"))
+      .filter(col("n_layers") > 0)
 
   /** End-to-end overlay: cells (cellCol, layer, value) through a decoded
     * catalog and weights to per-cell scores. */

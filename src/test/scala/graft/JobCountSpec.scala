@@ -8,7 +8,8 @@ import graft.catalog.SnapshotTable
   * way PlanBudgetSpec pins exchanges: fixture tables take their schema
   * from parquet footers, commit stats come from the new files' footers,
   * an append names its partitions from its own write's listing, and a
-  * delete chain's key files are read under the table's recorded types. */
+  * delete chain's key files are read under the table's recorded types.
+  * Also pins the job count of the one-pass overlay reads. */
 class JobCountSpec extends SparkSpec {
 
   /** Spark jobs `body` starts on this thread (its own job group, so
@@ -28,6 +29,22 @@ class JobCountSpec extends SparkSpec {
     try { body; TestBus.drain(sc) }
     finally { sc.clearJobGroup(); sc.removeSparkListener(l) }
     n.get
+  }
+
+  /** Jobs per overlay read at sf0.01, build and collect() together: the
+    * per-cell exchange, the stats window's exchange and the result. */
+  private val readJobs = Seq("wro_overlay_flagship" -> 3,
+    "wro_overlay_nodata" -> 3, "f9_remap_expr" -> 3)
+
+  readJobs.foreach { case (name, pinned) =>
+    test(s"$name runs $pinned Spark jobs and holds no RDD after clearCache") {
+      val held = spark.sparkContext.getPersistentRDDs.size
+      val n = jobs(SparkEntry.queries(name)(spark, "/root/testdata/sf0.01")
+        .collect())
+      spark.catalog.clearCache()
+      assert(n == pinned)
+      assert(spark.sparkContext.getPersistentRDDs.size == held)
+    }
   }
 
   test("building graft.table runs no Spark job") {

@@ -47,9 +47,8 @@ class PlanBudgetSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   private val budgets: Seq[(String, Int)] = Seq(
-    // the cached per-cell aggregate's build + the per-layer stats agg;
-    // range+weight joins broadcast and the score agg reuses the cache's
-    // cell_id layout
+    // the per-cell aggregate + the stats window's single-partition
+    // exchange; remap and weighted sum are row arithmetic after it
     "wro_overlay_flagship" -> 2,
     // plain keyed agg: partial + final around one exchange
     "a2_groupby" -> 1,
@@ -68,8 +67,8 @@ class PlanBudgetSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     "d9_decontaminate" -> 2,
     // pure map-side filter
     "d7_stratified_sample" -> 0,
-    // the cached per-cell build + the dim's stats aggregate; the dim
-    // broadcasts into the codegen'd remap
+    // the flagship's two: per-cell aggregate + the stats window; the
+    // codegen'd remap and the unpivot are row-local
     "f9_remap_expr" -> 2,
     // one exchange on user_id; both windows and the session agg reuse it
     "w6_sessionize" -> 1,
@@ -123,11 +122,11 @@ class PlanBudgetSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     "q22_in_subquery" -> 3,
     // the one exchange IS the range partitioning (asserted below)
     "o1_sort" -> 1,
-    // catalog tools are fact-derived through perCellCached: the cached
-    // per-cell build + the per-layer stats agg (+ the quantity stats
-    // agg for the edit); the rewrite itself is broadcast projections.
-    // r4's 2.39 s layerinfo bench reading was noise — median-of-3 via
-    // BenchFew at sf0.1 is 0.56 s / 0.58 s for these two
+    // catalog tools are fact-derived: the per-cell aggregate + one wide
+    // 1-row stats agg; the edit, MERGE and SCD-2 cache the per-cell
+    // frame for their second leg (+1 agg). The rewrite itself is
+    // broadcast projections. r4's 2.39 s layerinfo bench reading was noise —
+    // median-of-3 via BenchFew at sf0.1 is 0.56 s / 0.58 s for these two
     "wro_update_layerinfo" -> 2,
     "wro_update_classification" -> 3,
     // MERGE = broadcast left join + broadcast anti join; the exchanges
@@ -272,8 +271,9 @@ class PlanBudgetSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     // per-cell agg + the focal target agg (contributions are 9x the
     // bounded raster, map-side combined)
     "wro_focal_stats" -> 2,
-    // cached per-cell build + 1-row stats agg + zone agg
-    "wro_zonal_stats" -> 3,
+    // per-cell agg + the stats window's single-partition exchange; the
+    // zone agg is already clustered by it
+    "wro_zonal_stats" -> 2,
     // selection pushed below the one per-cell exchange: 15/16 of fact
     // rows never shuffle
     "wro_resample_nearest" -> 1,
@@ -310,9 +310,9 @@ class PlanBudgetSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     // the checkpointed (source, hash) index hides its own distinct;
     // visible: the pair count (one leg broadcasts at gate SF)
     "d35_source_overlap" -> 1,
-    // cached per-cell build + 1-row stats agg + the 5-point stencil
-    // target agg; the focal/Horn exchange shape
-    "wro_class_boundaries" -> 3,
+    // per-cell agg + the classed grid's stats window; the 5-point
+    // stencil target agg runs in the window's single partition
+    "wro_class_boundaries" -> 2,
     // pure projection over the slope frame: no exchange beyond
     // slope's own two
     "wro_aspect" -> 2,
@@ -328,9 +328,10 @@ class PlanBudgetSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     // the ≤k-hop accumulation kernel materializes behind its window
     // checkpoint; the visible plan reads it
     "wro_flow_accumulation" -> 2,
-    // cached per-cell grid + 1-row stats agg + the two-level mode
-    // aggregate ((r,c,cls) counts then (r,c) fold) — all raster-bounded
-    "wro_majority_filter" -> 4,
+    // per-cell agg + the classed grid's stats window; the two-level mode
+    // aggregate ((r,c,cls) counts then (r,c) fold) runs in its single
+    // partition
+    "wro_majority_filter" -> 2,
     // the windowed chamfer kernel materializes behind ONE checkpoint;
     // the visible plan reads it
     "wro_cost_distance" -> 0,
@@ -433,12 +434,12 @@ class PlanBudgetSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     // the declared result is the driver-walked path as a LocalRelation;
     // the cost field and pred table materialize behind checkpoints
     "wro_least_cost_path" -> 0,
-    // cached per-cell build + 1-row stats agg + the distinct-triple
-    // agg + its bounded window + the broadcast attach
-    "wro_combine" -> 5,
-    // cached per-cell build + 1-row stats agg + the 3x3 target
-    // aggregate
-    "wro_expand" -> 3,
+    // per-cell agg + the stats window; the combo id and count windows
+    // reuse its single partition
+    "wro_combine" -> 2,
+    // per-cell agg + the classed grid's stats window; the 3x3 target
+    // aggregate runs in the window's single partition
+    "wro_expand" -> 2,
     // past the checkpointed CC labels: edge fan-out, label attach,
     // and the per-region aggregate
     "wro_zonal_geometry" -> 3,

@@ -10,6 +10,10 @@ sorting columns by name and rows by value — a stand-in for the driver's
 under check.py but FAILS here has a representation-level divergence the
 driver would flag.
 
+As in tools/check.py, every name in oracle_sql.json must have an output
+dir (a query that threw inside Verify writes none and FAILs), and naming
+queries restricts the check to them.
+
 Usage: python3 tools/check_strict.py <sfDir> <verifyOutDir> [query ...]
 """
 import json, sys, glob, os
@@ -26,11 +30,14 @@ for t in ("region nation customer supplier part orders lineitem events "
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
 
 oracle = json.load(open(f"{outdir}/oracle_sql.json"))
+dumped = {n for n in os.listdir(outdir)
+          if os.path.isdir(os.path.join(outdir, n))}
 fail = 0
-for name in sorted(os.listdir(outdir)):
+for name in sorted(only or (dumped | set(oracle))):
     d = os.path.join(outdir, name)
-    if not os.path.isdir(d) or (only and name not in only):
-        continue
+    if name not in dumped:
+        print(f"FAIL {name}: no output dir (the query threw or was not run)")
+        fail += 1; continue
     files = glob.glob(f"{d}/*.parquet")
     if not files:
         print(f"FAIL {name}: no spark output"); fail += 1; continue
