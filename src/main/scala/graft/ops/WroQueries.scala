@@ -50,7 +50,7 @@ object WroQueries {
   /** Each layer's whole-raster (layer, mn, mx) from ONE wide global
     * aggregate of the per-cell frame: a 1-row exchange, no unpivot. Like
     * a group-by over the unpivoted cells, an empty raster has no rows. */
-  def layerStats(pc: DataFrame): DataFrame = {
+  private[ops] def layerStats(pc: DataFrame): DataFrame = {
     val aggs = layers.flatMap { case (n, _, _) =>
       Seq(min(n).as(s"mn_$n"), max(n).as(s"mx_$n")) }
     pc.agg(count(lit(1)).as("cells"), aggs: _*).filter(col("cells") > 0)

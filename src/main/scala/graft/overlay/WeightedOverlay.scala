@@ -80,14 +80,14 @@ object WeightedOverlay {
       .agg(sum(col("out") * col("w10")).as("score10"),
            count(lit(1)).cast("long").as("n_layers"))
 
-  /** The weighted sum as row arithmetic over a wide frame: `outs` pairs
+  /** The weighted sum as row arithmetic over a wide frame keyed by
+    * `cell_id`: `outs` pairs
     * each layer's remapped out column (NULL where the cell has no value,
     * no class or is masked) with its w10. score10 = Σ w10·out over the
     * non-null outs, n_layers = their count; a cell with no out drops,
     * as it has no remapped row in the long form. */
-  def scoreWide(wide: DataFrame, outs: Seq[(Column, Int)],
-                cellCol: String = "cell_id"): DataFrame =
-    wide.select(col(cellCol),
+  def scoreWide(wide: DataFrame, outs: Seq[(Column, Int)]): DataFrame =
+    wide.select(col("cell_id"),
         outs.map { case (o, w) => coalesce(o * w, lit(0)).cast("long") }
           .reduce(_ + _).as("score10"),
         outs.map { case (o, _) => o.isNotNull.cast("long") }
