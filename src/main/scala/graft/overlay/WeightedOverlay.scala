@@ -81,9 +81,8 @@ object WeightedOverlay {
            count(lit(1)).cast("long").as("n_layers"))
 
   /** The weighted sum as row arithmetic over a wide frame keyed by
-    * `cell_id`: `outs` pairs
-    * each layer's remapped out column (NULL where the cell has no value,
-    * no class or is masked) with its w10. score10 = Σ w10·out over the
+    * `cell_id`: `outs` pairs each layer's remapped out column (NULL where
+    * the cell has no value, no class or is masked) with its w10. score10 = Σ w10·out over the
     * non-null outs, n_layers = their count; a cell with no out drops,
     * as it has no remapped row in the long form. */
   def scoreWide(wide: DataFrame, outs: Seq[(Column, Int)]): DataFrame =
