@@ -28,10 +28,10 @@ import org.apache.spark.sql.types.StringType
   * create tool populates only Title/RangeLabels/InputRanges/OutputValues
   * (updMoFields, pyt:879-886); the remaining declared fields stay null.
   *
-  * Scale posture: the layer table is dimension-sized; the only data-sized
-  * work is the per-layer min/max aggregation over `cells`, one shuffle
-  * keyed on the raster name. The dispatch itself is a projection —
-  * Catalyst folds the whole when-chain into the scan of the joined
+  * Scale posture: the layer table is dimension-sized, and so are the
+  * per-raster stats the caller derives (the catalog reads' one wide
+  * 1-row aggregate). The dispatch itself is a projection — Catalyst
+  * folds the whole when-chain into the scan of the joined
   * (layers × stats) dimension table. */
 object Mosaic {
 
@@ -53,10 +53,11 @@ object Mosaic {
     * is_web, dataset_type, datasource, extension, sourcetype,
     * colorizer_type, breaks array<double>, uvals array<double>,
     * ulabels array<string>.
-    * `cells` columns: (layer, value) — raster content keyed by the
-    * datasource file name (stats are computed per raster file, matching
-    * the reference's per-raster GetRasterProperties). */
-  def createMosaic(layerMeta: DataFrame, cells: DataFrame,
+    * `stats` columns: (layer, mn, mx) — each raster's min and max,
+    * keyed by the datasource file name (per raster file, matching the
+    * reference's per-raster GetRasterProperties); a raster with no row
+    * has no statistics. */
+  def createMosaic(layerMeta: DataFrame, stats: DataFrame,
                    visibleOnly: Boolean = true): DataFrame = {
     val filtered = graft.ops.WroQueries.layerFilter(layerMeta, visibleOnly)
       // basename after the last backslash (pyt:1186-1188); split is
@@ -66,14 +67,11 @@ object Mosaic {
       .withColumn("raster_file", stripExt(col("raster_file"), col("extension")))
       .withColumn("title", stripExt(col("name"), col("extension")))
 
-    val stats = cells.groupBy(col("layer").as("raster_file"))
-      .agg(min(col("value").cast("double")).as("mn"),
-           max(col("value").cast("double")).as("mx"))
-
     val unique = col("colorizer_type") === "RasterUniqueValueColorizer"
     val classify = col("colorizer_type") === "RasterClassifyColorizer"
     val dispatched = filtered
-      .join(stats, Seq("raster_file"), "left")
+      .join(stats.withColumnRenamed("layer", "raster_file"),
+        Seq("raster_file"), "left")
       // skips: vector sourcetypes (pyt:1247), unique colorizer without
       // values (pyt:1242 worked=False → continue; an EMPTY value list
       // also fails — createInputRangesForRemap pops from an empty list,

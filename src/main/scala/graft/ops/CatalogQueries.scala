@@ -231,7 +231,8 @@ object CatalogQueries {
       .toDF("layer_id", "name", "long_name", "is_raster", "visible",
             "is_web", "dataset_type", "datasource", "extension",
             "sourcetype", "colorizer_type", "breaks", "uvals", "ulabels")
-    val mosaic = Mosaic.createMosaic(meta, WroQueries.cells(s, dir))
+    val mosaic = Mosaic.createMosaic(meta,
+      WroQueries.layerStats(WroQueries.perCell(s, dir)))
     val sf = dir.replaceAll("[^0-9.]", "")
     val path = s"/tmp/graft_io/mosaic-$sf"
     mosaic.write.mode("overwrite").partitionBy("Name").parquet(path)

@@ -3,8 +3,9 @@ package graft.ops
 import graft._
 import graft.classify.Classify
 import graft.overlay.WeightedOverlay
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.reflect.runtime.universe.TypeTag
 
 /** Reference-native capability queries over the driver fixtures.
   *
@@ -28,10 +29,14 @@ object WroQueries {
     * inflating the pre-shuffle data 3×. Output is bounded by the cell_id
     * domain (10k rows) at any scale factor: one row per cell, one column
     * per layer (the wide per-cell frame every raster read starts from). */
-  def perCell(spark: SparkSession, dir: String): DataFrame = {
+  def perCell(spark: SparkSession, dir: String): DataFrame =
+    perCellOf(table(spark, dir, "lineitem"))
+
+  /** [[perCell]]'s aggregation over any subset of the fact rows. */
+  private def perCellOf(facts: DataFrame): DataFrame = {
     val aggs = layers.map { case (name, src, _) =>
       max(col(src).cast("double")).as(name) }
-    table(spark, dir, "lineitem")
+    facts
       .groupBy((col("l_orderkey") % 10000).as("cell_id"))
       .agg(aggs.head, aggs.tail: _*)
   }
@@ -43,9 +48,6 @@ object WroQueries {
       Seq(lit(name), col(name)) }
     pc.select(col("cell_id"), explode(map(kv: _*)).as(Seq("layer", "value")))
   }
-
-  def cells(spark: SparkSession, dir: String): DataFrame =
-    cellsFrom(perCell(spark, dir))
 
   /** Each layer's whole-raster (layer, mn, mx) from ONE wide global
     * aggregate of the per-cell frame: a 1-row exchange, no unpivot. Like
@@ -82,13 +84,13 @@ object WroQueries {
 
   /** The a9/GIS2 equal-interval bin (0-4) of a layer over its
     * [[withStats]] columns; the true max is clamped into the top bin. */
-  private def bin(n: String): org.apache.spark.sql.Column =
+  private def bin(n: String): Column =
     least(floor((col(n) - col(s"mn_$n")) /
                 ((col(s"mx_$n") - col(s"mn_$n")) / lit(5.0))), lit(4)).cast("int")
 
   /** A layer's equal-interval remap out over its [[withStats]] columns:
     * the codegen'd RangeRemap over [[Classify.equalIntervalBounds]]. */
-  private def remapped(n: String): org.apache.spark.sql.Column = {
+  private def remapped(n: String): Column = {
     val (mn, mx) = (col(s"mn_$n"), col(s"mx_$n"))
     graft.functions.RangeRemap(col(n), Classify.equalIntervalBounds(mn, mx),
       Classify.equalIntervalOuts(mn, mx))
@@ -324,35 +326,94 @@ object WroQueries {
     * least-cost path's predecessor table. */
   private val GridRows = GridW * GridW
 
+  /** The grid position (r, c) of a cell id, or of a key packed the same
+    * way (r·GridW + c): the one place a cell unfolds onto the grid. */
+  private def gridPos(id: Column): (Column, Column) =
+    (call_function("div", id, lit(GridW)), id % GridW)
+
+  /** A per-cell frame on the grid: (r, c) from its cell_id, then
+    * `values` — the grid frame every raster stencil starts from. */
+  private def onGrid(pc: DataFrame, values: Column*): DataFrame = {
+    val (r, c) = gridPos(col("cell_id"))
+    pc.select(Seq(r.as("r"), c.as("c")) ++ values: _*)
+  }
+
+  /** A layer as exact BIGINT cents (the money policy), so sums over it
+    * are exact under any aggregation order. */
+  private def cents(n: String): Column =
+    (col(n).cast("decimal(18,2)") * 100).cast("long").as("cents")
+
+  /** (r, c, cents): the quantity layer as exact cents on the grid. */
+  private def centsGrid(spark: SparkSession, dir: String): DataFrame =
+    onGrid(perCell(spark, dir), cents("quantity"))
+
+  /** The exact-units grid shared by the spatial-statistics gates
+    * (GIS17–GIS19): quantity is integral 1..50 in every fixture
+    * generation (verified at all SFs), so the per-cell max casts to
+    * BIGINT losslessly and every downstream moment/deviation product
+    * stays in exact int64 range (bounds documented per operator). */
+  private def unitsGrid(spark: SparkSession, dir: String): DataFrame =
+    onGrid(perCell(spark, dir), col("quantity").cast("long").as("u"))
+
+  /** The classified raster shared by GIS10/GIS11: each present cell's
+    * equal-interval class of the quantity layer (the a9/GIS2 break
+    * formula — identical float arithmetic in both engines, gate-proven
+    * by wro_zonal_stats), stats from the [[withStats]] window in the
+    * same pass. */
+  private def classedGrid(spark: SparkSession, dir: String): DataFrame =
+    onGrid(withStats(perCell(spark, dir), Seq("quantity")),
+      bin("quantity").as("cls"))
+
+  /** The 3×3 (Moore) neighbourhood offsets (dr, dc), self included. */
+  private[ops] val moore: Seq[(Long, Long)] =
+    for { dr <- -1L to 1L; dc <- -1L to 1L } yield (dr, dc)
+
+  /** The rook (4-neighbour) offsets. */
+  private[ops] val rook: Seq[(Long, Long)] =
+    Seq((0L, 1L), (0L, -1L), (1L, 0L), (-1L, 0L))
+
+  /** `offs` with a weight 1 on the (0, 0) self offset, 0 elsewhere. */
+  private def selfTagged(offs: Seq[(Long, Long)]): Seq[(Long, Long, Int)] =
+    offs.map { case (dr, dc) => (dr, dc, if (dr == 0L && dc == 0L) 1 else 0) }
+
+  /** The contribute-to-neighbours fan-out every single-pass raster
+    * stencil shares: each row of the grid frame `g` goes to the target
+    * (r + dr, c + dc) of every offset in `offs` — a tuple whose first
+    * two fields are (dr, dc) and whose further fields are per-offset
+    * weights, read back as `o._3`, `o._4`, … — carrying the `carry`
+    * columns; targets outside [0, GridW) are clipped. The |offs|× row
+    * inflation is of the bounded ≤GridW² raster, never of the fact
+    * table; the aggregate or join that folds contributions per target
+    * is the caller's. At 100 TB a tiled layout with an offset-radius
+    * halo keeps the same plan shuffle-free per tile. */
+  private[ops] def fanOut[T <: Product : TypeTag](g: DataFrame, offs: Seq[T],
+                                                  carry: String*): DataFrame = {
+    val kept = carry.map(col)
+    val o = explode(typedLit(offs)).as("o")
+    g.select(Seq(col("r"), col("c")) ++ kept :+ o: _*)
+      .select(Seq((col("r") + col("o._1")).as("r"),
+        (col("c") + col("o._2")).as("c")) ++ kept :+ col("o"): _*)
+      .filter(col("r").between(0, GridW - 1) && col("c").between(0, GridW - 1))
+  }
+
   /** GIS1 — FOCAL statistics (Esri Focal Statistics, 3×3 rectangle
     * neighborhood): per grid cell, the sum and count of the quantity
     * layer over the cell and its 8 neighbors. Spark-first shape: each
-    * present cell CONTRIBUTES to its 9 neighbors (two tiny generators,
-    * 9× row inflation of the BOUNDED ≤10k-cell raster — never of the
-    * fact table), then one hash aggregate with map-side partial combine
-    * folds contributions per target cell. At 100 TB the raster domain,
-    * not the fact table, bounds the focal exchange; a tiled layout
-    * (partition by tile, overlap = 1-cell halo) keeps the same plan
-    * shuffle-free per tile. Values snap to BIGINT cents before the sum
-    * (the money policy), so the focal sum is exact under any
-    * aggregation order. */
+    * present cell CONTRIBUTES to its 9 neighbors ([[fanOut]] over the
+    * [[moore]] offsets), then one hash aggregate with map-side partial
+    * combine folds contributions per target cell. At 100 TB the raster
+    * domain, not the fact table, bounds the focal exchange. Values are
+    * exact cents, so the focal sum is exact under any aggregation
+    * order. */
   def focalStats(spark: SparkSession, dir: String): DataFrame =
-    focalFrom(perCell(spark, dir)
-      .select(expr("cell_id div 100").as("r"), (col("cell_id") % GridW).as("c"),
-        (col("quantity").cast("decimal(18,2)") * 100).cast("long").as("cents")))
+    focalFrom(centsGrid(spark, dir))
 
   /** Focal core over a sparse grid (r, c, cents), exposed for the
     * hand-computed neighborhood spec. */
-  private[ops] def focalFrom(g: DataFrame): DataFrame = {
-    val off = typedLit(Seq(-1L, 0L, 1L))
-    g.select(col("r"), col("c"), col("cents"), explode(off).as("dr"))
-      .select((col("r") + col("dr")).as("r"), col("c"), col("cents"),
-        explode(off).as("dc"))
-      .select(col("r"), (col("c") + col("dc")).as("c"), col("cents"))
-      .filter(col("r").between(0, GridW - 1) && col("c").between(0, GridW - 1))
+  private[ops] def focalFrom(g: DataFrame): DataFrame =
+    fanOut(g, moore, "cents")
       .groupBy("r", "c")
       .agg(sum("cents").as("focal_sum"), count(lit(1)).as("n_nbr"))
-  }
 
   /** GIS2 — ZONAL statistics (Esri Zonal Statistics as Table): zones =
     * the quantity layer equal-interval-binned into 5 classes (the a9
@@ -367,9 +428,7 @@ object WroQueries {
     * per-cell one carries ≤10k bounded rows. */
   def zonalStats(spark: SparkSession, dir: String): DataFrame =
     withStats(perCell(spark, dir), Seq("quantity"))
-      .select(bin("quantity").as("zone"),
-        (col("extendedprice").cast("decimal(18,2)") * 100).cast("long")
-          .as("cents"))
+      .select(bin("quantity").as("zone"), cents("extendedprice"))
       .groupBy("zone")
       .agg(count(lit(1)).as("n_cells"), sum("cents").as("sum_cents"),
            min("cents").as("min_cents"), max("cents").as("max_cents"))
@@ -385,17 +444,13 @@ object WroQueries {
     * everything first). NoData (absent) input cells stay absent — exactly
     * NEAREST's no-interpolation contract. */
   def resampleNearest(spark: SparkSession, dir: String): DataFrame = {
-    val keep = expr("((l_orderkey % 10000) div 100) % 4 = 2") &&
-      expr("((l_orderkey % 10000) % 100) % 4 = 2")
-    val aggs = layers.map { case (name, src, _) =>
-      max(col(src).cast("double")).as(name) }
-    val pc = table(spark, dir, "lineitem").filter(keep)
-      .groupBy((col("l_orderkey") % 10000).as("cell_id"))
-      .agg(aggs.head, aggs.tail: _*)
-    cellsFrom(pc).select(col("layer"),
-      expr("(cell_id div 100) div 4").as("out_r"),
-      expr("(cell_id % 100) div 4").as("out_c"),
-      (col("value").cast("decimal(18,4)") * 10000).cast("long").as("v4"))
+    val (r, c) = gridPos(col("l_orderkey") % 10000)
+    val pc = perCellOf(table(spark, dir, "lineitem")
+      .filter(r % 4 === 2 && c % 4 === 2))
+    onGrid(cellsFrom(pc), col("layer"),
+        (col("value").cast("decimal(18,4)") * 10000).cast("long").as("v4"))
+      .select(col("layer"), expr("r div 4").as("out_r"),
+        expr("c div 4").as("out_c"), col("v4"))
   }
 
   /** GIS4 — SLOPE gradients (Horn 1981; the kernel behind the Esri
@@ -413,29 +468,20 @@ object WroQueries {
     * defined (Esri substitutes the center z) — the complete-
     * neighborhood restriction is the one contract every implementation
     * agrees on, and it is non-vacuous at gate SF (edge cells and cells
-    * ringing empty cells are suppressed). Same contribute-to-neighbors
-    * shape as GIS1: each present cell fans out to the ≤9 targets it
-    * influences carrying the weight the TARGET sees — a source at
-    * relative offset (−dr,−dc) from its target weighs
-    * wx = −dc·(2−|dr|), wy = −dr·(2−|dc|) — then ONE map-side-combined
-    * hash aggregate folds contributions. The exchange is bounded by the
-    * ≤10k-cell raster domain, never the fact table; at 100 TB a tiled
-    * layout with a 1-cell halo keeps the identical plan shuffle-free
-    * per tile. */
+    * ringing empty cells are suppressed). The [[fanOut]] shape of GIS1:
+    * each present cell fans out to the ≤9 targets it influences
+    * carrying the weight the TARGET sees — a source at relative offset
+    * (−dr,−dc) from its target weighs wx = −dc·(2−|dr|),
+    * wy = −dr·(2−|dc|) — then ONE map-side-combined hash aggregate
+    * folds contributions. The exchange is bounded by the ≤10k-cell
+    * raster domain, never the fact table. */
   def slope(spark: SparkSession, dir: String): DataFrame = {
-    val offs = for { dr <- -1L to 1L; dc <- -1L to 1L }
-      yield (dr, dc, -dc * (2 - math.abs(dr)), -dr * (2 - math.abs(dc)))
-    perCell(spark, dir)
-      .select(expr("cell_id div 100").as("r"), (col("cell_id") % GridW).as("c"),
-        (col("quantity").cast("decimal(18,2)") * 100).cast("long").as("cents"))
-      .select(col("r"), col("c"), col("cents"),
-        explode(typedLit(offs)).as("o"))
-      .select((col("r") + col("o._1")).as("r"), (col("c") + col("o._2")).as("c"),
-        (col("cents") * col("o._3")).as("xc"),
-        (col("cents") * col("o._4")).as("yc"))
-      .filter(col("r").between(0, GridW - 1) && col("c").between(0, GridW - 1))
+    val offs = moore.map { case (dr, dc) =>
+      (dr, dc, -dc * (2 - math.abs(dr)), -dr * (2 - math.abs(dc))) }
+    fanOut(centsGrid(spark, dir), offs, "cents")
       .groupBy("r", "c")
-      .agg(sum("xc").as("gx"), sum("yc").as("gy"), count(lit(1)).as("n"))
+      .agg(sum(col("cents") * col("o._3")).as("gx"),
+        sum(col("cents") * col("o._4")).as("gy"), count(lit(1)).as("n"))
       .filter(col("n") === 9)
       .select("r", "c", "gx", "gy")
   }
@@ -530,12 +576,6 @@ object WroQueries {
     }
   }
 
-  /** (r, c, cents): the quantity layer as exact cents on the grid. */
-  private def centsGrid(spark: SparkSession, dir: String): DataFrame =
-    perCell(spark, dir)
-      .select(expr("cell_id div 100").as("r"), (col("cell_id") % GridW).as("c"),
-        (col("quantity").cast("decimal(18,2)") * 100).cast("long").as("cents"))
-
   /** The oracle's generated D8 VALUES: (dr, dc) = target − source;
     * code/weight are the TARGET's view of the source (its neighbor at
     * (−dr, −dc)). */
@@ -612,16 +652,6 @@ object WroQueries {
     }
   }
 
-  /** The classified raster shared by GIS10/GIS11: each present cell's
-    * equal-interval class of the quantity layer (the a9/GIS2 break
-    * formula — identical float arithmetic in both engines, gate-proven
-    * by wro_zonal_stats), stats from the [[withStats]] window in the
-    * same pass. */
-  private def classedGrid(spark: SparkSession, dir: String): DataFrame =
-    withStats(perCell(spark, dir), Seq("quantity"))
-      .select(expr("cell_id div 100").as("r"), (col("cell_id") % GridW).as("c"),
-        bin("quantity").as("cls"))
-
   /** GIS10 — MAJORITY filter (Esri Majority Filter, the classed-raster
     * smoothing tool; GIS5 detected class boundaries, this cleans them):
     * each present cell's class is replaced by the most frequent class
@@ -630,9 +660,9 @@ object WroQueries {
     * threshold); otherwise the cell keeps its own class. Ties in the
     * frequency count take the smallest class — a22's
     * min(struct(−count, value)) mode, partially aggregable, no window.
-    * Shape: one contribute-to-neighbors fan-out over the 3×3 offsets
-    * with the (0,0) leg tagged SELF, then a two-level hash aggregate —
-    * (r, c, cls) counts, then per (r, c) the mode-over-neighbors and
+    * Shape: one [[fanOut]] over the 3×3 offsets with the (0,0) leg
+    * tagged SELF, then a two-level hash aggregate — (r, c, cls)
+    * counts, then per (r, c) the mode-over-neighbors and
     * the self class in the SAME pass (the self tag rides the count
     * rows, so the cell's own class needs no join back). NoData cells
     * neither vote nor emit. Exchanges: perCell's one + two raster-
@@ -643,15 +673,10 @@ object WroQueries {
   /** Majority-filter core over a classed sparse grid (r, c, cls),
     * exposed for the hand-computed neighborhood spec. */
   private[ops] def majorityFrom(classed: DataFrame): DataFrame = {
-    val offs = for { dr <- -1L to 1L; dc <- -1L to 1L }
-      yield (dr, dc, if (dr == 0L && dc == 0L) 1 else 0)
-    classed
-      .select(col("r"), col("c"), col("cls"), explode(typedLit(offs)).as("o"))
-      .select((col("r") + col("o._1")).as("r"), (col("c") + col("o._2")).as("c"),
-        col("cls"), col("o._3").as("self"))
-      .filter(col("r").between(0, GridW - 1) && col("c").between(0, GridW - 1))
+    val self = col("o._3")
+    fanOut(classed, selfTagged(moore), "cls")
       .groupBy("r", "c", "cls")
-      .agg(sum(lit(1) - col("self")).as("nbr_n"), max("self").as("has_self"))
+      .agg(sum(lit(1) - self).as("nbr_n"), max(self).as("has_self"))
       .groupBy("r", "c")
       .agg(
         max(when(col("has_self") === 1, col("cls"))).as("own_cls"),
@@ -743,7 +768,7 @@ object WroQueries {
     * route back to a source by repeatedly stepping to THE predecessor
     * — the neighbor y with d(y) + w(y→x) = d(x) (w = chamfer 3/4),
     * ties to the minimum packed d·10⁴ + key. The predecessor FUNCTION
-    * is built once as a table (one 8-offset fan-out + equality filter
+    * is built once as a table (one 8-offset [[fanOut]] + equality filter
     * + min-packed aggregate over the cost field — raster-domain
     * bounded, the relaxation invariant guarantees every non-source
     * reachable cell has one); the walk itself is a SINGLE-ROW pointer
@@ -768,22 +793,19 @@ object WroQueries {
     * emitting a truncated route as if complete. */
   def leastCostPath(spark: SparkSession, dir: String, k: Int = 10)
       : DataFrame = {
-    val offs = for { dr <- -1L to 1L; dc <- -1L to 1L; if dr != 0 || dc != 0 }
-      yield (dr, dc, if (dr == 0L || dc == 0L) 3L else 4L)
+    val offs = moore.filter(_ != ((0L, 0L))).map { case (dr, dc) =>
+      (dr, dc, if (dr == 0L || dc == 0L) 3L else 4L) }
     val cost = costDistance(spark, dir, k)
     val pred = Fixpoint.scoped(spark, GridRows) {
-      cost
-        .select(col("r").as("yr"), col("c").as("yc"),
-          col("cost34").as("yd"), explode(typedLit(offs)).as("o"))
-        .select((col("yr") + col("o._1")).as("r"),
-          (col("yc") + col("o._2")).as("c"),
-          col("yr"), col("yc"), col("yd"), col("o._3").as("w"))
+      val y = cost.select(col("r"), col("c"), col("r").as("yr"),
+        col("c").as("yc"), col("cost34").as("yd"))
+      val (pr, pc) = gridPos(col("pk") % 10000)
+      fanOut(y, offs, "yr", "yc", "yd")
         .join(broadcast(cost), Seq("r", "c"))
-        .filter(col("yd") + col("w") === col("cost34"))
+        .filter(col("yd") + col("o._3") === col("cost34"))
         .groupBy("r", "c")
         .agg(min(col("yd") * 10000 + col("yr") * 100 + col("yc")).as("pk"))
-        .select(col("r"), col("c"), expr("(pk % 10000) div 100").as("pr"),
-          (col("pk") % 100).as("pc"))
+        .select(col("r"), col("c"), pr.as("pr"), pc.as("pc"))
         .localCheckpoint()
     }
     // both collects are bounded by the raster domain (≤GridW² rows)
@@ -885,14 +907,14 @@ object WroQueries {
     * emitted UNDIVIDED in cents (the 1/cellsize² factors are monotone
     * post-scales; dividing would put floats in the gate), plus the
     * Laplacian concavity class sign(d2x + d2y) ∈ {−1, 0, 1} — Esri's
-    * convex/flat/concave classing. Same contribute-to-neighbors shape
-    * as GIS1/GIS4 with per-offset weight TRIPLES; one map-side-
-    * combined aggregate, raster-domain bounded. */
+    * convex/flat/concave classing. The [[fanOut]] of GIS1/GIS4 with
+    * per-offset weight TRIPLES; one map-side-combined aggregate,
+    * raster-domain bounded. */
   def curvature(spark: SparkSession, dir: String): DataFrame = {
     // weights the TARGET sees from a source at offset (−dr, −dc):
     // wx: E/W neighbors +1, center −2 | wy: N/S +1, center −2
     // wxy: corners −(−1)^... : NW/SE −1, NE/SW +1
-    val offs = for { dr <- -1L to 1L; dc <- -1L to 1L } yield {
+    val offs = moore.map { case (dr, dc) =>
       val (nr, nc) = (-dr, -dc)
       val wx = if (nr == 0L && nc != 0L) 1L
                else if (nr == 0L && nc == 0L) -2L else 0L
@@ -901,19 +923,11 @@ object WroQueries {
       val wxy = if (nr != 0L && nc != 0L) -nr * nc else 0L
       (dr, dc, wx, wy, wxy)
     }
-    perCell(spark, dir)
-      .select(expr("cell_id div 100").as("r"), (col("cell_id") % GridW).as("c"),
-        (col("quantity").cast("decimal(18,2)") * 100).cast("long").as("cents"))
-      .select(col("r"), col("c"), col("cents"),
-        explode(typedLit(offs)).as("o"))
-      .select((col("r") + col("o._1")).as("r"), (col("c") + col("o._2")).as("c"),
-        (col("cents") * col("o._3")).as("xc"),
-        (col("cents") * col("o._4")).as("yc"),
-        (col("cents") * col("o._5")).as("xyc"))
-      .filter(col("r").between(0, GridW - 1) && col("c").between(0, GridW - 1))
+    fanOut(centsGrid(spark, dir), offs, "cents")
       .groupBy("r", "c")
-      .agg(sum("xc").as("d2x"), sum("yc").as("d2y"),
-        sum("xyc").as("dxy4"), count(lit(1)).as("n"))
+      .agg(sum(col("cents") * col("o._3")).as("d2x"),
+        sum(col("cents") * col("o._4")).as("d2y"),
+        sum(col("cents") * col("o._5")).as("dxy4"), count(lit(1)).as("n"))
       .filter(col("n") === 9)
       .select(col("r"), col("c"), col("d2x"), col("d2y"), col("dxy4"),
         signum(col("d2x") + col("d2y")).cast("int").as("concavity"))
@@ -937,10 +951,7 @@ object WroQueries {
     * documented sparse-raster contract (Esri interpolates; classes
     * must not be, pyt:25/606/823). One exchange: the ray window. */
   def viewshed(spark: SparkSession, dir: String): DataFrame = {
-    val cells = perCell(spark, dir)
-      .select(expr("cell_id div 100").as("r"), (col("cell_id") % GridW).as("c"),
-        (col("quantity").cast("decimal(18,2)") * 100).cast("long").as("cents"))
-      .cache()
+    val cells = centsGrid(spark, dir).cache()
     val obs = cells.filter(col("r") === 50 && col("c") === 50)
       .select(col("cents").as("z0"))
     val gExpr = expr("""array_max(filter(sequence(1, 99),
@@ -1060,10 +1071,8 @@ object WroQueries {
       .select(col("poly_id"),
         expr("transform(vs0, p -> struct(p._1 AS x, p._2 AS y))").as("vs"),
         col("x_lo"), col("x_hi"), col("y_lo"), col("y_hi"))
-    val cells = perCell(spark, dir)
-      .select((col("cell_id") % GridW).as("px"),
-        expr("cell_id div 100").as("py"),
-        (col("quantity").cast("decimal(18,2)") * 100).cast("long").as("cents"))
+    val cells = centsGrid(spark, dir)
+      .select(col("c").as("px"), col("r").as("py"), col("cents"))
     val crossings = expr("""
       aggregate(sequence(1, size(vs)), 0, (acc, i) -> acc + (
         CASE WHEN (element_at(vs, i).y > py) !=
@@ -1096,27 +1105,21 @@ object WroQueries {
     * pyt:25/606/823 exists to protect): a present cell is a boundary
     * cell iff any 4-neighbor carries a DIFFERENT class, classes = the
     * [[classedGrid]] (a9/zonal equal-interval) binning of the quantity
-    * layer. Same contribute-to-neighbors shape as GIS1/GIS4 with a
-    * 5-point (von Neumann) stencil: each classed cell fans out to the
-    * ≤5 targets it informs, tagged is_self on its own cell; targets
-    * without a self contribution are NoData and drop (absent neighbors
-    * simply don't vote — a boundary against NoData is not a class
-    * boundary, the documented contract). One map-side-combined
+    * layer. The [[fanOut]] of GIS1/GIS4 with a 5-point (von Neumann)
+    * stencil: each classed cell fans out to the ≤5 targets it informs,
+    * tagged is_self on its own cell; targets without a self
+    * contribution are NoData and drop (absent neighbors simply don't
+    * vote — a boundary against NoData is not a class boundary, the
+    * documented contract). One map-side-combined
     * aggregate; min≠max over contributed classes IS the
     * any-different predicate — no pairwise neighbor comparison
     * materializes. Exchange bounded by the raster domain. */
   def classBoundaries(spark: SparkSession, dir: String): DataFrame = {
-    val classed = classedGrid(spark, dir)
-    val offs = Seq((0L, 0L, 1), (-1L, 0L, 0), (1L, 0L, 0),
-      (0L, -1L, 0), (0L, 1L, 0))
-    classed.select(col("r"), col("c"), col("cls"),
-        explode(typedLit(offs)).as("o"))
-      .select((col("r") + col("o._1")).as("r"), (col("c") + col("o._2")).as("c"),
-        col("cls"), col("o._3").as("is_self"))
-      .filter(col("r").between(0, GridW - 1) && col("c").between(0, GridW - 1))
+    val isSelf = col("o._3")
+    fanOut(classedGrid(spark, dir), selfTagged((0L, 0L) +: rook), "cls")
       .groupBy("r", "c")
-      .agg(max(col("is_self")).as("self_present"),
-           min(when(col("is_self") === 1, col("cls"))).as("own_cls"),
+      .agg(max(isSelf).as("self_present"),
+           min(when(isSelf === 1, col("cls"))).as("own_cls"),
            min(col("cls")).as("mn_cls"), max(col("cls")).as("mx_cls"))
       .filter(col("self_present") === 1)
       .select(col("r"), col("c"), col("own_cls").as("cls"),
@@ -1166,10 +1169,8 @@ object WroQueries {
   def combine(spark: SparkSession, dir: String): DataFrame = {
     val triple = Seq("cq", "cp", "cd")
     val w = org.apache.spark.sql.expressions.Window
-    withStats(perCell(spark, dir))
-      .select(expr("cell_id div 100").as("r"), (col("cell_id") % GridW).as("c"),
-        bin("quantity").as("cq"), bin("extendedprice").as("cp"),
-        bin("discount").as("cd"))
+    onGrid(withStats(perCell(spark, dir)), bin("quantity").as("cq"),
+        bin("extendedprice").as("cp"), bin("discount").as("cd"))
       .select(col("*"),
         dense_rank().over(w.orderBy(triple.map(col): _*)).cast("long")
           .as("combo_id"),
@@ -1182,22 +1183,16 @@ object WroQueries {
     * cell — a present cell's out class is 4 iff ANY cell in its 3×3
     * neighborhood carries class 4, else its own class. NoData cells
     * neither receive nor transmit (absent cells stay absent — Esri's
-    * contract). One contribute-to-neighbors fan-out with the self tag
-    * riding the same rows (the GIS10 shape): max(is4) over
-    * contributions is the any-predicate, no pairwise comparison
-    * materializes. */
+    * contract). One [[fanOut]] with the self tag riding the same rows
+    * (the GIS10 shape): max(is4) over contributions is the
+    * any-predicate, no pairwise comparison materializes. */
   def expand(spark: SparkSession, dir: String): DataFrame = {
-    val offs = for { dr <- -1L to 1L; dc <- -1L to 1L }
-      yield (dr, dc, if (dr == 0L && dc == 0L) 1 else 0)
-    classedGrid(spark, dir)
-      .select(col("r"), col("c"), col("cls"), explode(typedLit(offs)).as("o"))
-      .select((col("r") + col("o._1")).as("r"), (col("c") + col("o._2")).as("c"),
-        col("cls"), col("o._3").as("self"))
-      .filter(col("r").between(0, GridW - 1) && col("c").between(0, GridW - 1))
+    val self = col("o._3")
+    fanOut(classedGrid(spark, dir), selfTagged(moore), "cls")
       .groupBy("r", "c")
-      .agg(max(when(col("self") === 1, col("cls"))).as("own_cls"),
+      .agg(max(when(self === 1, col("cls"))).as("own_cls"),
         max(when(col("cls") === 4, 1).otherwise(0)).as("any4"),
-        max("self").as("present"))
+        max(self).as("present"))
       .filter(col("present") === 1)
       .select(col("r"), col("c"), col("own_cls"),
         when(col("any4") === 1, lit(4)).otherwise(col("own_cls"))
@@ -1221,16 +1216,6 @@ object WroQueries {
         min("r").as("min_r"), max("r").as("max_r"),
         min("c").as("min_c"), max("c").as("max_c"))
 
-  /** The exact-units grid shared by the spatial-statistics gates
-    * (GIS17–GIS19): quantity is integral 1..50 in every fixture
-    * generation (verified at all SFs), so the per-cell max casts to
-    * BIGINT losslessly and every downstream moment/deviation product
-    * stays in exact int64 range (bounds documented per operator). */
-  private def unitsGrid(spark: SparkSession, dir: String): DataFrame =
-    perCell(spark, dir)
-      .select(expr("cell_id div 100").as("r"), (col("cell_id") % GridW).as("c"),
-        col("quantity").cast("long").as("u"))
-
   /** GIS18 — global MORAN'S I components (the spatial-autocorrelation
     * statistic; Esri Spatial Autocorrelation / Global Moran's I tool):
     * with rook (4-neighbor) binary weights over PRESENT cells,
@@ -1242,7 +1227,7 @@ object WroQueries {
     * float mean ever enters the gate. Bounds: units ≤ 50, N ≤ 10⁴ ⇒
     * |dev| ≤ 5·10⁵, |dev_i·dev_j| ≤ 2.5·10¹¹, summed over ≤ 4·10⁴
     * directed rook pairs ≤ 10¹⁶ — int64-safe. Shape: one broadcast of
-    * the 1-row moment table, one 4-offset fan-out joined back to the
+    * the 1-row moment table, one [[rook]] [[fanOut]] joined back to the
     * deviation grid (raster-domain bounded), three scalar aggregates.
     * At 100 TB the pair join is a tiled halo exchange; nothing is
     * all-pairs — W is linear in cells, not quadratic. */
@@ -1253,12 +1238,7 @@ object WroQueries {
       .select(col("r"), col("c"),
         (col("n") * col("u") - col("s")).as("dev"), col("n"))
       .localCheckpoint()
-    val offs = Seq((0L, 1L), (0L, -1L), (1L, 0L), (-1L, 0L))
-    val pairs = d
-      .select(col("r"), col("c"), col("dev").as("da"),
-        explode(typedLit(offs)).as("o"))
-      .select((col("r") + col("o._1")).as("r"),
-        (col("c") + col("o._2")).as("c"), col("da"))
+    val pairs = fanOut(d.withColumnRenamed("dev", "da"), rook, "da")
       .join(d.select(col("r"), col("c"), col("dev").as("db")), Seq("r", "c"))
       .agg(count(lit(1)).as("w_pairs"), sum(col("da") * col("db")).as("num"))
     val den = d.agg(sum(col("dev") * col("dev")).as("den"))
@@ -1279,19 +1259,14 @@ object WroQueries {
     *   z² ≥ k²  ⟺  num²·(N−1) ≥ k²·den·(N·n_k − n_k²),
     * all BIGINT (num² ≤ 2.1·10¹³, ×(N−1) ≤ 2.1·10¹⁷; rhs ≤ 2·10¹⁷ at
     * k=3 — int64-safe), identical arithmetic in the oracle. Shape: the
-    * GIS1 contribute-to-neighbors fan-out for the focal sum (3×3, self
-    * included), one broadcast 1-row moment table, one projection. At
-    * 100 TB: tiled halo exchange, raster-domain bounded. */
+    * GIS1 [[fanOut]] for the focal sum (3×3, self included), one
+    * broadcast 1-row moment table, one projection. At 100 TB: tiled
+    * halo exchange, raster-domain bounded. */
   def giStar(spark: SparkSession, dir: String): DataFrame = {
     val g = unitsGrid(spark, dir).cache()
     val t = g.agg(count(lit(1)).as("n"), sum("u").as("s"),
       sum(col("u") * col("u")).as("ss"))
-    val offs = for { dr <- -1L to 1L; dc <- -1L to 1L } yield (dr, dc)
-    val focal = g
-      .select(col("r"), col("c"), col("u"), explode(typedLit(offs)).as("o"))
-      .select((col("r") + col("o._1")).as("r"),
-        (col("c") + col("o._2")).as("c"), col("u"))
-      .filter(col("r").between(0, GridW - 1) && col("c").between(0, GridW - 1))
+    val focal = fanOut(g, moore, "u")
       .groupBy("r", "c")
       .agg(sum("u").as("local"), count(lit(1)).as("nk"))
       // only PRESENT cells get a Gi* (semi join against the cached grid)
@@ -1319,26 +1294,19 @@ object WroQueries {
     * (num40 = Σ cents·40/d², den40 = Σ 40/d²) — num40/den40 is the
     * IDW value, a monotone post-divide. Cells with NO present
     * neighbor in radius 2 stay NoData (absent), Esri's search-radius
-    * contract. Shape: present cells fan out to their 24 targets
+    * contract. Shape: present cells [[fanOut]] to their 24 targets
     * (raster-domain bounded), one anti-join against the present set
     * keeps interpolation strictly on NoData ground, one aggregate. */
   def idw(spark: SparkSession, dir: String): DataFrame = {
-    val g = perCell(spark, dir)
-      .select(expr("cell_id div 100").as("r"), (col("cell_id") % GridW).as("c"),
-        (col("quantity").cast("decimal(18,2)") * 100).cast("long").as("cents"))
-      .cache()
+    val g = centsGrid(spark, dir).cache()
     val offs = for {
       dr <- -2L to 2L; dc <- -2L to 2L; if dr != 0 || dc != 0
     } yield (dr, dc, 40L / (dr * dr + dc * dc))
-    g.select(col("r"), col("c"), col("cents"),
-        explode(typedLit(offs)).as("o"))
-      .select((col("r") + col("o._1")).as("r"),
-        (col("c") + col("o._2")).as("c"),
-        (col("cents") * col("o._3")).as("wc"), col("o._3").as("w"))
-      .filter(col("r").between(0, GridW - 1) && col("c").between(0, GridW - 1))
+    fanOut(g, offs, "cents")
       .join(g.select("r", "c"), Seq("r", "c"), "left_anti")
       .groupBy("r", "c")
-      .agg(sum("wc").as("num40"), sum("w").as("den40"))
+      .agg(sum(col("cents") * col("o._3")).as("num40"),
+        sum(col("o._3")).as("den40"))
   }
 
   /** GIS21 — BILINEAR resampling (Esri Resample BILINEAR — the
@@ -1360,9 +1328,7 @@ object WroQueries {
     // (3−2i)·(3−2j) sixteenths
     val roles = for { i <- 0L to 1L; j <- 0L to 1L }
       yield (i, j, (3 - 2 * i) * (3 - 2 * j))
-    perCell(spark, dir)
-      .select(expr("cell_id div 100").as("r"), (col("cell_id") % GridW).as("c"),
-        (col("quantity").cast("decimal(18,2)") * 100).cast("long").as("cents"))
+    centsGrid(spark, dir)
       .select(col("r"), col("c"), col("cents"),
         explode(typedLit(roles)).as("o"))
       .filter((col("r") - 1 - col("o._1")) % 4 === 0 &&
@@ -1396,7 +1362,7 @@ object WroQueries {
     * smallest-cell-id labeling made deterministic. Isolated cells
     * (no same-class rook neighbor) are their own region via the
     * left-join coalesce — they never enter the edge set at all.
-    * Shape: one rook fan-out join builds the (undirected-once) edge
+    * Shape: one E/S [[fanOut]] join builds the (undirected-once) edge
     * set; the CC loop is per-round one keyed join+aggregate; one
     * final left join attaches labels. All raster-domain bounded. */
   def regionGroup(spark: SparkSession, dir: String): DataFrame = {
@@ -1406,22 +1372,18 @@ object WroQueries {
       .localCheckpoint()
     // undirected-once edges: each cell pairs with its E and S same-class
     // neighbors (covers all rook adjacencies exactly once)
-    val offs = Seq((0L, 1L), (1L, 0L))
-    val edges = g
-      .select(col("r"), col("c"), col("cls").as("cls_a"), col("k").as("ka"),
-        explode(typedLit(offs)).as("o"))
-      .select((col("r") + col("o._1")).as("r"),
-        (col("c") + col("o._2")).as("c"), col("cls_a"), col("ka"))
+    val a = g.select(col("r"), col("c"), col("cls").as("cls_a"),
+      col("k").as("ka"))
+    val edges = fanOut(a, Seq((0L, 1L), (1L, 0L)), "cls_a", "ka")
       .join(g.select(col("r"), col("c"), col("cls").as("cls_b"),
         col("k").as("kb")), Seq("r", "c"))
       .filter(col("cls_a") === col("cls_b"))
       .select("ka", "kb")
     val labels = graft.llm.Dedup.dedupClusters(edges, col("ka"), col("kb"))
+    val (regR, regC) = gridPos(coalesce(col("cluster_id"), col("k")))
     g.join(labels.withColumnRenamed("doc_id", "k"), Seq("k"), "left")
-      .select(col("r"), col("c"), col("cls"),
-        coalesce(col("cluster_id"), col("k")).as("reg"))
-      .select(col("r"), col("c"), col("cls"),
-        expr("reg div 100").as("reg_r"), (col("reg") % 100).as("reg_c"))
+      .select(col("r"), col("c"), col("cls"), regR.as("reg_r"),
+        regC.as("reg_c"))
   }
 
   /** R2 (pyt:710-745): the layer-filter chain — keep rasters, optionally
@@ -1489,7 +1451,7 @@ object WroQueries {
   def classifyEqualInterval(spark: SparkSession, dir: String): DataFrame =
     WeightedOverlay.explodeRanges(catalog(spark, dir))
 
-  private def explodeClasses(df: DataFrame, ranges: org.apache.spark.sql.Column): DataFrame =
+  private def explodeClasses(df: DataFrame, ranges: Column): DataFrame =
     df.select(posexplode(ranges).as(Seq("class_idx", "r")))
       .select(col("class_idx"), col("r.label").as("label"),
               col("r.lo").as("lo"), col("r.hi").as("hi"), col("r.out").as("out"))

@@ -25,9 +25,10 @@ class MosaicSpec extends SparkSpec {
       "colorizer_type", "breaks", "uvals", "ulabels")
   }
 
-  private def cellsDf(rows: (String, Double)*) = {
+  /** Per-raster (layer, mn, mx) stats, as the catalog reads derive. */
+  private def statsDf(rows: (String, Double, Double)*) = {
     import spark.implicits._
-    rows.toDF("layer", "value")
+    rows.toDF("layer", "mn", "mx")
   }
 
   test("extension strips only a matching suffix; file name from basename") {
@@ -37,9 +38,9 @@ class MosaicSpec extends SparkSpec {
       metaRow(2, "btif", "c:\\d\\btif", "tif", "GENERIC"),
       // empty extension -> untouched even though name has a dot
       metaRow(3, "c.img", "c:\\d\\c.img", "", "GENERIC")))
-    val cells = cellsDf(("a", 1.0), ("a", 9.0), ("btif", 1.0), ("btif", 9.0),
-      ("c.img", 1.0), ("c.img", 9.0))
-    val out = Mosaic.createMosaic(meta, cells)
+    val stats = statsDf(("a", 1.0, 9.0), ("btif", 1.0, 9.0),
+      ("c.img", 1.0, 9.0))
+    val out = Mosaic.createMosaic(meta, stats)
       .select("Name", "Title").collect()
       .map(r => (r.getString(0), r.getString(1))).toSet
     assert(out == Set(("a", "a"), ("btif", "btif"), ("c.img", "c.img")))
@@ -52,8 +53,8 @@ class MosaicSpec extends SparkSpec {
         colorizer = "RasterUniqueValueColorizer",
         uvals = Some(Seq(1.0)), ulabels = Some(Seq("x"))),
       metaRow(3, "ok", "c:\\d\\ok", "", "GENERIC")))
-    val cells = cellsDf(("u", 1.0), ("m", 1.0), ("ok", 1.0), ("ok", 5.0))
-    val names = Mosaic.createMosaic(meta, cells)
+    val stats = statsDf(("u", 1.0, 1.0), ("m", 1.0, 1.0), ("ok", 1.0, 5.0))
+    val names = Mosaic.createMosaic(meta, stats)
       .select("Name").collect().map(_.getString(0)).toSet
     assert(names == Set("ok"))
   }
@@ -79,13 +80,14 @@ class MosaicSpec extends SparkSpec {
       metaRow(5, "be", "c:\\d\\be", "", "GENERIC",
         colorizer = "RasterClassifyColorizer",
         breaks = Some(Seq.empty))))
-    val cells = cellsDf(("u", 1.0), ("ue", 1.0), ("bn", 1.0), ("be", 1.0))
-    assert(Mosaic.createMosaic(meta, cells).count() == 0)
+    val stats = statsDf(("u", 1.0, 1.0), ("ue", 1.0, 1.0), ("bn", 1.0, 1.0),
+      ("be", 1.0, 1.0))
+    assert(Mosaic.createMosaic(meta, stats).count() == 0)
   }
 
   test("no-stats stretch layer gets the fixed fallback catalog row") {
     val meta = toMeta(Seq(metaRow(1, "n", "c:\\d\\n", "", "GENERIC")))
-    val row = Mosaic.createMosaic(meta, cellsDf()).collect().head
+    val row = Mosaic.createMosaic(meta, statsDf()).collect().head
     assert(row.getAs[String]("InputRanges") ==
       "1.0,50.0,50.0,100.0,100.0,150.0,150.0,200.0,200.0,256.0")
     assert(row.getAs[String]("OutputValues") == "1,3,5,7,9")
@@ -95,7 +97,7 @@ class MosaicSpec extends SparkSpec {
 
   test("every mosaic row carries the constant web-mercator crs (pyt:629)") {
     val meta = toMeta(Seq(metaRow(1, "n", "c:\\d\\n", "", "GENERIC")))
-    val row = Mosaic.createMosaic(meta, cellsDf()).collect().head
+    val row = Mosaic.createMosaic(meta, statsDf()).collect().head
     assert(row.getAs[String]("crs") == "EPSG:3857")
   }
 }

@@ -2,15 +2,32 @@ package graft.ops
 
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
+import org.scalatest.BeforeAndAfterAll
 
 /** Semantics tests for the GIS raster-algebra queries (focal/zonal
   * statistics, NEAREST resampling). The oracle gate proves fixture
   * equality; these prove the neighborhood/selection semantics on inputs
   * where each edge — grid corner, sparse NoData hole, center-sample
   * index — is load-bearing. */
-class GisQueriesSpec extends SparkSpec {
+class GisQueriesSpec extends SparkSpec with BeforeAndAfterAll {
 
   private val dir = "/root/testdata/sf0.001"
+
+  private var heldBefore = Set.empty[Int]
+
+  override def beforeAll(): Unit = {
+    super.beforeAll()
+    heldBefore = spark.sparkContext.getPersistentRDDs.keySet.toSet
+  }
+
+  /** The tile kernels materialize through local checkpoints, which
+    * clearCache() does not drop: release the ones this suite made, so
+    * the next suite starts from the blocks it found. */
+  override def afterAll(): Unit =
+    try {
+      spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
+        if (!heldBefore(id)) rdd.unpersist(blocking = true) }
+    } finally super.afterAll()
 
   test("focal: 3x3 contributions, corner clipping, NoData holes") {
     import spark.implicits._
@@ -33,6 +50,30 @@ class GisQueriesSpec extends SparkSpec {
     // exact target census: the corner pair reaches {0,1}x{0,2} = 6
     // in-grid cells after clipping, the isolated cell reaches 9
     assert(got.size == 6 + 9)
+  }
+
+  test("fan-out: exactly the in-grid targets, on every edge and corner") {
+    import spark.implicits._
+    // corners, edge cells, cells one in from an edge, and the center
+    val at = Seq(0L, 1L, 50L, 98L, 99L)
+    val cells = for (r <- at; c <- at) yield (r, c)
+    val g = cells.map { case (r, c) => (r, c, r * 100 + c) }.toDF("r", "c", "k")
+    val radius2 = for { dr <- -2L to 2L; dc <- -2L to 2L } yield (dr, dc)
+    val inGrid = (v: Long) => v >= 0 && v < 100
+    for ((name, offs) <- Seq("moore" -> WroQueries.moore,
+                             "rook" -> WroQueries.rook, "radius-2" -> radius2)) {
+      val got = WroQueries.fanOut(g, offs, "k").collect().toSeq
+        .map { x => val o = x.getStruct(3)
+          (x.getLong(2), x.getLong(0), x.getLong(1), o.getLong(0), o.getLong(1))
+        }.sorted
+      val exp = (for { (r, c) <- cells; (dr, dc) <- offs
+                       if inGrid(r + dr) && inGrid(c + dc) }
+        yield (r * 100 + c, r + dr, c + dc, dr, dc)).sorted
+      assert(got == exp, name)
+      assert(got.forall { case (_, r, c, _, _) => inGrid(r) && inGrid(c) }, name)
+      // the clip is exercised: some targets fell outside the grid
+      assert(exp.size < cells.size * offs.size, name)
+    }
   }
 
   test("zonal: zones partition the cells, aggregates are consistent") {

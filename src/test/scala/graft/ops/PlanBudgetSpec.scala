@@ -138,8 +138,9 @@ class PlanBudgetSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     "wro_catalog_scd2" -> 3,
     // code-assignment (vec_id, j) reduce + ADC per-vector sum + top-k
     "d16_pq_topk" -> 3,
-    // sketch 1-row agg + candidate recount + the total-count 1-row agg
-    "a15_heavy_hitters" -> 3,
+    // sketch 1-row agg + candidate recount; the total count rides the
+    // broadcast sketch row
+    "a15_heavy_hitters" -> 2,
     "a16_conditional_agg" -> 1,
     // all three grouping sets expand inside ONE aggregate
     "a17_grouping_sets" -> 1,
@@ -194,10 +195,9 @@ class PlanBudgetSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     // batch partial agg + the group-sized merge re-aggregation; the
     // view write is its own job
     "a19_incremental_mv" -> 2,
-    // und/deg/oriented checkpointed (each feeds 2-5 plan legs);
-    // visible: the wedge self-join pair, the closure semi-join, and
-    // the 1-row count merges
-    "d24_triangles" -> 5,
+    // the counts materialize behind a checkpoint (und/deg/oriented feed
+    // 2-5 legs each); the visible plan scans it
+    "d24_triangles" -> 0,
     // ONE explicit user_id exchange serves both windows (hash(user_id)
     // clusters (user_id, event_type) too)
     "w11_running_distinct" -> 1,
@@ -206,9 +206,10 @@ class PlanBudgetSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     // checkpointed purchase set; AQE broadcasts the candidate join at
     // gate SF (at 100 TB it shuffles on the bucket id — an equi-join)
     "j15_epsilon_join" -> 0,
-    // closure rounds hide behind dedupClusters' checkpoints; the one
-    // visible exchange is the per-family keep-best aggregate
-    "d25_dedup_keepbest" -> 1,
+    // closure rounds hide behind dedupClusters' checkpoints; the
+    // per-family keep-best aggregate reads the one-partition label
+    // checkpoint at gate SF and plans no exchange of its own
+    "d25_dedup_keepbest" -> 0,
     // broadcast join + DPP leave one exchange: the event_type aggregate
     "j16_dpp_join" -> 1,
     // semdedup hides behind its members checkpoint; visible: pair join +
@@ -320,14 +321,14 @@ class PlanBudgetSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     // and the ray cast folds in-row (no edge explode)
     "wro_polygon_zonal" -> 2,
     // the D8 kernel materializes behind its window checkpoint; the
-    // visible plan reads it
-    "wro_flow_direction" -> 3,
+    // visible plan reads it and adds no exchange
+    "wro_flow_direction" -> 0,
     // the versioned dim broadcasts; the one exchange is the final
     // accounting aggregate — the fact never shuffles for the lookup
     "j20_temporal_lookup" -> 1,
     // the ≤k-hop accumulation kernel materializes behind its window
-    // checkpoint; the visible plan reads it
-    "wro_flow_accumulation" -> 2,
+    // checkpoint; the visible plan reads it and adds no exchange
+    "wro_flow_accumulation" -> 0,
     // per-cell agg + the classed grid's stats window; the two-level mode
     // aggregate ((r,c,cls) counts then (r,c) fold) runs in its single
     // partition
@@ -364,7 +365,7 @@ class PlanBudgetSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     "w18_mann_kendall" -> 1,
     // the windowed D8 walk materializes behind its checkpoint; the
     // visible plan is a projection of it
-    "wro_watershed" -> 1,
+    "wro_watershed" -> 0,
     // four independent signal families (gopher tokens, classifier
     // buckets, langid lexicon+votes, line census) each pay their keyed
     // aggregates, then the wide doc_id join — 10 total, each bounded
@@ -384,11 +385,12 @@ class PlanBudgetSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     // visible past the checkpointed family table: the split/audit
     // aggregates; the closure's rounds hide behind their checkpoints
     "pipe_split_assign" -> 5,
-    // two bag set-ops (multiplicity aggregates both sides) + regroups
-    "o8_setops_all" -> 6,
-    // two global rank windows over the 1k-row dim — single-partition
-    // sorts the dim's size makes trivial
-    "o9_null_ordering" -> 2,
+    // one multiplicity aggregate per bag set-op; each regroup reuses
+    // its nationkey layout
+    "o8_setops_all" -> 2,
+    // two global rank windows over the 1k-row dim share one
+    // single-partition exchange — sorts the dim's size makes trivial
+    "o9_null_ordering" -> 1,
     // three FK edges × (child count + orphan count) single-row aggs;
     // every anti-join broadcasts its parent
     "v7_referential_audit" -> 6,
@@ -428,9 +430,9 @@ class PlanBudgetSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     // the (u, cents) pair aggregate + the per-u argmax + the value-
     // domain-bounded front window
     "o10_skyline" -> 3,
-    // slope's two exchanges + the (r,c) join against the checkpointed
-    // accumulation kernel
-    "wro_twi" -> 4,
+    // slope's two exchanges; the (r,c) join against the checkpointed
+    // accumulation kernel adds none
+    "wro_twi" -> 2,
     // the declared result is the driver-walked path as a LocalRelation;
     // the cost field and pred table materialize behind checkpoints
     "wro_least_cost_path" -> 0,
@@ -448,7 +450,7 @@ class PlanBudgetSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     "d40_fertility" -> 3,
     // both cost fields come out of one windowed chamfer kernel behind
     // one checkpoint; the visible plan reads it
-    "wro_corridor" -> 2,
+    "wro_corridor" -> 0,
     // the visible plan reads the checkpointed final weight table;
     // per-epoch joins/aggregates hide behind their checkpoints
     "d41_perceptron" -> 0,
