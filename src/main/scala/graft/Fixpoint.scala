@@ -4,10 +4,9 @@ import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 
 /** The one way an iterative operator runs its driver loop: the dedup
-  * closures, SSSP, host rank, k-means, q23's recursion and the
-  * least-cost path's predecessor table all share these three pieces.
-  * (The bounded-reach raster kernels need no loop: see
-  * [[graft.ops.Tiles]].)
+  * closures, SSSP, host rank, k-means, the perceptron's epochs and
+  * q23's recursion all share these three pieces. (The raster kernels
+  * need no loop: see [[graft.ops.Tiles]].)
   *
   *  - [[partitions]] sizes a loop's shuffles from its row bound.
   *  - [[scoped]] runs a materializing body at loop confs.
@@ -25,8 +24,8 @@ object Fixpoint {
 
   /** Run `body` with AQE off and shuffle partitions at
     * [[partitions]]`(rows)`, restoring the session's values afterwards.
-    * Loop frames are bounded by `rows` (a pair graph, a node set, the
-    * raster domain), so AQE has nothing to adapt, yet it would submit
+    * Loop frames are bounded by `rows` (a pair graph, a node set, a
+    * corpus), so AQE has nothing to adapt, yet it would submit
     * every one of a round's tiny shuffle stages as its own job; with it
     * off each materialization is one job. `body` must MATERIALIZE what
     * it builds (checkpoint or action) — a lazy plan returned from the

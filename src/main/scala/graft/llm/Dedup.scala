@@ -433,7 +433,8 @@ object Dedup {
     * fixpoint is the per-component minimum. Empirically a 7k-node grid
     * component of diameter ~150 converges in 5 rounds where plain
     * per-node propagation + one jump was still moving at round 25 (the
-    * wro_region_group sf0.1 stressor that motivated this form).
+    * sf0.1 region-group grid, which ran on this closure before it
+    * became a whole-raster tile kernel, motivated this form).
     *
     * The rounds run through [[graft.Fixpoint.iterate]] inside
     * [[graft.Fixpoint.scoped]] at a partition count sized from the

@@ -134,11 +134,6 @@ object KMeans {
   def codebook2(embeddings: DataFrame, k: Int): DataFrame =
     reduceToCodebook(lloydTwice(embeddings, k))
 
-  /** [[codebook2]] over an ALREADY-QUANTIZED `(vec_id, qv)` corpus the
-    * CALLER has materialized (localCheckpoint/cache) — both iterations
-    * re-read it, so an unmaterialized lineage would repeat upstream
-    * work. Used when the quantized view already exists for other plan
-    * legs (e.g. [[Pq.ivfPqTopK]] shares it with code assignment). */
   /** Coverage-preserving deterministic seeding: the K lowest by
     * (md5(vec_id), vec_id) — a fixed-key uniform sample of the corpus,
     * computed as a scalable TOP-K (TakeOrdered, never a global
@@ -185,6 +180,11 @@ object KMeans {
     df.repartition(
       df.sparkSession.sessionState.conf.numShufflePartitions, col(idCol))
 
+  /** [[codebook2]] over an ALREADY-QUANTIZED `(vec_id, qv)` corpus the
+    * CALLER has materialized (localCheckpoint/cache) — both iterations
+    * re-read it, so an unmaterialized lineage would repeat upstream
+    * work. Used when the quantized view already exists for other plan
+    * legs (e.g. [[Pq.ivfPqTopK]] shares it with code assignment). */
   def codebook2Q(q: DataFrame, k: Int): DataFrame =
     reduceToCodebook(
       lloydOnce(q, reduceToCodebook(lloydOnce(q, seedHashK(q, k)))))

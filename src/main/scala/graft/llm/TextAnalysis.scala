@@ -1,5 +1,6 @@
 package graft.llm
 
+import graft.Fixpoint
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -449,14 +450,15 @@ object TextAnalysis {
     * a pure SUM over documents, so it is order-independent,
     * parallelizes as one keyed aggregate, and stays integer-exact
     * (online perceptron's per-row sequential update cannot run
-    * distributed without changing the result). Epochs are a driver
-    * loop of: broadcast w → per-doc score fold → misclassified filter
-    * → per-bucket gradient aggregate — the corpus shuffles only as
-    * (doc, bucket, cnt) triples built ONCE and checkpointed; the
-    * model never exceeds 256 rows. Emits the final weight table plus
-    * the per-epoch misclassification counts (the training curve) as
-    * (b, w, epoch_errs csv). Bounds: cnt ≤ doc tokens, |w| grows ≤
-    * epochs · Σcnt — int64-trivial at any SF with fixed epochs.
+    * distributed without changing the result). Epochs are the rounds
+    * of a [[graft.Fixpoint.iterate]] loop: broadcast w → per-doc score
+    * fold → misclassified filter → per-bucket gradient aggregate — the
+    * corpus shuffles only as (doc, bucket, cnt) triples built ONCE and
+    * checkpointed; the model never exceeds 256 rows. Emits the final
+    * weight table plus the per-epoch misclassification counts (the
+    * training curve) as (b, w, epoch_errs csv). Bounds: cnt ≤ doc
+    * tokens, |w| grows ≤ epochs · Σcnt — int64-trivial at any SF with
+    * fixed epochs.
     *
     * (r13 audit: a driver-side-model rewrite — w as 256 driver longs,
     * score via a literal-array element_at, gradient as a bounded
@@ -472,10 +474,11 @@ object TextAnalysis {
         when(isTarget, 1L).otherwise(-1L), "y")
       .groupBy("doc_id", "y", "b").agg(count(lit(1)).as("cnt"))
       .localCheckpoint()
-    var w = spark.range(256).select(col("id").as("b"), lit(0L).as("w"))
-      .localCheckpoint()
     val errs = Seq.newBuilder[Long]
-    for (_ <- 1 to epochs) {
+    // the loop releases d and every epoch's mis once it returns
+    Fixpoint.iterate("perceptron",
+        spark.range(256).select(col("id").as("b"), lit(0L).as("w")),
+        epochs) { w =>
       // checkpointed: the misclassified set feeds BOTH the error count
       // and the gradient aggregate — without the barrier the per-doc
       // score fold (the dominant per-epoch scan) would run twice
@@ -488,11 +491,9 @@ object TextAnalysis {
       errs += mis.count()
       val grad = d.join(mis.select("doc_id"), Seq("doc_id"))
         .groupBy("b").agg(sum(col("y") * col("cnt")).as("g"))
-      w = w.join(grad, Seq("b"), "left")
+      w.join(grad, Seq("b"), "left")
         .select(col("b"), (col("w") + coalesce(col("g"), lit(0L))).as("w"))
-        .localCheckpoint()
-    }
-    w.withColumn("epoch_errs", lit(errs.result().mkString(",")))
+    }.withColumn("epoch_errs", lit(errs.result().mkString(",")))
   }
 
   /** D6: per-source quality statistics. Counts/sums are exact; the one

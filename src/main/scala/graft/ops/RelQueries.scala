@@ -2262,9 +2262,7 @@ object RelQueries {
     // real scale bound (~20 ancestor rows/doc → the default 1M rows is
     // ~50k documents; a larger corpus must raise this CONSCIOUSLY —
     // enforced, not just documented; boundary behavior spec-pinned in
-    // SubquerySpec).
-    s.conf.set("spark.sql.cteRecursionLevelLimit", 100)
-    s.conf.set("spark.sql.cteRecursionRowLimit", 1000000)
+    // SubquerySpec), and restore the caller's values afterwards.
     // The recursion executes as one driver-scheduled UnionLoop step per
     // level, and under AQE every level's stages are submitted as their
     // OWN jobs — measured 76 single-task jobs with 7+ s of scheduling
@@ -2272,9 +2270,12 @@ object RelQueries {
     // ≤ one row per document per level, so the materialization runs in
     // the loop scope sized from the corpus row count, read from the
     // parquet footers (Fixpoint.scoped).
-    Fixpoint.scoped(s, org.apache.spark.sql.execution.datasources.parquet
-        .GraftFooters.rowCount(s, s"$dir/documents.parquet")) {
-      s.sql(q23Sql).localCheckpoint()
+    withConfs(s, Map("spark.sql.cteRecursionLevelLimit" -> "100",
+        "spark.sql.cteRecursionRowLimit" -> "1000000")) {
+      Fixpoint.scoped(s, org.apache.spark.sql.execution.datasources.parquet
+          .GraftFooters.rowCount(s, s"$dir/documents.parquet")) {
+        s.sql(q23Sql).localCheckpoint()
+      }
     }
   }
 

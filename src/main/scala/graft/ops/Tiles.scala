@@ -15,7 +15,9 @@ import org.apache.spark.sql.functions._
   * its window, so ONE fan-out exchange replaces every round of the
   * per-cell formulation: no outer rounds, no halo exchange, no loop.
   * A window holds at most (TileW + 2·halo)² cells, bounded by the
-  * raster domain at any scale factor. */
+  * raster domain at any scale factor. A kernel with unbounded reach
+  * (region group's connected components) uses halo = GridW: every
+  * window is then the whole raster, at most GridW² = 10⁴ cells. */
 private[ops] object Tiles {
 
   private val TileW = 32

@@ -321,11 +321,6 @@ object WroQueries {
     * statistics aggregate over present cells only. */
   private[ops] val GridW = 100L
 
-  /** Row bound of every raster-domain frame (one row per cell, at any
-    * scale factor): the [[graft.Fixpoint.scoped]] size of the
-    * least-cost path's predecessor table. */
-  private val GridRows = GridW * GridW
-
   /** The grid position (r, c) of a cell id, or of a key packed the same
     * way (r·GridW + c): the one place a cell unfolds onto the grid. */
   private def gridPos(id: Column): (Column, Column) =
@@ -767,57 +762,41 @@ object WroQueries {
     * deterministic in-plan choice, no parameter), walk the optimal
     * route back to a source by repeatedly stepping to THE predecessor
     * — the neighbor y with d(y) + w(y→x) = d(x) (w = chamfer 3/4),
-    * ties to the minimum packed d·10⁴ + key. The predecessor FUNCTION
-    * is built once as a table (one 8-offset [[fanOut]] + equality filter
-    * + min-packed aggregate over the cost field — raster-domain
-    * bounded, the relaxation invariant guarantees every non-source
-    * reachable cell has one); the walk itself is a SINGLE-ROW pointer
-    * chase, so it runs where a ≤⌈4k/3⌉-step sequential chase belongs:
-    * on the driver, over the pred table collected ONCE (bounded by
-    * the ≤GridW² raster domain at ANY scale factor — the documented
-    * bounded-collect boundary, like Bpe's ≤topM rows; the cost FIELD
-    * comes out of GIS11's tile kernel and the pred FUNCTION stays
-    * distributed, and both checkpoints are released once collected,
-    * since the returned path is a local relation). The former
-    * formulation — one Spark join of a one-row frontier per step —
-    * paid either a ~100 ms checkpoint job per step or ~2 s of
-    * planning the unioned join chain, for a walk whose total state is
-    * one (r, c) pair. Emits (seq, r, c, cost34) from destination
-    * (seq 0, max cost34, ties to the smallest packed key) down to the
-    * source. The relaxation invariant (every non-source cell has a
-    * predecessor) holds only at CONVERGENCE of the k-round cost
-    * field — under truncation a cell can hold a ≤k-edge cost whose
-    * predecessor's own recorded cost is cheaper still, leaving no
-    * valid step; the walk then FAILS LOUDLY (as a
-    * [[graft.Fixpoint.iterate]] convergence loop does) rather than
-    * emitting a truncated route as if complete. */
+    * ties to the minimum packed d·10⁴ + key. The walk is a SINGLE-ROW
+    * pointer chase, so it runs where a ≤⌈4k/3⌉-step sequential chase
+    * belongs: on the driver, over the cost field collected ONCE
+    * (bounded by the ≤GridW² raster domain at ANY scale factor — the
+    * documented bounded-collect boundary, like Bpe's ≤topM rows), each
+    * step picking its predecessor among the cell's 8 neighbors in the
+    * collected field. The cost field comes out of GIS11's tile kernel
+    * and its checkpoint is released once collected, since the returned
+    * path is a local relation. Emits (seq, r, c, cost34) from
+    * destination (seq 0) down to the source. The relaxation invariant
+    * (every non-source cell has a predecessor) holds only at
+    * CONVERGENCE of the k-round cost field — under truncation a cell
+    * can hold a ≤k-edge cost whose predecessor's own recorded cost is
+    * cheaper still, leaving no valid step; the walk then FAILS LOUDLY
+    * (as a [[graft.Fixpoint.iterate]] convergence loop does) rather
+    * than emitting a truncated route as if complete. */
   def leastCostPath(spark: SparkSession, dir: String, k: Int = 10)
       : DataFrame = {
-    val offs = moore.filter(_ != ((0L, 0L))).map { case (dr, dc) =>
-      (dr, dc, if (dr == 0L || dc == 0L) 3L else 4L) }
     val cost = costDistance(spark, dir, k)
-    val pred = Fixpoint.scoped(spark, GridRows) {
-      val y = cost.select(col("r"), col("c"), col("r").as("yr"),
-        col("c").as("yc"), col("cost34").as("yd"))
-      val (pr, pc) = gridPos(col("pk") % 10000)
-      fanOut(y, offs, "yr", "yc", "yd")
-        .join(broadcast(cost), Seq("r", "c"))
-        .filter(col("yd") + col("o._3") === col("cost34"))
-        .groupBy("r", "c")
-        .agg(min(col("yd") * 10000 + col("yr") * 100 + col("yc")).as("pk"))
-        .select(col("r"), col("c"), pr.as("pr"), pc.as("pc"))
-        .localCheckpoint()
-    }
-    // both collects are bounded by the raster domain (≤GridW² rows)
+    // bounded by the raster domain (≤GridW² rows)
     val costOf: Map[(Long, Long), Long] = cost.collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
-    val predOf: Map[(Long, Long), (Long, Long)] = pred.collect()
-      .map(r => (r.getLong(0), r.getLong(1)) -> (r.getLong(2), r.getLong(3)))
-      .toMap
-    // the returned path is a local relation: nothing reads them again
-    Fixpoint.release(cost, pred)
+    // the returned path is a local relation: nothing reads it again
+    Fixpoint.release(cost)
     require(costOf.nonEmpty,
       "least-cost path found no destination — the cost field is empty")
+    // the neighbor y with d(y) + w = d(x), ties to the min d·10⁴ + key
+    def pred(x: (Long, Long)): Option[(Long, Long)] = {
+      val cands = for {
+        n <- 0 until 8
+        y = (x._1 + Compass(n)._1, x._2 + Compass(n)._2)
+        d <- costOf.get(y) if d + (if (cardinal(n)) 3L else 4L) == costOf(x)
+      } yield (d * 10000 + y._1 * 100 + y._2, y)
+      cands.minOption.map(_._2)
+    }
     // destination: max cost34, ties to the SMALLEST packed key
     val dest = costOf.keysIterator.reduce { (a, b) =>
       val (da, db) = (costOf(a), costOf(b))
@@ -829,22 +808,21 @@ object WroQueries {
     // path can need up to ceil(4k/3) steps — walking only k would
     // trip the convergence guard below on a perfectly valid field.
     val steps = math.ceil(4.0 * k / 3.0).toInt
-    val path = scala.collection.mutable.ArrayBuffer(
-      (0L, dest._1, dest._2, costOf(dest)))
-    var cur = dest
-    while (path.last._4 != 0L && predOf.contains(cur) &&
-           path.length <= steps) {
-      cur = predOf(cur)
-      path += ((path.length.toLong, cur._1, cur._2, costOf(cur)))
-    }
+    // step to the predecessor until a source (cost 0), a cell with
+    // none, or the step cap
+    val path = Iterator.iterate(Option(dest))(
+        _.filter(costOf(_) != 0L).flatMap(pred))
+      .takeWhile(_.isDefined).take(steps + 1).flatten.toSeq
     // loud truncation guard: a non-converged cost field can strand
     // the walk mid-path (no predecessor before reaching a source)
-    require(path.last._4 == 0L,
+    require(costOf(path.last) == 0L,
       s"least-cost path did not reach a source in $steps steps — the " +
       "k-round cost field is not converged for this destination; " +
       "raise k")
     import spark.implicits._
-    path.toSeq.toDF("seq", "r", "c", "cost34")
+    path.zipWithIndex
+      .map { case ((r, c), i) => (i.toLong, r, c, costOf((r, c))) }
+      .toDF("seq", "r", "c", "cost34")
   }
 
   /** GIS12 — EUCLIDEAN ALLOCATION (Esri Euclidean Allocation, the
@@ -1205,9 +1183,8 @@ object WroQueries {
     * region, the cell count (area in cells), the EXACT centroid
     * numerators (sum_r, sum_c — centroid = sums/n is the caller's
     * monotone post-divide, the no-division-in-gate policy), and the
-    * bounding extent. One keyed aggregate over the labeled grid; at
-    * 100 TB it co-partitions on the region key the labeling already
-    * produced. */
+    * bounding extent. One keyed aggregate over the labeled grid's
+    * checkpoint. */
   def zonalGeometry(spark: SparkSession, dir: String): DataFrame =
     regionGroup(spark, dir)
       .groupBy("cls", "reg_r", "reg_c")
@@ -1345,45 +1322,45 @@ object WroQueries {
 
   /** GIS17 — REGION GROUP (Esri Region Group: label each cell with its
     * connected region of same-class cells, rook connectivity) — the
-    * raster face of connected components, run to TRUE CONVERGENCE via
-    * [[graft.llm.Dedup.dedupClusters]]'s pointer-jumping min-label
-    * loop (O(log diameter) rounds — the d2 closure machinery reused on
-    * the grid graph, which is the point: one CC primitive serves both
-    * the dedup pipeline and the raster toolbox). Classes are u mod 7 —
+    * raster face of connected components. Classes are u mod 7 —
     * balanced at GATE SF (~6 draws/cell keeps the max-quantity spread
     * wide, regions small, and the oracle's full reachability closure
     * tractable), but NOT at larger SFs: max-of-60 concentrates u at
     * 50, one class reaches ~70% density — above the ~0.59 site-
     * percolation threshold — and a 7k-cell diameter-~150 giant
-    * component forms at sf0.1. That component is exactly the stressor
-    * that forced [[Dedup.dedupClusters]] onto quotient hooking (see
-    * its scaladoc); the operator handles it in 5 rounds. Region id
-    * = min packed key (r·100+c) in the component, Esri's
-    * smallest-cell-id labeling made deterministic. Isolated cells
-    * (no same-class rook neighbor) are their own region via the
-    * left-join coalesce — they never enter the edge set at all.
-    * Shape: one E/S [[fanOut]] join builds the (undirected-once) edge
-    * set; the CC loop is per-round one keyed join+aggregate; one
-    * final left join attaches labels. All raster-domain bounded. */
-  def regionGroup(spark: SparkSession, dir: String): DataFrame = {
-    val g = unitsGrid(spark, dir)
-      .select(col("r"), col("c"), (col("u") % 7).as("cls"),
-        (col("r") * 100 + col("c")).as("k"))
-      .localCheckpoint()
-    // undirected-once edges: each cell pairs with its E and S same-class
-    // neighbors (covers all rook adjacencies exactly once)
-    val a = g.select(col("r"), col("c"), col("cls").as("cls_a"),
-      col("k").as("ka"))
-    val edges = fanOut(a, Seq((0L, 1L), (1L, 0L)), "cls_a", "ka")
-      .join(g.select(col("r"), col("c"), col("cls").as("cls_b"),
-        col("k").as("kb")), Seq("r", "c"))
-      .filter(col("cls_a") === col("cls_b"))
-      .select("ka", "kb")
-    val labels = graft.llm.Dedup.dedupClusters(edges, col("ka"), col("kb"))
-    val (regR, regC) = gridPos(coalesce(col("cluster_id"), col("k")))
-    g.join(labels.withColumnRenamed("doc_id", "k"), Seq("k"), "left")
-      .select(col("r"), col("c"), col("cls"), regR.as("reg_r"),
-        regC.as("reg_c"))
+    * component forms at sf0.1. A region's reach is unbounded, so the
+    * kernel runs on [[Tiles]] windows with halo GridW: every window is
+    * the whole ≤GridW² raster, and one exchange replaces every round
+    * of a convergence loop. Region id = min packed key (r·100+c) in
+    * the component, Esri's smallest-cell-id labeling made
+    * deterministic. */
+  def regionGroup(spark: SparkSession, dir: String): DataFrame =
+    regionGroupFrom(unitsGrid(spark, dir))
+
+  /** Region-group core over a sparse grid (r, c, u), exposed for the
+    * brute-force flood-fill spec. Over a whole-raster window the
+    * row-major index IS the packed key r·GridW + c, so a union-find
+    * over the E and S same-class neighbors that always merges toward
+    * the smaller index roots each region at its smallest cell id. */
+  private[ops] def regionGroupFrom(grid: DataFrame): DataFrame = {
+    import grid.sparkSession.implicits._
+    Tiles.run(grid, GridW.toInt, col("u") % 7, "r", "c", "cls", "reg_r",
+        "reg_c") { w =>
+      val up = Array.tabulate(w.size)(identity)
+      def root(i: Int): Int = { // with path halving
+        var j = i
+        while (up(j) != j) { up(j) = up(up(j)); j = up(j) }
+        j
+      }
+      for (i <- 0 until w.size if w.present(i);
+           j <- Seq(w.nb(i, 0, 1), w.nb(i, 1, 0))
+           if j >= 0 && w.value(j) == w.value(i)) {
+        val (a, b) = (root(i), root(j))
+        up(a max b) = a min b
+      }
+      (0 until w.size).iterator.filter(i => w.present(i) && w.core(i))
+        .map(i => (w.r(i), w.c(i), w.value(i), w.r(root(i)), w.c(root(i))))
+    }
   }
 
   /** R2 (pyt:710-745): the layer-filter chain — keep rasters, optionally

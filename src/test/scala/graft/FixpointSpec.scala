@@ -46,8 +46,9 @@ class FixpointSpec extends SparkSpec {
 
   Seq("wro_watershed", "wro_flow_length", "wro_cost_distance",
       "wro_allocation", "wro_corridor", "wro_least_cost_path",
-      "wro_flow_accumulation", "wro_twi", "d43_sssp", "d19_host_rank",
-      "d2_dedup_clusters").foreach { name =>
+      "wro_flow_accumulation", "wro_twi", "wro_region_group",
+      "wro_zonal_geometry", "d43_sssp", "d19_host_rank", "d2_dedup_clusters",
+      "d41_perceptron", "d42_calibration").foreach { name =>
     test(s"$name holds no checkpoint its result does not read") {
       val m = mark()
       val df = SparkEntry.queries(name)(spark, "/root/testdata/sf0.01")

@@ -38,12 +38,14 @@ class JobCountSpec extends SparkSpec {
 
   readJobs.foreach { case (name, pinned) =>
     test(s"$name runs $pinned Spark jobs and holds no RDD after clearCache") {
-      val held = spark.sparkContext.getPersistentRDDs.size
+      // RDD ids only grow: count only the RDDs this read made, so blocks
+      // other suites left behind cannot skew the check
+      val mark = spark.sparkContext.emptyRDD[Int].id
       val n = jobs(SparkEntry.queries(name)(spark, "/root/testdata/sf0.01")
         .collect())
       spark.catalog.clearCache()
       assert(n == pinned)
-      assert(spark.sparkContext.getPersistentRDDs.size == held)
+      assert(!spark.sparkContext.getPersistentRDDs.keys.exists(_ > mark))
     }
   }
 

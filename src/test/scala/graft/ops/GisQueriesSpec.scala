@@ -2,32 +2,15 @@ package graft.ops
 
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 
 /** Semantics tests for the GIS raster-algebra queries (focal/zonal
   * statistics, NEAREST resampling). The oracle gate proves fixture
   * equality; these prove the neighborhood/selection semantics on inputs
   * where each edge — grid corner, sparse NoData hole, center-sample
   * index — is load-bearing. */
-class GisQueriesSpec extends SparkSpec with BeforeAndAfterAll {
+class GisQueriesSpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
-
-  private var heldBefore = Set.empty[Int]
-
-  override def beforeAll(): Unit = {
-    super.beforeAll()
-    heldBefore = spark.sparkContext.getPersistentRDDs.keySet.toSet
-  }
-
-  /** The tile kernels materialize through local checkpoints, which
-    * clearCache() does not drop: release the ones this suite made, so
-    * the next suite starts from the blocks it found. */
-  override def afterAll(): Unit =
-    try {
-      spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-        if (!heldBefore(id)) rdd.unpersist(blocking = true) }
-    } finally super.afterAll()
 
   test("focal: 3x3 contributions, corner clipping, NoData holes") {
     import spark.implicits._

@@ -412,9 +412,8 @@ class PlanBudgetSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     "wro_idw" -> 2,
     // per-cell agg + the corner-role target aggregate — no join at all
     "wro_resample_bilinear" -> 2,
-    // visible past the checkpointed CC labels: the edge fan-out join +
-    // the final label attach
-    "wro_region_group" -> 2,
+    // the whole-raster tile kernel's output is read from its checkpoint
+    "wro_region_group" -> 0,
     // ONE returnflag exchange serves the rank window, the partition
     // count, and the final group-by — the a14 reuse discipline extended
     // to interpolation
@@ -434,7 +433,7 @@ class PlanBudgetSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     // accumulation kernel adds none
     "wro_twi" -> 2,
     // the declared result is the driver-walked path as a LocalRelation;
-    // the cost field and pred table materialize behind checkpoints
+    // the cost field materializes behind its tile kernel's checkpoint
     "wro_least_cost_path" -> 0,
     // per-cell agg + the stats window; the combo id and count windows
     // reuse its single partition
@@ -442,9 +441,8 @@ class PlanBudgetSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     // per-cell agg + the classed grid's stats window; the 3x3 target
     // aggregate runs in the window's single partition
     "wro_expand" -> 2,
-    // past the checkpointed CC labels: edge fan-out, label attach,
-    // and the per-region aggregate
-    "wro_zonal_geometry" -> 3,
+    // the per-region aggregate over the region-group checkpoint
+    "wro_zonal_geometry" -> 1,
     // the encode fold's doc aggregate + the per-language aggregate;
     // training rounds hide behind their own jobs
     "d40_fertility" -> 3,

@@ -166,28 +166,84 @@ class SpatialStatsSpec extends SparkSpec {
     spark.catalog.clearCache()
   }
 
+  /** Seeded random 100×100 (r, c) -> u grids for the region-group core
+    * (absent cells are NoData; u = class + 7·j, so the u mod 7 classing
+    * is exercised too). */
+  private lazy val randomGrids: Seq[(String, Map[(Long, Long), Long])] = {
+    val rnd = new scala.util.Random(17)
+    def u(cls: Long): Long = cls + 7L * rnd.nextInt(7)
+    def cells(at: (Long, Long) => Option[Long]) = (for {
+      r <- 0L until 100L; c <- 0L until 100L; v <- at(r, c)
+    } yield (r, c) -> v).toMap
+    Seq(
+      // class 0 at ~0.73 density, above the ~0.59 site-percolation
+      // threshold: one giant component spans the raster
+      "giant" -> cells { (_, _) =>
+        if (rnd.nextDouble() < 0.03) None
+        else Some(u(if (rnd.nextDouble() < 0.75) 0L else 1L + rnd.nextInt(6)))
+      },
+      // a class-1 snake: even rows full, each odd row joined at the
+      // alternating end, so one region crosses every tile seam
+      "serpentine" -> cells { (r, c) =>
+        if (r % 2 == 0 || c == (if (r / 2 % 2 == 0) 99L else 0L)) Some(u(1L))
+        else if (rnd.nextDouble() < 0.2) None
+        else Some(u(2L + rnd.nextInt(5)))
+      },
+      // a two-class checkerboard with holes: every cell is isolated
+      "isolated" -> cells { (r, c) =>
+        if (rnd.nextDouble() < 0.1) None else Some(u((r + c) % 2)) },
+      // two classes at half density: NoData holes and grid edges cut
+      // every region
+      "holes" -> cells { (_, _) =>
+        if (rnd.nextDouble() < 0.5) None else Some(u(rnd.nextInt(2).toLong)) })
+  }
+
   test("region group: labels equal brute-force union-find components") {
+    import spark.implicits._
     // brute-force: flood fill per cell over same-class rook adjacency
-    val cls = grid.map { case (k, u) => k -> u % 7 }
-    var label = Map.empty[(Long, Long), Long]
-    for (start <- cls.keys if !label.contains(start)) {
-      var comp = Set(start)
-      var frontier = Set(start)
-      while (frontier.nonEmpty) {
-        frontier = frontier.flatMap { case (r, c) =>
-          Seq((r, c + 1), (r, c - 1), (r + 1, c), (r - 1, c))
-            .filter(nb => cls.get(nb).contains(cls(start)) && !comp(nb))
+    def floodFill(cls: Map[(Long, Long), Long]): Map[(Long, Long), Long] = {
+      var label = Map.empty[(Long, Long), Long]
+      for (start <- cls.keys if !label.contains(start)) {
+        var comp = Set(start)
+        var frontier = Set(start)
+        while (frontier.nonEmpty) {
+          frontier = frontier.flatMap { case (r, c) =>
+            Seq((r, c + 1), (r, c - 1), (r + 1, c), (r - 1, c))
+              .filter(nb => cls.get(nb).contains(cls(start)) && !comp(nb))
+          }
+          comp ++= frontier
         }
-        comp ++= frontier
+        val lbl = comp.map { case (r, c) => r * 100 + c }.min
+        label ++= comp.map(_ -> lbl)
       }
-      val lbl = comp.map { case (r, c) => r * 100 + c }.min
-      label ++= comp.map(_ -> lbl)
+      label
     }
-    val got = WroQueries.regionGroup(spark, dir).collect()
-      .map(x => ((x.getLong(0), x.getLong(1)),
+    // (r, c) -> (cls, label) of a region-group result
+    def labels(df: org.apache.spark.sql.DataFrame) = {
+      val got = df.collect().map(x => ((x.getLong(0), x.getLong(1)),
         (x.getLong(2), x.getLong(3) * 100 + x.getLong(4)))).toMap
-    assert(got.map { case (k, v) => k -> v._2 } == label)
-    assert(got.forall { case ((r, c), (cl, _)) => cls((r, c)) == cl })
+      graft.Fixpoint.release(df)
+      got
+    }
+    def check(units: Map[(Long, Long), Long],
+              got: Map[(Long, Long), (Long, Long)]): Map[Long, Int] = {
+      val cls = units.map { case (k, u) => k -> u % 7 }
+      assert(got.map { case (k, v) => k -> v._2 } == floodFill(cls))
+      assert(got.forall { case (k, (cl, _)) => cls(k) == cl })
+      got.values.groupBy(_._2).map { case (l, cells) => l -> cells.size }
+    }
+    check(grid, labels(WroQueries.regionGroup(spark, dir)))
+    randomGrids.foreach { case (name, units) =>
+      val sizes = check(units, labels(WroQueries.regionGroupFrom(
+        units.toSeq.map { case ((r, c), u) => (r, c, u) }.toDF("r", "c", "u"))))
+      name match {
+        case "giant" => assert(sizes.values.max > 5000, name)
+        case "serpentine" => assert(sizes(0L) == 5050, name)
+        case "isolated" => assert(sizes.values.forall(_ == 1), name)
+        case _ => assert(sizes.values.exists(_ == 1) &&
+          sizes.values.exists(_ > 1), name)
+      }
+    }
     spark.catalog.clearCache()
   }
 }

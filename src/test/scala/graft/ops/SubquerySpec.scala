@@ -272,7 +272,23 @@ class SubquerySpec extends SparkSpec
     try {
       val n = RelQueries.q23AncestorChains(spark, dir).count()
       assert(n > 10L, s"q23 produced only $n rows")
-      assert(spark.conf.get("spark.sql.cteRecursionRowLimit") == "1000000")
+      // the pin is scoped to the query: the caller's value is back
+      assert(spark.conf.get("spark.sql.cteRecursionRowLimit") == "10")
     } finally spark.conf.unset("spark.sql.cteRecursionRowLimit")
+  }
+
+  test("q23: both recursion confs read the same before and after the query") {
+    val keys = Seq("spark.sql.cteRecursionLevelLimit",
+      "spark.sql.cteRecursionRowLimit")
+    def confs = keys.map(spark.conf.getOption)
+    val before = confs
+    RelQueries.q23AncestorChains(spark, dir).count()
+    assert(confs == before)
+    spark.conf.set(keys(0), 50)
+    spark.conf.set(keys(1), 2000000)
+    try {
+      RelQueries.q23AncestorChains(spark, dir).count()
+      assert(confs == Seq(Some("50"), Some("2000000")))
+    } finally keys.foreach(spark.conf.unset)
   }
 }

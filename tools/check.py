@@ -8,6 +8,10 @@ inside Verify writes none and FAILs here. A dumped query without oracle SQL
 FAILs too. Naming queries restricts the check to them (for a Verify dump
 restricted to the same names).
 
+DuckDB runs under an explicit memory_limit (6GB; the ORACLE_MEMORY_LIMIT
+environment variable overrides it, e.g. ORACLE_MEMORY_LIMIT=8GB): an oracle
+that needs more FAILs and the run exits non-zero.
+
 Usage: python3 tools/check.py <sfDir> <verifyOutDir> [query ...]
 """
 import json, sys, glob, os
@@ -15,7 +19,10 @@ import duckdb
 
 sfdir, outdir = sys.argv[1], sys.argv[2]
 only = set(sys.argv[3:])
-con = duckdb.connect()
+# an explicit cap (DuckDB's default is 80% of the machine's memory): an
+# oracle that needs more raises below and FAILs, never takes the box
+con = duckdb.connect(config={
+    "memory_limit": os.environ.get("ORACLE_MEMORY_LIMIT", "6GB")})
 for t in ("region nation customer supplier part orders lineitem events "
           "documents embeddings").split():
     p = f"{sfdir}/{t}.parquet"
