@@ -16,26 +16,30 @@ import org.apache.spark.sql.functions._
   * per-cell formulation: no outer rounds, no halo exchange, no loop.
   * A window holds at most (TileW + 2·halo)² cells, bounded by the
   * raster domain at any scale factor. A kernel with unbounded reach
-  * (region group's connected components) uses halo = GridW: every
-  * window is then the whole raster, at most GridW² = 10⁴ cells. */
+  * (region group's connected components) uses halo = GridW: the grid
+  * is then ONE tile whose window is the whole raster, at most
+  * GridW² = 10⁴ cells. */
 private[ops] object Tiles {
 
   private val TileW = 32
 
   private val GridW = WroQueries.GridW.toInt
 
-  private val TilesPerSide = (GridW + TileW - 1) / TileW
+  /** Tile width at `halo`: a halo that spans the grid makes every
+    * window the whole raster, so one tile covers it. */
+  private def tileW(halo: Int): Int = if (halo >= GridW) GridW else TileW
 
   /** Each present cell (r, c, `value`) of `grid` sent to every tile
     * whose window holds it, grouped into one row per tile:
     * (tr, tc, cells), cells an array of (r, c, value) structs. */
   def windows(grid: DataFrame, halo: Int, value: Column): DataFrame = {
-    // tile t's window is [t·TileW − halo, t·TileW + TileW − 1 + halo],
-    // so x lies in the windows of tiles floor((x − halo) / TileW) ..
-    // floor((x + halo) / TileW), clipped to the tiles that exist
+    // tile t's window is [t·tw − halo, t·tw + tw − 1 + halo], so x
+    // lies in the windows of tiles floor((x − halo) / tw) ..
+    // floor((x + halo) / tw), clipped to the tiles that exist
+    val tw = tileW(halo)
     def span(x: Column) = sequence(
-      greatest(lit(0L), floor((x - halo) / TileW)),
-      least(lit(TilesPerSide - 1L), floor((x + halo) / TileW)))
+      greatest(lit(0L), floor((x - halo) / tw)),
+      least(lit((GridW + tw - 1L) / tw - 1L), floor((x + halo) / tw)))
     grid.select(col("r"), col("c"), value.cast("long").as("v"))
       .select(explode(span(col("r"))).as("tr"), col("r"), col("c"), col("v"))
       .select(col("tr"), explode(span(col("c"))).as("tc"),
@@ -65,10 +69,11 @@ private[ops] object Tiles {
     * irrelevant. */
   final class Window(tr: Int, tc: Int, halo: Int,
                      cells: Seq[(Long, Long, Long)]) {
-    private val r0 = math.max(0, tr * TileW - halo)
-    private val c0 = math.max(0, tc * TileW - halo)
-    private val rows = math.min(GridW, (tr + 1) * TileW + halo) - r0
-    private val cols = math.min(GridW, (tc + 1) * TileW + halo) - c0
+    private val tw = tileW(halo)
+    private val r0 = math.max(0, tr * tw - halo)
+    private val c0 = math.max(0, tc * tw - halo)
+    private val rows = math.min(GridW, (tr + 1) * tw + halo) - r0
+    private val cols = math.min(GridW, (tc + 1) * tw + halo) - c0
     val size: Int = rows * cols
     val present = new Array[Boolean](size)
     val value = new Array[Long](size)
@@ -91,6 +96,6 @@ private[ops] object Tiles {
 
     /** Whether cell i lies in the tile's core. */
     def core(i: Int): Boolean =
-      r(i) / TileW == tr && c(i) / TileW == tc
+      r(i) / tw == tr && c(i) / tw == tc
   }
 }

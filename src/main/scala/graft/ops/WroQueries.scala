@@ -808,21 +808,22 @@ object WroQueries {
     // path can need up to ceil(4k/3) steps — walking only k would
     // trip the convergence guard below on a perfectly valid field.
     val steps = math.ceil(4.0 * k / 3.0).toInt
-    // step to the predecessor until a source (cost 0), a cell with
-    // none, or the step cap
-    val path = Iterator.iterate(Option(dest))(
-        _.filter(costOf(_) != 0L).flatMap(pred))
-      .takeWhile(_.isDefined).take(steps + 1).flatten.toSeq
+    val path = scala.collection.mutable.ArrayBuffer(
+      (0L, dest._1, dest._2, costOf(dest)))
+    var next = pred(dest)
+    while (path.last._4 != 0L && next.isDefined && path.length <= steps) {
+      val cur = next.get
+      path += ((path.length.toLong, cur._1, cur._2, costOf(cur)))
+      next = pred(cur)
+    }
     // loud truncation guard: a non-converged cost field can strand
     // the walk mid-path (no predecessor before reaching a source)
-    require(costOf(path.last) == 0L,
+    require(path.last._4 == 0L,
       s"least-cost path did not reach a source in $steps steps — the " +
       "k-round cost field is not converged for this destination; " +
       "raise k")
     import spark.implicits._
-    path.zipWithIndex
-      .map { case ((r, c), i) => (i.toLong, r, c, costOf((r, c))) }
-      .toDF("seq", "r", "c", "cost34")
+    path.toSeq.toDF("seq", "r", "c", "cost34")
   }
 
   /** GIS12 — EUCLIDEAN ALLOCATION (Esri Euclidean Allocation, the
@@ -1329,9 +1330,9 @@ object WroQueries {
     * 50, one class reaches ~70% density — above the ~0.59 site-
     * percolation threshold — and a 7k-cell diameter-~150 giant
     * component forms at sf0.1. A region's reach is unbounded, so the
-    * kernel runs on [[Tiles]] windows with halo GridW: every window is
-    * the whole ≤GridW² raster, and one exchange replaces every round
-    * of a convergence loop. Region id = min packed key (r·100+c) in
+    * kernel runs on [[Tiles]] with halo GridW: ONE window holds the
+    * whole ≤GridW² raster, and one exchange replaces every round of a
+    * convergence loop. Region id = min packed key (r·100+c) in
     * the component, Esri's smallest-cell-id labeling made
     * deterministic. */
   def regionGroup(spark: SparkSession, dir: String): DataFrame =

@@ -8,9 +8,8 @@ inside Verify writes none and FAILs here. A dumped query without oracle SQL
 FAILs too. Naming queries restricts the check to them (for a Verify dump
 restricted to the same names).
 
-DuckDB runs under an explicit memory_limit (6GB; the ORACLE_MEMORY_LIMIT
-environment variable overrides it, e.g. ORACLE_MEMORY_LIMIT=8GB): an oracle
-that needs more FAILs and the run exits non-zero.
+DuckDB runs under an explicit 6GB memory_limit: an oracle that needs more
+FAILs and the run exits non-zero.
 
 Usage: python3 tools/check.py <sfDir> <verifyOutDir> [query ...]
 """
@@ -21,8 +20,7 @@ sfdir, outdir = sys.argv[1], sys.argv[2]
 only = set(sys.argv[3:])
 # an explicit cap (DuckDB's default is 80% of the machine's memory): an
 # oracle that needs more raises below and FAILs, never takes the box
-con = duckdb.connect(config={
-    "memory_limit": os.environ.get("ORACLE_MEMORY_LIMIT", "6GB")})
+con = duckdb.connect(config={"memory_limit": "6GB"})
 for t in ("region nation customer supplier part orders lineitem events "
           "documents embeddings").split():
     p = f"{sfdir}/{t}.parquet"

@@ -14,9 +14,8 @@ As in tools/check.py, every name in oracle_sql.json must have an output
 dir (a query that threw inside Verify writes none and FAILs), and naming
 queries restricts the check to them.
 
-DuckDB runs under an explicit memory_limit (6GB; the ORACLE_MEMORY_LIMIT
-environment variable overrides it, e.g. ORACLE_MEMORY_LIMIT=8GB): an oracle
-that needs more FAILs and the run exits non-zero.
+DuckDB runs under an explicit 6GB memory_limit: an oracle that needs more
+FAILs and the run exits non-zero.
 
 Usage: python3 tools/check_strict.py <sfDir> <verifyOutDir> [query ...]
 """
@@ -28,8 +27,7 @@ sfdir, outdir = sys.argv[1], sys.argv[2]
 only = set(sys.argv[3:])
 # an explicit cap (DuckDB's default is 80% of the machine's memory): an
 # oracle that needs more raises below and FAILs, never takes the box
-con = duckdb.connect(config={
-    "memory_limit": os.environ.get("ORACLE_MEMORY_LIMIT", "6GB")})
+con = duckdb.connect(config={"memory_limit": "6GB"})
 for t in ("region nation customer supplier part orders lineitem events "
           "documents embeddings").split():
     p = f"{sfdir}/{t}.parquet"
