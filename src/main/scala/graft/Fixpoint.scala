@@ -50,6 +50,10 @@ object Fixpoint {
     * must not read such a checkpoint after the loop (a released local
     * checkpoint cannot be recomputed).
     *
+    * Every job a round runs carries the job description
+    * `<op> round <i>` (1-based); the caller's description is restored
+    * when the loop ends.
+    *
     * A convergence loop that still counts changes after `maxRounds`
     * fails with an IllegalArgumentException naming `op`, never returns
     * a non-converged result. */
@@ -61,7 +65,9 @@ object Fixpoint {
     var cur = init
     var rounds = 0
     var changed = 1L
-    while (rounds < maxRounds && (changes.isEmpty || changed > 0)) {
+    val caller = spark.sparkContext.getLocalProperty("spark.job.description")
+    try while (rounds < maxRounds && (changes.isEmpty || changed > 0)) {
+      spark.sparkContext.setJobDescription(s"$op round ${rounds + 1}")
       val frame = step(cur)
       read ++= checkpointsOf(frame)
       val next = GraftBridge.freshCheckpoint(frame)
@@ -69,7 +75,7 @@ object Fixpoint {
       if (rounds > 0) unpersist(spark, checkpointsOf(cur))
       cur = next
       rounds += 1
-    }
+    } finally spark.sparkContext.setJobDescription(caller)
     val converged = changes.isEmpty || changed == 0
     unpersist(spark,
       if (converged) read -- checkpointsOf(cur) else read ++ checkpointsOf(cur))
@@ -83,10 +89,10 @@ object Fixpoint {
   def release(frames: DataFrame*): Unit =
     frames.foreach(df => unpersist(df.sparkSession, checkpointsOf(df)))
 
-  private def unpersist(spark: SparkSession, ids: Set[Int]): Unit = {
-    val held = spark.sparkContext.getPersistentRDDs
-    ids.foreach(id => held.get(id).foreach(_.unpersist(blocking = false)))
-  }
+  /** By id: a checkpoint whose frame the GC already collected is
+    * released now, not whenever the ContextCleaner gets to it. */
+  private def unpersist(spark: SparkSession, ids: Set[Int]): Unit =
+    ids.foreach(GraftBridge.unpersist(spark.sparkContext, _))
 
   /** RDD ids of the checkpoints (LogicalRDD leaves) `df` reads. */
   private def checkpointsOf(df: DataFrame): Set[Int] =

@@ -73,6 +73,7 @@ object PartitionMerge {
       .write.mode("overwrite").partitionBy(partCol)
       .option("partitionOverwriteMode", "dynamic")
       .parquet(path)
+    graft.Fixpoint.release(rewritten)
     parts
   }
 
@@ -119,6 +120,7 @@ object PartitionMerge {
       .parquet(path)
     val survived = remaining.select(col(partCol).cast("string")).distinct()
       .collect().map(_.getString(0)).toSet
+    graft.Fixpoint.release(remaining)
     val hconf = spark.sparkContext.hadoopConfiguration
     val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(hconf)
     parts.filterNot(survived).foreach { p =>

@@ -202,6 +202,7 @@ object Dedup {
     // stream) holds no per-batch cache entries
     caches.foreach(_.unpersist(false))
     sigs.write.mode("append").parquet(indexPath)
+    Fixpoint.release(sigs)
     pairs
   }
 

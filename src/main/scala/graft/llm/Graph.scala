@@ -83,14 +83,15 @@ object Graph {
     // scale-adaptive setting), the enumeration spreads, and degree
     // orientation bounds any one u's fan-out at ~sqrt|E| so no task is
     // hot. Output is ONE row — safe to materialize at construction.
-    graft.withConfs(edges.sparkSession, Map(
+    // the 1-row result reads none of the derived sets: release them
+    try graft.withConfs(edges.sparkSession, Map(
       "spark.sql.adaptive.coalescePartitions.enabled" -> "false")) {
       closed.agg(count(lit(1)).as("n_triangles"))
         .crossJoin(broadcast(nNodes))
         .crossJoin(broadcast(nEdges))
         .select(col("n_nodes"), col("n_edges"), col("n_triangles"))
         .localCheckpoint()
-    }
+    } finally Fixpoint.release(und, deg, oriented)
   }
 
   /** D43: single-source SHORTEST PATHS over a general weighted digraph

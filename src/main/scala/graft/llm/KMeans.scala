@@ -142,7 +142,8 @@ object KMeans {
     * corpus (time-ordered ingest, sharded copies — the sf3 fixture)
     * two Lloyd iterations cannot spread them: one cell ended up
     * holding 31% of all vectors and the within-cell pair join exploded
-    * 17× (measured, CellDiag). Hash order is id-layout-independent,
+    * 17× (measured with the cell-size main `graft.CellDiag`, last
+    * present at 78f075c). Hash order is id-layout-independent,
     * so seeds track the data distribution at any scale; DuckDB
     * replays `ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id`
     * bit-identically. */

@@ -1,7 +1,7 @@
 package graft
 
-import org.apache.spark.TestBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.GraftBridge
 import graft.catalog.SnapshotTable
 
 /** Pins that the service path learns metadata without Spark jobs, the
@@ -26,7 +26,7 @@ class JobCountSpec extends SparkSpec {
     }
     sc.addSparkListener(l)
     sc.setJobGroup(group, "job count")
-    try { body; TestBus.drain(sc) }
+    try { body; GraftBridge.drain(sc) }
     finally { sc.clearJobGroup(); sc.removeSparkListener(l) }
     n.get
   }
@@ -38,14 +38,14 @@ class JobCountSpec extends SparkSpec {
 
   readJobs.foreach { case (name, pinned) =>
     test(s"$name runs $pinned Spark jobs and holds no RDD after clearCache") {
-      // RDD ids only grow: count only the RDDs this read made, so blocks
-      // other suites left behind cannot skew the check
-      val mark = spark.sparkContext.emptyRDD[Int].id
+      // count only the RDDs this read made, so blocks other suites left
+      // behind cannot skew the check
+      val residue = new GraftBridge.Residue(spark.sparkContext)
       val n = jobs(SparkEntry.queries(name)(spark, "/root/testdata/sf0.01")
         .collect())
       spark.catalog.clearCache()
       assert(n == pinned)
-      assert(!spark.sparkContext.getPersistentRDDs.keys.exists(_ > mark))
+      assert(residue.held == 0)
     }
   }
 
