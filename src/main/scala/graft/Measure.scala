@@ -4,6 +4,7 @@ import org.json4s.{DefaultFormats, jackson}
 import java.nio.file.{Files, Paths}
 import java.nio.file.StandardOpenOption.{APPEND, CREATE}
 import org.apache.spark.sql.{GraftBridge, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.status.api.v1
 import scala.collection.mutable
 import scala.util.control.NonFatal
@@ -20,7 +21,8 @@ import scala.util.control.NonFatal
   *    Catalyst phases (`QueryExecution.tracker`); the jobs, stages,
   *    tasks, scheduler delay, run / CPU / GC time, shuffle and spill of
   *    the jobs it ran, attributed by job group (Spark's status store); the blocks it still
-  *    holds after `clearCache()` ([[GraftBridge.Residue]]); its ten
+  *    holds after `clearCache()` ([[GraftBridge.Residue]]) and how many
+  *    of them its result does not read (`storage.rdds_leaked`); its ten
   *    longest jobs with their descriptions; or the exception it threw,
   *    after which the next query runs. Metric names are the
   *    benchmark's per-layer names (perfbench).
@@ -64,7 +66,13 @@ object Measure {
       df.collect()
       rec("wall_ms") = (System.nanoTime() - t0) / 1e6
       spark.catalog.clearCache()
-      rec("storage.rdds_held") = residue.held
+      val held = residue.held
+      rec("storage.rdds_held") = held
+      // held blocks beyond the checkpoints the result itself reads,
+      // subqueries included, each counted once (a self-join reads one
+      // block through two leaves)
+      rec("storage.rdds_leaked") = math.max(0, held - df.queryExecution.analyzed
+        .collectWithSubqueries { case r: LogicalRDD => r.rdd.id }.distinct.size)
       val phase = df.queryExecution.tracker.phases.map { case (k, p) => k -> p.durationMs }
       rec ++= Seq("catalyst.analysis_ms" -> phase.getOrElse("analysis", 0L),
         "catalyst.optimizer_ms" -> phase.getOrElse("optimization", 0L),

@@ -25,9 +25,13 @@ import org.apache.spark.sql.types.StructType
   * named dir, then the ONE manifest — recording each table's subdir
   * and schema — is exclusively created. Either every table advances or
   * none does; a crash mid-write leaves an orphan dir no reader sees,
-  * and the loser of a commit race removes only its own dir. Version
-  * discovery reuses the pointer-hint + filename-listing machinery, so
-  * the commit path stays O(1) manifest reads.
+  * and the loser of a commit race removes only its own dir. The group
+  * runs on [[SnapshotTable]]'s version log ([[SnapshotTable.VersionLog]])
+  * with its own manifest parse projected onto the log's record: version
+  * discovery (pointer hint, roll forward, listing fallback — the commit
+  * path stays O(1) manifest reads), the base check, the committed-
+  * version walk and the effective clock of as-of resolution are the
+  * table's, without a checkpoint.
   *
   * Scope (the design decision, recorded): group commits are FULL
   * snapshots per table — the partition-scoped
@@ -82,9 +86,16 @@ object SnapshotGroup {
       TsRe.findFirstMatchIn(body).map(_.group(1).toLong))
   }
 
+  /** The group's version log: a group manifest projects onto the
+    * table log's record (its entries are its tables). */
+  private[catalog] val log = new SnapshotTable.VersionLog("snapshot group",
+    "group", checkpointed = false, (v, body) => parse(v, body).map(m =>
+      SnapshotTable.CkptRec(m.version, m.base, m.ts, m.tag,
+        m.tables.size.toLong, None)))
+
   private def manifestIfCommitted(fs: org.apache.hadoop.fs.FileSystem,
       root: String, v: Long): Option[GroupManifest] =
-    if (!fs.exists(new Path(f"$root/_commits/v$v%08d.json"))) None
+    if (!fs.exists(SnapshotTable.manifest(root, v))) None
     else parse(v, SnapshotTable.readManifestBody(fs, root, v))
 
   private def manifestOf(fs: org.apache.hadoop.fs.FileSystem,
@@ -93,31 +104,14 @@ object SnapshotGroup {
       s"snapshot group: version $v of $root has no parseable manifest"))
 
   /** Committed versions ascending — audit surface, O(versions) body
-    * reads like [[SnapshotTable.committedVersions]]. */
-  def committedVersions(spark: SparkSession, root: String): Seq[Long] = {
-    val fs = SnapshotTable.fsOf(spark, root)
-    SnapshotTable.listedVersions(fs, root)
-      .filter(v => manifestIfCommitted(fs, root, v).isDefined)
-  }
+    * reads (no checkpoint). */
+  def committedVersions(spark: SparkSession, root: String): Seq[Long] =
+    log.versions(SnapshotTable.fsOf(spark, root), root)
 
-  /** Latest committed version, 0 = empty — pointer hint + forward
-    * scan, O(1) body reads on the steady state (the
-    * [[SnapshotTable.currentVersion]] discipline). */
-  def currentVersion(spark: SparkSession, root: String): Long = {
-    val fs = SnapshotTable.fsOf(spark, root)
-    SnapshotTable.readPointer(fs, root)
-      .filter(h => h > 0 && manifestIfCommitted(fs, root, h).isDefined)
-      match {
-      case Some(h) =>
-        var v = h
-        while (manifestIfCommitted(fs, root, v + 1).isDefined) v += 1
-        v
-      case None =>
-        SnapshotTable.listedVersions(fs, root).reverseIterator
-          .find(v => manifestIfCommitted(fs, root, v).isDefined)
-          .getOrElse(0L)
-    }
-  }
+  /** Latest committed version, 0 = empty — O(1) body reads on the
+    * steady state ([[SnapshotTable.currentVersion]]). */
+  def currentVersion(spark: SparkSession, root: String): Long =
+    log.current(SnapshotTable.fsOf(spark, root), root)
 
   /** Commit every table in `tables` as ONE new version, requiring the
     * group to still be at `expectedBase`. All-or-nothing: data for all
@@ -137,11 +131,7 @@ object SnapshotGroup {
     SnapshotTable.checkTag(tag)
     val spark = tables.head._2.sparkSession
     val fs = SnapshotTable.fsOf(spark, root)
-    val cur = currentVersion(spark, root)
-    if (cur != expectedBase)
-      throw new java.util.ConcurrentModificationException(
-        s"snapshot group commit conflict at $root: expected base " +
-        s"$expectedBase but the group is at $cur — rebase and retry")
+    val cur = log.checkBase(fs, root, expectedBase)
     val next = cur + 1
     val dirName = s"data-${java.util.UUID.randomUUID()}"
     val dataDir = new Path(s"$root/$dirName")
@@ -214,32 +204,8 @@ object SnapshotGroup {
     * consistent AS OF that instant. O(versions) body reads ascending
     * — audit-priced. Fails loudly before the first commit's timestamp
     * and on ts-less pre-timestamp history. */
-  def versionAsOf(spark: SparkSession, root: String, ts: Long): Long = {
-    val fs = SnapshotTable.fsOf(spark, root)
-    var eff = Long.MinValue
-    var best = 0L
-    val it = SnapshotTable.listedVersions(fs, root).iterator
-    var done = false
-    while (it.hasNext && !done) {
-      val v = it.next()
-      // early stop once resolution is determined — see
-      // [[SnapshotTable.versionAsOf]] (a later ts-less manifest cannot
-      // affect a query the effective clock already passed)
-      if (eff != Long.MinValue && eff >= ts) done = true
-      else parse(v, SnapshotTable.readManifestBody(fs, root, v)).foreach { m =>
-        val raw = m.ts.getOrElse(sys.error(
-          s"snapshot group asOf: version $v of $root records no commit " +
-          s"timestamp and resolution of $ts needs it — that span of " +
-          "history predates timestamp time travel; pin by version " +
-          "number instead"))
-        eff = if (eff == Long.MinValue) raw else math.max(raw, eff + 1)
-        if (eff <= ts) best = v
-      }
-    }
-    require(best > 0, s"snapshot group asOf: timestamp $ts precedes " +
-      s"the first commit of $root")
-    best
-  }
+  def versionAsOf(spark: SparkSession, root: String, ts: Long): Long =
+    log.asOf(SnapshotTable.fsOf(spark, root), root, ts)
 
   /** Read one table of the group as of wall-clock `ts`
     * ([[versionAsOf]] resolution). */
@@ -258,21 +224,16 @@ object SnapshotGroup {
       : Seq[Long] = {
     require(keepLast >= 1, "vacuum must keep at least the live snapshot")
     val fs = SnapshotTable.fsOf(spark, root)
-    val now = System.currentTimeMillis()
+    val aged = SnapshotTable.oldEnough(fs, minAgeMs)
     val versions = committedVersions(spark, root)
     val drop = versions.dropRight(keepLast)
-    drop.foreach(v =>
-      fs.delete(new Path(f"$root/_commits/v$v%08d.json"), false))
+    drop.foreach(v => fs.delete(SnapshotTable.manifest(root, v), false))
     val referenced = versions.drop(drop.length)
       .flatMap(v => manifestOf(fs, root, v).tables.values
         .map(_._1.takeWhile(_ != '/'))).toSet
-    def oldEnough(p: Path): Boolean =
-      minAgeMs <= 0L ||
-        (try now - fs.getFileStatus(p).getModificationTime >= minAgeMs
-         catch { case _: java.io.IOException => false }) // vanished: skip
     fs.listStatus(new Path(root)).toSeq.map(_.getPath).foreach { p =>
       if (p.getName.startsWith("data-") && !referenced.contains(p.getName) &&
-          oldEnough(p))
+          aged(p))
         fs.delete(p, true)
     }
     drop

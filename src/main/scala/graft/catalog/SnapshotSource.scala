@@ -119,29 +119,20 @@ class SnapshotSource extends RelationProvider with DataSourceRegister
     // path is a single SnapshotTable. Group reads carry no skipping
     // stats by the recorded scope decision (group tables are small
     // artifacts), so the group relation prunes columns only.
-    parameters.get("table") match {
-      case Some(t) =>
-        val version = parameters.get("version").map(_.toLong)
-          .orElse(parameters.get("asOfTimestamp").map(ts =>
-            SnapshotGroup.versionAsOf(spark, root, ts.toLong)))
-          .getOrElse {
-            val v = SnapshotGroup.currentVersion(spark, root)
-            require(v > 0,
-              s"graft-snapshot: group $root has no committed version")
-            v
-          }
-        new SnapshotGroupRelation(sqlContext, root, t, version)
-      case None =>
-        val version = parameters.get("version").map(_.toLong)
-          .orElse(parameters.get("asOfTimestamp").map(ts =>
-            SnapshotTable.versionAsOf(spark, root, ts.toLong)))
-          .getOrElse {
-            val v = SnapshotTable.currentVersion(spark, root)
-            require(v > 0, s"graft-snapshot: $root has no committed version")
-            v
-          }
-        new SnapshotRelation(sqlContext, root, version)
-    }
+    val table = parameters.get("table")
+    val log = if (table.isDefined) SnapshotGroup.log else SnapshotTable.log
+    val fs = SnapshotTable.fsOf(spark, root)
+    val version = parameters.get("version").map(_.toLong)
+      .orElse(parameters.get("asOfTimestamp")
+        .map(ts => log.asOf(fs, root, ts.toLong)))
+      .getOrElse {
+        val v = log.current(fs, root)
+        require(v > 0,
+          s"graft-snapshot: ${log.noun} $root has no committed version")
+        v
+      }
+    table.fold[BaseRelation](new SnapshotRelation(sqlContext, root, version))(
+      new SnapshotGroupRelation(sqlContext, root, _, version))
   }
 }
 

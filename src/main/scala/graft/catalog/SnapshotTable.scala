@@ -104,7 +104,7 @@ object SnapshotTable {
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   private def vdir(version: Long): String = f"v$version%08d"
-  private def manifest(root: String, version: Long): Path =
+  private[catalog] def manifest(root: String, version: Long): Path =
     new Path(s"$root/_commits/${vdir(version)}.json")
 
   /** One committed version's decoded manifest. `entries` are paths
@@ -429,16 +429,8 @@ object SnapshotTable {
     * checkpoint covers are committed by construction (the rollup only
     * records parsed manifests), so only the uncovered suffix pays body
     * reads — without a checkpoint this is the old O(versions) walk. */
-  def committedVersions(spark: SparkSession, root: String): Seq[Long] = {
-    val fs = fsOf(spark, root)
-    val ckpt = latestCheckpoint(fs, root)
-    val k = ckpt.map(_.k).getOrElse(0L)
-    val covered = ckpt.map(_.recs.iterator.map(_.version).toSet)
-      .getOrElse(Set.empty[Long])
-    listedVersions(fs, root).filter(v =>
-      (v <= k && covered(v)) ||
-      parseManifest(v, readManifestBody(fs, root, v)).isDefined)
-  }
+  def committedVersions(spark: SparkSession, root: String): Seq[Long] =
+    log.versions(fsOf(spark, root), root)
 
   /** Latest committed version; 0 = empty table (no commits yet).
     * O(1) manifest reads on the steady state: the `_latest` hint is
@@ -449,21 +441,8 @@ object SnapshotTable {
     * deletes BELOW the keep window the pointer sits inside). Missing /
     * corrupt hint falls back to the filename listing with bodies read
     * lazily descending. */
-  def currentVersion(spark: SparkSession, root: String): Long = {
-    val fs = fsOf(spark, root)
-    val hinted = readPointer(fs, root)
-      .filter(h => h > 0 && manifestIfCommitted(fs, root, h).isDefined)
-    hinted match {
-      case Some(h) =>
-        var v = h
-        while (manifestIfCommitted(fs, root, v + 1).isDefined) v += 1
-        v
-      case None =>
-        listedVersions(fs, root).reverseIterator
-          .find(v => manifestIfCommitted(fs, root, v).isDefined)
-          .getOrElse(0L)
-    }
-  }
+  def currentVersion(spark: SparkSession, root: String): Long =
+    log.current(fsOf(spark, root), root)
 
   /** Read each committed version's manifest `tag` (absent → no entry).
     * Tags are the replay-idempotence hook: a streaming sink stamps
@@ -474,18 +453,9 @@ object SnapshotTable {
     * (a batch whose commit aged out of retention is still committed;
     * re-appending it would duplicate rows the live snapshot holds).
     * Only the uncovered suffix pays body reads. */
-  def committedTags(spark: SparkSession, root: String): Map[String, Long] = {
-    val fs = fsOf(spark, root)
-    val ckpt = latestCheckpoint(fs, root)
-    val k = ckpt.map(_.k).getOrElse(0L)
-    val fromCkpt = ckpt.map(_.recs.flatMap(r => r.tag.map(_ -> r.version)))
-      .getOrElse(Seq.empty)
-    val fromBodies = listedVersions(fs, root).filter(_ > k).flatMap { v =>
-      parseManifest(v, readManifestBody(fs, root, v))
-        .flatMap(m => m.tag.map(_ -> v))
-    }
-    (fromCkpt ++ fromBodies).toMap
-  }
+  def committedTags(spark: SparkSession, root: String): Map[String, Long] =
+    log.walk(fsOf(spark, root), root).recs()
+      .flatMap(r => r.rec.tag.map(_ -> r.rec.version)).toMap
 
   /** The most recent committed version that carries a tag, with its
     * tag — filenames listed without body reads, then bodies read
@@ -557,7 +527,8 @@ object SnapshotTable {
     * version's own manifest, which exists for every non-vacuumed
     * version. `ts` is the RAW recorded timestamp; the monotonic
     * adjustment stays a read-time fold so it composes identically
-    * across the checkpoint/suffix seam. */
+    * across the checkpoint/suffix seam. It is also the record the
+    * [[VersionLog]] walk yields for a manifest body, of either format. */
   private[graft] case class CkptRec(version: Long, base: Long,
       ts: Option[Long], tag: Option[String], nEntries: Long,
       pcol: Option[String])
@@ -689,6 +660,138 @@ object SnapshotTable {
         } catch { case scala.util.control.NonFatal(_) => None }
       }.nextOption()
 
+  // ----------------------------------------------------------------
+  // the version log: one record walk and one effective clock, read
+  // through the table's or the group's manifest format
+  // ----------------------------------------------------------------
+
+  /** One version-log record with the effective commit clock after it.
+    * `live` = the version's manifest is still listed (a readable
+    * version, not one known only from the checkpoint). */
+  private[catalog] case class LogRec(rec: CkptRec, live: Boolean,
+      clock: Option[Long]) {
+    /** The version's effective commit timestamp; None = it records no
+      * timestamp (and leaves the clock where it was). */
+    def eff: Option[Long] = rec.ts.flatMap(_ => clock)
+  }
+
+  /** The `_commits/` version log as one manifest format reads it. The
+    * table's and the group's logs share version discovery, the record
+    * walk and the effective clock; only `rec`, the projection of a
+    * manifest body onto its [[CkptRec]], differs (None = not committed
+    * yet: the create→write window). `checkpointed` logs read their
+    * metadata checkpoint first; groups roll none, by their recorded
+    * small-artifact scope. `what` and `noun` name the log in errors. */
+  private[catalog] final class VersionLog(what: String, val noun: String,
+      checkpointed: Boolean, rec: (Long, String) => Option[CkptRec]) {
+
+    /** v's manifest exists and its body parses — one exists probe and
+      * at most one body read. */
+    def committed(fs: FileSystem, root: String, v: Long): Boolean =
+      fs.exists(manifest(root, v)) &&
+        rec(v, readManifestBody(fs, root, v)).isDefined
+
+    /** [[SnapshotTable.currentVersion]]: pointer hint, roll forward,
+      * listing fallback. */
+    def current(fs: FileSystem, root: String): Long =
+      readPointer(fs, root).filter(h => h > 0 && committed(fs, root, h))
+        match {
+        case Some(h) =>
+          var v = h
+          while (committed(fs, root, v + 1)) v += 1
+          v
+        case None =>
+          listedVersions(fs, root).reverseIterator
+            .find(committed(fs, root, _)).getOrElse(0L)
+      }
+
+    /** The optimistic-concurrency pre-check every commit shape runs. */
+    def checkBase(fs: FileSystem, root: String, expectedBase: Long): Long = {
+      val cur = current(fs, root)
+      if (cur != expectedBase)
+        throw new java.util.ConcurrentModificationException(
+          s"$what commit conflict at $root: expected base version " +
+          s"$expectedBase but the $noun is at $cur — rebase on the " +
+          "current snapshot and retry")
+      cur
+    }
+
+    /** THE record walk, from one checkpoint read and one listing (in
+      * that order: vacuum checkpoints before it drops manifests). */
+    final class Walk(fs: FileSystem, root: String) {
+      val ckpt: Option[Ckpt] =
+        if (checkpointed) latestCheckpoint(fs, root) else None
+      val listed: Seq[Long] = listedVersions(fs, root)
+      val live: Set[Long] = listed.toSet
+
+      /** Records ascending: the checkpoint's (vacuumed versions
+        * included), then the listed suffix it does not cover up to
+        * `through`, each body read only when the caller pulls it. The
+        * clock starts at the checkpoint's fold base (`summEff`) and
+        * steps Delta-style, effective(v) = max(recorded(v),
+        * effective(v-1) + 1), so later versions always resolve later
+        * and the fold composes identically across the checkpoint/suffix
+        * seam. */
+      def recs(through: Long = Long.MaxValue): Iterator[LogRec] = {
+        val k = ckpt.fold(0L)(_.k)
+        var clock = ckpt.flatMap(_.summEff)
+        (ckpt.iterator.flatMap(_.recs) ++ listed.iterator
+            .filter(v => v > k && v <= through)
+            .flatMap(v => rec(v, readManifestBody(fs, root, v))))
+          .map { r =>
+            r.ts.foreach(raw =>
+              clock = Some(clock.fold(raw)(e => math.max(raw, e + 1))))
+            LogRec(r, live(r.version), clock)
+          }
+      }
+    }
+
+    def walk(fs: FileSystem, root: String): Walk = new Walk(fs, root)
+
+    def versions(fs: FileSystem, root: String): Seq[Long] =
+      walk(fs, root).recs().filter(_.live).map(_.rec.version).toSeq
+
+    /** [[SnapshotTable.versionAsOf]]: the latest live version whose
+      * effective timestamp is ≤ ts. */
+    def asOf(fs: FileSystem, root: String, ts: Long): Long = {
+      val w = walk(fs, root)
+      val it = w.recs()
+      var clock = w.ckpt.flatMap(_.summEff)
+      var best = 0L
+      // once the clock has reached ts, every LATER version's effective
+      // timestamp is strictly greater (the +1 step) — resolution is
+      // determined, so stop before reading another body: a ts-less
+      // manifest BEYOND this point (an old writer binary in a rolling
+      // upgrade) must not fail queries it cannot affect
+      while (!clock.exists(_ >= ts) && it.hasNext) {
+        val r = it.next()
+        // a ts-less LIVE version before the resolution point is the
+        // pre-timestamp-history refusal; a ts-less VACUUMED checkpoint
+        // record contributes neither a clock value nor a read target
+        if (r.live) r.eff match {
+          case None => sys.error(
+            s"$what asOf: version ${r.rec.version} of $root records no " +
+            s"commit timestamp and resolution of $ts needs it — that " +
+            "span of history predates timestamp time travel; pin by " +
+            "version number instead")
+          case Some(e) => if (e <= ts) best = r.rec.version
+        }
+        clock = r.clock
+      }
+      require(best > 0,
+        s"$what asOf: timestamp $ts precedes the first commit of $root " +
+        "(or resolves only to versions retention already dropped)")
+      best
+    }
+  }
+
+  /** The table's version log: a manifest projects onto its rollup
+    * record. */
+  private[catalog] val log = new VersionLog("snapshot", "table",
+    checkpointed = true, (v, body) => parseManifest(v, body).map(m =>
+      CkptRec(m.version, m.base, m.ts, m.tag, m.entries.length.toLong,
+        m.pcol)))
+
   /** Write (or extend) the checkpoint to cover every committed version
     * ≤ `throughV`: the prior checkpoint's records carry over verbatim,
     * the uncovered suffix's manifest bodies are rolled up, and the new
@@ -703,12 +806,11 @@ object SnapshotTable {
   private[graft] def writeCheckpoint(fs: FileSystem, root: String,
       throughV: Long, retried: Boolean = false): Boolean =
     try {
-      val prior = latestCheckpoint(fs, root)
+      val w = log.walk(fs, root)
+      val prior = w.ckpt
       val k0 = prior.map(_.k).getOrElse(0L)
       if (k0 >= throughV) true
       else {
-        val listed = listedVersions(fs, root)
-        val listedSet = listed.toSet
         // versions are DENSE (next = cur + 1), so (k0, throughV] must
         // be fully covered by `prior` plus the listing. A gap means a
         // concurrent vacuum checkpointed-and-dropped versions AFTER
@@ -719,41 +821,25 @@ object SnapshotTable {
         // (vacuumed before any rollup recorded it): proceed without
         // those versions — the fold then starts at the first survivor,
         // exactly the semantics that span always had.
-        if (!retried &&
-            ((k0 + 1) to throughV).exists(v => !listedSet.contains(v)))
+        if (!retried && ((k0 + 1) to throughV).exists(v => !w.live(v)))
           return writeCheckpoint(fs, root, throughV, retried = true)
-        val rolled = listed
-          .filter(v => v > k0 && v <= throughV)
-          .map(v => parseManifest(v, readManifestBody(fs, root, v))
-            .map(m => CkptRec(m.version, m.base, m.ts, m.tag,
-              m.entries.length.toLong, m.pcol)))
-        if (rolled.exists(_.isEmpty)) false
+        val all = w.recs(throughV).toIndexedSeq
+        if (all.count(_.rec.version > k0) <
+            w.listed.count(v => v > k0 && v <= throughV)) false
         else {
-          var summV = prior.map(_.summV).getOrElse(0L)
-          var summEff = prior.flatMap(_.summEff)
-          var summN = prior.map(_.summN).getOrElse(0L)
-          val all = (prior.map(_.recs).getOrElse(Seq.empty) ++
-            rolled.flatten).toIndexedSeq
           // bound the file: fold the oldest VACUUMED records into the
           // scalar summary (their fold base is all readers need; live
           // records never fold — committedVersions counts on them).
-          // One pass: the fold count is the smaller of the overflow
-          // and the vacuumed prefix length — no per-record tail copies.
-          val overflow = math.max(0, all.length - checkpointRecordCap)
-          val foldable =
-            all.segmentLength(r => !listedSet.contains(r.version), 0)
-          val foldN = math.min(overflow, foldable)
-          all.take(foldN).foreach { r =>
-            r.ts.foreach { raw =>
-              summEff = Some(summEff match {
-                case None => raw
-                case Some(e) => math.max(raw, e + 1)
-              })
-            }
-            summV = r.version
-            summN += 1
-          }
-          val recs = all.drop(foldN)
+          // The fold count is the smaller of the overflow and the
+          // vacuumed prefix length; the last folded record's clock is
+          // the new fold base.
+          val foldN = math.min(math.max(0, all.length - checkpointRecordCap),
+            all.segmentLength(!_.live))
+          val (summV, summEff) = all.take(foldN).lastOption.fold(
+            (prior.map(_.summV).getOrElse(0L), prior.flatMap(_.summEff)))(
+            r => (r.rec.version, r.clock))
+          val summN = prior.map(_.summN).getOrElse(0L) + foldN
+          val recs = all.drop(foldN).map(_.rec)
           // the DEFAULT per-scheme create, NOT the installed arbiter:
           // the arbiter seam arbitrates COMMITS (who owns a version);
           // a checkpoint is an advisory rollup whose content is a pure
@@ -800,8 +886,9 @@ object SnapshotTable {
 
   /** The commit-path hook: roll up every [[checkpointInterval]]
     * commits. Only [[SnapshotTable]]'s own commit shapes call it —
-    * [[SnapshotGroup]] manifests have their own format and stay on
-    * O(versions) audit scans by its recorded small-artifact scope. */
+    * [[SnapshotGroup]] reads the same version log without a checkpoint,
+    * so its audit walks stay O(versions) by its recorded small-artifact
+    * scope. */
   private def maybeCheckpoint(fs: FileSystem, root: String,
       next: Long): Unit =
     if (checkpointInterval > 0 && next % checkpointInterval == 0) {
@@ -822,15 +909,8 @@ object SnapshotTable {
       "without quotes or backslashes"))
 
   private def checkBase(spark: SparkSession, root: String,
-                        expectedBase: Long): Long = {
-    val cur = currentVersion(spark, root)
-    if (cur != expectedBase)
-      throw new java.util.ConcurrentModificationException(
-        s"snapshot commit conflict at $root: expected base version " +
-        s"$expectedBase but the table is at $cur — rebase on the " +
-        "current snapshot and retry")
-    cur
-  }
+                        expectedBase: Long): Long =
+    log.checkBase(fsOf(spark, root), root, expectedBase)
 
   /** Parquet reads every column back nullable regardless of the source
     * plan's nullability, so the recorded schema normalizes to nullable
@@ -2139,53 +2219,8 @@ object SnapshotTable {
     * Only still-listed versions are resolvable read targets. Fails
     * loudly before the first commit's timestamp, and on history
     * predating timestamp recording. */
-  def versionAsOf(spark: SparkSession, root: String, ts: Long): Long = {
-    val fs = fsOf(spark, root)
-    val ckpt = latestCheckpoint(fs, root)
-    val k = ckpt.map(_.k).getOrElse(0L)
-    val listed = listedVersions(fs, root)
-    val listedSet = listed.toSet
-    // the fold base is the checkpoint's SUMMARY when records older
-    // than the cap were folded: summEff IS effective(summV)
-    var eff = ckpt.flatMap(_.summEff).getOrElse(Long.MinValue)
-    var best = 0L
-    var done = false
-    // once the effective clock has reached ts, every LATER version's
-    // effective timestamp is strictly greater (the +1 adjustment) —
-    // resolution is already determined, so stop: a ts-less manifest
-    // BEYOND this point (an old writer binary in a rolling upgrade)
-    // must not fail queries it cannot affect
-    def step(v: Long, rawTs: Option[Long], resolvable: Boolean): Unit =
-      if (!done) {
-        if (eff != Long.MinValue && eff >= ts) done = true
-        else rawTs match {
-          case None =>
-            // a ts-less LISTED version before the resolution point is
-            // the pre-timestamp-history refusal; a ts-less VACUUMED
-            // checkpoint record contributes neither a clock value nor
-            // a read target and is simply skipped
-            if (resolvable) sys.error(
-              s"snapshot asOf: version $v of $root records no commit " +
-              s"timestamp and resolution of $ts needs it — that span " +
-              "of history predates timestamp time travel; pin by " +
-              "version number instead")
-          case Some(raw) =>
-            eff = if (eff == Long.MinValue) raw else math.max(raw, eff + 1)
-            if (eff <= ts && resolvable) best = v
-        }
-      }
-    ckpt.foreach(_.recs.foreach(r =>
-      step(r.version, r.ts, listedSet(r.version))))
-    listed.filter(_ > k).foreach { v =>
-      if (!done)
-        parseManifest(v, readManifestBody(fs, root, v))
-          .foreach(m => step(v, m.ts, resolvable = true))
-    }
-    require(best > 0,
-      s"snapshot asOf: timestamp $ts precedes the first commit of " +
-      s"$root (or resolves only to versions retention already dropped)")
-    best
-  }
+  def versionAsOf(spark: SparkSession, root: String, ts: Long): Long =
+    log.asOf(fsOf(spark, root), root, ts)
 
   /** Read the snapshot that was current as of wall-clock `ts` — the
     * human form of time travel ("as of yesterday 06:00");
@@ -2280,30 +2315,12 @@ object SnapshotTable {
     * versions). Driver-side construction is O(versions) rows of
     * metadata, the same bound the listing itself carries. */
   def history(spark: SparkSession, root: String): DataFrame = {
-    val fs = fsOf(spark, root)
-    val ckpt = latestCheckpoint(fs, root)
-    val k = ckpt.map(_.k).getOrElse(0L)
-    val listed = listedVersions(fs, root)
-    val listedSet = listed.toSet
-    var eff = ckpt.flatMap(_.summEff).getOrElse(Long.MinValue)
-    def fold(ts: Option[Long]): Option[Long] = ts.map { raw =>
-      eff = if (eff == Long.MinValue) raw else math.max(raw, eff + 1); eff
-    }
-    val fromCkpt = ckpt.map(_.recs).getOrElse(Seq.empty).flatMap { r =>
-      val effTs = fold(r.ts)
-      if (listedSet(r.version))
-        Some((r.version, r.base, r.ts, effTs, r.tag, r.nEntries, r.pcol))
-      else None
-    }
-    val fromBodies = listed.filter(_ > k).flatMap { v =>
-      parseManifest(v, readManifestBody(fs, root, v)).map { m =>
-        (m.version, m.base, m.ts, fold(m.ts), m.tag,
-          m.entries.length.toLong, m.pcol)
-      }
-    }
+    val rows = log.walk(fsOf(spark, root), root).recs().filter(_.live)
+      .map(r => (r.rec.version, r.rec.base, r.rec.ts, r.eff, r.rec.tag,
+        r.rec.nEntries, r.rec.pcol)).toSeq
     import spark.implicits._
-    (fromCkpt ++ fromBodies).toDF("version", "base", "commit_ts",
-      "effective_ts", "tag", "entries", "pcol")
+    rows.toDF("version", "base", "commit_ts", "effective_ts", "tag",
+      "entries", "pcol")
   }
 
   /** TIME-BASED RETENTION — the "keep 7 days" form of [[vacuum]]:
@@ -2317,30 +2334,20 @@ object SnapshotTable {
   def vacuumOlderThan(spark: SparkSession, root: String, cutoffTs: Long,
                       minAgeMs: Long = defaultVacuumHorizonMs)
       : Seq[Long] = {
-    val fs = fsOf(spark, root)
-    val versions = committedVersions(spark, root)
     // effective ts is strictly increasing, so the aged set is the
     // longest PREFIX of history below the cutoff — takeWhile, which
     // also makes a ts-less version a conservative stop (nothing beyond
-    // it ages by time). The fold runs through the SAME checkpoint seam
-    // as [[versionAsOf]] (vacuumed records anchor the clock), so
-    // retention and resolution can never disagree about a version's
-    // effective timestamp.
-    val ckpt = latestCheckpoint(fs, root)
-    val k = ckpt.map(_.k).getOrElse(0L)
-    var eff = ckpt.flatMap(_.summEff).getOrElse(Long.MinValue)
-    val effOf = scala.collection.mutable.Map.empty[Long, Long]
-    def fold(v: Long, ts: Option[Long]): Unit = ts.foreach { raw =>
-      eff = if (eff == Long.MinValue) raw else math.max(raw, eff + 1)
-      effOf(v) = eff
-    }
-    ckpt.foreach(_.recs.foreach(r => fold(r.version, r.ts)))
-    versions.filter(_ > k).foreach(v =>
-      manifestIfCommitted(fs, root, v).foreach(m => fold(v, m.ts)))
-    val aged = versions.dropRight(1).takeWhile(v =>
-      effOf.get(v).exists(_ < cutoffTs))
-    if (aged.isEmpty) Seq.empty
-    else {
+    // it ages by time) and ends the walk at the first version that is
+    // not aged. The clock is the version log's (vacuumed checkpoint
+    // records anchor it), so retention and resolution can never
+    // disagree about a version's effective timestamp.
+    val live = LazyList.from(log.walk(fsOf(spark, root), root).recs())
+      .filter(_.live)
+    val aged = live.takeWhile(_.eff.exists(_ < cutoffTs))
+      .map(_.rec.version).toList
+    // the latest version always stays
+    (if (live.lengthCompare(aged.length) > 0) aged else aged.dropRight(1))
+      .lastOption.fold(Seq.empty[Long]) { through =>
       // the drop boundary is an explicit VERSION NUMBER, not a count:
       // a concurrent commit landing between this aged-prefix
       // computation and the reclaim pass's own listing only appends
@@ -2348,7 +2355,6 @@ object SnapshotTable {
       // a count-based keepLast recomputed against a second listing
       // could overshoot past the aged prefix and delete versions at or
       // after the cutoff (ADVICE r10).
-      val through = aged.last
       vacuumDrop(spark, root, vs => vs.dropRight(1).filter(_ <= through),
         minAgeMs)
     }
@@ -2379,6 +2385,18 @@ object SnapshotTable {
     vacuumDrop(spark, root, _.dropRight(keepLast), minAgeMs)
   }
 
+  /** Vacuum's writer-safety test, shared with [[SnapshotGroup.vacuum]]:
+    * a path is reclaimable once it is at least `minAgeMs` old, measured
+    * from now (`minAgeMs` ≤ 0: always); one that vanished mid-pass is
+    * skipped. */
+  private[catalog] def oldEnough(fs: FileSystem, minAgeMs: Long)
+      : Path => Boolean = {
+    val now = System.currentTimeMillis()
+    p => minAgeMs <= 0L ||
+      (try now - fs.getFileStatus(p).getModificationTime >= minAgeMs
+       catch { case _: java.io.IOException => false })
+  }
+
   /** The reclaim pass shared by [[vacuum]] and [[vacuumOlderThan]]:
     * `dropSel` picks the versions to drop FROM THE ONE authoritative
     * listing this pass performs, so no caller can race a concurrent
@@ -2387,11 +2405,7 @@ object SnapshotTable {
   private def vacuumDrop(spark: SparkSession, root: String,
       dropSel: Seq[Long] => Seq[Long], minAgeMs: Long): Seq[Long] = {
     val fs = fsOf(spark, root)
-    val now = System.currentTimeMillis()
-    def oldEnough(p: Path): Boolean =
-      minAgeMs <= 0L ||
-        (try now - fs.getFileStatus(p).getModificationTime >= minAgeMs
-         catch { case _: java.io.IOException => false }) // vanished: skip
+    val aged = oldEnough(fs, minAgeMs)
     val versions = committedVersions(spark, root)
     val drop = dropSel(versions)
     // CHECKPOINT-AWARE: before the dropped manifests disappear, make
@@ -2430,16 +2444,15 @@ object SnapshotTable {
       survivors.flatMap(_.dels.flatten.map(_.path)).toSet
     fs.listStatus(new Path(root)).toSeq.map(_.getPath).foreach { p =>
       val n = p.getName
-      if (n.startsWith("del-") && !referencedDels.contains(n) &&
-          oldEnough(p))
+      if (n.startsWith("del-") && !referencedDels.contains(n) && aged(p))
         fs.delete(p, true)
       else if (n.startsWith("data-") && !referenced.contains(n)) {
         if (!referencedDirs.contains(n)) {
-          if (oldEnough(p)) fs.delete(p, true) // fully dead (and aged)
+          if (aged(p)) fs.delete(p, true) // fully dead (and aged)
         } else // partially referenced: reclaim only unreferenced subdirs
           fs.listStatus(p).toSeq.filter(_.isDirectory).foreach { c =>
             if (!referenced.contains(s"$n/${c.getPath.getName}") &&
-                oldEnough(c.getPath))
+                aged(c.getPath))
               fs.delete(c.getPath, true)
           }
       }

@@ -10,11 +10,11 @@ import org.apache.spark.sql.functions._
   * round operates on that small table. Corpus text is touched exactly
   * once, regardless of merge count.
   *
-  * The merge loop itself never collects: the winning pair each round is
-  * a 1-row DataFrame broadcast into the next round's merge expression
-  * (the [[KMeans.train]] / [[Dedup.dedupClusters]] driver-loop shape),
-  * and the greedy left-to-right pair substitution is a per-row
-  * higher-order `aggregate` fold over the word's symbol array.
+  * The merge loop collects only the round's top pairs (a bounded,
+  * vocabulary-statistic table); the chosen merges enter the next
+  * round's substitution as literals, and the greedy left-to-right pair
+  * substitution is a per-row higher-order `aggregate` fold over the
+  * word's symbol array.
   */
 object Bpe {
 
@@ -69,42 +69,13 @@ object Bpe {
   }
 
   /** Train `nMerges` BPE merges over a symbolized histogram. Each round:
-    * pair weights → deterministic argmax (weight desc, pair asc) kept as
-    * a 1-row DataFrame → broadcast into the substitution fold. Returns
-    * the merge table (rank, a, b, weight) — the artifact a tokenizer
-    * loads. Rounds are driver-loop iterations over vocabulary-sized
-    * DataFrames (localCheckpoint-truncated); the corpus is NOT re-read. */
-  def train(hist: DataFrame, nMerges: Int): DataFrame = {
-    require(nMerges >= 1, s"nMerges must be >= 1, got $nMerges")
-    var syms = symbolized(hist).localCheckpoint()
-    var merges: DataFrame = null
-    var rank = 1
-    var exhausted = false
-    while (rank <= nMerges && !exhausted) {
-      val win = pairWeights(syms)
-        .orderBy(col("weight").desc, col("a").asc, col("b").asc)
-        .limit(1)
-        .withColumn("rank", lit(rank))
-        .localCheckpoint()
-      // Pairs can run dry before nMerges (every word fully merged): a
-      // 0-row winner cross-joined into syms would silently annihilate the
-      // histogram, so stop instead. The 0-row win still seeds `merges`
-      // with the right schema when the corpus had no pairs at all.
-      if (win.isEmpty) {
-        if (merges == null) merges = win
-        exhausted = true
-      } else {
-        merges = if (merges == null) win else merges.unionByName(win)
-        syms = syms.crossJoin(broadcast(win.select(
-            col("a").as("_ma"), col("b").as("_mb"))))
-          .select(mergePair(col("syms"), col("_ma"), col("_mb")).as("syms"),
-                  col("c"))
-          .localCheckpoint()
-        rank += 1
-      }
-    }
-    merges.select(col("rank"), col("a"), col("b"), col("weight"))
-  }
+    * pair weights → deterministic argmax (weight desc, pair asc),
+    * collected (one row) → substituted into every word by the
+    * [[mergePair]] fold. Returns the merge table (rank, a, b, weight) —
+    * the artifact a tokenizer loads. Rounds are [[rounds]] over
+    * vocabulary-sized DataFrames; the corpus is NOT re-read. */
+  def train(hist: DataFrame, nMerges: Int): DataFrame =
+    rounds("Bpe.train", hist, nMerges, topM = 1)(_.take(1))
 
   /** [[train]] with BATCHED merge rounds: identical merge table, ~B
     * merges per Spark round instead of one — the fix for naive BPE's
@@ -128,58 +99,76 @@ object Bpe {
     * corpora (shared letters everywhere) degrade to one-merge rounds
     * while disjoint-symbol regions batch wide. Selected merges apply as
     * one nested [[mergePair]] fold in selection order (`maxBatch` bounds
-    * the expression depth), one localCheckpoint per ROUND. */
+    * the expression depth), one checkpoint per ROUND. */
   def trainBatched(hist: DataFrame, nMerges: Int, topM: Int = 256,
                    maxBatch: Int = 64): DataFrame = {
-    require(nMerges >= 1, s"nMerges must be >= 1, got $nMerges")
     require(topM >= 1 && maxBatch >= 1, "need topM >= 1 and maxBatch >= 1")
+    rounds("Bpe.trainBatched", hist, nMerges, topM) { top =>
+      // floor of the visible table: -inf when EVERY live pair is here
+      val wmin = if (top.length < topM) Long.MinValue else top.last._3
+      val sel = scala.collection.mutable.ArrayBuffer.empty[(String, String, Long)]
+      val selConcats = scala.collection.mutable.HashSet.empty[String]
+      var stop = false
+      for (c @ (a, b, w) <- top if !stop) {
+        val room = sel.length < maxBatch
+        val touch = Set(a, b, a + b)
+        val isolated = !top.exists { case p @ (pa, pb, _) =>
+          p != c && (touch(pa) || touch(pb)) }
+        // two DIFFERENT selected pairs can produce the SAME new symbol
+        // ("a"+"bc" == "ab"+"c" == "abc"): each would feed invisible
+        // (x, abc) pairs up to wmin, so two creators could push one
+        // past the 2·wmin floor the proof relies on — one creator per
+        // new symbol, max
+        val freshConcat = !selConcats(a + b)
+        val aboveFloor = wmin == Long.MinValue || w > 2 * wmin
+        if (room && isolated && freshConcat && aboveFloor) {
+          sel += c; selConcats += a + b
+        } else stop = true
+      }
+      if (sel.isEmpty) Seq(top.head) // the naive round, verbatim
+      else sel.toSeq
+    }
+  }
+
+  /** The merge rounds both trainers share, on [[graft.Fixpoint.iterate]]:
+    * each round collects the top-`topM` pairs of the current symbolized
+    * histogram (weight desc, pair asc), `pick` chooses the merges to
+    * apply in order (a non-empty prefix of what it is given), the first
+    * `nMerges` picked overall are applied as one nested [[mergePair]]
+    * fold, and the loop stops once `nMerges` merges are taken or no
+    * pair is left. The merge table is built on the driver, so it reads
+    * no checkpoint, and the last round's symbols are released. */
+  private def rounds(op: String, hist: DataFrame, nMerges: Int, topM: Int)
+      (pick: Seq[(String, String, Long)] => Seq[(String, String, Long)])
+      : DataFrame = {
+    require(nMerges >= 1, s"nMerges must be >= 1, got $nMerges")
     val spark = hist.sparkSession
-    var syms = symbolized(hist).localCheckpoint()
     val acc = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
     var exhausted = false
-    while (acc.length < nMerges && !exhausted) {
+    // every round takes at least one merge or finds none left, so the
+    // loop stops within nMerges + 1 rounds
+    val syms = graft.Fixpoint.iterate(op, symbolized(hist).localCheckpoint(),
+        nMerges + 1, changes = Some((_, _) =>
+          if (exhausted || acc.length == nMerges) 0L else 1L)) { syms =>
       val top = pairWeights(syms)
         .orderBy(col("weight").desc, col("a").asc, col("b").asc)
         .limit(topM)
-        .collect()
+        .collect().toSeq
         .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-      if (top.isEmpty) exhausted = true
+      // pairs can run dry before nMerges (every word fully merged)
+      if (top.isEmpty) { exhausted = true; syms }
       else {
-        // floor of the visible table: -inf when EVERY live pair is here
-        val wmin = if (top.length < topM) Long.MinValue else top.last._3
-        val sel = scala.collection.mutable.ArrayBuffer.empty[(String, String, Long)]
-        val selConcats = scala.collection.mutable.HashSet.empty[String]
-        var stop = false
-        for (c @ (a, b, w) <- top if !stop) {
-          val room = sel.length < maxBatch && acc.length + sel.length < nMerges
-          val touch = Set(a, b, a + b)
-          val isolated = !top.exists { case p @ (pa, pb, _) =>
-            p != c && (touch(pa) || touch(pb)) }
-          // two DIFFERENT selected pairs can produce the SAME new symbol
-          // ("a"+"bc" == "ab"+"c" == "abc"): each would feed invisible
-          // (x, abc) pairs up to wmin, so two creators could push one
-          // past the 2·wmin floor the proof relies on — one creator per
-          // new symbol, max
-          val freshConcat = !selConcats(a + b)
-          val aboveFloor = wmin == Long.MinValue || w > 2 * wmin
-          if (room && isolated && freshConcat && aboveFloor) {
-            sel += c; selConcats += a + b
-          } else stop = true
-        }
-        if (sel.isEmpty) sel += top.head // the naive round, verbatim
-        val merged = sel.foldLeft(col("syms")) { case (cur, (a, b, _)) =>
-          mergePair(cur, lit(a), lit(b)) }
-        syms = syms.select(merged.as("syms"), col("c")).localCheckpoint()
+        val sel = pick(top).take(nMerges - acc.length)
         val base = acc.length
         acc ++= sel.zipWithIndex.map { case ((a, b, w), i) =>
           (base + i + 1, a, b, w) }
+        syms.select(sel.foldLeft(col("syms")) { case (cur, (a, b, _)) =>
+          mergePair(cur, lit(a), lit(b)) }.as("syms"), col("c"))
       }
     }
+    graft.Fixpoint.release(syms)
     import spark.implicits._
-    if (acc.isEmpty)
-      spark.emptyDataset[(Int, String, String, Long)]
-        .toDF("rank", "a", "b", "weight")
-    else acc.toSeq.toDF("rank", "a", "b", "weight")
+    acc.toSeq.toDF("rank", "a", "b", "weight")
   }
 
   /** The rank-ordered merge table as ONE broadcast row of two parallel

@@ -241,35 +241,42 @@ object Dedup {
                                  threshold: Double): DataFrame =
     verifyExactJaccardTracked(cand, docs, id, text, n, threshold)._1
 
+  /** The candidate docs' shingle arrays (did, shs), one row per doc
+    * named on either side of `cand` (a_id, b_id), cached: the table
+    * feeds BOTH sides of the caller's pair join (different join keys ->
+    * different exchanges, so ReuseExchange cannot dedupe the subtree).
+    * Candidates are few by construction, so materializing their arrays
+    * is tiny — unlike the full corpus's shingles, which stay
+    * recompute-only. Repartitioned BEFORE the shingling projection
+    * (r12): the semi-join inherits the corpus scan's file-split
+    * partitioning, so the CPU-heavy shingleArray of the surviving
+    * candidates ran at input-split parallelism (measured: a ~2 s 3-task
+    * stage at sf0.1). The exchange moves only the CANDIDATE docs' text
+    * — candidate-bounded at any scale — and the explicit partition
+    * count (the session's scale-adaptive setting) keeps AQE from
+    * re-coalescing the tiny-bytes/heavy-compute exchange to one task
+    * (the d24 lesson). */
+  private def candidateShingles(cand: DataFrame, docs: DataFrame,
+                                id: Column, text: Column, n: Int)
+      : DataFrame = {
+    val candIds = cand
+      .select(explode(array(col("a_id"), col("b_id"))).as("cid"))
+      .distinct()
+    docs
+      .join(broadcast(candIds), id === col("cid"), "left_semi")
+      .repartition(docs.sparkSession.sessionState.conf.numShufflePartitions,
+        id)
+      .select(id.as("did"), shingleArray(text, n).as("shs"))
+      .cache()
+  }
+
   /** [[verifyExactJaccard]] also handing back its cached intermediate,
     * for callers that must unpersist per batch (see probeLshTracked). */
   private def verifyExactJaccardTracked(cand: DataFrame, docs: DataFrame,
                                         id: Column, text: Column, n: Int,
                                         threshold: Double)
       : (DataFrame, Seq[DataFrame]) = {
-    val candIds = cand
-      .select(explode(array(col("a_id"), col("b_id"))).as("cid"))
-      .distinct()
-    // cached: the candidate shingle-array table feeds BOTH sides of the
-    // pair join below (different join keys -> different exchanges, so
-    // ReuseExchange cannot dedupe the subtree). Candidates are few by
-    // construction, so materializing their arrays is tiny — unlike the
-    // full corpus's shingles, which stay recompute-only.
-    // Repartitioned BEFORE the shingling projection (r12): the semi-join
-    // inherits the corpus scan's file-split partitioning, so the
-    // CPU-heavy shingleArray of the surviving candidates ran at
-    // input-split parallelism (measured: a ~2 s 3-task stage at sf0.1).
-    // The exchange moves only the CANDIDATE docs' text — candidate-
-    // bounded at any scale, exactly the set this function exists to
-    // keep small — and the explicit partition count (the session's
-    // scale-adaptive setting) keeps AQE from re-coalescing the
-    // tiny-bytes/heavy-compute exchange to one task (the d24 lesson).
-    val candArr = docs
-      .join(broadcast(candIds), id === col("cid"), "left_semi")
-      .repartition(docs.sparkSession.sessionState.conf.numShufflePartitions,
-        id)
-      .select(id.as("did"), shingleArray(text, n).as("shs"))
-      .cache()
+    val candArr = candidateShingles(cand, docs, id, text, n)
     val out = cand
       .join(candArr.select(col("did").as("a_id"), col("shs").as("sa")), "a_id")
       .join(candArr.select(col("did").as("b_id"), col("shs").as("sb")), "b_id")
@@ -605,22 +612,12 @@ object Dedup {
     // verifyExactJaccard shape): the former form re-derived the FULL
     // corpus's exploded shingles twice more (one leg per pair side) and
     // paid a two-key (b_id, sh) join at corpus-gram grain to count the
-    // intersection. Candidates are few by construction, so shingling
-    // only them — one array row per candidate doc, repartitioned off
-    // the scan's split count before the CPU-heavy derivation (the
-    // verifyExactJaccard note) — and counting via array_intersect is
+    // intersection. Shingling only the candidates
+    // ([[candidateShingles]]) and counting via array_intersect is
     // candidate-bounded at any scale. n_inter is identical:
     // shingleArray is array_distinct'd, so |intersect| counts distinct
     // shared shingles exactly as the distinct-gram join did.
-    val candIds = cand
-      .select(explode(array(col("a_id"), col("b_id"))).as("cid"))
-      .distinct()
-    val candArr = docs
-      .join(broadcast(candIds), id === col("cid"), "left_semi")
-      .repartition(docs.sparkSession.sessionState.conf.numShufflePartitions,
-        id)
-      .select(id.as("did"), shingleArray(text, n).as("shs"))
-      .cache()
+    val candArr = candidateShingles(cand, docs, id, text, n)
     cand
       .join(candArr.select(col("did").as("a_id"), col("shs").as("sa")), "a_id")
       .join(candArr.select(col("did").as("b_id"), col("shs").as("sb")), "b_id")

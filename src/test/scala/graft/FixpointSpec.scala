@@ -83,7 +83,8 @@ class FixpointSpec extends SparkSpec {
       "wro_flow_accumulation", "wro_twi", "wro_region_group",
       "wro_zonal_geometry", "d43_sssp", "d19_host_rank", "d2_dedup_clusters",
       "d41_perceptron", "d42_calibration", "d24_triangles", "d2_lsh_ingest",
-      "snk5_partition_merge", "snk6_gdpr_delete").foreach { name =>
+      "snk5_partition_merge", "snk6_gdpr_delete", "d15_bpe_encode",
+      "d15_bpe_tokens", "d40_fertility", "pipe_tokenized_pack").foreach { name =>
     test(s"$name holds no checkpoint its result does not read") {
       val m = mark()
       val df = SparkEntry.queries(name)(spark, "/root/testdata/sf0.01")
