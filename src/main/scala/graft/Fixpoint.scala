@@ -9,7 +9,8 @@ import org.apache.spark.sql.execution.LogicalRDD
   * need no loop: see [[graft.ops.Tiles]].)
   *
   *  - [[partitions]] sizes a loop's shuffles from its row bound.
-  *  - [[scoped]] runs a materializing body at loop confs.
+  *  - [[scoped]] runs a materializing body in a session clone at loop
+  *    confs.
   *  - [[iterate]] runs the rounds: one stats-free checkpoint per round,
   *    release of every block the loop no longer needs, and a loud
   *    failure when a convergence loop runs out of rounds. */
@@ -22,17 +23,20 @@ object Fixpoint {
     math.max(1L, math.min(spark.sessionState.conf.numShufflePartitions.toLong,
       rows / 100000L + 1L)).toInt
 
-  /** Run `body` with AQE off and shuffle partitions at
-    * [[partitions]]`(rows)`, restoring the session's values afterwards.
-    * Loop frames are bounded by `rows` (a pair graph, a node set, a
-    * corpus), so AQE has nothing to adapt, yet it would submit
-    * every one of a round's tiny shuffle stages as its own job; with it
-    * off each materialization is one job. `body` must MATERIALIZE what
-    * it builds (checkpoint or action) — a lazy plan returned from the
-    * scope runs later at session confs (the [[graft.withConfs]]
-    * contract, including its same-session concurrency boundary). */
-  def scoped[T](spark: SparkSession, rows: Long)(body: => T): T =
-    withConfs(spark, Map(
+  /** Run `body` in a clone of `spark` with AQE off, shuffle partitions
+    * at [[partitions]]`(rows)` and `confs`, its jobs described as `op`;
+    * `spark` itself never changes. Loop frames are bounded by `rows` (a
+    * pair graph, a node set, a corpus), so AQE has nothing to adapt,
+    * yet it would submit every one of a round's tiny shuffle stages as
+    * its own job; with it off each materialization is one job. `body`
+    * builds its loop frames in the clone it is given (a caller-session
+    * frame re-homed by [[GraftBridge.rehome]]) and MATERIALIZES them
+    * (checkpoint or action); a frame it returns is re-homed into
+    * `spark`, where its later lazy plans run at the caller's confs (the
+    * [[graft.inClone]] contract). */
+  def scoped[T](op: String, spark: SparkSession, rows: Long,
+                confs: Map[String, String] = Map.empty)(body: SparkSession => T): T =
+    inClone(spark, op, confs ++ Map(
       "spark.sql.adaptive.enabled" -> "false",
       "spark.sql.shuffle.partitions" -> partitions(spark, rows).toString))(body)
 
@@ -65,17 +69,16 @@ object Fixpoint {
     var cur = init
     var rounds = 0
     var changed = 1L
-    val caller = spark.sparkContext.getLocalProperty("spark.job.description")
-    try while (rounds < maxRounds && (changes.isEmpty || changed > 0)) {
-      spark.sparkContext.setJobDescription(s"$op round ${rounds + 1}")
-      val frame = step(cur)
-      read ++= checkpointsOf(frame)
-      val next = GraftBridge.freshCheckpoint(frame)
-      changes.foreach(count => changed = count(cur, next))
-      if (rounds > 0) unpersist(spark, checkpointsOf(cur))
-      cur = next
-      rounds += 1
-    } finally spark.sparkContext.setJobDescription(caller)
+    while (rounds < maxRounds && (changes.isEmpty || changed > 0))
+      described(spark, s"$op round ${rounds + 1}") {
+        val frame = step(cur)
+        read ++= checkpointsOf(frame)
+        val next = GraftBridge.freshCheckpoint(frame)
+        changes.foreach(count => changed = count(cur, next))
+        if (rounds > 0) unpersist(spark, checkpointsOf(cur))
+        cur = next
+        rounds += 1
+      }
     val converged = changes.isEmpty || changed == 0
     unpersist(spark,
       if (converged) read -- checkpointsOf(cur) else read ++ checkpointsOf(cur))

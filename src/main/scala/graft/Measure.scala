@@ -23,8 +23,9 @@ import scala.util.control.NonFatal
   *    the jobs it ran, attributed by job group (Spark's status store); the blocks it still
   *    holds after `clearCache()` ([[GraftBridge.Residue]]) and how many
   *    of them its result does not read (`storage.rdds_leaked`); its ten
-  *    longest jobs with their descriptions; or the exception it threw,
-  *    after which the next query runs. Metric names are the
+  *    longest jobs with their descriptions (the query's name, unless an
+  *    operator describes its own, as `<op> round <i>`); or the exception
+  *    it threw, after which the next query runs. Metric names are the
   *    benchmark's per-layer names (perfbench).
   *
   * Usage: `runMain graft.Measure plan|layers ...`; the session has
@@ -60,7 +61,7 @@ object Measure {
       SparkEntry.queries(n)(spark, dir).collect()
       spark.catalog.clearCache()
       val residue = new GraftBridge.Residue(sc)
-      sc.setJobGroup(group, null)
+      sc.setJobGroup(group, n)
       val t0 = System.nanoTime()
       val df = SparkEntry.queries(n)(spark, dir)
       df.collect()

@@ -531,13 +531,13 @@ object Dedup {
     val spark = und.sparkSession
     val edges = und.count()
     val p = Fixpoint.partitions(spark, edges)
-    val labels = Fixpoint.scoped(spark, edges) {
-      val sym = und
-        .union(und.select(col("dst").as("src"), col("src").as("dst")))
+    val labels = Fixpoint.scoped(op, spark, edges) { c =>
+      val u = GraftBridge.rehome(und, c)
+      val sym = u.union(u.select(col("dst").as("src"), col("src").as("dst")))
         .repartition(p, col("src"))
         .localCheckpoint()
-      val nodes = und.select(col("src").as("id"))
-        .union(und.select(col("dst").as("id"))).distinct()
+      val nodes = u.select(col("src").as("id"))
+        .union(u.select(col("dst").as("id"))).distinct()
       try Fixpoint.iterate(op, nodes.select(col("id"), col("id").as("lbl"))
           .repartition(p, col("id")), maxIter,
           changes = Some((_, next) => next.filter(col("lbl") =!= col("prev")).count())) {

@@ -1,7 +1,7 @@
 package graft.llm
 
 import graft.Fixpoint
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge}
 import org.apache.spark.sql.functions._
 
 /** Distributed triangle counting — the local-clustering primitive a
@@ -84,12 +84,12 @@ object Graph {
     // orientation bounds any one u's fan-out at ~sqrt|E| so no task is
     // hot. Output is ONE row — safe to materialize at construction.
     // the 1-row result reads none of the derived sets: release them
-    try graft.withConfs(edges.sparkSession, Map(
-      "spark.sql.adaptive.coalescePartitions.enabled" -> "false")) {
-      closed.agg(count(lit(1)).as("n_triangles"))
+    try graft.inClone(edges.sparkSession, "triangles", Map(
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false")) { c =>
+      GraftBridge.rehome(closed.agg(count(lit(1)).as("n_triangles"))
         .crossJoin(broadcast(nNodes))
         .crossJoin(broadcast(nEdges))
-        .select(col("n_nodes"), col("n_edges"), col("n_triangles"))
+        .select(col("n_nodes"), col("n_edges"), col("n_triangles")), c)
         .localCheckpoint()
     } finally Fixpoint.release(und, deg, oriented)
   }
@@ -129,9 +129,9 @@ object Graph {
     val spark = e.sparkSession
     // every loop frame is node/edge-graph-sized: loop confs sized from
     // the MEASURED edge count, so each round is one job
-    Fixpoint.scoped(spark, e.count()) {
+    Fixpoint.scoped("sssp", spark, e.count()) { c =>
       Fixpoint.iterate("sssp",
-          spark.range(1).select(lit(source).as("node"), lit(0L).as("dist")),
+          c.range(1).select(lit(source).as("node"), lit(0L).as("dist")),
           rounds) { dist =>
         val relaxed = dist
           .join(e, dist("node") === e("src"))

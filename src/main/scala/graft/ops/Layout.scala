@@ -94,10 +94,10 @@ object Layout {
     // uniform grid cuts precisely at aligned region edges. On real
     // data the guarantee is quad-granular (strays are whole aligned
     // quads, never mid-quad diagonal tails), not region-exact.
-    // (The write is eager, so save/restore around it is sound.)
-    graft.withConfs(spark, Map(
+    // The write is eager: it plans and runs in the clone carrying the conf.
+    graft.inClone(spark, "compactZorder", Map(
       "spark.sql.execution.rangeExchange.sampleSizePerPartition" -> "125000")) {
-      spark.read.parquet(srcPath)
+      _.read.parquet(srcPath)
         .withColumn("__z", zorder16(x, y))
         .withColumn("__zq", shiftright(col("__z"), quadBits))
         .repartitionByRange(files, col("__zq"))

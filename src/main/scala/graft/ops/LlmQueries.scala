@@ -443,6 +443,7 @@ object LlmQueries {
             lit("mirror").as("source"), col("n_red"), col("n_removed"),
             col("text")))
       .localCheckpoint()
+    Fixpoint.release(planted, para) // the result reads withMirror only
     val keepIds = withMirror
       .groupBy(xxhash64(col("text")).as("h"), md5(col("text")).as("fp"))
       .agg(min("doc_id").as("doc_id")).select("doc_id")

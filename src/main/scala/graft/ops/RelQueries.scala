@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft._
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -245,20 +245,20 @@ object RelQueries {
     * filter over its join keys and the fact side filters on
     * might_contain BEFORE its shuffle, so at 100 TB only
     * possibly-matching rows pay exchange bytes. The fixture sits far
-    * below the production-tuned size gates, so the query runs in its
-    * own `newSession()` (isolated SQLConf — session-global state is
-    * never mutated under a shared gate session) with the size
-    * thresholds widened and broadcast disabled: eligibility is decided
-    * by plan SHAPE, exactly as `RuntimeFilterSpec` pins; the bloom
+    * below the production-tuned size gates, so the query plans in a
+    * clone of the caller's session (`GraftBridge.cloneSession`: the
+    * caller's runtime confs, its own SQLConf — the caller's session is
+    * never changed) with the size thresholds widened and broadcast
+    * disabled: eligibility is decided by plan SHAPE, exactly as `RuntimeFilterSpec` pins; the bloom
     * build is itself a broadcast-sized aggregate. A plan assertion
     * lives in the spec; the gate here proves the filter never changes
     * the ANSWER (bloom false positives only pass extra rows to the
     * exact join). */
   def j17BloomJoin(s: SparkSession, dir: String): DataFrame = {
-    val ns = s.newSession()
-    ns.conf.set("spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold", "10GB")
-    ns.conf.set("spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "0")
-    ns.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val ns = GraftBridge.cloneSession(s, Map(
+      "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "10GB",
+      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1"))
     val fact = table(ns, dir, "lineitem")
       .select(col("l_orderkey"),
         round(col("l_extendedprice") * 100).cast("long").as("cents"))
@@ -1732,6 +1732,25 @@ object RelQueries {
       .agg(count(lit(1)).as("n"), sum("cents").cast("long").as("sum_cents"))
   }
 
+  /** Commit `base` as the first version of the snapshot table at
+    * `root`, partitioned by `pcol` with each partition's rows in about
+    * `files` files, fragmented DETERMINISTICALLY: each partition's rows
+    * land in one task (hash by the partition column), sorted by
+    * event_id, and maxRecordsPerFile (set in a session clone for the
+    * write) rolls a new file every `rows` records — so file k of
+    * partition t holds exactly its rows with per-partition id-order
+    * rank in [k·rows, (k+1)·rows), clustered ranges an oracle replays
+    * with a window function. This is also the layout a real ingest
+    * would WANT for range skipping. */
+  private def commitRolled(op: String, base: DataFrame, root: String,
+                           pcol: String, files: Int): Long = {
+    val rows = base.groupBy(pcol).count().agg(max("count")).head.getLong(0) / files + 1
+    inClone(base.sparkSession, op, Map("spark.sql.files.maxRecordsPerFile" -> rows.toString)) {
+      c => graft.catalog.SnapshotTable.commitPartitioned(GraftBridge.rehome(
+        base.repartition(col(pcol)).sortWithinPartitions(pcol, "event_id"), c), root, 0L, pcol)
+    }
+  }
+
   /** SNK22: FILE-GRAIN DATA SKIPPING during fragmented ingest
     * ([[graft.catalog.SnapshotTable.pruneFiles]] over the per-file
     * bounds recorded in each entry's stats blob): the events snapshot
@@ -1760,22 +1779,7 @@ object RelQueries {
     val base = events0
       .select(col("event_id"), col("event_type"),
         (col("value").cast(dec) * 100).cast("long").as("cents"))
-    // fragment DETERMINISTICALLY: each type's rows land in one task
-    // (hash by the partition column), sorted by event_id, and
-    // maxRecordsPerFile rolls a new file every `rowsPerFile` records —
-    // so file k of type t holds exactly its rows with per-type
-    // id-order rank in [k·rowsPerFile, (k+1)·rowsPerFile), clustered
-    // ranges the oracle replays with a window function. This is also
-    // the layout a real ingest would WANT for range skipping.
-    val rowsPerFile = base.groupBy("event_type").count()
-      .agg(max("count")).head.getLong(0) / 12 + 1
-    val v1 = withConfs(s,
-        Map("spark.sql.files.maxRecordsPerFile" -> rowsPerFile.toString)) {
-      SnapshotTable.commitPartitioned(
-        base.repartition(col("event_type"))
-          .sortWithinPartitions("event_type", "event_id"),
-        root, 0L, "event_type")
-    }
+    val v1 = commitRolled("snk22FilePrune", base, root, "event_type", 12)
     val m = SnapshotTable.manifestAt(s, root, v1)
     val (lo, hiP) = (4L * fwidth, 5L * fwidth - 1L)
     val preds = Seq(Pred("event_id", ">=", lo), Pred("event_id", "<=", hiP))
@@ -1927,15 +1931,7 @@ object RelQueries {
         (col("value").cast(dec) * 100).cast("long").as("cents"),
         floor(col("event_id") / width).cast("long").as("bkt"))
     // multi-file partitions: roll a new file every quarter-partition
-    val rowsPerFile = base.groupBy("bkt").count()
-      .agg(max("count")).head.getLong(0) / 4 + 1
-    val v1 = withConfs(s,
-        Map("spark.sql.files.maxRecordsPerFile" -> rowsPerFile.toString)) {
-      SnapshotTable.commitPartitioned(
-        base.repartition(col("bkt"))
-          .sortWithinPartitions("bkt", "event_id"),
-        root, 0L, "bkt")
-    }
+    val v1 = commitRolled("snk26RowDelete", base, root, "bkt", 4)
     def dataFiles(): Set[String] = {
       def walk(p: org.apache.hadoop.fs.Path): Seq[String] =
         fs.listStatus(p).toSeq.flatMap { st =>
@@ -2262,7 +2258,8 @@ object RelQueries {
     // real scale bound (~20 ancestor rows/doc → the default 1M rows is
     // ~50k documents; a larger corpus must raise this CONSCIOUSLY —
     // enforced, not just documented; boundary behavior spec-pinned in
-    // SubquerySpec), and restore the caller's values afterwards.
+    // SubquerySpec); they go into the loop scope's session clone, so
+    // the caller's values never change.
     // The recursion executes as one driver-scheduled UnionLoop step per
     // level, and under AQE every level's stages are submitted as their
     // OWN jobs — measured 76 single-task jobs with 7+ s of scheduling
@@ -2270,12 +2267,11 @@ object RelQueries {
     // ≤ one row per document per level, so the materialization runs in
     // the loop scope sized from the corpus row count, read from the
     // parquet footers (Fixpoint.scoped).
-    withConfs(s, Map("spark.sql.cteRecursionLevelLimit" -> "100",
-        "spark.sql.cteRecursionRowLimit" -> "1000000")) {
-      Fixpoint.scoped(s, org.apache.spark.sql.execution.datasources.parquet
-          .GraftFooters.rowCount(s, s"$dir/documents.parquet")) {
-        s.sql(q23Sql).localCheckpoint()
-      }
+    Fixpoint.scoped("q23", s, org.apache.spark.sql.execution.datasources.parquet
+        .GraftFooters.rowCount(s, s"$dir/documents.parquet"),
+        Map("spark.sql.cteRecursionLevelLimit" -> "100",
+          "spark.sql.cteRecursionRowLimit" -> "1000000")) {
+      _.sql(q23Sql).localCheckpoint()
     }
   }
 

@@ -276,9 +276,10 @@ object WroQueries {
     * advisory-sized sub-tasks, replicating the matching build rows — the
     * engine-native version of [[Skew.saltedJoinOn]]'s 16-way salt. The
     * fact×fact stage must EXECUTE under the lowered thresholds, so it
-    * materializes via localCheckpoint inside a config save/restore
-    * block; the flagship kernel (broadcast remap + weights) composes on
-    * top afterwards. Result-invariance vs the salted path is the gate
+    * is built and materialized via localCheckpoint in a session clone
+    * carrying them ([[graft.inClone]]); the flagship kernel (broadcast
+    * remap + weights) composes on top afterwards, at the caller's
+    * confs. Result-invariance vs the salted path is the gate
     * (identical oracle as wro_overlay_skewed); SkewSpec asserts the
     * final adaptive plan actually carries the skew=true sort-merge
     * join. */
@@ -288,10 +289,11 @@ object WroQueries {
     // stores the filtered survivors, not the full fact×stats product
     // (the salted sibling streams end-to-end and never materializes —
     // this is the AQE path's equivalent economy)
-    val rep = withConfs(spark, aqeSkewConfs(hotSkewRows(spark, dir))) {
-      skewedJoinedAqe(spark, dir)
-        .filter(col("value") * 2 >= col("maxv"))
-        .localCheckpoint()
+    val rep = inClone(spark, "overlaySkewedAqe", aqeSkewConfs(hotSkewRows(spark, dir))) { c =>
+      val joined = skewedJoinedAqe(c, dir)
+      // the result reads rep only: release the build side's cellMax
+      try joined.filter(col("value") * 2 >= col("maxv")).localCheckpoint()
+      finally graft.Fixpoint.release(joined)
     }
     val ranges = WeightedOverlay.explodeRanges(catalog(spark, dir))
     WeightedOverlay.score(WeightedOverlay.remap(rep, ranges), weights(spark))

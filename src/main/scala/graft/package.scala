@@ -1,4 +1,4 @@
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, GraftBridge, Row, SparkSession}
 
 /** graft — a Spark-native (Scala) analytics engine with the query and
   * data-processing capabilities of Esri/weighted-raster-overlay-service-toolbox
@@ -56,29 +56,39 @@ package object graft {
     spark
   }
 
-  /** Run `body` with `confs` applied, restoring the previous session
-    * values afterwards — safe only when `body` EXECUTES the plan it
-    * builds (lazy plans would otherwise run after the restore). The
-    * iterative operators' loop scope ([[Fixpoint.scoped]]), the AQE skew
-    * demo (ops.WroQueries), layout maintenance (ops.Layout) and the
-    * file-rolling snapshot writes of snk22/snk26 (ops.RelQueries) use it.
+  /** Run `body` in a clone of `spark` carrying `confs`
+    * ([[GraftBridge.cloneSession]]), its jobs described as `op` (the
+    * caller's description is restored afterwards); a DataFrame it
+    * returns is re-homed into `spark`, so its later lazy plans run at
+    * the caller's confs. Engine code never sets a conf on a session it
+    * did not clone: a plan another thread materializes on `spark`
+    * meanwhile (a concurrent request, a streaming micro-batch) plans at
+    * the caller's confs.
     *
-    * Confs are SESSION-GLOBAL: a plan materialized CONCURRENTLY on the
-    * same SparkSession while `body` runs (another driver thread, a
-    * streaming micro-batch) would be planned under these confs too —
-    * results stay correct, but a data-scale job could plan at the
-    * loop's tiny parallelism. The declared-query and harness paths
-    * materialize sequentially, so this is a documented boundary, not a
-    * live hazard; a caller mixing an iterative loop with concurrent
-    * same-session jobs should clone a session for the loop instead. */
-  private[graft] def withConfs[T](spark: SparkSession,
-                                  confs: Map[String, String])(body: => T): T = {
-    val saved = confs.keys.map(k => k -> spark.conf.getOption(k)).toMap
-    try { confs.foreach { case (k, v) => spark.conf.set(k, v) }; body }
-    finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
-    }
+    * Confs act where a plan is planned and run, so `body` builds in the
+    * clone, or re-homes into it ([[GraftBridge.rehome]]), whatever it
+    * MATERIALIZES (checkpoint, action or write) before it returns. A
+    * join plans in its receiver's session: a caller-session receiver
+    * inside `body` still plans at the caller's confs. The iterative
+    * operators' loop scope ([[Fixpoint.scoped]]), triangles (llm.Graph),
+    * the AQE skew demo (ops.WroQueries), layout maintenance (ops.Layout)
+    * and the file-rolling snapshot writes of snk22/snk26
+    * (ops.RelQueries) run through it; j17 (ops.RelQueries) plans its
+    * lazy result in a clone it keeps. */
+  private[graft] def inClone[T](spark: SparkSession, op: String,
+      confs: Map[String, String])(body: SparkSession => T): T =
+    described(spark, op)(body(GraftBridge.cloneSession(spark, confs)) match {
+      case df: Dataset[Row @unchecked] => GraftBridge.rehome(df, spark).asInstanceOf[T]
+      case t => t
+    })
+
+  /** Run `body` with its jobs, those AQE and broadcast threads submit
+    * included, described as `desc`; the caller's description is
+    * restored afterwards. */
+  private[graft] def described[T](spark: SparkSession, desc: String)(body: => T): T = {
+    val caller = spark.sparkContext.getLocalProperty("spark.job.description")
+    spark.sparkContext.setJobDescription(desc)
+    try body finally spark.sparkContext.setJobDescription(caller)
   }
 
   /** Conditional scan-spread (optimization guide §2.5: "input skew — one

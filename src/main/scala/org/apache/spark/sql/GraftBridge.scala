@@ -7,6 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.status.api.v1
 import scala.jdk.CollectionConverters._
+import scala.util.chaining._
 
 /** Bridge to Spark 4's private[sql] Column <-> catalyst Expression
   * conversions, needed to expose custom Catalyst expressions (e.g.
@@ -41,6 +42,20 @@ object GraftBridge {
     val r = df.localCheckpoint().queryExecution.logical.asInstanceOf[LogicalRDD]
     classic.Dataset.ofRows(spark, r.copy()(spark, None, None))
   }
+
+  /** A session sharing `spark`'s SparkContext, cache and catalog, with
+    * a COPY of its runtime confs and temp views plus `confs`
+    * (`newSession()` would start from the static confs and drop both).
+    * A frame built in it plans and runs at its confs whenever it is
+    * materialized; `spark` never changes. */
+  def cloneSession(spark: SparkSession, confs: Map[String, String]): SparkSession =
+    spark.asInstanceOf[classic.SparkSession].cloneSession()
+      .tap(c => confs.foreach { case (k, v) => c.conf.set(k, v) })
+
+  /** `df`'s analyzed plan as a frame of `spark`: it plans and runs at
+    * `spark`'s confs from here on. Nothing executes. */
+  def rehome(df: DataFrame, spark: SparkSession): DataFrame =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], df.queryExecution.analyzed)
 
   /** Release an RDD's blocks by id, whether or not its object is
     * still reachable (`RDD.unpersist` needs the object). */

@@ -2,7 +2,7 @@ package graft.catalog
 
 import graft.SparkSpec
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, GraftBridge, Row}
 import org.apache.spark.sql.execution.datasources.parquet.GraftFooters
 import org.apache.spark.sql.functions.{col, input_file_name, max, min}
 import org.apache.spark.sql.types._
@@ -125,27 +125,28 @@ class SnapshotFooterStatsSpec extends SparkSpec {
     val rnd = new scala.util.Random(20261017L)
     var multiGroup = 0
     var boundCols = Set.empty[String]
-    graft.withConfs(spark, Map("parquet.block.size" -> "4096")) {
-      (1 to 12).foreach { trial =>
-        val root = freshRoot()
-        val nan = trial % 3 == 0
-        val inf = trial % 4 == 0
-        val df = frame(rnd, 300 + rnd.nextInt(900), 1 + rnd.nextInt(4), nan, inf)
-        val v1 = SnapshotTable.commitPartitioned(df, root, 0L, "p")
-        val d1 = newDir(root, v1, Set.empty)
-        assert(recorded(root, v1, d1) == readBack(root, d1), s"trial $trial")
-        // the append path records the same footer stats for its new entries
-        val v2 = SnapshotTable.appendInto(
-          frame(rnd, 200, 1 + rnd.nextInt(3), nan, inf), root, "p")
-        val d2 = newDir(root, v2, Set(d1))
-        val got = recorded(root, v2, d2)
-        assert(got == readBack(root, d2), s"trial $trial (append)")
-        boundCols ++= got.values.flatMap(_._1.keys)
-        val conf = spark.sparkContext.hadoopConfiguration
-        multiGroup += GraftFooters.dataFiles(conf, new Path(s"$root/$d1/p=0"))
-          .count(f => GraftFooters.footer(conf, f, rowGroups = true)
-            .getBlocks.size > 1)
-      }
+    // small row groups, written in a clone: the suite's session never changes
+    val small = GraftBridge.cloneSession(spark, Map("parquet.block.size" -> "4096"))
+    (1 to 12).foreach { trial =>
+      val root = freshRoot()
+      val nan = trial % 3 == 0
+      val inf = trial % 4 == 0
+      val df = GraftBridge.rehome(
+        frame(rnd, 300 + rnd.nextInt(900), 1 + rnd.nextInt(4), nan, inf), small)
+      val v1 = SnapshotTable.commitPartitioned(df, root, 0L, "p")
+      val d1 = newDir(root, v1, Set.empty)
+      assert(recorded(root, v1, d1) == readBack(root, d1), s"trial $trial")
+      // the append path records the same footer stats for its new entries
+      val v2 = SnapshotTable.appendInto(GraftBridge.rehome(
+        frame(rnd, 200, 1 + rnd.nextInt(3), nan, inf), small), root, "p")
+      val d2 = newDir(root, v2, Set(d1))
+      val got = recorded(root, v2, d2)
+      assert(got == readBack(root, d2), s"trial $trial (append)")
+      boundCols ++= got.values.flatMap(_._1.keys)
+      val conf = spark.sparkContext.hadoopConfiguration
+      multiGroup += GraftFooters.dataFiles(conf, new Path(s"$root/$d1/p=0"))
+        .count(f => GraftFooters.footer(conf, f, rowGroups = true)
+          .getBlocks.size > 1)
     }
     assert(multiGroup > 0, "no file had several row groups")
     // every bounded type was exercised, and the all-NULL column never is

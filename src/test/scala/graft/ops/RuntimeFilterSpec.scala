@@ -57,4 +57,19 @@ class RuntimeFilterSpec extends SparkSpec {
     assert(plan.contains("bloomfilter") || plan.contains("might_contain"),
       "the declared query no longer plans its runtime filter")
   }
+
+  test("j17 plans in a clone: the caller's runtime confs plus its own three") {
+    val caller = spark.newSession()
+    caller.conf.set("spark.sql.shuffle.partitions", "7")
+    val own = Map(
+      "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "10GB",
+      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
+    val before = own.keys.toSeq.map(caller.conf.get)
+    val ns = RelQueries.j17BloomJoin(caller, dir).sparkSession
+    assert(ns ne caller)
+    assert(ns.conf.get("spark.sql.shuffle.partitions") == "7")
+    assert(own.keys.toSeq.map(ns.conf.get) == own.values.toSeq)
+    assert(own.keys.toSeq.map(caller.conf.get) == before)
+  }
 }

@@ -59,37 +59,31 @@ class SkewSpec extends SparkSpec
        "result matches the salted plan") {
     import org.apache.spark.sql.execution.joins.SortMergeJoinExec
     val dir = "/root/testdata/sf0.001"
-    val partsKey = "spark.sql.shuffle.partitions"
-    val prevParts = spark.conf.get(partsKey)
-    try {
-      spark.conf.set(partsKey, "8")
-      val (df, smjs) = graft.withConfs(spark, WroQueries.aqeSkewConfs(WroQueries.hotSkewRows(spark, dir))) {
-        val d = WroQueries.skewedJoinedAqe(spark, dir)
-        // finalize THIS df's adaptive plan (count() would plan a clone)
-        d.queryExecution.toRdd.count()
-        val joins = collectWithSubqueries(d.queryExecution.executedPlan) {
-          case j: SortMergeJoinExec => j
-        }
-        (d, joins)
-      }
-      assert(smjs.nonEmpty, "no sort-merge join in the AQE skew plan")
-      assert(smjs.exists(_.isSkewJoin),
-        s"OptimizeSkewedJoin did not mark the join skew=true:\n" +
-          df.queryExecution.executedPlan)
-      // result-invariance vs the manual salt on the same data
-      def sig(salted: Boolean, aqe: Boolean): Seq[String] = {
-        val d =
-          if (aqe) graft.withConfs(spark, WroQueries.aqeSkewConfs(WroQueries.hotSkewRows(spark, dir))) {
-            WroQueries.skewedJoinedAqe(spark, dir).localCheckpoint()
-          }
-          else WroQueries.skewedJoined(spark, dir, salted)
-        // exact row multiset — a float SUM would be order-sensitive
-        // across the different task decompositions
-        d.select("cell_id", "layer", "value", "maxv")
-          .collect().map(_.toString).sorted.toSeq
-      }
-      assert(sig(salted = false, aqe = true) == sig(salted = true, aqe = false))
-    } finally spark.conf.set(partsKey, prevParts)
+    // the skew confs, at 8 shuffle partitions, in a clone of the suite's session
+    val skew = org.apache.spark.sql.GraftBridge.cloneSession(spark,
+      WroQueries.aqeSkewConfs(WroQueries.hotSkewRows(spark, dir)) +
+        ("spark.sql.shuffle.partitions" -> "8"))
+    val df = WroQueries.skewedJoinedAqe(skew, dir)
+    // finalize THIS df's adaptive plan (count() would plan a clone)
+    df.queryExecution.toRdd.count()
+    val smjs = collectWithSubqueries(df.queryExecution.executedPlan) {
+      case j: SortMergeJoinExec => j
+    }
+    assert(smjs.nonEmpty, "no sort-merge join in the AQE skew plan")
+    assert(smjs.exists(_.isSkewJoin),
+      s"OptimizeSkewedJoin did not mark the join skew=true:\n" +
+        df.queryExecution.executedPlan)
+    // result-invariance vs the manual salt on the same data
+    def sig(salted: Boolean, aqe: Boolean): Seq[String] = {
+      val d =
+        if (aqe) WroQueries.skewedJoinedAqe(skew, dir)
+        else WroQueries.skewedJoined(spark, dir, salted)
+      // exact row multiset — a float SUM would be order-sensitive
+      // across the different task decompositions
+      d.select("cell_id", "layer", "value", "maxv")
+        .collect().map(_.toString).sorted.toSeq
+    }
+    assert(sig(salted = false, aqe = true) == sig(salted = true, aqe = false))
   }
 
   // The r9 "AQE demo within 2.2x of its salted sibling" WALL-CLOCK
