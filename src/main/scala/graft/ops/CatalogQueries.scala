@@ -12,9 +12,10 @@ import org.apache.spark.sql.functions._
 object CatalogQueries {
 
   /** The derived catalog with comma-bearing labels ("<label>, b<idx>") so
-    * the RFC-4180 encoder's quote-wrapping is actually exercised. Uncached:
-    * the per-cell exchange, then one wide 1-row stats aggregate
-    * ([[WroQueries.layerStats]]). */
+    * the RFC-4180 encoder's quote-wrapping is actually exercised: one
+    * wide 1-row stats aggregate ([[WroQueries.layerStats]]) over the
+    * layer stack. The edit, MERGE and SCD-2 read the stack in two legs;
+    * both are local-relation scans, so neither needs a cache. */
   def catalogDecorated(s: SparkSession, dir: String): DataFrame =
     WroQueries.catalog(s, dir)
       .select(col("layer"),
@@ -25,16 +26,6 @@ object CatalogQueries {
   /** R13/R14/R16: the encoded catalog table (stored string form). */
   def catalogEncoded(s: SparkSession, dir: String): DataFrame =
     Catalog.encode(catalogDecorated(s, dir))
-
-  /** The encoded catalog for a query whose plan reads the per-cell frame
-    * in two legs that keep different columns of it (MERGE and SCD-2: the
-    * union branches; the edit: its quantity stats), so the planner cannot
-    * reuse one leg's exchanges for the other: the frame is cached, and
-    * the cache manager substitutes it into every matching subtree. */
-  private def catalogEncodedCached(s: SparkSession, dir: String): DataFrame = {
-    WroQueries.perCell(s, dir).cache()
-    catalogEncoded(s, dir)
-  }
 
   /** R15/R16: decode(encode(catalog)) — the full storage round-trip,
     * exploded back to per-class rows for comparison against the direct
@@ -64,7 +55,7 @@ object CatalogQueries {
 
   /** R18 + V2/V3 (pyt:222-330): apply the edit to one catalog row. */
   def updateClassification(s: SparkSession, dir: String): DataFrame =
-    Catalog.updateClassification(catalogEncodedCached(s, dir), "quantity",
+    Catalog.updateClassification(catalogEncoded(s, dir), "quantity",
       editedRanges, quantityStats(s, dir))
 
   /** The multi-row MERGE updates: a reclassification for the existing
@@ -93,14 +84,14 @@ object CatalogQueries {
     * untouched keep — with a broadcast-updates plan on both union
     * branches ([[Catalog.mergeCatalog]]). */
   def mergeCatalog(s: SparkSession, dir: String): DataFrame =
-    Catalog.mergeCatalog(catalogEncodedCached(s, dir), mergeUpdates(s))
+    Catalog.mergeCatalog(catalogEncoded(s, dir), mergeUpdates(s))
 
   /** R18++ : SCD-2 versioned history — the same updates as the MERGE,
     * applied at t=2,000,000 us to a version-1 history seeded at
     * t=1,000,000: quantity's v1 closes and v2 opens, density opens at
     * v1, untouched layers stay current ([[Catalog.scd2Apply]]). */
   def catalogScd2(s: SparkSession, dir: String): DataFrame = {
-    val hist = catalogEncodedCached(s, dir)
+    val hist = catalogEncoded(s, dir)
       .withColumn("version", lit(1))
       .withColumn("valid_from_us", lit(1000000L))
       .withColumn("valid_to_us", lit(null).cast("long"))

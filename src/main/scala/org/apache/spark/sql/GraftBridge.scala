@@ -4,8 +4,12 @@ import java.util.concurrent.ConcurrentHashMap
 import org.apache.spark.{CleanerListener, SparkContext}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerUnpersistRDD}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.status.api.v1
 import scala.jdk.CollectionConverters._
 import scala.util.chaining._
@@ -67,6 +71,23 @@ object GraftBridge {
     * `spark`'s confs from here on. Nothing executes. */
   def rehome(df: DataFrame, spark: SparkSession): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], df.queryExecution.analyzed)
+
+  /** `df`'s rows, collected to the driver in one action as copied
+    * Catalyst rows: no Row-encoder round trip. */
+  def collectInternal(df: DataFrame): Array[InternalRow] = {
+    val qe = df.queryExecution
+    SQLExecution.withNewExecutionId(qe, Some("collect"))(
+      qe.executedPlan.executeCollect().map(_.copy()))
+  }
+
+  /** A frame of `spark` over driver-held rows of `schema`: a
+    * `LocalRelation` with fresh attribute ids, so two reads of one row
+    * set in one plan do not collide. The rows are shared, not copied;
+    * nothing executes. */
+  def localFrame(spark: SparkSession, schema: StructType,
+                 rows: Seq[InternalRow]): DataFrame =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession],
+      LocalRelation(DataTypeUtils.toAttributes(schema), rows))
 
   /** Release an RDD's blocks by id, whether or not its object is
     * still reachable (`RDD.unpersist` needs the object). */

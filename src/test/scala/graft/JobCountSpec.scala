@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.GraftBridge
 import graft.catalog.SnapshotTable
 
@@ -9,44 +8,40 @@ import graft.catalog.SnapshotTable
   * from parquet footers, commit stats come from the new files' footers,
   * an append names its partitions from its own write's listing, and a
   * delete chain's key files are read under the table's recorded types.
-  * Also pins the job count of the one-pass overlay reads. */
+  * Also pins the job count of the one-pass overlay reads, with the layer
+  * stack built and when a read builds it. */
 class JobCountSpec extends SparkSpec {
 
-  /** Spark jobs `body` starts on this thread (its own job group, so
-    * jobs of concurrently running suites are not counted). */
-  private def jobs(body: => Any): Int = {
-    val sc = spark.sparkContext
-    val group = s"jobcount-${java.util.UUID.randomUUID()}"
-    val n = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null &&
-            e.properties.getProperty("spark.jobGroup.id") == group)
-          n.incrementAndGet()
-    }
-    sc.addSparkListener(l)
-    sc.setJobGroup(group, "job count")
-    try { body; GraftBridge.drain(sc) }
-    finally { sc.clearJobGroup(); sc.removeSparkListener(l) }
-    n.get
-  }
-
-  /** Jobs per overlay read at sf0.01, build and collect() together: the
-    * per-cell exchange, the stats window's exchange and the result. */
-  private val readJobs = Seq("wro_overlay_flagship" -> 3,
-    "wro_overlay_nodata" -> 3, "f9_remap_expr" -> 3)
+  /** Jobs per overlay read at sf0.01, build and collect() together, once
+    * the layer stack is built: the stats window's exchange and the
+    * result. */
+  private val readJobs = Seq("wro_overlay_flagship" -> 2,
+    "wro_overlay_nodata" -> 2, "f9_remap_expr" -> 2)
 
   readJobs.foreach { case (name, pinned) =>
-    test(s"$name runs $pinned Spark jobs and holds no RDD after clearCache") {
+    test(s"$name runs $pinned Spark jobs on a built layer stack and " +
+         "holds no RDD after clearCache") {
+      val dir = "/root/testdata/sf0.01"
+      graft.ops.WroQueries.perCell(spark, dir)
       // count only the RDDs this read made, so blocks other suites left
       // behind cannot skew the check
       val residue = new GraftBridge.Residue(spark.sparkContext)
-      val n = jobs(SparkEntry.queries(name)(spark, "/root/testdata/sf0.01")
-        .collect())
+      val n = jobs(SparkEntry.queries(name)(spark, dir).collect())
       spark.catalog.clearCache()
       assert(n == pinned)
       assert(residue.held == 0)
     }
+  }
+
+  test("a layer-stack miss runs the build's two jobs before the read's") {
+    val tmp = java.nio.file.Files.createTempDirectory("jobcount")
+    java.nio.file.Files.copy(
+      java.nio.file.Paths.get("/root/testdata/sf0.01/lineitem.parquet"),
+      tmp.resolve("lineitem.parquet"))
+    def flagship() = jobs(SparkEntry.queries("wro_overlay_flagship")(
+      spark, tmp.toString).collect())
+    assert(flagship() == 4)
+    assert(flagship() == 2)
   }
 
   test("building graft.table runs no Spark job") {
