@@ -47,11 +47,15 @@ object WroQueries {
     val version = GraftFooters.dataFiles(spark.sessionState.newHadoopConf(),
       new Path(path)).map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
     val (schema, rows) = layerStacks.of(spark.sparkContext, version) {
-      val pc = perCellOf(table(spark, dir, "lineitem"))
-      val rows = described(spark, "layer stack build")(GraftBridge.collectInternal(pc))
+      // ≤GridW² output rows: AQE off and one reduce partition make the
+      // build one job, where AQE submits its map stage as a job of its own
+      val (schema, rows) = Fixpoint.scoped("layer stack build", spark, GridW * GridW) { s =>
+        val pc = perCellOf(table(s, dir, "lineitem"))
+        (pc.schema, GraftBridge.collectInternal(pc))
+      }
       require(rows.length <= GridW * GridW,
         s"layer stack of $path has ${rows.length} cells, more than ${GridW * GridW}")
-      (pc.schema, scala.collection.immutable.ArraySeq.unsafeWrapArray(rows))
+      (schema, scala.collection.immutable.ArraySeq.unsafeWrapArray(rows))
     }
     GraftBridge.localFrame(spark, schema, rows)
   }

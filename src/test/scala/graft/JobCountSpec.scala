@@ -9,7 +9,7 @@ import graft.catalog.SnapshotTable
   * an append names its partitions from its own write's listing, and a
   * delete chain's key files are read under the table's recorded types.
   * Also pins the job count of the one-pass overlay reads, with the layer
-  * stack built and when a read builds it. */
+  * stack built and when a read builds it (the build is one job). */
 class JobCountSpec extends SparkSpec {
 
   /** Jobs per overlay read at sf0.01, build and collect() together, once
@@ -33,15 +33,26 @@ class JobCountSpec extends SparkSpec {
     }
   }
 
-  test("a layer-stack miss runs the build's two jobs before the read's") {
-    val tmp = java.nio.file.Files.createTempDirectory("jobcount")
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get("/root/testdata/sf0.01/lineitem.parquet"),
-      tmp.resolve("lineitem.parquet"))
-    def flagship() = jobs(SparkEntry.queries("wro_overlay_flagship")(
-      spark, tmp.toString).collect())
-    assert(flagship() == 4)
-    assert(flagship() == 2)
+  /** Jobs per overlay read that builds the layer stack, on a fresh copy
+    * of sf0.01 lineitem (a version no other test built): the build's one
+    * job, then the read's two. */
+  private val coldJobs = Seq("wro_overlay_flagship" -> 3,
+    "wro_overlay_nodata" -> 3, "f9_remap_expr" -> 3)
+
+  coldJobs.foreach { case (name, pinned) =>
+    test(s"$name runs $pinned Spark jobs and holds no RDD after clearCache") {
+      val tmp = java.nio.file.Files.createTempDirectory("jobcount")
+      java.nio.file.Files.copy(
+        java.nio.file.Paths.get("/root/testdata/sf0.01/lineitem.parquet"),
+        tmp.resolve("lineitem.parquet"))
+      val residue = new GraftBridge.Residue(spark.sparkContext)
+      def read() = jobs(SparkEntry.queries(name)(spark, tmp.toString).collect())
+      val (miss, hit) = (read(), read())
+      spark.catalog.clearCache()
+      assert(miss == pinned)
+      assert(hit == readJobs.toMap.apply(name))
+      assert(residue.held == 0)
+    }
   }
 
   test("building graft.table runs no Spark job") {
