@@ -18,8 +18,7 @@ import org.apache.spark.sql.execution.LogicalRDD
   * A checkpoint an operator makes outside a loop's rounds needs no
   * release of its own: the query scope of a declared query
   * ([[graft.ops]]) releases every checkpoint the result does not read
-  * when the plan returns. [[release]] is for a loop with no scope
-  * around each pass. */
+  * when the plan returns. */
 object Fixpoint {
 
   /** Shuffle partitions for a loop whose frames hold at most `rows`
@@ -91,13 +90,6 @@ object Fixpoint {
     require(converged, s"$op did not converge in $maxRounds rounds")
     cur
   }
-
-  /** Release the checkpoints `frames` read now — for a long-lived loop
-    * whose passes run under no query scope, such as
-    * [[graft.llm.Dedup.ingestLsh]] once per stream micro-batch, which
-    * would otherwise hold one more block per pass until the GC finds it. */
-  def release(frames: DataFrame*): Unit =
-    frames.foreach(df => unpersist(df.sparkSession, checkpointsOf(df)))
 
   /** By id: a checkpoint whose frame the GC already collected is
     * released now, not whenever the ContextCleaner gets to it. */

@@ -117,30 +117,4 @@ object Mv {
       .select(keys.map(col) ++ Seq(col("n_rows"), col("sum_cents"),
         coalesce(col("r_max"), col("max_cents")).as("max_cents")): _*)
   }
-
-  /** S17: the mergeable per-column PROFILE state — one row per audited
-    * column: exact row/null counts plus a Datasketches HLL sketch of
-    * the column's values (the v6 profile's metrics, re-expressed so
-    * every field merges: counts by sum, sketches by union). Built in
-    * ONE aggregate over the batch, unpivoted via the 1-row
-    * struct-array inline, exactly v6's shape. */
-  def profilePartials(df: DataFrame, cols: Seq[String]): DataFrame = {
-    val aggs = count(lit(1)).as("n_rows") +: cols.flatMap { c => Seq(
-      sum(col(c).isNull.cast("long")).as(s"${c}__nulls"),
-      expr(s"hll_sketch_agg($c)").as(s"${c}__sk")) }
-    val entries = array(cols.map { c =>
-      struct(lit(c).as("col_name"), col(s"${c}__nulls").as("n_null"),
-        col(s"${c}__sk").as("sk")) }: _*)
-    df.agg(aggs.head, aggs.tail: _*)
-      .select(col("n_rows"), explode(entries).as("m"))
-      .select(col("m.col_name").as("col_name"), col("n_rows"),
-        col("m.n_null").as("n_null"), col("m.sk").as("sk"))
-  }
-
-  /** Fold a batch's profile partials into the stored profile — sketch
-    * union re-touches no rows, the a18 rollup algebra. */
-  def profileMerge(view: DataFrame, delta: DataFrame): DataFrame =
-    view.unionByName(delta).groupBy("col_name")
-      .agg(sum(col("n_rows")).as("n_rows"), sum(col("n_null")).as("n_null"),
-           expr("hll_union_agg(sk)").as("sk"))
 }

@@ -8,9 +8,9 @@ import org.apache.spark.sql.functions._
   * is a parquet table PARTITIONED on a key (the SNK2 layout), and a
   * batch rewrites ONLY the partitions it touches. Untouched partitions
   * are never read and never written — their files stay byte-identical
-  * (spec-pinned at the file level). This retires the wholesale-rewrite
-  * caveat of [[graft.stream.Streams.catalogUpsert]] at fact scale: the
-  * same upsert shape, but the unit of rewrite is a partition, not the
+  * (spec-pinned at the file level). This retires the wholesale rewrite
+  * a dimension-sized catalog merge can afford at fact scale: the same
+  * upsert shape, but the unit of rewrite is a partition, not the
   * table.
   *
   * Reference: the per-layer write-back loop of
@@ -38,13 +38,13 @@ object PartitionMerge {
     *  - the rewrite result is materialized (localCheckpoint) BEFORE
     *    the dynamic-partition overwrite commits, because the write
     *    would otherwise truncate its own source partitions mid-read
-    *    (the catalogUpsert hazard). At petabyte partitions the same
+    *    (the self-overwrite hazard). At petabyte partitions the same
     *    plan stages each partition to a sibling directory and swaps by
     *    rename — the unit of atomicity is unchanged.
     *
     * Assumes `keyCol` is unique within a partition (the fact-upsert
     * contract); a batch with several rows per key should be reduced
-    * first, as [[graft.stream.Streams.catalogUpsert]] does. */
+    * first to one row per key (a deterministic max-struct pick). */
   def mergeInto(spark: SparkSession, path: String, batch: DataFrame,
                 partCol: String, keyCol: String,
                 payloadCols: Seq[String]): Seq[String] = {

@@ -503,9 +503,8 @@ object SnapshotTable {
     * namespace, with its version: `Right(id)` when the latest tag is
     * `prefix` + digits within Long range, `Left(tag)` for a foreign
     * latest tag, None when no tagged commit exists. The O(1) replay
-    * fast path BOTH streaming sinks share
-    * ([[graft.stream.SnapshotSink]], `Streams.snapshotApply`) — and
-    * the single place the suffix parse is guarded: an empty or
+    * fast path of the exactly-once sink ([[graft.stream.SnapshotSink]])
+    * — and the single place the suffix parse is guarded: an empty or
     * over-Long suffix is a FOREIGN tag, never an exception (a writer
     * tagging `ingest-` must not wedge every later micro-batch). */
   private[graft] def latestNumericTag(spark: SparkSession, root: String,
@@ -1055,7 +1054,8 @@ object SnapshotTable {
     * tables, [[SnapshotGroup]] included — both funnel every commit
     * through the one seam). Returns the previous arbiter so callers
     * can restore it; the race spec injects a fake conditional-PUT
-    * arbiter this way. */
+    * arbiter this way. Public although only specs call it: it is the
+    * seam where a deployment installs an object-store commit arbiter. */
   def installArbiter(a: CommitArbiter): CommitArbiter = {
     val prev = arbiter; arbiter = a; prev
   }

@@ -10,7 +10,10 @@ import org.apache.spark.sql.types.StructType
 object Validate {
 
   /** V1 (pyt:137-147): required-field presence — a plan-time schema
-    * assertion, failing fast like the reference's updateMessages. */
+    * assertion, failing fast like the reference's updateMessages. Public
+    * although only CatalogSpec calls it: it is the reference's own V1
+    * check, kept as API for a caller that validates a catalog before it
+    * loads it. */
   def requireFields(df: DataFrame, required: Seq[String]): Unit = {
     val have = df.schema.fieldNames.map(_.toLowerCase).toSet
     val missing = required.filterNot(f => have(f.toLowerCase))
@@ -25,7 +28,9 @@ object Validate {
 
   /** R3 (pyt:1149-1159, pyt:738-740): duplicate-name guard — returns the
     * names appearing more than once with their counts; empty = valid.
-    * The reference errors on any duplicate layer name. */
+    * The reference errors on any duplicate layer name. Public although
+    * only CatalogSpec calls it: it is the reference's own R3 check, kept
+    * as API beside [[requireFields]]. */
   def duplicateNames(df: DataFrame, nameCol: String = "name"): DataFrame =
     df.groupBy(col(nameCol)).agg(count(lit(1)).as("n")).filter(col("n") > 1)
 

@@ -267,8 +267,9 @@ object Bpe {
     * applies one merge — expression depth CONSTANT in the merge count
     * (the merge list is data, not plan). No custom expression, but the
     * nested higher-order folds run interpreted per element — the fused
-    * kernel is the hot-path form. */
-  def encodeDeclarative(docs: DataFrame, docId: Column, text: Column,
+    * kernel is the hot-path form. No query runs it: it is the
+    * reference ExtQueriesSpec checks [[encode]] against. */
+  private[graft] def encodeDeclarative(docs: DataFrame, docId: Column, text: Column,
                         merges: DataFrame): DataFrame = {
     val mlist = merges.agg(
       array_sort(collect_list(struct(col("rank"), col("a"), col("b"))))

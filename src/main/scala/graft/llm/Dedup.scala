@@ -154,9 +154,9 @@ object Dedup {
     * band signatures — so [[ingestLsh]] can compute them once and use
     * them for both the probe and the index append. Also returns the
     * intermediate CACHED frames: one-shot callers leave them for the
-    * harness clearCache (the lloydTwice convention), but the streaming
-    * ingest loop must unpersist per batch or executor storage grows
-    * without bound. */
+    * harness clearCache (the lloydTwice convention), but an ingest
+    * called once per batch must unpersist them per call or executor
+    * storage grows without bound. */
   private def probeLshTracked(index: DataFrame, probeSigs: DataFrame,
                               allDocs: DataFrame, allId: Column,
                               allText: Column, n: Int, threshold: Double)
@@ -198,13 +198,12 @@ object Dedup {
       probeLshTracked(index, sigs, allDocs, allId, allText, n, threshold)
     val pairs = probed.localCheckpoint()
     // the checkpoint materialized everything — release the probe's
-    // cached intermediates NOW, so a long-lived ingest loop (the S13
-    // stream) holds no per-batch cache entries
+    // cached intermediates NOW, so repeated ingests hold no per-batch
+    // cache entries (a query scope releases checkpoints, not caches)
     caches.foreach(_.unpersist(false))
+    // `sigs` is a checkpoint `pairs` does not read: the caller's query
+    // scope releases it
     sigs.write.mode("append").parquet(indexPath)
-    // released here, not by a query scope: lshIngestStream calls this
-    // once per micro-batch, a loop no scope bounds
-    Fixpoint.release(sigs)
     pairs
   }
 

@@ -45,8 +45,9 @@ object KMeans {
 
   /** The declarative reference formulation of [[sqDist]]: zip_with for
     * differences, aggregate (sequential fold) for the sum. Interpreted
-    * per element — the fused kernel is the hot-path form. */
-  def sqDistDeclarative(a: Column, b: Column): Column =
+    * per element — the fused kernel is the hot-path form. No query runs
+    * it: it is the reference LlmSpec checks [[sqDist]] against. */
+  private[graft] def sqDistDeclarative(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)), lit(0L), _ + _)
 
   /** One Lloyd iteration: assign every corpus vector to its nearest of

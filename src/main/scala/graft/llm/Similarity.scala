@@ -30,8 +30,10 @@ object Similarity {
   /** The declarative formulation of [[cosine]]: zip_with for products,
     * aggregate (sequential fold — deterministic order) for sums. No UDF,
     * but it materializes a product array and walks each input three
-    * times per row — the fused expression is the hot-path form. */
-  def cosineDeclarative(a: Column, b: Column): Column = {
+    * times per row — the fused expression is the hot-path form. No
+    * query runs it: it is the reference LlmSpec checks [[cosine]]
+    * against. */
+  private[graft] def cosineDeclarative(a: Column, b: Column): Column = {
     def dot(x: Column, y: Column) =
       aggregate(zip_with(x, y, _ * _), lit(0.0), _ + _)
     dot(a, b) / (sqrt(dot(a, a)) * sqrt(dot(b, b)))
@@ -178,8 +180,9 @@ object Similarity {
   /** Embedding-cosine near-duplicate pairs above a threshold. This
     * baseline IS all-pairs (exact, O(n²)); only for small corpora or
     * within-bucket verification — the scale path is
-    * [[cosineNearDupBucketed]]. */
-  def cosineNearDup(corpus: DataFrame, id: Column, embDouble: Column,
+    * [[cosineNearDupBucketed]]. No query runs it: it is the exact
+    * reference LlmSpec compares the bucketed pairs against. */
+  private[graft] def cosineNearDup(corpus: DataFrame, id: Column, embDouble: Column,
                     threshold: Double): DataFrame = {
     val c = corpus.select(id.as("vec_id"), embDouble.as("v"))
     c.select(col("vec_id").as("a_id"), col("v").as("va"))

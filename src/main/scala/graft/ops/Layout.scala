@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Data-layout operators: Z-order (Morton) interleaving for
@@ -34,25 +34,15 @@ object Layout {
   }
 
   /** Inverse of [[zorder16]]: extract the (x, y) pair back out of a
-    * Z-value — the round-trip property the spec checks. */
-  def dezorder16(z: Column): (Column, Column) = {
+    * Z-value. No query decodes a Z-value; LayoutSpec's round-trip test
+    * checks [[zorder16]] against it. */
+  private[graft] def dezorder16(z: Column): (Column, Column) = {
     def gather(offset: Int): Column =
       (0 until 16).map { i =>
         shiftleft(shiftright(z.cast("long"), 2 * i + offset)
           .bitwiseAND(lit(1L)), i)
       }.reduce(_ bitwiseOR _)
     (gather(0), gather(1))
-  }
-
-  /** Cluster `df` for 2D pruning: range-partition then sort by the
-    * Z-value of (x, y). Files written from the result carry tight
-    * min/max rectangles in both dimensions. */
-  def zorderBy(df: DataFrame, x: Column, y: Column,
-               partitions: Int): DataFrame = {
-    val keyed = df.withColumn("__z", zorder16(x, y))
-    keyed.repartitionByRange(partitions, col("__z"))
-      .sortWithinPartitions("__z")
-      .drop("__z")
   }
 
   /** Table MAINTENANCE: compaction × Z-order in ONE rewrite — the op a
@@ -67,12 +57,12 @@ object Layout {
     * snk8_compact_zorder gate. One shuffle (the Z range partitioner);
     * the sort is partition-local. */
   /** `quadBits` controls the cut granularity: file boundaries may fall
-    * only BETWEEN aligned 2^quadBits-cell Z quads. Why not plain
-    * [[zorderBy]]: its range bounds come from reservoir sampling (seed
-    * keyed off the global RDD id — different every run) and land at
-    * arbitrary Z positions; a boundary slipping even a few hundred
-    * rows across a major quad CORNER hands the file a stray tail from
-    * the diagonally-opposite region, blowing its min/max rectangle
+    * only BETWEEN aligned 2^quadBits-cell Z quads. Why not a plain
+    * range partition on the Z-value: its bounds come from reservoir
+    * sampling (seed keyed off the global RDD id — different every run)
+    * and land at arbitrary Z positions; a boundary slipping even a few
+    * hundred rows across a major quad CORNER hands the file a stray tail
+    * from the diagonally-opposite region, blowing its min/max rectangle
     * across a full axis (observed: 7-of-8 files hit by a y-band that
     * should touch 4). Bucketing the range key to aligned quads makes
     * every file a union of WHOLE quads — rectangles tight by

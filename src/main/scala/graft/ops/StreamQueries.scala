@@ -4,11 +4,11 @@ import graft._
 import graft.stream.Streams
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** S1–S3 declared as batch-equivalence queries: the summer operators run
-  * the SAME transform code used for streams, executed in batch mode over
-  * the events fixture, hash-checked against DuckDB. S4–S6 (watermark,
-  * stateful dedup, mapGroupsWithState) are not batch-expressible — they
-  * are exercised by StreamingSpec with MemoryStream inputs. */
+/** S1–S3 and S7 declared as batch-equivalence queries: each runs the
+  * SAME [[Streams]] transform used for streams, executed in batch mode
+  * over the events fixture, hash-checked against DuckDB. A watermark's
+  * late-data drop (S4) is not batch-expressible: StreamingSpec drives
+  * [[Streams.tumbling]] on a watermarked MemoryStream instead. */
 object StreamQueries {
 
   def s1(s: SparkSession, dir: String): DataFrame =

@@ -55,8 +55,10 @@ object WeightedOverlay {
     * nd: array<struct<lo:double, hi:double>>); layers absent from the
     * table are unmasked. Dimension-sized broadcast left join plus a
     * per-row exists over a handful of ranges — no extra shuffle of the
-    * cell side. */
-  def maskNoData(cells: DataFrame, noData: DataFrame): DataFrame = {
+    * cell side. The declared NoData queries mask inside the wide remap;
+    * this long form is the reference OverlaySpec and WideOverlaySpec
+    * check them against. */
+  private[graft] def maskNoData(cells: DataFrame, noData: DataFrame): DataFrame = {
     val nd = broadcast(noData.select(col("layer").as("nd_layer"), col("nd")))
     cells.join(nd, cells("layer") === col("nd_layer"), "left")
       // coalesce: an unmasked layer has a null nd array -> exists is
@@ -94,8 +96,10 @@ object WeightedOverlay {
       .filter(col("n_layers") > 0)
 
   /** End-to-end overlay: cells (cellCol, layer, value) through a decoded
-    * catalog and weights to per-cell scores. */
-  def apply(cells: DataFrame, catalog: DataFrame, weights: DataFrame,
+    * catalog and weights to per-cell scores. No declared query calls it
+    * (each composes [[remap]] and [[score]], or [[scoreWide]]); it is the
+    * reference WideOverlaySpec compares the wide overlay against. */
+  private[graft] def apply(cells: DataFrame, catalog: DataFrame, weights: DataFrame,
             cellCol: String = "cell_id"): DataFrame =
     score(remap(cells, explodeRanges(catalog)), weights, cellCol)
 }

@@ -1,14 +1,18 @@
 package graft.stream
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, StreamingQuery, TTLConfig, TimeMode, TimerValues, ValueState}
 
-/** Structured-Streaming operators over the `events` shape (SURVEY §2.B
-  * S1–S6). The transforms are written against a DataFrame so the SAME
-  * code path serves batch (oracle-checkable: `window`/`session_window`
-  * work in batch mode) and `readStream` inputs — batch-equivalence is
-  * the correctness argument for the streaming path (SURVEY §5.2-5).
+/** Structured-Streaming operators over the `events` shape: the tumbling,
+  * sliding and session windows (SURVEY §2.B S1–S3) and the stream-stream
+  * interval join (S7). The transforms are written against a DataFrame so
+  * the SAME code path serves batch (oracle-checkable: `window`/
+  * `session_window` work in batch mode) and `readStream` inputs —
+  * batch-equivalence is the correctness argument for the streaming path
+  * (SURVEY §5.2-5). [[graft.ops.StreamQueries]] declares each one as a
+  * batch query; StreamingSpec drives them on streams, a watermarked
+  * [[tumbling]] included. The exactly-once snapshot sink is
+  * [[SnapshotSink]].
   *
   * Event time leaves as epoch microseconds (engine-portable), money sums
   * as decimal. At scale every aggregation below is keyed (window bucket,
@@ -46,18 +50,6 @@ object Streams {
       .select(col("user_id"), unix_micros(col("w.start")).as("session_start_us"),
               col("n"), col("sum_value_cents"))
 
-  /** S4: tumbling aggregation with a 10-minute watermark — on a stream,
-    * events later than (max seen ts - 10 min) are dropped and window
-    * state is finalized; in batch the watermark is a no-op, so batch
-    * output == stream output when nothing is late. */
-  def tumblingWatermarked(events: DataFrame): DataFrame =
-    tumbling(events.withWatermark("ts", "10 minutes"))
-
-  /** S5: stateful dedup by event_id within the watermark horizon. */
-  def dedupWithinWatermark(events: DataFrame): DataFrame =
-    events.withWatermark("ts", "10 minutes")
-      .dropDuplicatesWithinWatermark("event_id")
-
   /** S7 (beyond §2.B): stream-stream inner join — each purchase joined to
     * the same user's clicks from the preceding 30 minutes. Both sides are
     * watermarked so the join state is bounded: a buffered click can be
@@ -78,520 +70,5 @@ object Streams {
       .select(col("purchase_id"), col("user_id"), col("click_id"),
               unix_micros(col("click_ts")).as("click_ts_us"),
               unix_micros(col("purchase_ts")).as("purchase_ts_us"))
-  }
-
-  /** S14: stream-stream LEFT OUTER join — [[clickPurchaseJoin]] with
-    * NULL emission for clicks that never convert: an unmatched left row
-    * is held in join state and emitted with a NULL right side only once
-    * the watermark PROVES no matching purchase can still arrive (the
-    * subtle semantics that separate streaming outer joins from batch
-    * ones — emission time is a watermark decision, not a scan order).
-    * State stays bounded exactly as in the inner form. */
-  def clickPurchaseLeftJoin(clicks: DataFrame, purchases: DataFrame): DataFrame = {
-    val c = clicks.withWatermark("ts", "10 minutes")
-      .select(col("event_id").as("click_id"), col("user_id"),
-              col("ts").as("click_ts"))
-    val p = purchases.withWatermark("ts", "10 minutes")
-      .select(col("event_id").as("purchase_id"),
-              col("user_id").as("p_user"), col("ts").as("purchase_ts"))
-    c.join(p,
-      col("user_id") === col("p_user") &&
-      col("purchase_ts") >= col("click_ts") &&
-      col("purchase_ts") <= col("click_ts") + expr("interval 30 minutes"),
-      "left_outer")
-      .select(col("click_id"), col("user_id"), col("purchase_id"),
-              unix_micros(col("click_ts")).as("click_ts_us"))
-  }
-
-  /** S9 (beyond §2.B): streaming training-data ingest — the LLM-pipeline
-    * gates composed on a document STREAM, the shape a continuous-crawl
-    * ingest actually runs: stateful exact dedup on the content hash
-    * within the watermark horizon (a re-crawl of the same text inside the
-    * horizon is dropped, and state stays bounded — at 100 TB/day the
-    * dedup state holds one 8-byte hash per unique doc per horizon, keyed
-    * and partitioned by the hash), then the stateless per-row gates
-    * (minimum length, duplicate-bigram repetition, PII redaction) — all
-    * reusing the batch operators' expressions, so the streaming path
-    * cannot drift from the oracle-verified batch semantics. Append-mode
-    * safe: nothing downstream of the dedup holds state. */
-  def docIngestGate(docs: DataFrame, minWords: Int = 5,
-                    maxDupBigramFrac: Double = 0.5): DataFrame = {
-    val deduped = docs
-      .withColumn("fp", xxhash64(col("text")))
-      .withWatermark("ts", "10 minutes")
-      .dropDuplicatesWithinWatermark("fp")
-    val nW = size(split(col("text"), " "))
-    val dupFrac = when(nW >= 2,
-      lit(1.0) -
-        size(graft.llm.Dedup.shingleArray(col("text"), 2)).cast("double") /
-          (nW - 1))
-      .otherwise(lit(0.0))
-    val (redTxt, redCnt) = graft.llm.TextAnalysis.redactionOf(col("text"))
-    deduped
-      .filter(nW >= minWords && dupFrac <= maxDupBigramFrac)
-      .select(col("doc_id"), col("ts"), redTxt.as("text"),
-              redCnt.as("n_redactions"))
-  }
-
-  /** S10: streaming UPSERT sink — micro-batches of catalog updates
-    * MERGE into a persistent catalog table via foreachBatch +
-    * [[graft.catalog.Catalog.mergeCatalog]], the standard Structured
-    * Streaming upsert idiom (foreachBatch is where streaming meets a
-    * batch MERGE; a Delta/Iceberg sink acquires the same plan with
-    * file-level pruning). The catalog is dimension-sized, so each batch
-    * rewrites it wholesale; the broadcast-shaped merge itself never
-    * shuffles. Batch replay is idempotent (re-merging the same updates
-    * is a no-op rewrite), and the snapshot swap below keeps a last-good
-    * copy through a mid-write crash: the merged result is STAGED to a
-    * versioned sibling path (so the overwrite never truncates its own
-    * parquet source mid-read), then promoted by two directory renames.
-    * A crash between the renames leaves the previous snapshot intact at
-    * `<path>.old-<batch>` — recoverable by hand; true transactional
-    * exactly-once (atomic commit + automatic recovery) needs a table
-    * format like Delta/Iceberg, which this sink deliberately mirrors in
-    * plan shape. */
-  def catalogUpsert(updates: DataFrame, catalogPath: String,
-                    checkpoint: String): StreamingQuery =
-    updates.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        import org.apache.spark.sql.functions._
-        // a micro-batch can legitimately carry SEVERAL updates for one
-        // name — unreduced, the merge's per-match join would fan out and
-        // PERSIST duplicate catalog rows. Reduce to one row per name
-        // first (deterministic max-struct pick; a source with a real
-        // ordering should carry a sequence column and max over it).
-        val perName = batch
-          .groupBy("name")
-          .agg(max(struct(col("input_ranges"), col("range_labels"),
-                          col("output_values"))).as("u"))
-          .select(col("name"), col("u.input_ranges"),
-                  col("u.range_labels"), col("u.output_values"))
-        val cur = batch.sparkSession.read.parquet(catalogPath)
-          .select("name", "input_ranges", "range_labels", "output_values")
-        val merged = graft.catalog.Catalog.mergeCatalog(cur, perName)
-          .drop("action")
-        stageAndSwap(merged, catalogPath, batchId)
-      }
-      .start()
-
-  /** One snapshot-upsert application — extracted so replay semantics
-    * are spec-testable without driving a full restart: merge the batch
-    * into the CURRENT committed snapshot by key (batch rows win;
-    * within-batch duplicates reduce by max-struct for determinism) and
-    * commit the result as a new version TAGGED with the batch id. A
-    * REPLAYED batch (checkpoint rolled back past a committed batch)
-    * finds its tag among [[graft.catalog.SnapshotTable.committedTags]]
-    * and SKIPS — the manifest, not the sink, carries the idempotence
-    * state, so exactly-once survives a driver crash between the commit
-    * and the checkpoint write (the window where stageAndSwap-based
-    * sinks double-apply). Returns the committed version (existing one
-    * on a skipped replay). */
-  private[graft] def snapshotApply(batch: DataFrame, tableRoot: String,
-                                   keys: Seq[String],
-                                   batchId: Long): Long = {
-    import graft.catalog.SnapshotTable
-    val spark = batch.sparkSession
-    val tag = s"batch-$batchId"
-    // replay check at O(1) manifest reads: this sink's batch ids are
-    // MONOTONIC, so the latest committed tag decides — a replayed id
-    // is <= it, a new id is > it (committedTags' full scan would make
-    // per-batch cost grow with stream lifetime). When the most recent
-    // TAGGED commit is a FOREIGN writer's (not batch-<digits>), the
-    // monotonic shortcut is blind — fall back to the full tag map, or a
-    // replayed batch would silently re-commit and break the
-    // version-per-batch invariant (state would stay correct via the
-    // key-idempotent upsert, but the duplicate version would not).
-    SnapshotTable.latestNumericTag(spark, tableRoot, "batch-").foreach {
-      case (Right(lastId), v) =>
-        if (batchId <= lastId)
-          return if (batchId == lastId) v
-                 else SnapshotTable.committedTags(spark, tableRoot)
-                   .getOrElse(tag, v)
-      case (Left(_), _) =>
-        SnapshotTable.committedTags(spark, tableRoot).get(tag)
-          .foreach(dup => return dup)
-    }
-    val payload = batch.columns.filterNot(keys.contains).toSeq
-    val reduced = batch
-      .groupBy(keys.map(col): _*)
-      .agg(max(struct(payload.map(col): _*)).as("_u"))
-      .select(keys.map(col) ++ payload.map(p => col(s"_u.$p").as(p)): _*)
-    val base = SnapshotTable.currentVersion(spark, tableRoot)
-    val merged =
-      if (base == 0L) reduced
-      else {
-        val cur = SnapshotTable.read(spark, tableRoot, base)
-        cur.join(broadcast(reduced.select(keys.map(col): _*)),
-            keys, "left_anti")
-          .unionByName(reduced)
-          // the union reads the dir the commit will NOT touch (commits
-          // write a NEW version dir), so no self-overwrite hazard — the
-          // checkpoint-before-overwrite dance is structurally unneeded
-      }
-    SnapshotTable.commit(merged, tableRoot, base, Some(tag))
-  }
-
-  /** S20: SNAPSHOT-COMMITTING streaming upsert — the transactional
-    * successor of [[catalogUpsert]]'s rename-swap: every micro-batch
-    * commits a new immutable version through the
-    * [[graft.catalog.SnapshotTable]] manifest protocol, so readers pin
-    * versions mid-stream (no torn reads), a crash leaves the last
-    * COMMITTED version live with zero hand recovery, batch replay is
-    * idempotent via manifest tags (see [[snapshotApply]]), and a
-    * concurrent foreign writer surfaces as a loud commit conflict
-    * instead of silent last-rename-wins. Time travel over the stream's
-    * history comes free: version N = state after the Nth applied
-    * batch. */
-  def snapshotUpsert(updates: DataFrame, tableRoot: String,
-                     keys: Seq[String], checkpoint: String): StreamingQuery =
-    updates.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        snapshotApply(batch, tableRoot, keys, batchId): Unit
-      }
-      .start()
-
-  /** Stage → swap snapshot promotion: write the new snapshot beside the
-    * live one, then promote it with directory renames so a crash at any
-    * point leaves either the old snapshot live or recoverable at
-    * .old-N. Hadoop rename reports failure by RETURNING FALSE — every
-    * step is checked, or a failed promote would fall through to the
-    * final delete and destroy the last-good snapshot silently. */
-  private def stageAndSwap(snapshot: DataFrame, livePath: String,
-                           batchId: Long,
-                           marker: Option[String] = None): Unit = {
-    val staging = s"$livePath.staging-$batchId"
-    snapshot.write.mode("overwrite").parquet(staging)
-    // an optional underscore-prefixed marker file travels with the
-    // snapshot through the renames (parquet readers skip _-files)
-    marker.foreach { m =>
-      val fs0 = new org.apache.hadoop.fs.Path(staging).getFileSystem(
-        snapshot.sparkSession.sparkContext.hadoopConfiguration)
-      fs0.create(new org.apache.hadoop.fs.Path(s"$staging/$m"), true).close()
-    }
-    val hconf = snapshot.sparkSession.sparkContext.hadoopConfiguration
-    val fs = new org.apache.hadoop.fs.Path(livePath).getFileSystem(hconf)
-    val live = new org.apache.hadoop.fs.Path(livePath)
-    val old = new org.apache.hadoop.fs.Path(s"$livePath.old-$batchId")
-    fs.delete(old, true)
-    if (fs.exists(live) && !fs.rename(live, old))
-      throw new java.io.IOException(
-        s"snapshot swap: could not move live snapshot aside ($live -> $old)")
-    if (!fs.rename(new org.apache.hadoop.fs.Path(staging), live))
-      throw new java.io.IOException(
-        s"snapshot swap: could not promote staged snapshot ($staging -> " +
-        s"$live); last-good copy preserved at $old")
-    // only drop the backup once the new live copy demonstrably exists
-    if (fs.exists(live)) fs.delete(old, true)
-  }
-
-  /** S16: CONTINUOUS materialized-view maintenance — the
-    * [[graft.catalog.Mv]] refresh loop under Structured Streaming: each
-    * micro-batch aggregates ONLY its own rows to the view's mergeable
-    * state, folds that into the stored view, and promotes the new
-    * snapshot with the same checked-rename stage→swap as
-    * [[catalogUpsert]] (crash leaves the old view live or recoverable).
-    * The view stays group-sized, so per-batch cost is batch + view —
-    * the dashboard-feeding aggregate never re-reads history. First
-    * batch bootstraps the view from its own partials. */
-  def mvRefreshStream(rows: DataFrame, viewPath: String,
-                      keys: Seq[String], valueCents: org.apache.spark.sql.Column,
-                      checkpoint: String): StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyMvBatch(batch, viewPath, keys, valueCents, batchId)
-      }
-      .start()
-
-  /** One MV refresh application — extracted so crash/replay semantics
-    * are directly testable. Two hazards the naive fold gets wrong:
-    *
-    *  1. CRASH RECOVERY: a crash between stageAndSwap's two renames
-    *     leaves no live view but the last-good snapshot at .old-N. A
-    *     bare exists() bootstrap would then rebuild from the replayed
-    *     batch ALONE and stageAndSwap would delete the .old-N backup —
-    *     silent loss of all history. Recover the newest backup first.
-    *  2. REPLAY IDEMPOTENCE: foreachBatch is at-least-once — a batch
-    *     whose swap committed but whose checkpoint didn't is re-run on
-    *     restart, and an additive fold applied twice double-counts.
-    *     The snapshot carries its last-applied batch id as an
-    *     underscore-prefixed marker file (ignored by parquet readers,
-    *     travels with the directory through the swap renames); a replay
-    *     of an already-applied id is a no-op. catalogUpsert needs
-    *     neither: its keyed MERGE replay is idempotent and a missing
-    *     catalog fails loudly on read. */
-  private[stream] def applyMvBatch(batch: DataFrame, viewPath: String,
-      keys: Seq[String], valueCents: org.apache.spark.sql.Column,
-      batchId: Long): Unit =
-    applyFoldBatch(batch, viewPath, batchId,
-      b => graft.catalog.Mv.partials(b, keys, valueCents),
-      (mv, d) => graft.catalog.Mv.merge(mv, d, keys))
-
-  /** The generic fold-into-snapshot core behind [[applyMvBatch]] and
-    * [[profileStream]]: batch → mergeable partial state → fold into the
-    * stored snapshot → checked stage→swap, with the two replay hazards
-    * handled (backup recovery, batch-id idempotence marker). Any
-    * mergeable-state view — additive aggregates, sketches — composes by
-    * supplying its own partials/merge pair. */
-  private[stream] def applyFoldBatch(batch: DataFrame, viewPath: String,
-      batchId: Long, partials: DataFrame => DataFrame,
-      merge: (DataFrame, DataFrame) => DataFrame): Unit = {
-    import org.apache.hadoop.fs.Path
-    val s = batch.sparkSession
-    val fs = new Path(viewPath).getFileSystem(
-      s.sparkContext.hadoopConfiguration)
-    val live = new Path(viewPath)
-    if (!fs.exists(live)) {
-      // recover the newest interrupted-swap backup, if any
-      val backups = fs.globStatus(new Path(s"$viewPath.old-*"))
-      if (backups != null && backups.nonEmpty) {
-        val newest = backups.maxBy(b =>
-          b.getPath.getName.split("-").last.toLong).getPath
-        if (!fs.rename(newest, live))
-          throw new java.io.IOException(
-            s"mv refresh: could not recover backup $newest -> $live")
-      }
-    }
-    val applied: Long =
-      if (!fs.exists(live)) -1L
-      else fs.listStatus(live).map(_.getPath.getName)
-        .collectFirst { case n if n.startsWith(AppliedMarker) =>
-          n.stripPrefix(AppliedMarker).toLong }
-        .getOrElse(-1L)
-    if (batchId <= applied) return // replayed batch — already folded in
-    val delta = partials(batch)
-    val merged =
-      if (fs.exists(live)) merge(s.read.parquet(viewPath), delta)
-      else delta
-    stageAndSwap(merged, viewPath, batchId,
-      marker = Some(s"$AppliedMarker$batchId"))
-  }
-
-  /** S17: STREAMING data-quality profile — the v6 ingest-gate profile
-    * maintained INCREMENTALLY: each micro-batch aggregates only its own
-    * rows to mergeable per-column state (exact row/null counts + a
-    * Datasketches HLL sketch for distincts — counts merge by sum,
-    * sketches by hll_union_agg, the a18 algebra) and folds it into the
-    * stored profile via the same checked stage→swap as the MV refresh.
-    * Per-batch cost is batch + (columns) rows; history is never
-    * re-profiled — the property that makes a per-ingest DQ gate viable
-    * on a 100 TB table. The stored sketch column means ANY later rollup
-    * (union across tables, days, sources) is sketch algebra, not a
-    * rescan. */
-  def profileStream(rows: DataFrame, viewPath: String, cols: Seq[String],
-                    checkpoint: String): StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyFoldBatch(batch, viewPath, batchId,
-          b => graft.catalog.Mv.profilePartials(b, cols),
-          (v, d) => graft.catalog.Mv.profileMerge(v, d))
-      }
-      .start()
-
-  private val AppliedMarker = "_graft_applied_batch-"
-
-  /** S13: STREAMING dedup-index maintenance — the D2g ingest loop
-    * ([[graft.llm.Dedup.ingestLsh]]) under Structured Streaming: each
-    * micro-batch of documents probes the persisted LSH index for
-    * near-dups against everything ingested before it, emits the pairs
-    * (parquet append — the alert/quarantine feed), and appends its own
-    * signatures + text, so batch(i)↔batch(i+1) pairs surface on
-    * ingest i+1 without any rescan. The per-batch cost is batch-sized
-    * (ingestLsh's contract); the corpus-text table exists only to
-    * serve exact verification of candidate pairs. Exactly the shape a
-    * continuously-fed crawl pipeline runs. */
-  def lshIngestStream(docsStream: DataFrame, indexPath: String,
-                      corpusPath: String, pairsPath: String,
-                      checkpoint: String): StreamingQuery =
-    docsStream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        import org.apache.spark.sql.functions._
-        val all = batch.sparkSession.read.parquet(corpusPath)
-          .unionByName(batch)
-        val pairs = graft.llm.Dedup.ingestLsh(indexPath, batch,
-          col("doc_id"), col("text"), all, col("doc_id"), col("text"))
-        pairs.write.mode("append").parquet(pairsPath)
-        batch.write.mode("append").parquet(corpusPath)
-      }
-      .start()
-
-  /** S12: stream-STATIC enrichment join — the stateless sibling of the
-    * S7 stream-stream join: each micro-batch joins against a static
-    * dimension (re-resolved per batch, so a refreshed dim table is
-    * picked up without restarting the query; broadcast at plan time,
-    * no streaming state at all). The canonical lookup-enrichment every
-    * event pipeline runs. */
-  def enrichWithDim(events: DataFrame, dim: DataFrame): DataFrame =
-    events.join(broadcast(dim), Seq("event_type"), "left")
-
-  /** S6 state: running per-user aggregate carried across micro-batches. */
-  case class UserEvent(user_id: Long, ts_us: Long, value: Double)
-  case class UserState(n: Long, total: Double)
-  case class UserRunning(user_id: Long, n: Long, total: Double)
-
-  /** S6: arbitrary stateful processing — a per-user running count/total
-    * via mapGroupsWithState (update mode). The state object is tiny and
-    * keyed; at 100 TB this is the canonical shape for sessionization or
-    * drift tracking that windows can't express. */
-  def runningTotals(spark: SparkSession, events: Dataset[UserEvent])
-      : Dataset[UserRunning] = {
-    import spark.implicits._
-    events.groupByKey(_.user_id)
-      .mapGroupsWithState[UserState, UserRunning](GroupStateTimeout.NoTimeout) {
-        (user, evs, state: GroupState[UserState]) =>
-          val prev = state.getOption.getOrElse(UserState(0L, 0.0))
-          val (n, total) = evs.foldLeft((prev.n, prev.total)) {
-            case ((c, t), e) => (c + 1, t + e.value)
-          }
-          state.update(UserState(n, total))
-          UserRunning(user, n, total)
-      }
-  }
-
-  val update: OutputMode = OutputMode.Update()
-
-  /** S11 output: per-user running count + max across micro-batches. */
-  case class UserMax(user_id: Long, n: Long, max_value: Double)
-
-  /** S11: `transformWithState` — Spark 4's arbitrary-state operator
-    * (the successor API to [[runningTotals]]'s mapGroupsWithState):
-    * typed named ValueState per key in the RocksDB-backed state store
-    * (the provider TWS requires — set
-    * spark.sql.streaming.stateStore.providerClass to
-    * RocksDBStateStoreProvider), explicit TTL surface, timer hooks.
-    * State is one (count, max) pair per user — O(distinct keys), same
-    * scale posture as S6. */
-  class RunningMaxProcessor
-      extends StatefulProcessor[Long, UserEvent, UserMax] {
-    @transient private var state: ValueState[(Long, Double)] = _
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      state = getHandle.getValueState[(Long, Double)]("agg",
-        org.apache.spark.sql.Encoders.product[(Long, Double)],
-        TTLConfig.NONE)
-    override def handleInputRows(key: Long, rows: Iterator[UserEvent],
-        tv: TimerValues): Iterator[UserMax] = {
-      val prev =
-        if (state.exists()) state.get() else (0L, Double.NegativeInfinity)
-      val agg = rows.foldLeft(prev) { case ((n, m), e) =>
-        (n + 1, math.max(m, e.value)) }
-      state.update(agg)
-      Iterator.single(UserMax(key, agg._1, agg._2))
-    }
-  }
-
-  def runningMaxTws(spark: SparkSession, events: Dataset[UserEvent])
-      : Dataset[UserMax] = {
-    import spark.implicits._
-    events.groupByKey(_.user_id)
-      .transformWithState(new RunningMaxProcessor, TimeMode.None(),
-        OutputMode.Update())
-  }
-
-  /** S18 input/output: a timestamped event (watermark needs a real
-    * timestamp column) and the timer-closed session it rolls into. */
-  case class TimedEvent(user_id: Long, ts: java.sql.Timestamp,
-                        value: Double)
-  case class ClosedSession(user_id: Long, n: Long, closed_at_ms: Long)
-
-  /** S18: EVENT-TIME TIMERS — the idle-session finalizer, the pattern
-    * timers exist for (emit a key's result when its events STOP, which
-    * no input row can trigger): each batch re-arms the key's single
-    * timer at (max event time + gap); when the WATERMARK passes it,
-    * [[IdleCloseProcessor.handleExpiredTimer]] emits the closed
-    * session and CLEARS the key's state — state size is O(active
-    * keys), and an idle key's state provably leaves the store (the
-    * session_window operator does this internally; this is the same
-    * contract surfaced through the arbitrary-state API). One armed
-    * timer per key at all times (prior timers deleted on re-arm). */
-  class IdleCloseProcessor(gapMs: Long)
-      extends StatefulProcessor[Long, TimedEvent, ClosedSession] {
-    // (count, session-max event time ms): the max must be STATE, not a
-    // batch-local fold — with a nonzero watermark delay a late-but-
-    // admitted event would otherwise re-arm the timer BACKWARD and
-    // close the session early
-    @transient private var st: ValueState[(Long, Long)] = _
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[(Long, Long)]("session",
-        org.apache.spark.sql.Encoders.product[(Long, Long)], TTLConfig.NONE)
-    override def handleInputRows(key: Long, rows: Iterator[TimedEvent],
-        tv: TimerValues): Iterator[ClosedSession] = {
-      val prev = if (st.exists()) st.get() else (0L, Long.MinValue)
-      val agg = rows.foldLeft(prev) { case ((n, mx), e) =>
-        (n + 1, math.max(mx, e.ts.getTime)) }
-      st.update(agg)
-      getHandle.listTimers().foreach(t => getHandle.deleteTimer(t))
-      getHandle.registerTimer(agg._2 + gapMs)
-      Iterator.empty
-    }
-    override def handleExpiredTimer(key: Long, tv: TimerValues,
-        info: org.apache.spark.sql.streaming.ExpiredTimerInfo)
-        : Iterator[ClosedSession] = {
-      val cnt = if (st.exists()) st.get()._1 else 0L
-      st.clear()
-      Iterator.single(ClosedSession(key, cnt,
-        info.getExpiryTimeInMs()))
-    }
-  }
-
-  def idleCloseTws(spark: SparkSession, events: Dataset[TimedEvent],
-                   gapMs: Long): Dataset[ClosedSession] = {
-    import spark.implicits._
-    events.withWatermark("ts", "0 seconds").as[TimedEvent]
-      .groupByKey(_.user_id)
-      .transformWithState(new IdleCloseProcessor(gapMs),
-        TimeMode.EventTime(), OutputMode.Append())
-  }
-
-  /** S19 input/output: a keyed token and the sketch row stream. */
-  case class TokEvent(key: Long, tok: String)
-  case class SketchRow(key: Long, tok: String, cnt: Long)
-
-  /** S19: STREAMING heavy hitters — the a15 Misra-Gries sketch run as
-    * transformWithState state (the batch sketch composed into the
-    * arbitrary-state API): per key, a ≤k-counter map folds each
-    * micro-batch's tokens through the SAME [[graft.llm.MisraGries]]
-    * reduce step the batch aggregator uses — one primitive, two
-    * execution regimes — and the key's current candidate set streams
-    * out each batch. State is O(k) per key at ANY stream length (the
-    * sketch never grows past k counters), which is the entire point:
-    * an unbounded-token stream gets a bounded-memory head-of-
-    * distribution monitor, carrying the MG guarantee that any token
-    * with true count > n/(k+1) is present in the candidates.
-    *
-    * NONDETERMINISM CONTRACT: each micro-batch's rows fold in iterator
-    * order, and MG's decrement step is order-sensitive, so the emitted
-    * CANDIDATE COUNTS can differ across runs (the candidate-SET
-    * guarantee above holds regardless of order). This is a monitor,
-    * not a gate query; for deterministic output, feed the candidate
-    * set to the batch [[graft.llm.HeavyHitters.heavyHitters]] second
-    * pass, which recounts candidates exactly — the composition the
-    * batch a15 query already uses. */
-  class MgProcessor(k: Int, enc: org.apache.spark.sql.Encoder[Map[String, Long]])
-      extends StatefulProcessor[Long, TokEvent, SketchRow] {
-    @transient private var st: ValueState[Map[String, Long]] = _
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[Map[String, Long]]("mg", enc,
-        TTLConfig.NONE)
-    override def handleInputRows(key: Long, rows: Iterator[TokEvent],
-        tv: TimerValues): Iterator[SketchRow] = {
-      val mg = new graft.llm.MisraGries(k)(enc)
-      val next = rows.foldLeft(
-        if (st.exists()) st.get() else mg.zero)((m, e) => mg.reduce(m, e.tok))
-      st.update(next)
-      next.iterator.map { case (t, c) => SketchRow(key, t, c) }
-    }
-  }
-
-  def mgTws(spark: SparkSession, events: Dataset[TokEvent], k: Int)
-      : Dataset[SketchRow] = {
-    import spark.implicits._
-    val enc = implicitly[org.apache.spark.sql.Encoder[Map[String, Long]]]
-    events.groupByKey(_.key)
-      .transformWithState(new MgProcessor(k, enc), TimeMode.None(),
-        OutputMode.Update())
   }
 }

@@ -37,6 +37,14 @@ trait SparkSpec extends AnyFunSuite {
     finally { sc.clearJobGroup(); sc.removeSparkListener(l) }
     n.get
   }
+
+  /** Release the checkpoints (LogicalRDD leaves) `df` reads: what a
+    * query scope does when a declared plan returns, for a frame a test
+    * built outside one and no longer reads. */
+  def releaseCheckpoints(df: org.apache.spark.sql.DataFrame): Unit =
+    df.queryExecution.analyzed.collectWithSubqueries {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
+    }.foreach(org.apache.spark.sql.GraftBridge.unpersist(spark.sparkContext, _))
 }
 
 /** ScalaCheck glue (the scalatest-plus bridge is not in the offline

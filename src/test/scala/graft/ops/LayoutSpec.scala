@@ -53,33 +53,6 @@ class LayoutSpec extends SparkSpec {
     assert(r.getLong(2) == 65536L)
   }
 
-  test("z-ordered partitions prune band queries in BOTH dimensions") {
-    // uniform 1024x1024 grid, 16 Z-range partitions. The property the
-    // layout exists for: a band predicate on EITHER dimension touches
-    // only a fraction of the partition bounding boxes (file-level
-    // min/max pruning). Any 1D layout passes in its sort dimension and
-    // fails in the other (all 16 boxes span the ignored dimension); the
-    // Z curve bounds both. Partitions straddling unaligned range-
-    // partitioner boundaries can span a full axis (observed: 1 of 16),
-    // so the bound is half the partitions, not the aligned-quad ideal.
-    val pts = spark.range(1024L * 1024L).select(
-      (col("id") % 1024).as("x"), expr("id div 1024").as("y"))
-    val boxes = Layout.zorderBy(pts, col("x"), col("y"), 16)
-      .select(col("x"), col("y"), spark_partition_id().as("p"))
-      .groupBy("p")
-      .agg(min("x").as("min_x"), max("x").as("max_x"),
-           min("y").as("min_y"), max("y").as("max_y"))
-      .cache()
-    try {
-      // band = first quarter of the axis; a box intersects iff min <= 255
-      val hitX = boxes.filter(col("min_x") <= 255).count()
-      val hitY = boxes.filter(col("min_y") <= 255).count()
-      assert(hitX <= 8 && hitY <= 8,
-        s"band query touches $hitX (x) / $hitY (y) of 16 partitions — " +
-          "two-dimensional pruning lost")
-    } finally boxes.unpersist()
-  }
-
   test("compactZorder: 32 fragments become 8 z-ordered FILES whose " +
        "on-disk min/max rectangles prune bands in both dimensions") {
     val base = java.nio.file.Files.createTempDirectory("zmaint").toString

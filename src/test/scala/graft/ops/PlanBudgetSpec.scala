@@ -28,8 +28,9 @@ import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
   * r17: raster reads start from the layer stack ([[WroQueries.perCell]]),
   * a local relation built once per lineitem version, so no read plans
   * the per-cell aggregate any more (guarded below, with the build's own
-  * budget). Budgets pinned before r17 that name the per-cell aggregate
-  * keep it as headroom: the read plans one exchange fewer. */
+  * budget). A read's budget counts only the exchanges it plans over the
+  * stack, the same at local[2] and local[4] with 2 or 4 shuffle
+  * partitions. */
 class PlanBudgetSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private val dir = "/root/testdata/sf0.01"
@@ -54,10 +55,8 @@ class PlanBudgetSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private val budgets: Seq[(String, Int)] = Seq(
     // the stats window's single-partition exchange over the layer
-    // stack (1 planned; the budget predates the stack and still holds
-    // the per-cell aggregate its build now pays once per version);
-    // remap and weighted sum are row arithmetic after it
-    "wro_overlay_flagship" -> 2,
+    // stack; remap and weighted sum are row arithmetic after it
+    "wro_overlay_flagship" -> 1,
     // plain keyed agg: partial + final around one exchange
     "a2_groupby" -> 1,
     // AQE broadcasts the dim side at gate SF; one exchange for the agg
@@ -75,9 +74,9 @@ class PlanBudgetSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     "d9_decontaminate" -> 2,
     // pure map-side filter
     "d7_stratified_sample" -> 0,
-    // the flagship's two: per-cell aggregate + the stats window; the
+    // the flagship's one: the stats window over the layer stack; the
     // codegen'd remap and the unpivot are row-local
-    "f9_remap_expr" -> 2,
+    "f9_remap_expr" -> 1,
     // one exchange on user_id; both windows and the session agg reuse it
     "w6_sessionize" -> 1,
     // bucket agg + grid/span derivation; forward-fill window reuses the
@@ -131,12 +130,11 @@ class PlanBudgetSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     // the one exchange IS the range partitioning (asserted below)
     "o1_sort" -> 1,
     // catalog tools are fact-derived: one wide 1-row stats agg over the
-    // layer stack (+ the per-cell aggregate in the layerinfo budget,
-    // from before the stack); the edit, MERGE and SCD-2 read the stack
-    // again in their second leg (+1 agg), uncached. The rewrite itself
-    // is broadcast projections. r4's 2.39 s layerinfo bench reading was noise —
+    // layer stack; the edit, MERGE and SCD-2 read the stack again in
+    // their second leg (+1 agg), uncached. The rewrite itself is
+    // broadcast projections. r4's 2.39 s layerinfo bench reading was noise —
     // median-of-3 via BenchFew at sf0.1 is 0.56 s / 0.58 s for these two
-    "wro_update_layerinfo" -> 2,
+    "wro_update_layerinfo" -> 1,
     "wro_update_classification" -> 2,
     // MERGE = broadcast left join + broadcast anti join; the exchanges
     // are the encoded catalog's derivation, not the merge
@@ -278,12 +276,12 @@ class PlanBudgetSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     // first-week agg (reused by the user_id join) + the cohort-cell
     // two-phase distinct
     "w14_retention" -> 3,
-    // per-cell agg + the focal target agg (contributions are 9x the
-    // bounded raster, map-side combined)
-    "wro_focal_stats" -> 2,
-    // per-cell agg + the stats window's single-partition exchange; the
-    // zone agg is already clustered by it
-    "wro_zonal_stats" -> 2,
+    // the focal target agg over the layer stack (contributions are 9x
+    // the bounded raster, map-side combined)
+    "wro_focal_stats" -> 1,
+    // the stats window's single-partition exchange over the layer
+    // stack; the zone agg is already clustered by it
+    "wro_zonal_stats" -> 1,
     // selection pushed below the one per-cell exchange: 15/16 of fact
     // rows never shuffle
     "wro_resample_nearest" -> 1,
@@ -298,9 +296,9 @@ class PlanBudgetSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     // one user_id window exchange; the bounded 9-row frame is per-row
     // state, not an exchange
     "w17_rolling_median" -> 1,
-    // per-cell agg + the Horn target agg (9x the bounded raster domain,
-    // map-side combined) — the focal shape with weights
-    "wro_slope" -> 2,
+    // the Horn target agg over the layer stack (9x the bounded raster
+    // domain, map-side combined) — the focal shape with weights
+    "wro_slope" -> 1,
     // (doc, token) count + per-doc max; the per-row stats leg
     // broadcasts into the doc_id join
     "d33_gopher_rules" -> 2,
@@ -320,15 +318,15 @@ class PlanBudgetSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     // the checkpointed (source, hash) index hides its own distinct;
     // visible: the pair count (one leg broadcasts at gate SF)
     "d35_source_overlap" -> 1,
-    // per-cell agg + the classed grid's stats window; the 5-point
+    // the classed grid's stats window over the layer stack; the 5-point
     // stencil target agg runs in the window's single partition
-    "wro_class_boundaries" -> 2,
+    "wro_class_boundaries" -> 1,
     // pure projection over the slope frame: no exchange beyond
-    // slope's own two
-    "wro_aspect" -> 2,
-    // per-cell agg + the per-polygon agg; the 6-feature dim broadcasts
-    // and the ray cast folds in-row (no edge explode)
-    "wro_polygon_zonal" -> 2,
+    // slope's own one
+    "wro_aspect" -> 1,
+    // the per-polygon agg over the layer stack; the 6-feature dim
+    // broadcasts and the ray cast folds in-row (no edge explode)
+    "wro_polygon_zonal" -> 1,
     // the D8 kernel materializes behind its window checkpoint; the
     // visible plan reads it and adds no exchange
     "wro_flow_direction" -> 0,
@@ -338,10 +336,10 @@ class PlanBudgetSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     // the ≤k-hop accumulation kernel materializes behind its window
     // checkpoint; the visible plan reads it and adds no exchange
     "wro_flow_accumulation" -> 0,
-    // per-cell agg + the classed grid's stats window; the two-level mode
-    // aggregate ((r,c,cls) counts then (r,c) fold) runs in its single
-    // partition
-    "wro_majority_filter" -> 2,
+    // the classed grid's stats window over the layer stack; the
+    // two-level mode aggregate ((r,c,cls) counts then (r,c) fold) runs
+    // in its single partition
+    "wro_majority_filter" -> 1,
     // the windowed chamfer kernel materializes behind ONE checkpoint;
     // the visible plan reads it
     "wro_cost_distance" -> 0,
@@ -363,8 +361,8 @@ class PlanBudgetSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     "pipe_dclm_corpus" -> 6,
     // generate + parse + one keyed aggregate
     "f23_xml" -> 1,
-    // pure projection over the slope frame: slope's own two exchanges
-    "wro_hillshade" -> 2,
+    // pure projection over the slope frame: slope's own one exchange
+    "wro_hillshade" -> 1,
     // AQE broadcasts the dim side; one exchange for the aggregate
     "j22_nullsafe_join" -> 1,
     // one map-side-combined moments aggregate
@@ -380,8 +378,9 @@ class PlanBudgetSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     // aggregates, then the wide doc_id join — 10 total, each bounded
     // by token/line hashes or doc-grain rows, never raw text twice
     "pipe_rpv2_signals" -> 10,
-    // slope's shape with weight triples: perCell + the stencil fold
-    "wro_curvature" -> 2,
+    // slope's shape with weight triples: the stencil fold over the
+    // layer stack
+    "wro_curvature" -> 1,
     // stage 1's post-limit rank rows + stage 2's — both ≤pool-sized;
     // the pool fetch and query side broadcast
     "d37_rerank_topk" -> 2,
@@ -405,22 +404,23 @@ class PlanBudgetSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     "v7_referential_audit" -> 6,
     // render+parse are per-row; one keyed aggregate
     "f24_timestamp_parse" -> 1,
-    // cached per-cell grid + the per-ray running-max window; the gcd
-    // is a bounded in-row filter, the observer row broadcasts
-    "wro_viewshed" -> 2,
+    // the per-ray running-max window over the layer stack; the gcd is
+    // a bounded in-row filter, the observer row broadcasts
+    "wro_viewshed" -> 1,
     // nation broadcasts; one collect aggregate, sort at finish
     "a26_listagg" -> 1,
     // per-cell agg + the rook pair join's fan-out leg + the scalar
     // folds (the checkpointed deviation grid hides its own build)
     "wro_moran" -> 3,
-    // the cached grid's per-cell build + the 3x3 focal fan-out
-    // aggregate + the grid's semi join; the moment row broadcasts
-    "wro_gi_star" -> 3,
-    // the cached grid's per-cell build + one target aggregate; the
-    // anti-join broadcasts the present set
-    "wro_idw" -> 2,
-    // per-cell agg + the corner-role target aggregate — no join at all
-    "wro_resample_bilinear" -> 2,
+    // the 3x3 focal fan-out aggregate over the layer stack + the
+    // grid's semi join; the moment row broadcasts
+    "wro_gi_star" -> 2,
+    // one target aggregate over the layer stack; the anti-join
+    // broadcasts the present set
+    "wro_idw" -> 1,
+    // the corner-role target aggregate over the layer stack — no join
+    // at all
+    "wro_resample_bilinear" -> 1,
     // the whole-raster tile kernel's output is read from its checkpoint
     "wro_region_group" -> 0,
     // ONE returnflag exchange serves the rank window, the partition
@@ -438,18 +438,18 @@ class PlanBudgetSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     // the (u, cents) pair aggregate + the per-u argmax + the value-
     // domain-bounded front window
     "o10_skyline" -> 3,
-    // slope's two exchanges; the (r,c) join against the checkpointed
+    // slope's one exchange; the (r,c) join against the checkpointed
     // accumulation kernel adds none
-    "wro_twi" -> 2,
+    "wro_twi" -> 1,
     // the declared result is the driver-walked path as a LocalRelation;
     // the cost field materializes behind its tile kernel's checkpoint
     "wro_least_cost_path" -> 0,
-    // per-cell agg + the stats window; the combo id and count windows
-    // reuse its single partition
-    "wro_combine" -> 2,
-    // per-cell agg + the classed grid's stats window; the 3x3 target
-    // aggregate runs in the window's single partition
-    "wro_expand" -> 2,
+    // the stats window over the layer stack; the combo id and count
+    // windows reuse its single partition
+    "wro_combine" -> 1,
+    // the classed grid's stats window over the layer stack; the 3x3
+    // target aggregate runs in the window's single partition
+    "wro_expand" -> 1,
     // the per-region aggregate over the region-group checkpoint
     "wro_zonal_geometry" -> 1,
     // the encode fold's doc aggregate + the per-language aggregate;
@@ -479,10 +479,10 @@ class PlanBudgetSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     "d5_decode_wav" -> 0,
     "d5_frames_avi" -> 0,
     // visible plan: remap broadcast + score agg exchange + the ranges
-    // dim's stats legs; the skewed fact join hides behind its
-    // localCheckpoint (the AQE-split stage is spec-asserted in
-    // SkewSpec, not here)
-    "wro_overlay_skewed_aqe" -> 3)
+    // dim's stats leg over the layer stack; the skewed fact join hides
+    // behind its localCheckpoint (the AQE-split stage is spec-asserted
+    // in SkewSpec, not here)
+    "wro_overlay_skewed_aqe" -> 2)
 
   budgets.foreach { case (name, budget) =>
     test(s"$name plans with <= $budget shuffle exchange(s)") {

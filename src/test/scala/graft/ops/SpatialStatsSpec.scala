@@ -222,7 +222,7 @@ class SpatialStatsSpec extends SparkSpec {
     def labels(df: org.apache.spark.sql.DataFrame) = {
       val got = df.collect().map(x => ((x.getLong(0), x.getLong(1)),
         (x.getLong(2), x.getLong(3) * 100 + x.getLong(4)))).toMap
-      graft.Fixpoint.release(df)
+      releaseCheckpoints(df)
       got
     }
     def check(units: Map[(Long, Long), Long],
